@@ -16,22 +16,24 @@ Semantics reproduced byte-for-byte (SURVEY.md §2C-1..4):
   then one line per row with the line separator appended after every row
   (DelimitedEncoder.swift:171-175).
 
-Spark-first design: the whole writer is a single codegen'd projection —
-``concat_ws(delim, fmt(c1), fmt(c2), ...)`` — so it runs JVM-side inside
-WholeStageCodegen for strings/ints/bools/timestamps. Only the
-shortest-round-trip double formatter needs Python; it is an Arrow-batched
-pandas UDF (Python's ``repr`` shortest-round-trip matches Swift's Grisu
-output on the reference's golden values). For bulk non-golden exports use
-``df.write.csv`` (RFC 4180) instead — that path stays 100% JVM.
+Spark-first design: the whole writer is a single projection —
+``concat_ws(delim, fmt(c1), fmt(c2), ...)`` — that runs JVM-side for every
+type, doubles included, so an export never starts a Python worker. Doubles
+print as Python ``repr`` does (which matches Swift's shortest-round-trip
+output on the reference's golden values): the shortest round-trip digits
+come from the Schubfach algorithm (R. Giulietti, "The Schubfach way to
+render doubles", 2020) as shipped in Spark's bundled jackson-core
+(``com.fasterxml.jackson.core.io.schubfach.DoubleToDecimal``), called
+through ``reflect``, and SQL string functions lay them out in ``repr``'s
+fixed-point or exponent form (:func:`shortest_double_repr`). For bulk
+non-golden exports use ``df.write.csv`` (RFC 4180) instead.
 """
 
 from __future__ import annotations
 
 from typing import Iterable, Sequence
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     BooleanType,
     ByteType,
@@ -47,19 +49,53 @@ from pyspark.sql.types import (
 )
 
 ISO8601Z = "yyyy-MM-dd'T'HH:mm:ss'Z'"
+_SCHUBFACH = "com.fasterxml.jackson.core.io.schubfach.DoubleToDecimal"
+
+# Python repr of the double SQL expression {x}, in SQL text: one parse per
+# column instead of dozens of Column-API round trips to the JVM. {java} is
+# Schubfach's shortest round-trip string in Java's layout, e.g. "1.0E16".
+# For 1e-3 <= |x| < 1e7 Java's layout is repr's ("0.001", "1234567.0"), so
+# the common case costs one reflect call and no string work. The rest of
+# repr's fixed-point range re-lays it through an exact decimal(38,21) (17
+# significant digits from 1e-4 need 20 fractional places) and strips the
+# trailing zeros; the exponent branch rewrites E-notation in order: drop a
+# bare ".0" mantissa, then sign the exponent and give it two digits
+# ("1.0E16" -> "1e+16", "1.5E-5" -> "1.5e-05"). Below the smallest normal
+# double Java keeps two digits where repr keeps one ("4.9E-324" vs
+# "5e-324"); there the one-digit %.0e form wins when it reads back as {x}.
+_REPR_SQL = r"""CASE
+  WHEN {x} IS NULL OR isnan({x}) THEN NULL
+  WHEN {x} = CAST('Infinity' AS DOUBLE) THEN 'inf'
+  WHEN {x} = CAST('-Infinity' AS DOUBLE) THEN '-inf'
+  WHEN abs({x}) >= 1E-3D AND abs({x}) < 1E7D THEN {java}
+  WHEN abs({x}) >= 1E-4D AND abs({x}) < 1E16D THEN regexp_replace(
+    regexp_replace(CAST(CAST({java} AS DECIMAL(38, 21)) AS STRING), r'0+$', ''),
+    r'\.$', '.0')
+  WHEN abs({x}) > 0D AND abs({x}) < 2.2250738585072014E-308D
+    AND CAST(format_string('%.0e', {x}) AS DOUBLE) = {x}
+    THEN format_string('%.0e', {x})
+  ELSE regexp_replace(regexp_replace(regexp_replace(regexp_replace(
+    regexp_replace({java}, r'\.0E', 'E'),
+    r'E(\d)$', 'e+0$1'), r'E-(\d)$', 'e-0$1'), 'E-', 'e-'), 'E', 'e+')
+END"""
 
 
-@pandas_udf(StringType())
-def _shortest_double_repr(s: pd.Series) -> pd.Series:
-    """Shortest round-trip decimal string for a double; null -> None.
+def _sql_ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
-    Matches Swift ``Double.description`` on the reference goldens
-    (0.01 -> "0.01", -0.00033 -> "-0.00033"): both Python repr and Swift
-    print the shortest string that round-trips, with scientific notation
-    only outside ~[1e-4, 1e16). Integral doubles print with a trailing
-    ``.0`` in both.
+
+def shortest_double_repr(name: str) -> Column:
+    """Python ``repr`` of the double (or float) column ``name``, as a
+    JVM-only expression; null and NaN -> null, +-inf -> ``inf``/``-inf``.
+
+    Both ``repr`` and Swift print the shortest digits that round-trip
+    (0.01 -> "0.01", -0.00033 -> "-0.00033"), in fixed point for
+    1e-4 <= |x| < 1e16 (integral values keep a trailing ``.0``) and in
+    exponent form elsewhere (``1e+16``, ``1.5e-05``).
     """
-    return s.map(lambda v: None if pd.isna(v) else repr(float(v)))
+    x = f"CAST({_sql_ident(name)} AS DOUBLE)"
+    java = f"reflect('{_SCHUBFACH}', 'toString', coalesce({x}, 0D))"
+    return F.expr(_REPR_SQL.format(x=x, java=java))
 
 
 def _escape_and_quote(col: Column, delimiter: str) -> Column:
@@ -72,8 +108,10 @@ def _escape_and_quote(col: Column, delimiter: str) -> Column:
     ).otherwise(escaped)
 
 
-def format_field(col: Column, dtype: DataType, delimiter: str) -> Column:
-    """String-render one field under FINporter encoding rules; null -> ''."""
+def format_field(name: str, dtype: DataType, delimiter: str) -> Column:
+    """String-render column ``name`` under FINporter encoding rules;
+    null -> ''."""
+    col = F.col(name)
     if isinstance(dtype, StringType):
         rendered = _escape_and_quote(col, delimiter)
     elif isinstance(dtype, TimestampType):
@@ -81,7 +119,7 @@ def format_field(col: Column, dtype: DataType, delimiter: str) -> Column:
     elif isinstance(dtype, DateType):
         rendered = F.concat(F.date_format(col, "yyyy-MM-dd"), F.lit("T00:00:00Z"))
     elif isinstance(dtype, (DoubleType, FloatType)):
-        rendered = _shortest_double_repr(col.cast("double"))
+        rendered = shortest_double_repr(name)
     elif isinstance(dtype, BooleanType):
         rendered = F.when(col, F.lit("true")).when(~col, F.lit("false"))
     elif isinstance(dtype, (ByteType, ShortType, IntegerType, LongType)):
@@ -129,7 +167,7 @@ def to_delimited_lines(
     """
     names = list(columns) if columns is not None else df.columns
     dtypes = dict(zip(df.schema.names, [f.dataType for f in df.schema.fields]))
-    exprs = [format_field(F.col(n), dtypes[n], delimiter) for n in names]
+    exprs = [format_field(n, dtypes[n], delimiter) for n in names]
     return df.select(F.concat_ws(delimiter, *exprs).alias("line"))
 
 

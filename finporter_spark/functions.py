@@ -123,8 +123,8 @@ def with_transaction_ids(
     Scale note: a single global ``row_number`` forces all rows through one
     window partition. The reference numbers rows per input file
     (TransformHandler.swift:113 — one file, one counter), and file-grain
-    numbering is what a 100 TB ingest should do too: number within
-    ``input_file_name()`` (or any supplied partition key) and keep the
+    numbering is what a 100 TB ingest should do too: number within each
+    row's source file (:func:`with_transaction_ids_per_file`) and keep the
     prefix distinct per file. Global numbering is only for small exports.
     """
     w = Window.orderBy(*[F.col(c) for c in order_by])
@@ -142,11 +142,16 @@ def with_transaction_ids_per_file(
     out_col: str = "txnID",
 ) -> DataFrame:
     """Scalable variant: numbering restarts per source file (partitioned
-    window => no global sort barrier)."""
-    df2 = df.withColumn("_src_file", F.input_file_name())
+    window => no global sort barrier).
+
+    ``df`` carries each row's source path in ``_src_file``, captured at the
+    scan (e.g. from ``_metadata.file_path``: ``input_file_name()`` is
+    ``''`` above a cache or a shuffle); the column is dropped from the
+    result.
+    """
     w = Window.partitionBy("_src_file").orderBy(*[F.col(c) for c in order_by])
     rn = F.row_number().over(w)
-    return df2.withColumn(
+    return df.withColumn(
         out_col, transaction_id_expr(prefix_col, F.col(date_col), rn)
     ).drop("_src_file")
 

@@ -100,6 +100,11 @@ def handle_transform(
     """
     prefix = read_prefix(path)
     imp, schema = get_pair(prospector, prefix, importer_id, output_schema)
+    # decode reads the format detect saw (an AllocData TSV is not a CSV);
+    # a caller's explicit input_format wins
+    formats = imp.detect(prefix).get(schema, [])
+    if "input_format" not in decode_kw and len(formats) == 1:
+        decode_kw["input_format"] = formats[0]
     # In the reference, decode sees the whole file and captures per-file
     # context (e.g. the account banner) itself; here decode is a lazy plan
     # over the data rows, so driver-side prefix capture feeds it instead.

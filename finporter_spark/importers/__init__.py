@@ -1,11 +1,10 @@
 from finporter_spark.importers.base import DetectResult, Importer
-from finporter_spark.importers.prospector import Prospector, ProspectResult
+from finporter_spark.importers.prospector import (
+    Prospector,
+    ProspectResult,
+    default_prospector,
+)
 from finporter_spark.importers.tabular import PositionsImporter
-
-
-def default_prospector() -> Prospector:
-    return Prospector([PositionsImporter()])
-
 
 __all__ = [
     "Importer",

@@ -202,7 +202,7 @@ class BrokerTransactionsImporter(Importer):
     ``TxnIDGenerator.swift:28-33``; numbering restarts per source file
     (the reference numbers rows within one file,
     ``TransformHandler.swift:113``) so ingest scales without a global
-    sort barrier.
+    sort barrier. Rejected rows carry their source path in ``_src_file``.
     """
 
     name = "BrokerTransactions"
@@ -250,6 +250,9 @@ class BrokerTransactionsImporter(Importer):
             F.lit(None).cast("double").alias("realizedGainShort"),
             F.lit(None).cast("double").alias("realizedGainLong"),
             "_corrupt_record",
+            # the source file, taken before quarantine_split's cache hides
+            # it from input_file_name(): surrogate numbers restart per file
+            F.col("_metadata.file_path").alias("_src_file"),
         )
         # validate BEFORE numbering: rejected rows must not consume
         # surrogate numbers (they'd leave gaps and make IDs depend on how

@@ -2,9 +2,9 @@
 corrupt-record channel, prefix reads for detect, and quarantine splitting.
 
 Scale notes: all readers return lazy scans; schema is supplied or inferred
-once; ``read_prefix`` reads only the head of one file on the driver (the
-detect path never launches a job). Quarantine split is two filters over one
-cached scan — no shuffle.
+once; ``read_prefix`` and ``header_names`` read only the head of one file on
+the driver (detect and all-string header reads never launch a job).
+Quarantine split is two filters over one cached scan — no shuffle.
 """
 
 from __future__ import annotations
@@ -20,23 +20,79 @@ from finporter_spark.model import AllocFormat
 CORRUPT_COL = "_corrupt_record"
 
 
+def _visible_files(path: str) -> list[str]:
+    """``path`` itself, or for a directory (file-drop folder) the files in
+    it that Spark would also read (no ``_``/``.`` prefix), by name."""
+    if not os.path.isdir(path):
+        return [path]
+    names = sorted(
+        n
+        for n in os.listdir(path)
+        if not n.startswith(("_", ".")) and os.path.isfile(os.path.join(path, n))
+    )
+    if not names:
+        raise FileNotFoundError(f"no files to sniff in {path}")
+    return [os.path.join(path, n) for n in names]
+
+
 def read_prefix(path: str, n_bytes: int = 4096) -> bytes:
     """Driver-side prefix read for detect (DetectHandler.swift:25-26 reads
     the whole file; we read only the sniffing prefix — same contract as
     ``detect(dataPrefix:)``, FINporter.swift:33-35). A directory (file-drop
     folder) sniffs its first visible file."""
-    if os.path.isdir(path):
-        names = sorted(
-            n
-            for n in os.listdir(path)
-            if not n.startswith(("_", "."))
-            and os.path.isfile(os.path.join(path, n))
-        )
-        if not names:
-            raise FileNotFoundError(f"no files to sniff in {path}")
-        path = os.path.join(path, names[0])
-    with open(path, "rb") as f:
+    with open(_visible_files(path)[0], "rb") as f:
         return f.read(n_bytes)
+
+
+# bytes Java's String.trim() strips: Spark skips lines that trim to empty
+_BLANK = bytes(range(33))
+
+
+def _header_line(path: str) -> str | None:
+    """First non-blank line of the file ``path`` (Hadoop line breaks: LF,
+    CRLF or CR; a leading UTF-8 BOM dropped), or None."""
+    n = 4096
+    with open(path, "rb") as f:
+        while True:
+            f.seek(0)
+            data = f.read(n)
+            eof = len(data) < n
+            if data.startswith(b"\xef\xbb\xbf"):
+                data = data[3:]
+            for line in data.splitlines(keepends=True):
+                if not eof and not line.endswith((b"\n", b"\r")):
+                    break  # cut by the read size: read more
+                if line.strip(_BLANK):
+                    return line.rstrip(b"\r\n").decode("utf-8", "replace")
+            if eof:
+                return None
+            n *= 4
+
+
+def header_names(spark: SparkSession, path: str, delimiter: str = ",") -> list[str]:
+    """Column names of a delimited file's header, as Spark's own header
+    read gives them, without a Spark job: the first non-blank line is read
+    on the driver, then split by the CSV parser Spark uses and made unique
+    by ``CSVUtils.makeSafeHeader`` (an empty name becomes ``_c<i>``, a
+    repeated one gets its index appended), both called in the driver JVM.
+    A directory reads its files in the order Spark's scan does (largest
+    first), skipping blank ones; no header line gives no names. Like
+    :func:`read_prefix`, ``path`` must be readable by the driver."""
+    files = sorted(_visible_files(path), key=lambda p: -os.path.getsize(p))
+    line = next(filter(None, map(_header_line, files)), None)
+    if line is None:
+        return []
+    jvm = spark._jvm
+    opts = jvm.org.apache.spark.sql.catalyst.csv.CSVOptions(
+        jvm.PythonUtils.toScalaMap({"header": "true", "sep": delimiter}),
+        False,
+        spark.conf.get("spark.sql.session.timeZone"),
+    )
+    parser = jvm.com.univocity.parsers.csv.CsvParser(opts.asParserSettings())
+    row = parser.parseLine(line)
+    case_sensitive = spark._jsparkSession.sessionState().conf().caseSensitiveAnalysis()
+    csv_utils = jvm.org.apache.spark.sql.execution.datasources.csv.CSVUtils
+    return list(csv_utils.makeSafeHeader(row, case_sensitive, opts))
 
 
 def read_delimited(
@@ -48,6 +104,10 @@ def read_delimited(
     all_string: bool = False,
 ) -> DataFrame:
     """Permissive CSV/TSV scan with corrupt-record side channel (S1/S2).
+
+    ``all_string`` reads every header column as a string; the names come
+    from :func:`header_names`, a file read plus a parse on the driver, so
+    the returned scan stays lazy (no Spark job runs until it is used).
 
     Files with non-tabular preambles (brokerage banners, FIXTURES.md §2) go
     through importer-specific preamble filters over ``spark.read.text`` +
@@ -66,11 +126,7 @@ def read_delimited(
         )
         reader = reader.schema(schema)
     elif all_string:
-        # header-derived all-string schema: one tiny driver read for names
-        head = (
-            spark.read.option("header", True).option("sep", delimiter).csv(path)
-        )
-        names = head.columns
+        names = header_names(spark, path, delimiter)
         schema = StructType(
             [StructField(n, StringType(), True) for n in names]
             + [StructField(CORRUPT_COL, StringType(), True)]

@@ -13,6 +13,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from finporter_spark.caching import release_caches
 from finporter_spark.errors import MultipleImportersMatch
 from finporter_spark.handlers import handle_detect, handle_transform
 from finporter_spark.importers.allocdata import (
@@ -230,3 +231,66 @@ def test_json_decode_roundtrip_timestamps(spark, tmp_path):
         assert sorted(map(tuple, good3.collect())) == sorted(
             map(tuple, good.collect())
         )
+
+
+def test_broker_txn_surrogate_ids_restart_per_file(spark, tmp_path):
+    """A directory decode numbers each file's rows from 00001: the source
+    file is captured at the scan, before the quarantine cache."""
+    d = tmp_path / "drop"
+    d.mkdir()
+    for name, sym in (("a.csv", "VTI"), ("b.csv", "BND")):
+        (d / name).write_text(
+            "Date,Action,Symbol,Account,Shares,Price\n"
+            f"03/01/2021,buy,{sym},acc1,3,220.10\n"
+            f"03/02/2021,buy,{sym},acc1,5,85.50\n"
+        )
+    good, bad = BrokerTransactionsImporter().decode(spark, str(d), id_prefix="A")
+    got = sorted((r.securityID, r.txnID) for r in good.collect())
+    assert got == [
+        ("BND", "A2021030100001"),
+        ("BND", "A2021030200002"),
+        ("VTI", "A2021030100001"),
+        ("VTI", "A2021030200002"),
+    ]
+    assert bad.count() == 0
+
+
+def test_tsv_transform_reads_detected_format(spark, tmp_path):
+    """handle_transform decodes with the format detect reported, so an
+    AllocData TSV round-trips without an explicit input_format."""
+    src = FIXTURES[AllocSchema.SECURITY].replace(",", "\t")
+    p = tmp_path / "security.tsv"
+    p.write_text(src)
+    out = handle_transform(
+        spark, default_prospector(), str(p), output_format=AllocFormat.TSV
+    )
+    assert out == src
+
+
+def test_allocdata_transform_fires_one_job(spark, tmp_path):
+    """Decode is a lazy plan (header names are read on the driver) and
+    the export is one job: an AllocData CSV transform runs exactly one
+    Spark job under its own job group."""
+    sc = spark.sparkContext
+    p = tmp_path / "holding.csv"
+    p.write_text(FIXTURES[AllocSchema.HOLDING])
+
+    def jobs_in(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+            return result, list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    (good, bad), decode_jobs = jobs_in(
+        "test_allocdata_decode", lambda: AllocDataImporter().decode(spark, str(p))
+    )
+    assert decode_jobs == []
+    release_caches(good, bad)
+    out, transform_jobs = jobs_in(
+        "test_allocdata_transform",
+        lambda: handle_transform(spark, default_prospector(), str(p)),
+    )
+    assert out == FIXTURES[AllocSchema.HOLDING]
+    assert len(transform_jobs) == 1

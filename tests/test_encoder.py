@@ -166,3 +166,79 @@ def test_json_single_file_matches_collect_path(spark, tmp_path, sf_dir):
     import json
 
     assert len(json.loads(got)) == df.count()
+
+
+def _doubles_from_bits(spark, bits):
+    """Doubles whose IEEE-754 bit patterns are the ``bits`` column, built
+    JVM-side (Double.longBitsToDouble) so a million values need no
+    Python-side DataFrame construction."""
+    from pyspark.sql import functions as F
+
+    return bits.select(
+        F.reflect(
+            F.lit("java.lang.Double"), F.lit("longBitsToDouble"), F.col("bits")
+        )
+        .cast("double")
+        .alias("x")
+    )
+
+
+def test_shortest_double_repr_matches_python_repr(spark):
+    """The JVM formatter gives Python ``repr`` bytes: every subnormal
+    k * 2**-1074 for k < 2**18, 10**6 pseudo-random bit patterns, 2*10**5
+    values spread log-uniformly over repr's fixed-point range
+    [1e-4, 1e16) (both signs), each decade boundary 1e-5..1e17 and its
+    neighbour ulps (both signs), and the special values. null and NaN
+    render as null (format_field makes them the empty field)."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from finporter_spark.encoder import shortest_double_repr
+
+    subnormals = spark.range(1, 1 << 18).select(F.col("id").alias("bits"))
+    randoms = spark.range(10**6).select(
+        F.xxhash64("id", F.lit(20201)).alias("bits")
+    )
+    fixed_point = spark.range(2 * 10**5).select(
+        (
+            F.pow(F.lit(10.0), F.rand(5) * 20 - 4)
+            * F.when(F.col("id") % 2 == 0, 1.0).otherwise(-1.0)
+        ).alias("x")
+    )
+    edges = [0.0, -0.0, math.inf, -math.inf, math.nan, 0.01, -0.00033]
+    for d in range(-5, 18):
+        p = float(f"1e{d}")
+        for v in (math.nextafter(p, 0), p, math.nextafter(p, math.inf)):
+            edges += [v, -v]
+    values = (
+        _doubles_from_bits(spark, subnormals.unionAll(randoms))
+        .unionAll(fixed_point)
+        .unionAll(spark.createDataFrame([(v,) for v in edges] + [(None,)], "x double"))
+    )
+    rows = values.select("x", shortest_double_repr("x").alias("s")).collect()
+    assert len(rows) == (1 << 18) - 1 + 10**6 + 2 * 10**5 + len(edges) + 1
+
+    def want(v):
+        return None if v is None or math.isnan(v) else repr(v)
+
+    bad = [(r.x, r.s, want(r.x)) for r in rows if r.s != want(r.x)]
+    assert bad == []
+
+
+def test_double_export_plans_no_python(spark):
+    """Formatting doubles stays in the JVM: no Arrow (or batch) Python
+    evaluation node in the plan of the encoded lines."""
+    from pyspark.sql import functions as F
+
+    from finporter_spark.encoder import to_delimited_lines
+
+    df = spark.range(10).select(
+        (F.col("id") / 3).alias("a"),
+        F.col("id").cast("float").alias("b"),
+        F.col("id").cast("string").alias("c"),
+    )
+    plan = to_delimited_lines(df)._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan
+    assert "BatchEvalPython" not in plan
+    assert to_delimited_lines(df).collect()[1][0] == "0.3333333333333333,1.0,1"
