@@ -17,14 +17,19 @@ should too.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 
 _ATTR = "_finporter_owned_caches"
+_log = logging.getLogger("finporter_spark")
 
 
 def owns_cache(result: DataFrame, *cached: DataFrame) -> DataFrame:
     """Tag ``result`` with cached upstream frames it depends on."""
-    existing = list(getattr(result, _ATTR, []))
+    # vars(), not getattr(): a DataFrame answers a missing attribute by
+    # fetching its schema from the JVM to look for a column of that name
+    existing = list(vars(result).get(_ATTR, []))
     setattr(result, _ATTR, existing + list(cached))
     return result
 
@@ -33,12 +38,16 @@ def release_caches(*dfs: DataFrame, blocking: bool = False) -> None:
     """Unpersist every cache tagged on the given frames (idempotent).
 
     Safe after the frames are materialized; if one is re-executed later
-    the cached subplan simply recomputes uncached.
+    the cached subplan simply recomputes uncached. A cache that fails to
+    unpersist is logged as a warning on the ``finporter_spark`` logger and
+    the rest are still released.
     """
     for df in dfs:
-        for c in getattr(df, _ATTR, []):
+        for c in vars(df).get(_ATTR, []):
             try:
                 c.unpersist(blocking)
-            except Exception:
-                pass
+            except Exception as e:
+                _log.warning(
+                    "release_caches: unpersist failed: %r", e, exc_info=True
+                )
         setattr(df, _ATTR, [])

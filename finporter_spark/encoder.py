@@ -18,7 +18,11 @@ Semantics reproduced byte-for-byte (SURVEY.md §2C-1..4):
 
 Spark-first design: the whole writer is a single projection —
 ``concat_ws(delim, fmt(c1), fmt(c2), ...)`` — that runs JVM-side for every
-type, doubles included, so an export never starts a Python worker. Doubles
+type, doubles included, so an export never starts a Python worker. The
+projection is built as SQL text (:func:`format_field`) and handed to one
+``selectExpr``: every Column-API call is a py4j round trip to the driver
+JVM, so the same expression built from ``F`` calls cost hundreds of round
+trips per file, while the text is parsed once into the same plan. Doubles
 print as Python ``repr`` does (which matches Swift's shortest-round-trip
 output on the reference's golden values): the shortest round-trip digits
 come from the Schubfach algorithm (R. Giulietti, "The Schubfach way to
@@ -47,6 +51,8 @@ from pyspark.sql.types import (
     StringType,
     TimestampType,
 )
+
+from finporter_spark.functions import sql_ident, sql_literal
 
 ISO8601Z = "yyyy-MM-dd'T'HH:mm:ss'Z'"
 _SCHUBFACH = "com.fasterxml.jackson.core.io.schubfach.DoubleToDecimal"
@@ -80,8 +86,10 @@ _REPR_SQL = r"""CASE
 END"""
 
 
-def _sql_ident(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
+def _repr_sql(name: str) -> str:
+    x = f"CAST({sql_ident(name)} AS DOUBLE)"
+    java = f"reflect('{_SCHUBFACH}', 'toString', coalesce({x}, 0D))"
+    return _REPR_SQL.format(x=x, java=java)
 
 
 def shortest_double_repr(name: str) -> Column:
@@ -93,42 +101,45 @@ def shortest_double_repr(name: str) -> Column:
     1e-4 <= |x| < 1e16 (integral values keep a trailing ``.0``) and in
     exponent form elsewhere (``1e+16``, ``1.5e-05``).
     """
-    x = f"CAST({_sql_ident(name)} AS DOUBLE)"
-    java = f"reflect('{_SCHUBFACH}', 'toString', coalesce({x}, 0D))"
-    return F.expr(_REPR_SQL.format(x=x, java=java))
+    return F.expr(_repr_sql(name))
 
 
-def _escape_and_quote(col: Column, delimiter: str) -> Column:
+# regexp_replace replacement text for a backslash, then the quote
+_ESCAPED_QUOTE = sql_literal('\\\\"')
+
+
+def _escape_and_quote(field: str, delimiter: str) -> str:
     # Escape " as \" unconditionally (DelimitedEncoder.swift:135), then wrap
     # in quotes only when the field contains the delimiter (:134-136).
-    escaped = F.regexp_replace(col, '"', '\\\\"')
-    return F.when(
-        F.contains(escaped, F.lit(delimiter)),
-        F.concat(F.lit('"'), escaped, F.lit('"')),
-    ).otherwise(escaped)
+    escaped = f"regexp_replace({field}, '\"', {_ESCAPED_QUOTE})"
+    return (
+        f"CASE WHEN contains({escaped}, {sql_literal(delimiter)}) "
+        f"THEN concat('\"', {escaped}, '\"') ELSE {escaped} END"
+    )
 
 
-def format_field(name: str, dtype: DataType, delimiter: str) -> Column:
-    """String-render column ``name`` under FINporter encoding rules;
+def format_field(name: str, dtype: DataType, delimiter: str) -> str:
+    """SQL text rendering column ``name`` under FINporter encoding rules;
     null -> ''."""
-    col = F.col(name)
+    col = sql_ident(name)
     if isinstance(dtype, StringType):
         rendered = _escape_and_quote(col, delimiter)
     elif isinstance(dtype, TimestampType):
-        rendered = F.date_format(col, ISO8601Z)  # session tz pinned to UTC
+        # session tz pinned to UTC
+        rendered = f"date_format({col}, {sql_literal(ISO8601Z)})"
     elif isinstance(dtype, DateType):
-        rendered = F.concat(F.date_format(col, "yyyy-MM-dd"), F.lit("T00:00:00Z"))
+        rendered = f"concat(date_format({col}, 'yyyy-MM-dd'), 'T00:00:00Z')"
     elif isinstance(dtype, (DoubleType, FloatType)):
-        rendered = shortest_double_repr(name)
+        rendered = _repr_sql(name)
     elif isinstance(dtype, BooleanType):
-        rendered = F.when(col, F.lit("true")).when(~col, F.lit("false"))
+        rendered = f"CASE WHEN {col} THEN 'true' WHEN NOT {col} THEN 'false' END"
     elif isinstance(dtype, (ByteType, ShortType, IntegerType, LongType)):
-        rendered = col.cast("string")
+        rendered = f"CAST({col} AS STRING)"
     else:
         # Engine extension: anything else renders via cast-to-string with
         # string quoting rules (reference model is flat, SURVEY §1.2).
-        rendered = _escape_and_quote(col.cast("string"), delimiter)
-    return F.coalesce(rendered, F.lit(""))  # nil -> empty (:138)
+        rendered = _escape_and_quote(f"CAST({col} AS STRING)", delimiter)
+    return f"coalesce({rendered}, '')"  # nil -> empty (:138)
 
 
 def _ordered_parts(parts_dir: str) -> list[str]:
@@ -165,10 +176,10 @@ def to_delimited_lines(
     One narrow projection — no shuffle; scales linearly with input.
     ``columns`` fixes the declared header order (defaults to df order).
     """
-    names = list(columns) if columns is not None else df.columns
-    dtypes = dict(zip(df.schema.names, [f.dataType for f in df.schema.fields]))
-    exprs = [format_field(n, dtypes[n], delimiter) for n in names]
-    return df.select(F.concat_ws(delimiter, *exprs).alias("line"))
+    schema = df.schema
+    names = list(columns) if columns is not None else schema.names
+    fields = ", ".join(format_field(n, schema[n].dataType, delimiter) for n in names)
+    return df.selectExpr(f"concat_ws({sql_literal(delimiter)}, {fields}) AS line")
 
 
 def encode_to_string(
@@ -310,11 +321,7 @@ def write_json_single_file(
     parts_dir = os.path.join(staging, "parts")
     try:
         (
-            df.select(
-                F.to_json(
-                    F.struct(*[F.col(n) for n in names])
-                ).alias("line")
-            )
+            df.selectExpr(f"to_json(struct({', '.join(map(sql_ident, names))})) AS line")
             .write.mode("overwrite")
             .text(parts_dir)
         )
@@ -354,6 +361,6 @@ def export(
         return encode_to_string(df, "\t", columns)
     if f_ is AllocFormat.JSON:
         names = list(columns) if columns is not None else df.columns
-        rows = df.select([F.col(n) for n in names]).toJSON().collect()
+        rows = df.selectExpr(*map(sql_ident, names)).toJSON().collect()
         return "[" + ",".join(rows) + "]"
     raise ValueError(f"unsupported export format: {fmt}")

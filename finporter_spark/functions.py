@@ -1,11 +1,17 @@
 """Decode-toolkit functions: normalization, regex capture, surrogate IDs,
 tolerant casts, and date parsing with default time-of-day / timezone.
 
-All hot-path variants are Column expressions over built-in
-``pyspark.sql.functions`` (JVM-side, whole-stage-codegen eligible). The
-plain-Python twins exist for driver-side use (prefix sniffing operates on a
-few KB on the driver — no Spark job needed) and for 1:1 golden tests against
-the reference.
+The per-file ingest hot path (:func:`parse_timestamp`,
+:func:`with_transaction_ids_per_file`) emits SQL text, quoted through
+:func:`sql_literal` and :func:`sql_ident`: a Column-API call is one py4j
+round trip to the driver JVM, so an expression built from dozens of
+``F.col``/``F.lit``/``.alias`` calls costs dozens of round trips, while
+the same expression as text is parsed once and resolves to the same
+Catalyst plan. Both forms run JVM-side, whole-stage-codegen eligible. The
+remaining Column helpers serve the catalog queries; the plain-Python twins
+exist for driver-side use (prefix sniffing operates on a few KB on the
+driver — no Spark job needed) and for 1:1 golden tests against the
+reference.
 """
 
 from __future__ import annotations
@@ -15,6 +21,22 @@ import re
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
+
+
+# --------------------------------------------------------------------------
+# SQL text quoting: all SQL text the package builds is quoted through these
+# --------------------------------------------------------------------------
+
+def sql_literal(s: str) -> str:
+    """``s`` as a Spark SQL string literal: ``\\`` and ``'`` are escaped,
+    so any value reaches the plan as itself and never changes the query."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
 
 # --------------------------------------------------------------------------
 # R8 — line-ending normalization (FINporter+Utils.swift:22-32)
@@ -136,7 +158,7 @@ def with_transaction_ids(
 
 def with_transaction_ids_per_file(
     df: DataFrame,
-    prefix_col: Column,
+    prefix: str,
     date_col: str,
     order_by: Sequence[str],
     out_col: str = "txnID",
@@ -147,13 +169,17 @@ def with_transaction_ids_per_file(
     ``df`` carries each row's source path in ``_src_file``, captured at the
     scan (e.g. from ``_metadata.file_path``: ``input_file_name()`` is
     ``''`` above a cache or a shuffle); the column is dropped from the
-    result.
+    result. The ID is one SQL expression, the same value
+    :func:`transaction_id_expr` builds.
     """
-    w = Window.partitionBy("_src_file").orderBy(*[F.col(c) for c in order_by])
-    rn = F.row_number().over(w)
-    return df.withColumn(
-        out_col, transaction_id_expr(prefix_col, F.col(date_col), rn)
-    ).drop("_src_file")
+    order = ", ".join(sql_ident(c) for c in order_by)
+    row_no = f"row_number() OVER (PARTITION BY _src_file ORDER BY {order})"
+    txn_id = (
+        f"concat({sql_literal(prefix)}, "
+        f"date_format({sql_ident(date_col)}, 'yyyyMMdd'), "
+        f"lpad(CAST({row_no} AS STRING), 5, '0'))"
+    )
+    return df.withColumn(out_col, F.expr(txn_id)).drop("_src_file")
 
 
 # --------------------------------------------------------------------------
@@ -166,23 +192,25 @@ def try_cast(col: Column, dtype: str) -> Column:
 
 
 def parse_timestamp(
-    col: Column,
+    col: str,
     fmt: str = "MM/dd/yyyy",
     def_time_of_day: str | None = None,
     tz: str | None = None,
-) -> Column:
-    """Date parse with default time-of-day and timezone.
+) -> str:
+    """Date parse with default time-of-day and timezone, as SQL text over
+    the SQL expression ``col`` (e.g. ``sql_ident(name)``).
 
     Mirrors decode's ``defTimeOfDay`` / ``timeZone`` parameters
     (FINporter.swift:45-47): a bare date gets the default time of day in
     the given zone, then converts to the engine's UTC timeline.
     """
-    ts = F.try_to_timestamp(
-        F.concat_ws(" ", F.nullif(F.trim(col), F.lit("")), F.lit(def_time_of_day or "00:00:00")),
-        F.lit(fmt + " HH:mm:ss"),
+    tod = sql_literal(def_time_of_day or "00:00:00")
+    ts = (
+        f"try_to_timestamp(concat_ws(' ', nullif(trim({col}), ''), {tod}), "
+        f"{sql_literal(fmt + ' HH:mm:ss')})"
     )
     if tz:
-        ts = F.to_utc_timestamp(ts, tz)
+        ts = f"to_utc_timestamp({ts}, {sql_literal(tz)})"
     return ts
 
 

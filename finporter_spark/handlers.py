@@ -14,8 +14,12 @@ first") likewise:
 
 The Spark difference (SURVEY §3): steps stay driver-side through resolution
 (prefix bytes only), then decode->validate->export is ONE lazy plan
-``read -> select(cast/regex/default exprs) -> split -> write`` that Catalyst
-optimizes end-to-end; no per-entity monomorphization is needed.
+``read -> selectExpr(cast/regex/default SQL) -> filter(reject SQL) ->
+selectExpr(concat_ws(...)) -> write`` that Catalyst optimizes end-to-end;
+no per-entity monomorphization is needed. Each step is built as SQL text,
+one parse in the driver JVM, because a per-file CLI call pays for every
+py4j round trip a Column-API plan would make (hundreds per file); the text
+resolves to the same Catalyst plan.
 """
 
 from __future__ import annotations

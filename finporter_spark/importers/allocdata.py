@@ -17,12 +17,14 @@ These two importers make every schema drivable end-to-end here:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
     IntegerType,
     StringType,
+    StructField,
+    StructType,
     TimestampType,
 )
 
@@ -30,6 +32,8 @@ from finporter_spark.errors import TargetSchemaNotSupported
 from finporter_spark.functions import (
     normalize_decode,
     parse_timestamp,
+    sql_ident,
+    sql_literal,
     with_transaction_ids_per_file,
 )
 from finporter_spark.importers.base import DetectResult, Importer
@@ -39,11 +43,22 @@ from finporter_spark.model import (
     ENTITY_KEYS,
     ENTITY_SCHEMAS,
 )
-from finporter_spark.sources import quarantine_split, read_delimited
+from finporter_spark.sources import (
+    CORRUPT_COL,
+    quarantine_split,
+    read_delimited,
+    read_prefix,
+)
 
-# ISO8601 UTC with trailing Z — what the golden encoder emits
-# (DelimitedEncoder.swift:30,130-131).
-_ISO_FMT = "yyyy-MM-dd'T'HH:mm:ssXXX"
+# timestamp patterns decode tries in order; the first is ISO8601 UTC with
+# trailing Z — what the golden encoder emits (DelimitedEncoder.swift:30,
+# 130-131)
+_TS_FORMATS = (
+    "yyyy-MM-dd'T'HH:mm:ssXXX",
+    "yyyy-MM-dd'T'HH:mm:ss.SSSXXX",
+    "yyyy-MM-dd'T'HH:mm:ss",
+    "yyyy-MM-dd'T'HH:mm:ss.SSS",
+)
 
 # header line (exact declared order, comma/tab joined) -> schema
 _HEADERS: dict[AllocSchema, list[str]] = {
@@ -51,15 +66,17 @@ _HEADERS: dict[AllocSchema, list[str]] = {
 }
 
 
-def _typed_column(
-    name: str, dtype, def_time_of_day, time_zone, nullable: bool = True
-) -> F.Column:
-    c = F.col(name)
-    if isinstance(dtype, StringType) and not nullable:
+def _typed_sql(field: StructField, def_time_of_day, time_zone) -> str:
+    """SQL text decoding the all-string column ``field.name`` to
+    ``field.dataType``: one parse on the JVM instead of a Column-API
+    round trip per function call."""
+    c = sql_ident(field.name)
+    dtype = field.dataType
+    if isinstance(dtype, StringType) and not field.nullable:
         # a required string key decodes the empty field to "" (Swift's
         # non-optional String, e.g. MHolding.lotID), never to null
-        return F.coalesce(c, F.lit("")).alias(name)
-    if isinstance(dtype, TimestampType):
+        expr = f"coalesce({c}, '')"
+    elif isinstance(dtype, TimestampType):
         # accept the encoder's ISO-Z first, then fractional-seconds ISO
         # (Spark's own JSON sink and export(.JSON) emit
         # 2021-03-01T00:00:00.000Z — without this pattern a JSON
@@ -67,24 +84,32 @@ def _typed_column(
         # (what a TIMESTAMP_NTZ source serializes to), then bare date
         # with default time-of-day/zone (decode params,
         # FINporter.swift:45-47)
-        trimmed = F.nullif(F.trim(c), F.lit(""))
-        return F.coalesce(
-            F.try_to_timestamp(trimmed, F.lit(_ISO_FMT)),
-            F.try_to_timestamp(
-                trimmed, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
-            ),
-            F.try_to_timestamp(trimmed, F.lit("yyyy-MM-dd'T'HH:mm:ss")),
-            F.try_to_timestamp(trimmed, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSS")),
-            parse_timestamp(c, "yyyy-MM-dd", def_time_of_day, time_zone),
-        ).alias(name)
-    if isinstance(dtype, DoubleType):
-        return F.nullif(F.trim(c), F.lit("")).try_cast("double").alias(name)
-    if isinstance(dtype, IntegerType):
-        return F.nullif(F.trim(c), F.lit("")).try_cast("int").alias(name)
-    if isinstance(dtype, BooleanType):
-        return F.nullif(F.trim(c), F.lit("")).try_cast("boolean").alias(name)
-    # strings: nil round-trips as the empty field (DelimitedEncoder.swift:138)
-    return c.alias(name)
+        trimmed = f"nullif(trim({c}), '')"
+        parses = [
+            f"try_to_timestamp({trimmed}, {sql_literal(fmt)})"
+            for fmt in _TS_FORMATS
+        ]
+        bare = parse_timestamp(c, "yyyy-MM-dd", def_time_of_day, time_zone)
+        expr = f"coalesce({', '.join(parses + [bare])})"
+    elif isinstance(dtype, (DoubleType, IntegerType, BooleanType)):
+        expr = f"try_cast(nullif(trim({c}), '') AS {dtype.simpleString()})"
+    else:
+        # strings: nil round-trips as the empty field
+        # (DelimitedEncoder.swift:138)
+        expr = c
+    return f"{expr} AS {c}"
+
+
+def typed_projection(
+    struct: StructType, def_time_of_day=None, time_zone=None
+) -> list[str]:
+    """The decode projection of an all-string scan onto ``struct``, as
+    ``selectExpr`` text; the corrupt-record channel rides along. Batch
+    (:class:`AllocDataImporter`) and streaming decode
+    (``streaming.pipeline.stream_transform``) both use it."""
+    return [
+        _typed_sql(f, def_time_of_day, time_zone) for f in struct.fields
+    ] + [CORRUPT_COL]
 
 
 class AllocDataImporter(Importer):
@@ -141,20 +166,16 @@ class AllocDataImporter(Importer):
             # Spark's json sink both carry): read every field as string,
             # then the SAME typed projection as the delimited path —
             # one decode definition across formats
-            from pyspark.sql.types import StringType, StructField, StructType
-
             raw_schema = StructType(
                 [StructField(n, StringType(), True) for n in struct.names]
-                + [StructField("_corrupt_record", StringType(), True)]
+                + [StructField(CORRUPT_COL, StringType(), True)]
             )
-            from finporter_spark.sources import read_prefix
-
             # FINporter.export(.JSON) writes one array (needs multiLine);
             # Spark's json sink writes JSON lines — sniff the first byte
             is_array = read_prefix(path, 64).lstrip()[:1] == b"["
             raw = (
                 spark.read.option("mode", "PERMISSIVE")
-                .option("columnNameOfCorruptRecord", "_corrupt_record")
+                .option("columnNameOfCorruptRecord", CORRUPT_COL)
                 .option("multiLine", is_array)
                 .schema(raw_schema)
                 .json(path)
@@ -163,14 +184,8 @@ class AllocDataImporter(Importer):
             raw = read_delimited(
                 spark, path, delimiter=fmt.delimiter or ",", all_string=True
             )
-        typed = raw.select(
-            *[
-                _typed_column(
-                    f.name, f.dataType, def_time_of_day, time_zone, f.nullable
-                )
-                for f in struct.fields
-            ],
-            "_corrupt_record",
+        typed = raw.selectExpr(
+            *typed_projection(struct, def_time_of_day, time_zone)
         )
         # required = the schema's non-nullable fields (the ``T(from:)``
         # validation step): nullable key parts like MTransaction.lotID may
@@ -184,7 +199,6 @@ class AllocDataImporter(Importer):
 
     def _sniff_schema(self, path: str) -> AllocSchema:
         from finporter_spark.errors import DecodingError
-        from finporter_spark.sources import read_prefix
 
         det = self.detect(read_prefix(path))
         if len(det) != 1:
@@ -233,26 +247,23 @@ class BrokerTransactionsImporter(Importer):
         if output_schema not in (None, AllocSchema.TRANSACTION):
             raise TargetSchemaNotSupported(self.output_schemas)
         raw = read_delimited(spark, path, all_string=True)
-        typed = raw.select(
-            F.upper("Action").alias("action"),
-            parse_timestamp(
-                F.col("Date"), "MM/dd/yyyy", def_time_of_day, time_zone
-            ).alias("transactedAt"),
-            F.col("Account").alias("accountID"),
-            F.col("Symbol").alias("securityID"),
-            F.lit("").alias("lotID"),
-            F.nullif(F.trim("Shares"), F.lit("")).try_cast("double").alias(
-                "shareCount"
-            ),
-            F.nullif(F.trim("Price"), F.lit("")).try_cast("double").alias(
-                "sharePrice"
-            ),
-            F.lit(None).cast("double").alias("realizedGainShort"),
-            F.lit(None).cast("double").alias("realizedGainLong"),
-            "_corrupt_record",
+        date = parse_timestamp(
+            sql_ident("Date"), "MM/dd/yyyy", def_time_of_day, time_zone
+        )
+        typed = raw.selectExpr(
+            "upper(`Action`) AS action",
+            f"{date} AS transactedAt",
+            "`Account` AS accountID",
+            "`Symbol` AS securityID",
+            "'' AS lotID",
+            "try_cast(nullif(trim(`Shares`), '') AS DOUBLE) AS shareCount",
+            "try_cast(nullif(trim(`Price`), '') AS DOUBLE) AS sharePrice",
+            "CAST(NULL AS DOUBLE) AS realizedGainShort",
+            "CAST(NULL AS DOUBLE) AS realizedGainLong",
+            CORRUPT_COL,
             # the source file, taken before quarantine_split's cache hides
             # it from input_file_name(): surrogate numbers restart per file
-            F.col("_metadata.file_path").alias("_src_file"),
+            "_metadata.file_path AS _src_file",
         )
         # validate BEFORE numbering: rejected rows must not consume
         # surrogate numbers (they'd leave gaps and make IDs depend on how
@@ -265,11 +276,9 @@ class BrokerTransactionsImporter(Importer):
         )
         with_ids = with_transaction_ids_per_file(
             good,
-            F.lit(id_prefix),
+            id_prefix,
             "transactedAt",
             order_by=["transactedAt", "securityID", "shareCount"],
         )
-        return (
-            with_ids.select(ENTITY_SCHEMAS[AllocSchema.TRANSACTION].names),
-            bad,
-        )
+        names = ENTITY_SCHEMAS[AllocSchema.TRANSACTION].names
+        return with_ids.selectExpr(*map(sql_ident, names)), bad

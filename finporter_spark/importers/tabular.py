@@ -11,24 +11,26 @@ FIXTURES.md §2.
 Decode is one lazy distributed plan:
 ``spark.read.text`` -> preamble filter -> ``from_csv`` -> typed projection
 (try_cast / timestamp parse with default time-of-day + tz) -> quarantine
-split. No driver materialization; scales to any number of position files
+split, each step one SQL-text ``selectExpr``/``filter``. No driver
+materialization; scales to any number of position files
 (each file's banner/header rows are dropped by pattern, not by offset, so
 splitting is order-independent).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql import DataFrame, SparkSession
 
 from finporter_spark.functions import (
     capture_groups_str,
     normalize_decode,
     parse_timestamp,
+    sql_ident,
+    sql_literal,
 )
 from finporter_spark.importers.base import DetectResult, Importer
 from finporter_spark.model import AllocFormat, AllocSchema, ENTITY_SCHEMAS
-from finporter_spark.sources import quarantine_split
+from finporter_spark.sources import CORRUPT_COL, quarantine_split
 
 # Case-insensitive account banner, e.g. `"Individual Something   abcd-1234"`
 # (same capture shape as StringCaptureGroupTests.swift:60-66).
@@ -39,6 +41,18 @@ RAW_FIELDS = [
     "symbol", "description", "qty", "price", "mkt_val", "cost_basis",
     "date_acquired",
 ]
+
+# a data line is non-blank, not a banner (banner lines are fully quoted)
+# and not the column header
+_DATA_LINE = (
+    "length(trim(line)) > 0 AND NOT startswith(line, '\"') AND NOT "
+    f"startswith(line, {sql_literal(HEADER_PREFIX.split(',')[0] + ',')})"
+)
+_PARSE_LINE = (
+    "from_csv(line, "
+    + sql_literal(", ".join(f"{f} string" for f in RAW_FIELDS))
+    + ", map('mode', 'PERMISSIVE')) AS r"
+)
 
 
 class PositionsImporter(Importer):
@@ -84,43 +98,30 @@ class PositionsImporter(Importer):
 
             raise TargetSchemaNotSupported(self.output_schemas)
 
-        raw_schema = ", ".join(f"{f} string" for f in RAW_FIELDS)
-
-        lines = spark.read.text(path).select(
-            F.regexp_replace("value", "\r", "").alias("line")
+        parsed = (
+            spark.read.text(path)
+            .selectExpr("regexp_replace(value, '\\r', '') AS line")
+            .filter(_DATA_LINE)
+            .selectExpr(_PARSE_LINE)
+            .selectExpr("r.*")
         )
-        data = lines.filter(
-            (F.length(F.trim("line")) > 0)
-            & ~F.col("line").startswith('"')  # banner lines are fully quoted
-            & ~F.col("line").startswith(HEADER_PREFIX.split(",")[0] + ",")
-        )
-        parsed = data.select(
-            F.from_csv(
-                "line", raw_schema, {"mode": "PERMISSIVE"}
-            ).alias("r")
-        ).select("r.*")
 
         acct = account_id if account_id is not None else ""
-        typed = parsed.select(
-            F.lit(acct).alias("accountID"),
-            F.col("symbol").alias("securityID"),
-            F.lit("").alias("lotID"),  # broker doesn't track lots -> ""
-            F.col("qty").try_cast("double").alias("shareCount"),
-            (
-                F.col("cost_basis").try_cast("double")
-                / F.nullif(F.col("qty").try_cast("double"), F.lit(0.0))
-            ).alias("shareBasis"),
-            parse_timestamp(
-                F.col("date_acquired"), "MM/dd/yyyy", def_time_of_day, time_zone
-            ).alias("acquiredAt"),
-            # validation channel: a present-but-unparsable qty rejects the row
-            F.when(
-                F.col("qty").isNotNull()
-                & F.col("qty").try_cast("double").isNull(),
-                F.lit("bad qty"),
-            ).alias("_reject_reason"),
+        qty = "try_cast(qty AS DOUBLE)"
+        acquired = parse_timestamp(
+            "date_acquired", "MM/dd/yyyy", def_time_of_day, time_zone
         )
-        good, bad = quarantine_split(typed.withColumn(
-            "_corrupt_record", F.col("_reject_reason")
-        ).drop("_reject_reason"), required_keys=["securityID"])
-        return good.select(ENTITY_SCHEMAS[AllocSchema.HOLDING].names), bad
+        typed = parsed.selectExpr(
+            f"{sql_literal(acct)} AS accountID",
+            "symbol AS securityID",
+            "'' AS lotID",  # broker doesn't track lots -> ""
+            f"{qty} AS shareCount",
+            f"try_cast(cost_basis AS DOUBLE) / nullif({qty}, 0.0D) AS shareBasis",
+            f"{acquired} AS acquiredAt",
+            # validation channel: a present-but-unparsable qty rejects the row
+            f"CASE WHEN qty IS NOT NULL AND {qty} IS NULL THEN 'bad qty' END"
+            f" AS {CORRUPT_COL}",
+        )
+        good, bad = quarantine_split(typed, required_keys=["securityID"])
+        names = ENTITY_SCHEMAS[AllocSchema.HOLDING].names
+        return good.selectExpr(*map(sql_ident, names)), bad

@@ -10,11 +10,13 @@ Quarantine split is two filters over one cached scan — no shuffle.
 from __future__ import annotations
 
 import os
+from functools import reduce
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from finporter_spark.functions import sql_ident
 from finporter_spark.model import AllocFormat
 
 CORRUPT_COL = "_corrupt_record"
@@ -39,8 +41,10 @@ def read_prefix(path: str, n_bytes: int = 4096) -> bytes:
     """Driver-side prefix read for detect (DetectHandler.swift:25-26 reads
     the whole file; we read only the sniffing prefix — same contract as
     ``detect(dataPrefix:)``, FINporter.swift:33-35). A directory (file-drop
-    folder) sniffs its first visible file."""
-    with open(_visible_files(path)[0], "rb") as f:
+    folder) sniffs the file whose header Spark's scan reads
+    (:func:`_lead_file`), so detect names the schema decode produces."""
+    lead = _lead_file(path)[0] if os.path.isdir(path) else path
+    with open(lead, "rb") as f:
         return f.read(n_bytes)
 
 
@@ -69,17 +73,29 @@ def _header_line(path: str) -> str | None:
             n *= 4
 
 
+def _lead_file(path: str) -> tuple[str, str | None]:
+    """The file that speaks for ``path``, and its header line: the first
+    of ``path``'s visible files in the order Spark's scan reads them
+    (largest first, then by name) that has a non-blank line. With no such
+    file, the first file and None."""
+    files = sorted(_visible_files(path), key=lambda p: -os.path.getsize(p))
+    for p in files:
+        line = _header_line(p)
+        if line is not None:
+            return p, line
+    return files[0], None
+
+
 def header_names(spark: SparkSession, path: str, delimiter: str = ",") -> list[str]:
     """Column names of a delimited file's header, as Spark's own header
     read gives them, without a Spark job: the first non-blank line is read
     on the driver, then split by the CSV parser Spark uses and made unique
     by ``CSVUtils.makeSafeHeader`` (an empty name becomes ``_c<i>``, a
     repeated one gets its index appended), both called in the driver JVM.
-    A directory reads its files in the order Spark's scan does (largest
-    first), skipping blank ones; no header line gives no names. Like
+    A directory reads the header of the file :func:`read_prefix` sniffs
+    (:func:`_lead_file`); no header line gives no names. Like
     :func:`read_prefix`, ``path`` must be readable by the driver."""
-    files = sorted(_visible_files(path), key=lambda p: -os.path.getsize(p))
-    line = next(filter(None, map(_header_line, files)), None)
+    line = _lead_file(path)[1]
     if line is None:
         return []
     jvm = spark._jvm
@@ -167,15 +183,24 @@ def read_binary(spark: SparkSession, path: str, glob: str | None = None) -> Data
     return reader.load(path)
 
 
+def reject_condition(required_keys: Sequence[str], corrupt: bool) -> str:
+    """SQL text of decode's reject test: the parser flagged the row
+    corrupt (when ``corrupt``: the frame carries the corrupt-record
+    channel) OR any required key column is null (the ``T(from: row)``
+    validation step, TransformHandler.swift:125). One definition for
+    batch (:func:`quarantine_split`) and streaming decode."""
+    tests = [f"{CORRUPT_COL} IS NOT NULL"] if corrupt else []
+    tests += [f"{sql_ident(k)} IS NULL" for k in required_keys]
+    # nested left to right: the parser would balance a bare OR chain
+    return reduce(lambda a, b: f"({a}) OR {b}", tests) if tests else "false"
+
+
 def quarantine_split(
     df: DataFrame, required_keys: Sequence[str] = ()
 ) -> tuple[DataFrame, DataFrame]:
     """Split good rows from rejects (S7; decode's ``rejectedRows`` channel,
-    FINporter.swift:41).
-
-    A row is rejected when the parser flagged it corrupt OR any required
-    key column is null (the ``T(from: row)`` validation step,
-    TransformHandler.swift:125). Two filters over the same scan.
+    FINporter.swift:41): two filters over the same scan, on
+    :func:`reject_condition`.
 
     When the corrupt-record channel is present the parse is cached first:
     Spark refuses queries that reference only the corrupt column of a raw
@@ -189,20 +214,16 @@ def quarantine_split(
     """
     from finporter_spark.caching import owns_cache
 
-    cond = F.lit(False)
-    cached = None
-    if CORRUPT_COL in df.columns:
-        df = cached = df.cache()
-        cond = cond | F.col(CORRUPT_COL).isNotNull()
-    for k in required_keys:
-        cond = cond | F.col(k).isNull()
-    good = df.filter(~cond)
+    corrupt = CORRUPT_COL in df.columns
+    if corrupt:
+        df = df.cache()
+    cond = reject_condition(required_keys, corrupt)
+    good = df.filter(f"NOT ({cond})")
     bad = df.filter(cond)
-    if CORRUPT_COL in df.columns:
+    if corrupt:
         good = good.drop(CORRUPT_COL)
-    if cached is not None:
-        owns_cache(good, cached)
-        owns_cache(bad, cached)
+        owns_cache(good, df)
+        owns_cache(bad, df)
     return good, bad
 
 

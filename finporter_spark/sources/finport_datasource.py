@@ -5,7 +5,7 @@ candidate from SURVEY §4, now implemented).
 A user points `spark.read.format("finport").load(dir)` at a directory of
 AllocData holding CSVs (header = the declared attribute order,
 `FINporter.swift:62,66`; typed-decode rules per field mirroring
-`importers/allocdata._typed_column`) and gets the typed DataFrame with
+`importers/allocdata.typed_projection`) and gets the typed DataFrame with
 no driver-side handler involved:
 
 - **one InputPartition per file** — files decode in parallel on
@@ -86,7 +86,7 @@ def _parse_ts(s: str):
         return None
     # ISO-Z first (what the golden encoder and the finport writer emit),
     # then zoneless ISO, then bare date at midnight — the same
-    # precedence as importers/allocdata._typed_column
+    # precedence as importers/allocdata.typed_projection
     for fmt in ("%Y-%m-%dT%H:%M:%SZ", "%Y-%m-%dT%H:%M:%S", "%Y-%m-%d"):
         try:
             return datetime.strptime(s, fmt)

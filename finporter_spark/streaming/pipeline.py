@@ -501,37 +501,28 @@ def stream_transform(
     from pyspark.sql.types import StringType, StructField, StructType
 
     from finporter_spark.encoder import to_delimited_lines
-    from finporter_spark.importers.allocdata import _typed_column
+    from finporter_spark.importers.allocdata import typed_projection
     from finporter_spark.model import ENTITY_SCHEMAS
+    from finporter_spark.sources import CORRUPT_COL, reject_condition
 
     struct = ENTITY_SCHEMAS[schema]
     raw_schema = StructType(
         [StructField(n, StringType(), True) for n in struct.names]
-        + [StructField("_corrupt_record", StringType(), True)]
+        + [StructField(CORRUPT_COL, StringType(), True)]
     )
     raw = (
         spark.readStream.schema(raw_schema)
         .option("header", True)
         .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
+        .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .csv(in_dir)
     )
-    typed = raw.select(
-        *[
-            _typed_column(
-                f.name, f.dataType, def_time_of_day, time_zone, f.nullable
-            )
-            for f in struct.fields
-        ],
-        "_corrupt_record",
+    typed = raw.selectExpr(
+        *typed_projection(struct, def_time_of_day, time_zone)
     )
-    import pyspark.sql.functions as F
-
-    reject = F.col("_corrupt_record").isNotNull()
-    for f in struct.fields:
-        if not f.nullable:
-            reject = reject | F.col(f.name).isNull()
-    good = typed.filter(~reject).drop("_corrupt_record")
+    required = [f.name for f in struct.fields if not f.nullable]
+    reject = reject_condition(required, corrupt=True)
+    good = typed.filter(f"NOT ({reject})").drop(CORRUPT_COL)
     lines = to_delimited_lines(good, ",", struct.names)
     writer = (
         lines.writeStream.format("text")

@@ -50,3 +50,25 @@ def tables(spark, sf_dir):
     from finporter_spark.session import load_testdata
 
     return load_testdata(spark, sf_dir)
+
+
+@pytest.fixture
+def py4j_round_trips(monkeypatch):
+    """Counts py4j round trips (commands sent to the driver JVM) made while
+    the test runs, read as ``py4j_round_trips.n``. Garbage-collection
+    deletes (commands starting ``m\\nd\\n``) are left out: they follow
+    Python's GC, not the code under test."""
+    from types import SimpleNamespace
+
+    from py4j.clientserver import ClientServerConnection
+
+    counter = SimpleNamespace(n=0)
+    send = ClientServerConnection.send_command
+
+    def counting_send(self, command):
+        if not command.startswith("m\nd\n"):
+            counter.n += 1
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting_send)
+    return counter

@@ -294,3 +294,63 @@ def test_allocdata_transform_fires_one_job(spark, tmp_path):
     )
     assert out == FIXTURES[AllocSchema.HOLDING]
     assert len(transform_jobs) == 1
+
+
+# would end a SQL literal early if left unescaped
+AWKWARD = "o'k\\"
+BROKER_TXNS = (
+    "Date,Action,Symbol,Account,Shares,Price\n"
+    "03/01/2021,buy,VTI,acc1,3,220.10\n"
+    "03/02/2021,sell,VTI,acc1,-1,221.00\n"
+)
+
+
+def test_awkward_decode_parameters_reach_the_output(spark, tmp_path):
+    """id_prefix, account_id and def_time_of_day values are SQL literals in
+    the decode plan: quotes and backslashes arrive as themselves."""
+    from finporter_spark.importers.tabular import PositionsImporter
+
+    p = tmp_path / "txns.csv"
+    p.write_text(BROKER_TXNS)
+    good, bad = BrokerTransactionsImporter().decode(spark, str(p), id_prefix=AWKWARD)
+    assert sorted(r.txnID for r in good.collect()) == [
+        AWKWARD + "2021030100001",
+        AWKWARD + "2021030200002",
+    ]
+    release_caches(good, bad)
+
+    pos = tmp_path / "positions.csv"
+    pos.write_text(
+        "Symbol,Description,Qty,Price,Mkt Val,Cost Basis,Date Acquired\n"
+        "VTI,Total,10,220.10,2201.00,1800.00,03/01/2021\n"
+    )
+    good, bad = PositionsImporter().decode(spark, str(pos), account_id=AWKWARD)
+    assert [r.accountID for r in good.collect()] == [AWKWARD]
+    release_caches(good, bad)
+
+    # an unparsable time of day is one value: dates fail to parse and the
+    # rows are rejected (transactedAt is required), nothing else changes
+    good, bad = BrokerTransactionsImporter().decode(
+        spark, str(p), def_time_of_day="00:00:00' , '" + AWKWARD
+    )
+    assert good.count() == 0 and bad.count() == 2
+    release_caches(good, bad)
+
+
+@pytest.mark.parametrize("schema", [AllocSchema.TRANSACTION, AllocSchema.HOLDING], ids=lambda s: s.value)
+def test_awkward_time_zone_raises_spark_error_naming_it(spark, tmp_path, schema):
+    from pyspark.errors import PySparkException
+
+    tz = "Europe\\Paris' , 'UTC"
+    p = tmp_path / "in.csv"
+    if schema is AllocSchema.TRANSACTION:
+        p.write_text(BROKER_TXNS)
+        imp = BrokerTransactionsImporter()
+    else:
+        p.write_text(FIXTURES[AllocSchema.HOLDING].replace("2021-03-01T00:00:00Z", "2021-03-01"))
+        imp = AllocDataImporter()
+    good, bad = imp.decode(spark, str(p), output_schema=schema, time_zone=tz)
+    with pytest.raises(PySparkException, match="INVALID_TIMEZONE") as err:
+        good.collect()
+    assert f"The timezone: {tz} is invalid" in str(err.value)
+    release_caches(good, bad)

@@ -97,6 +97,35 @@ def test_quarantine_cache_released_after_transform(spark, tmp_path):
     assert good.count() == 2
 
 
+def test_release_caches_warns_when_unpersist_fails(spark, caplog):
+    """A cache that cannot be unpersisted is reported on the package
+    logger, not swallowed; the other caches are still released."""
+    import logging
+
+    from finporter_spark.caching import _ATTR, owns_cache, release_caches
+
+    class BrokenCache:
+        def unpersist(self, blocking=False):
+            raise RuntimeError("executor lost")
+
+    class Cache:
+        released = False
+
+        def unpersist(self, blocking=False):
+            self.released = True
+
+    ok = Cache()
+    df = owns_cache(spark.range(1), BrokenCache(), ok)
+    with caplog.at_level(logging.WARNING, logger="finporter_spark"):
+        release_caches(df)
+    assert ok.released
+    assert getattr(df, _ATTR) == []
+    [record] = caplog.records
+    assert record.name == "finporter_spark"
+    assert record.levelno == logging.WARNING
+    assert "executor lost" in record.getMessage()
+
+
 def test_finport_reader_pushdown_and_contract(tmp_path):
     """Reader-level contract: supported filters (EqualTo/In/IsNotNull on
     real columns) are absorbed and applied during read; unsupported

@@ -242,3 +242,40 @@ def test_double_export_plans_no_python(spark):
     assert "ArrowEvalPython" not in plan
     assert "BatchEvalPython" not in plan
     assert to_delimited_lines(df).collect()[1][0] == "0.3333333333333333,1.0,1"
+
+
+# values that SQL-text quoting must carry through unchanged
+AWKWARD = ['say "hi"', "back\\slash", "it's", "a,b", "a\tb", '\\"', "x'\\,\t\"y", None]
+
+
+@pytest.mark.parametrize(
+    "delimiter, want",
+    [
+        (
+            ",",
+            'i,s,d\n0,say \\"hi\\",1.5\n1,back\\slash,1.5\n2,it\'s,1.5\n'
+            '3,"a,b",1.5\n4,a\tb,1.5\n5,\\\\",1.5\n6,"x\'\\,\t\\"y",1.5\n7,,1.5\n',
+        ),
+        (
+            "\t",
+            'i\ts\td\n0\tsay \\"hi\\"\t1.5\n1\tback\\slash\t1.5\n2\tit\'s\t1.5\n'
+            '3\ta,b\t1.5\n4\t"a\tb"\t1.5\n5\t\\\\"\t1.5\n6\t"x\'\\,\t\\"y"\t1.5\n'
+            "7\t\t1.5\n",
+        ),
+    ],
+    ids=["csv", "tsv"],
+)
+def test_awkward_strings_encode_to_golden_bytes(spark, delimiter, want):
+    """Quotes, backslashes, apostrophes, the delimiter and tabs in string
+    values: the bytes the Column-built encoder gave, unchanged."""
+    df = _df(spark, [(i, v, 1.5) for i, v in enumerate(AWKWARD)], "i int, s string, d double")
+    assert encode_to_string(df, delimiter) == want
+
+
+def test_to_delimited_lines_quotes_column_names(spark):
+    from finporter_spark.encoder import to_delimited_lines
+
+    df = _df(spark, [("x,y", 2.5)], "`we``ird name` string, `d d` double")
+    assert df.columns == ["we`ird name", "d d"]
+    assert to_delimited_lines(df).collect()[0].line == '"x,y",2.5'
+    assert encode_to_string(df) == 'we`ird name,d d\n"x,y",2.5\n'

@@ -15,6 +15,9 @@ from finporter_spark.functions import (
     generate_transaction_id_str,
     normalize_lines,
     normalize_lines_str,
+    parse_timestamp,
+    sql_ident,
+    sql_literal,
     transaction_id_expr,
     with_transaction_ids,
 )
@@ -119,3 +122,38 @@ def test_split_by_standard_assets(spark):
     assert sorted(r.assetID for r in valid.collect()) == ["Bond", "LC", "Total"]
     # case-sensitive closed vocabulary: 'bond' is NOT standard
     assert sorted(r.assetID for r in invalid.collect()) == ["NotAClass", "bond"]
+
+
+# --- SQL text quoting ---
+
+# each would end the literal or the identifier early if left unescaped
+AWKWARD = ["it's", "back\\slash", "\\'", "x' OR '1'='1", "a\\", "\\u0041", "`", "tab\there"]
+
+
+def test_sql_literal_reaches_the_plan_unchanged(spark):
+    exprs = [f"{sql_literal(s)} AS c{i}" for i, s in enumerate(AWKWARD)]
+    assert list(spark.range(1).selectExpr(*exprs).first()) == AWKWARD
+
+
+def test_sql_ident_names_any_column(spark):
+    df = spark.createDataFrame([tuple(range(len(AWKWARD)))], [f"n{i}" for i in range(len(AWKWARD))])
+    df = df.toDF(*AWKWARD)
+    got = df.selectExpr(*[f"{sql_ident(n)} + 1 AS {sql_ident(n)}" for n in AWKWARD])
+    assert got.columns == AWKWARD
+    assert list(got.first()) == list(range(1, len(AWKWARD) + 1))
+
+
+def test_parse_timestamp_default_time_and_zone(spark):
+    df = spark.createDataFrame([(" 03/01/2021 ",), ("",), (None,)], "d string")
+    text = parse_timestamp(sql_ident("d"), "MM/dd/yyyy", "09:30:00", "America/New_York")
+    rows = [r[0] for r in df.selectExpr(text).collect()]
+    assert rows == [dt.datetime(2021, 3, 1, 14, 30), None, None]
+
+
+def test_parse_timestamp_awkward_time_of_day_stays_a_value(spark):
+    """A time of day that tries to close the literal is one (unparsable)
+    value: the timestamp is null, the query is unchanged."""
+    df = spark.createDataFrame([("03/01/2021",)], "d string")
+    for tod in ("09:30:00' , 'HH", "09:30:00\\"):
+        text = parse_timestamp(sql_ident("d"), "MM/dd/yyyy", tod)
+        assert df.selectExpr(text).first()[0] is None

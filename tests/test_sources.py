@@ -95,3 +95,31 @@ def test_read_delimited_all_string_fires_no_job(spark, tmp_path):
     assert list(jobs) == []
     assert df.columns == ["a", "b,c", "_corrupt_record"]
     assert [tuple(r) for r in df.collect()] == [("1", "2,3", None)]
+
+
+def test_detect_skips_an_empty_first_file(tmp_path):
+    """detect sniffs the file Spark's scan reads first, not the first
+    name: a 0-byte a.csv does not speak for the folder."""
+    from finporter_spark.handlers import handle_detect
+    from finporter_spark.importers.prospector import default_prospector
+
+    d = tmp_path / "drop"
+    d.mkdir()
+    (d / "a.csv").write_text("")
+    (d / "b.csv").write_text("strategyID,title\ns1,Sixty Forty\n")
+    assert handle_detect(default_prospector(), str(d)) == ["allocdata: allocStrategy: csv"]
+
+
+def test_detect_and_header_names_name_the_same_file(spark, tmp_path):
+    """Files with different headers: the schema detect reports is the one
+    header_names (and Spark's scan) gives decode."""
+    from finporter_spark.handlers import handle_detect
+    from finporter_spark.importers.prospector import default_prospector
+
+    d = tmp_path / "drop"
+    d.mkdir()
+    (d / "a.csv").write_text("strategyID,title\ns1,Sixty Forty\n")
+    (d / "b.csv").write_text("assetID,title,colorCode,parentAssetID\n" + "Bond,Bonds,13,\n" * 20)
+    assert handle_detect(default_prospector(), str(d)) == ["allocdata: allocAsset: csv"]
+    assert header_names(spark, str(d)) == ["assetID", "title", "colorCode", "parentAssetID"]
+    assert header_names(spark, str(d)) == _spark_names(spark, str(d), ",")
