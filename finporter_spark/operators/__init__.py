@@ -27,8 +27,8 @@ from finporter_spark.operators.scale import (
 from finporter_spark.operators.similarity import (
     brute_force_knn,
     cosine_expr,
-    ivf_knn,
-    lsh_bucket_knn,
+    ivf_knn_det,
+    lsh_bucket_knn_exact_probe,
 )
 from finporter_spark.operators.text import (
     language_id,
@@ -66,8 +66,8 @@ __all__ = [
     "write_bucketed",
     "brute_force_knn",
     "cosine_expr",
-    "ivf_knn",
-    "lsh_bucket_knn",
+    "ivf_knn_det",
+    "lsh_bucket_knn_exact_probe",
     "language_id",
     "quality_score",
     "token_count",

@@ -201,7 +201,7 @@ def load_or_build_signatures(
     hash_family: str = "xxhash64",
 ) -> DataFrame:
     """MinHash signatures as persisted DATASET state (mirrors
-    ``similarity.load_or_train_centroids``): the signature table is a
+    ``similarity.load_or_train_centroids_det``): the signature table is a
     property of (corpus, shingle_n, num_hashes), not of any one query —
     build it once per corpus version, persist as parquet, and let every
     near-dup / clustering / decontamination job read it back.

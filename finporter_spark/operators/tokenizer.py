@@ -12,7 +12,7 @@ Scale design — the standard BPE factorization, Spark-shaped:
   same shuffle shape as l7/l8. Everything after operates on that
   vocabulary-sized table.
 - **The merge loop is driver-side over vocabulary-sized state** — like
-  ``similarity.load_or_train_centroids`` (k-means on collected sample)
+  ``similarity.load_or_train_centroids_det`` (k-means quantizer)
   this is dataset-STATE training, not a data pass: pair counting and
   merging touch only distinct words × their symbol lists (bounded by
   vocabulary, independent of corpus size; HF tokenizers / sentencepiece

@@ -37,7 +37,7 @@ from finporter_spark.operators.dedup import (
     simhash_near_duplicates,
 )
 from finporter_spark.operators.joins import asof_join, range_join
-from finporter_spark.operators.similarity import brute_force_knn, lsh_bucket_knn
+from finporter_spark.operators.similarity import brute_force_knn
 from finporter_spark.operators.text import (
     LANG_MARKERS,
     TOKEN_RE,
@@ -84,13 +84,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     conf is set here too (it is runtime-settable) so this works under a
     driver-provided session as well.
     """
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # oracle comparisons are naive-UTC; pin the session zone even when
-        # the driver supplies its own SparkSession (runtime-settable)
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    except Exception:
-        pass
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # oracle comparisons are naive-UTC; pin the session zone even when
+    # the driver supplies its own SparkSession (runtime-settable)
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
@@ -1412,12 +1409,11 @@ def l3_lsh_knn(spark, sf_dir):
     l19 path covers higher-recall needs). tests/test_recall_sf01.py
     pins both the recall floor and the candidate-fraction ceiling.
 
-    Round 9: probe selection moved from the numpy UDF to deterministic
-    JVM expressions (operators/similarity.lsh_bucket_knn_exact_probe)
-    whose double sums are sequential folds a DuckDB oracle restates
-    verbatim — the approximate operator is now graded by FULL value
-    hash (the a19 pattern). Same algorithm, same planes, no Python
-    stage."""
+    Probe selection runs as deterministic JVM expressions
+    (operators/similarity.lsh_bucket_knn_exact_probe) whose double sums
+    are sequential folds a DuckDB oracle restates verbatim — the
+    approximate operator is graded by FULL value hash (the a19
+    pattern), with no Python stage."""
     from finporter_spark.operators.similarity import (
         lsh_bucket_knn_exact_probe,
     )

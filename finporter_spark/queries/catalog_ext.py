@@ -3848,10 +3848,7 @@ def s12_python_datasource(spark, sf_dir):
     # runtime-settable feature flag (off by default in Spark 4); a
     # driver-supplied session won't have it in its builder config
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    try:
-        spark.dataSource.register(FinportDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(FinportDataSource)
     return (
         spark.read.format("finport")
         .option("path", path)
@@ -3894,10 +3891,7 @@ def s13_datasource_roundtrip(spark, sf_dir):
     CATALOG["s12_python_datasource"][0](spark, sf_dir).limit(1).collect()
     in_path = _io_dir(sf_dir, "s12")
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    try:
-        spark.dataSource.register(FinportDataSource)
-    except Exception:
-        pass
+    spark.dataSource.register(FinportDataSource)
     full = (
         spark.read.format("finport").option("path", in_path).load()
     )
@@ -3946,10 +3940,7 @@ def x12_datasource_stream(spark, sf_dir):
     CATALOG["s12_python_datasource"][0](spark, sf_dir).limit(1).collect()
     in_path = _io_dir(sf_dir, "s12")
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    try:
-        spark.dataSource.register(FinportDataSource)
-    except Exception:
-        pass
+    spark.dataSource.register(FinportDataSource)
     sdf = spark.readStream.format("finport").option("path", in_path).load()
     agg = sdf.groupBy("accountID").agg(
         F.count("*").cast("bigint").alias("n"),

@@ -2160,10 +2160,7 @@ def x14_datasource_stream_parallel(spark, sf_dir):
 
     CATALOG["s12_python_datasource"][0](spark, sf_dir).limit(1).collect()
     in_path = _io_dir(sf_dir, "s12")
-    try:
-        spark.dataSource.register(FinportParallelDataSource)
-    except Exception:
-        pass
+    spark.dataSource.register(FinportParallelDataSource)
     sdf = spark.readStream.format("finportp").option("path", in_path).load()
     agg = sdf.groupBy("accountID").agg(
         F.count("*").cast("bigint").alias("n"),

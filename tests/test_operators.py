@@ -4,6 +4,7 @@ text analysis. Recall thresholds per BASELINE.md (≥0.9 vs brute force)."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,7 +14,6 @@ from finporter_spark.operators import (
     brute_force_knn,
     exact_dedup,
     keep_latest,
-    lsh_bucket_knn,
     minhash_near_duplicates,
 )
 from finporter_spark.operators.dedup import ngram_jaccard_pairs, shingles
@@ -176,22 +176,6 @@ def test_minhash_signature_cache_stages_once(spark, sf_dir, tmp_path):
     } != mtimes, "changed fingerprint must rebuild"
 
 
-def test_lsh_knn_recall_vs_brute_force(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("q_id"), "embedding"
-    )
-    exact = {
-        (r.q_id, r.vec_id) for r in brute_force_knn(q, emb, k=5).collect()
-    }
-    approx = {
-        (r.q_id, r.vec_id)
-        for r in lsh_bucket_knn(q, emb, dim=64, k=5, n_planes=4).collect()
-    }
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.5, f"lsh knn recall {recall} too low"
-
-
 def test_brute_force_knn_self_is_top1(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 5).select(
@@ -212,60 +196,147 @@ def test_shingles_edge_cases(spark):
     assert rows[2].sh == []          # empty
 
 
-def test_ivf_knn_recall_vs_brute_force(spark, sf_dir):
-    """IVF with n_probe=4/16 lists must recover most exact neighbors."""
-    from finporter_spark.operators.similarity import brute_force_knn, ivf_knn
-    from finporter_spark.queries.catalog import _t
-    from pyspark.sql import functions as F
+def _poisoned(monkeypatch, module, name):
+    """Make ``module.name`` raise: a cache hit must never call it."""
+    def boom(*args, **kw):
+        raise AssertionError(f"cache miss: {name} called")
 
-    emb = _t(spark, sf_dir, "embeddings").cache()
-    q = emb.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("q_id"), "embedding"
-    )
-    exact = {
-        (r.q_id, r.vec_id) for r in brute_force_knn(q, emb, k=5).collect()
-    }
-    approx = {
-        (r.q_id, r.vec_id)
-        for r in ivf_knn(q, emb, dim=64, k=5, n_centroids=16, n_probe=4).collect()
-    }
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.6, recall
+    monkeypatch.setattr(module, name, boom)
 
 
-def test_ivf_centroids_deterministic(spark, sf_dir):
-    from finporter_spark.operators.similarity import train_ivf_centroids
-    from finporter_spark.queries.catalog import _t
-
-    emb = _t(spark, sf_dir, "embeddings")
-    a = train_ivf_centroids(emb, 64, n_centroids=4, iters=2)
-    b = train_ivf_centroids(emb, 64, n_centroids=4, iters=2)
-    assert a == b
-
-
-def test_centroid_cache_roundtrip_and_reuse(spark, sf_dir, tmp_path):
-    """load_or_train_centroids persists once and the second call reads
-    the parquet back (proved by poisoning train after the first call —
-    a cache hit never retrains); the cached values equal the trained."""
+def test_centroid_cache_roundtrip_and_reuse(spark, sf_dir, tmp_path, monkeypatch):
+    """load_or_train_centroids_det persists once and the second call
+    reads the parquet back (proved by poisoning kmeans_fit after the
+    first call — a cache hit never retrains); the cached values equal
+    the trained."""
     import finporter_spark.operators.similarity as sim
     from finporter_spark.queries.catalog import _t
 
     emb = _t(spark, sf_dir, "embeddings")
     path = str(tmp_path / "cents")
-    a = sim.load_or_train_centroids(
-        emb, 64, n_centroids=4, iters=1, cache_path=path
+    a = sim.load_or_train_centroids_det(
+        emb, "vec_id", "embedding", 64, n_centroids=4, iters=1,
+        cache_path=path, fingerprint="fp1",
     )
-    orig = sim.train_ivf_centroids
-    sim.train_ivf_centroids = lambda *args, **kw: (_ for _ in ()).throw(
-        AssertionError("cache miss: retrained")
+    _poisoned(monkeypatch, sim, "kmeans_fit")
+    b = sim.load_or_train_centroids_det(
+        emb, "vec_id", "embedding", 64, n_centroids=4, iters=1,
+        cache_path=path, fingerprint="fp1",
     )
-    try:
-        b = sim.load_or_train_centroids(
-            emb, 64, n_centroids=4, iters=1, cache_path=path
-        )
-    finally:
-        sim.train_ivf_centroids = orig
     assert a == b
+
+
+def test_pq_books_cache_roundtrip_and_reuse(spark, sf_dir, tmp_path, monkeypatch):
+    """Same hit contract for load_or_train_pq_books: pq_fit is poisoned
+    after the first call, and the second call serves equal codebooks."""
+    import finporter_spark.operators.similarity as sim
+    from finporter_spark.queries.catalog import _t
+
+    emb = _t(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "books")
+    a = sim.load_or_train_pq_books(
+        emb, "vec_id", "embedding", m=4, k=4, iters=1,
+        cache_path=path, fingerprint="fp1",
+    )
+    _poisoned(monkeypatch, sim, "pq_fit")
+    b = sim.load_or_train_pq_books(
+        emb, "vec_id", "embedding", m=4, k=4, iters=1,
+        cache_path=path, fingerprint="fp1",
+    )
+    assert a == b
+
+
+def test_ann_cache_logs_hit_and_rebuild_reason(spark, sf_dir, tmp_path, caplog):
+    """A matching fingerprint logs a hit; a changed one rebuilds and
+    logs why, on the package logger."""
+    import logging
+
+    import finporter_spark.operators.similarity as sim
+    from finporter_spark.queries.catalog import _t
+
+    emb = _t(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "cents")
+
+    def load(fp):
+        return sim.load_or_train_centroids_det(
+            emb, "vec_id", "embedding", 64, n_centroids=4, iters=1,
+            cache_path=path, fingerprint=fp,
+        )
+
+    caplog.set_level(logging.INFO, logger="finporter_spark")
+    load("fp1")
+    assert f"ANN cache rebuild: {path} (no _SUCCESS)" in caplog.messages
+    caplog.clear()
+    load("fp1")
+    assert caplog.messages == [f"ANN cache hit: {path}"]
+    caplog.clear()
+    load("fp2")
+    assert caplog.messages == [
+        f"ANN cache rebuild: {path} (fingerprint changed)"
+    ]
+    with open(os.path.join(path, "_fp")) as fh:
+        assert fh.read() == "fp2"
+
+
+def test_ann_cache_without_success_marker_is_rebuilt(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A cache directory whose write never committed (no _SUCCESS) is
+    rebuilt, not read."""
+    import finporter_spark.operators.similarity as sim
+    from finporter_spark.queries.catalog import _t
+
+    emb = _t(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "codes")
+    cents = sim.kmeans_fit(emb, "vec_id", "embedding", k=4, iters=1)
+    books = sim.pq_fit(emb, "vec_id", "embedding", m=4, k=4, iters=1)
+
+    def load():
+        return sim.load_or_build_ivfadc_codes(
+            emb, "vec_id", "embedding", cents, books,
+            cache_path=path, fingerprint="fp1",
+        )
+
+    want = sorted(map(tuple, load().collect()))
+    os.remove(os.path.join(path, "_SUCCESS"))
+    calls = []
+    build = sim.build_ivfadc_codes
+    monkeypatch.setattr(
+        sim, "build_ivfadc_codes",
+        lambda *a, **kw: calls.append(1) or build(*a, **kw),
+    )
+    assert sorted(map(tuple, load().collect())) == want
+    assert calls == [1]
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
+def test_ann_cache_unreadable_part_file_raises(spark, sf_dir, tmp_path, monkeypatch):
+    """A committed cache (``_SUCCESS`` and a matching fingerprint) whose
+    part file Spark cannot read raises instead of silently retraining."""
+    import glob
+
+    import finporter_spark.operators.similarity as sim
+    from finporter_spark.queries.catalog import _t
+
+    emb = _t(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "cents")
+
+    def load():
+        return sim.load_or_train_centroids_det(
+            emb, "vec_id", "embedding", 64, n_centroids=4, iters=1,
+            cache_path=path, fingerprint="fp1",
+        )
+
+    load()
+    parts = glob.glob(os.path.join(path, "part-*.parquet"))
+    assert parts
+    for part in parts:
+        with open(part, "wb") as fh:
+            fh.write(b"not a parquet file")
+    _poisoned(monkeypatch, sim, "kmeans_fit")
+    with pytest.raises(Exception) as err:
+        load()
+    assert "cache miss" not in str(err.value)
 
 
 def test_approx_count_distinct_within_tolerance(spark, sf_dir):
@@ -293,24 +364,6 @@ def test_connected_components_chain_and_islands(spark):
     }
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10,
                    20: 20, 21: 20, 22: 20, 23: 20}
-
-
-def test_lsh_knn_symmetric_join_matches_broadcast(spark, sf_dir):
-    """broadcast_queries=False (batch-against-batch contract) takes the
-    symmetric shuffled bucket join and returns identical results."""
-    from finporter_spark.operators.similarity import lsh_bucket_knn
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("q_id"), "embedding"
-    )
-    bc = lsh_bucket_knn(q, emb, dim=64, k=5, n_planes=4)
-    sym = lsh_bucket_knn(
-        q, emb, dim=64, k=5, n_planes=4, broadcast_queries=False
-    )
-    assert sorted(map(tuple, bc.collect())) == sorted(
-        map(tuple, sym.collect())
-    )
 
 
 def test_hll_sketch_within_tolerance(spark, sf_dir):
