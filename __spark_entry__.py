@@ -9,8 +9,10 @@ rows-only checks here and threshold checks in tests/).
 
 from __future__ import annotations
 
+import logging
 import os
 import sys
+import zipfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,22 +29,20 @@ def _ship_package(spark: SparkSession) -> None:
     """Make ``finporter_spark`` importable on executor Python workers.
 
     The catalog's pandas/mapInPandas stages pickle module-level
-    functions BY REFERENCE, so workers must import the package. When the
-    driver process launched with the repo on PYTHONPATH (how the tests
-    and bench run) this is a no-op; when a driver-supplied session has a
-    different cwd/env, ship the package once as a zip via addPyFile —
-    runtime-safe and distributed to every worker.
+    functions BY REFERENCE, so workers must import the package. Once per
+    SparkContext the package's ``.py`` files are zipped and shipped with
+    ``addPyFile``, whether or not the repo is already on the workers'
+    PYTHONPATH, so a driver-supplied session with a different cwd/env
+    still works. A failure to zip or ship is logged as a warning on the
+    ``finporter_spark`` logger and the query goes on: workers that have
+    the repo on PYTHONPATH do not need the zip.
     """
     sc = spark.sparkContext
     if id(sc) in _SHIPPED:
         return
     _SHIPPED.add(id(sc))
+    zpath = os.path.join("/tmp", "finporter_spark_pkg.zip")
     try:
-        import finporter_spark  # noqa: F401  (driver side import check)
-
-        import zipfile
-
-        zpath = os.path.join("/tmp", "finporter_spark_pkg.zip")
         with zipfile.ZipFile(zpath, "w") as zf:
             pkg = os.path.join(_REPO, "finporter_spark")
             for root, _dirs, files in os.walk(pkg):
@@ -51,8 +51,10 @@ def _ship_package(spark: SparkSession) -> None:
                         full = os.path.join(root, fn)
                         zf.write(full, os.path.relpath(full, _REPO))
         sc.addPyFile(zpath)
-    except Exception:
-        pass  # best effort; normal PYTHONPATH setups never need this
+    except Exception as exc:
+        logging.getLogger("finporter_spark").warning(
+            "could not ship the package zip %s to the workers: %r", zpath, exc
+        )
 
 
 def _wrap(fn):

@@ -6,8 +6,8 @@ from finporter_spark.operators.dedup import (
     simhash_fingerprints,
     simhash_near_duplicates,
     upsert_by_key,
-    connected_components,
 )
+from finporter_spark.operators.graph import connected_components_star
 from finporter_spark.operators.audio import extract_wav_features, wav_decode, wav_encode
 from finporter_spark.operators.gif import gif_decode, gif_encode
 from finporter_spark.operators.jpeg import jpeg_decode, jpeg_encode, split_mjpeg
@@ -46,7 +46,7 @@ __all__ = [
     "simhash_fingerprints",
     "simhash_near_duplicates",
     "upsert_by_key",
-    "connected_components",
+    "connected_components_star",
     "extract_wav_features",
     "wav_decode",
     "wav_encode",

@@ -636,87 +636,3 @@ def apply_changelog(
     return joined.select(*out_cols).filter(
         F.col(op_col).isNull() | (F.col(op_col) != "D")
     )
-
-
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_l",
-    id_b: str = "id_r",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Cluster near-dup pairs: connected components by iterative min-label
-    propagation -> (node, cluster) with cluster = min id reachable.
-
-    This is the step that turns pairwise near-dup output (L2/L9/L10) into
-    "keep one doc per duplicate group". Each round is one join + one
-    groupBy (label flows along edges); rounds needed = graph diameter,
-    which for near-dup clusters is tiny (dup groups are dense) — for
-    HIGH-diameter graphs (chains, provenance trails) use
-    :func:`finporter_spark.operators.graph.connected_components_star`,
-    which converges in O(log diameter) alternations instead. The
-    convergence check collects a single count per round. GraphX/GraphFrames
-    would provide this wholesale, but a few DataFrame rounds keep it
-    dependency-free and the shuffle pattern explicit.
-
-    Label state is localCheckpointed (not cached) per round: an
-    iterative plan that only caches still GROWS its logical tree every
-    round — each analysis re-walks the whole join-on-join history, and
-    past ~20 rounds the ANALYZER itself OOMs the driver even on a
-    300-node graph (observed; the same reason pagerank checkpoints).
-    localCheckpoint truncates the logical plan at CALL time even when
-    lazy (the plan becomes an RDD scan immediately; only the job is
-    deferred), so the checkpoints here are LAZY (optimization
-    round 1): the per-round changed-count job is the materializing
-    action — one driver action per round instead of the two the eager
-    version paid, with the round count and the convergence criterion
-    unchanged.
-    """
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionAll(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        .cache()
-    )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint(eager=False)
-    )
-
-    def _round(lab):
-        neighbor_min = (
-            edges.join(lab, edges.src == lab.id)
-            .groupBy("dst")
-            .agg(F.min("label").alias("nmin"))
-        )
-        return (
-            lab.join(neighbor_min, lab.id == neighbor_min.dst, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=False)
-        )
-
-    for _ in range(max_iter):
-        new_labels = _round(labels)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    if max_iter < 1:
-        # zero-round path: no changed-count job ran, so the lazily
-        # checkpointed labels are not yet materialized — force them
-        # while the edge cache is still alive, or the caller's first
-        # action re-scans edges uncached
-        labels.count()
-    edges.unpersist()
-    return labels.select(F.col("id"), F.col("label").alias("cluster"))

@@ -1,4 +1,9 @@
-"""Link-graph analysis: PageRank over an edge DataFrame.
+"""Link-graph analysis over an edge DataFrame: connected components by
+star contraction, and PageRank.
+
+:func:`connected_components_star` is the package's one
+connected-components operator (near-dup clusters, entity-resolution
+name graphs and event chains all go through it).
 
 Web-scale training pipelines weight documents by the link authority of
 their source (Common-Crawl-style domain ranking feeding quality
@@ -10,10 +15,9 @@ DataFrame-native formulation: each iteration is
 
 two keyed shuffles per iteration (src-join, dst-agg), both map-side
 combined — the shape that holds on a 100 TB edge list. Driver work per
-iteration is one scalar (the dangling-mass sum), mirroring the
-connected-components convergence counter (`dedup.py`). Ranks are
-cached per iteration and the previous cache released, so lineage stays
-bounded across iterations.
+iteration is one scalar (the dangling-mass sum), mirroring star-CC's
+per-round convergence count. Ranks are cached per iteration and the
+previous cache released, so lineage stays bounded across iterations.
 
 No reference parity to cite: the reference (openalloc/FINporter) has no
 graph surface; this exists for the training-data-pipeline operator
@@ -38,12 +42,13 @@ def connected_components_star(
     large-star / small-star contraction (Kiveris et al., "Connected
     Components in MapReduce and Beyond", SoCC'14).
 
-    The existing :func:`finporter_spark.operators.dedup.
-    connected_components` propagates min labels along edges — one round
-    per hop, perfect for near-dup clusters (dense, tiny diameter) but a
-    scale-killer on HIGH-DIAMETER graphs: a 1M-node chain (user event
-    timelines, linked-list-shaped provenance graphs) needs 1M rounds.
-    Star contraction halves the effective diameter every alternation:
+    Min-label propagation would spend one round per hop: fine for
+    near-dup clusters (dense, tiny diameter) but a scale-killer on
+    HIGH-DIAMETER graphs — a 1M-node chain (user event timelines,
+    linked-list-shaped provenance graphs) needs 1M rounds. Star
+    contraction halves the effective diameter every alternation, so it
+    needs O(log d) rounds, and round count is the cost under the MPC
+    model. One alternation is:
 
     - **large-star** (per node u): hang every STRICTLY LARGER neighbor
       v > u onto m = min(Γ(u) ∪ {u});
@@ -77,10 +82,10 @@ def connected_components_star(
     outcome for callers that pass a stats dict.
 
     Returns (node, component) for every node incident to an edge, with
-    component = min node id in the component — the same canonical label
-    the min-propagation variant and the SQL oracle produce. Self-loops
-    are dropped; isolated nodes never appear (callers outer-join their
-    node domain if needed).
+    component = min node id in the component — the canonical label the
+    SQL oracles' recursive closures produce. Self-loops are dropped, so
+    a node whose only edges are self-loops never appears, and neither
+    do isolated nodes (callers outer-join their node domain if needed).
     """
     e = (
         edges.select(
@@ -194,11 +199,10 @@ def connected_components_star(
             f"connected_components_star: no disjoint-star state after "
             f"max_iter={max_iter} rounds — labels would be wrong"
         )
-    # converged: e is a star forest (node -> component min); roots
-    # appear only on the v side and label themselves
-    roots = e.select(F.col("v").alias("node")).distinct().join(
-        e.select(F.col("u").alias("node")).distinct(), "node", "left_anti"
-    )
+    # converged: e is a star forest (node -> component min). No node
+    # is both a u and a v (that is the exit test), so every v is a
+    # root and labels itself
+    roots = e.select(F.col("v").alias("node")).distinct()
     return e.select(
         F.col("u").alias("node"), F.col("v").alias("component")
     ).unionAll(

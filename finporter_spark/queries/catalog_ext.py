@@ -1888,7 +1888,7 @@ def p16_fuzzy_join(spark, sf_dir):
     BASELINES tag): the row-pair OUTPUT is quadratic in per-value row
     counts (18× at the sf1→10 decade, 36 s at sf10), which no plan can
     avoid once row pairs are materialized. The scale-path contract is
-    ``p16b_er_clusters`` (canonical min-label clusters over the
+    ``p16b_er_clusters`` (canonical min-id clusters over the
     vocabulary-sized name graph, decade-flat ~2.5 s) — this entry
     remains to validate p16b's candidate generation against an
     exhaustive pair listing at small SFs.
@@ -2093,14 +2093,17 @@ def a11_kll_quantiles(spark, sf_dir):
     """,
 )
 def l11_dedup_clusters(spark, sf_dir):
-    """Near-dup pairs -> duplicate GROUPS: connected components by
-    min-label propagation over the exact Jaccard pairs (l9). The oracle
-    recomputes the same closure with a recursive CTE. Downstream dedup
-    keeps one doc per cluster (min id = the canonical survivor)."""
-    from finporter_spark.operators.dedup import connected_components
+    """Near-dup pairs -> duplicate GROUPS: connected components by star
+    contraction over the exact Jaccard pairs (l9), labelled with the
+    min doc id of each component. The oracle recomputes the same
+    closure with a recursive CTE. Downstream dedup keeps one doc per
+    cluster (min id = the canonical survivor)."""
+    from finporter_spark.operators.graph import connected_components_star
 
     pairs = CATALOG["l9_ngram_jaccard"][0](spark, sf_dir)
-    return connected_components(pairs, "id_l", "id_r")
+    return connected_components_star(pairs, "id_l", "id_r").select(
+        F.col("node").alias("id"), F.col("component").alias("cluster")
+    )
 
 
 @query(

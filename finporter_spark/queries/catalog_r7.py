@@ -80,7 +80,7 @@ def l30_chain_components(spark, sf_dir):
     """L30: connected components over each user's event CHAIN (edge =
     consecutive events of one user, so one component per multi-event
     user and component diameter = the user's event count). Chains are
-    the adversarial shape for the min-label CC behind l11 (rounds =
+    the adversarial shape for min-label propagation (rounds =
     diameter); the large-star/small-star contraction
     (operators/graph.connected_components_star) converges in O(log
     diameter) alternations instead — the 100 TB formulation for

@@ -60,10 +60,10 @@ def p16b_er_clusters(spark, sf_dir):
        DISTINCT (brand, name) pairs — comparator cost ∝ vocabulary²
        within a brand block, never row count;
     2. connected components over the scored name graph
-       (operators/dedup.connected_components — min-label, right for
-       these dense tiny-diameter clusters; nodes are brand-scoped
-       strings so components never cross brands). The graph is
-       vocabulary-sized, not corpus-sized;
+       (operators/graph.connected_components_star — star contraction,
+       min name as the label; nodes are brand-scoped strings so
+       components never cross brands). The graph is vocabulary-sized,
+       not corpus-sized;
     3. every part row keyed back through two linear equi-joins:
        (brand, name) → component, then component → min p_partkey as
        the canonical survivor id.
@@ -74,7 +74,7 @@ def p16b_er_clusters(spark, sf_dir):
     small-SF all-pairs oracle baseline (SURVEY §2B-ext row updated).
     The oracle recomputes the closure with a recursive CTE; singleton
     names (no fuzzy match) label themselves."""
-    from finporter_spark.operators.dedup import connected_components
+    from finporter_spark.operators.graph import connected_components_star
 
     SEP = "\t"  # never occurs in p_brand/p_name (word tokens)
     p = _t(spark, sf_dir, "part")
@@ -93,7 +93,9 @@ def p16b_er_clusters(spark, sf_dir):
             F.concat_ws(SEP, "brand", "name_r").alias("id_r"),
         )
     )
-    comp = connected_components(cand, "id_l", "id_r")
+    comp = connected_components_star(cand, "id_l", "id_r").select(
+        F.col("node").alias("id"), F.col("component").alias("cluster")
+    )
     rows = p.select(
         "p_partkey",
         F.concat_ws(SEP, "p_brand", "p_name").alias("node"),

@@ -1155,12 +1155,12 @@ def pipe7_master_data_dedup(spark, sf_dir):
     neighborhood candidate generation + levenshtein verify over the
     distinct-name vocabulary (`_ed1_name_pairs`, the l37 core — one
     variant-key equi-join, never all-pairs). Stage 2: connected
-    components over the ed-1 name graph (`operators/dedup.
-    connected_components` — min-label, right for these lattice-shaped
-    low-diameter clusters). Stage 3: keep-best survivorship — the
-    canonical record is the name with the HIGHEST multiplicity
-    (most-observed spelling wins, the MDM convention), ties broken by
-    min name; two vocabulary-sized aggs, no window over corpus rows.
+    components over the ed-1 name graph by star contraction
+    (`operators/graph.connected_components_star`, see round 9 below).
+    Stage 3: keep-best survivorship — the canonical record is the name
+    with the HIGHEST multiplicity (most-observed spelling wins, the MDM
+    convention), ties broken by min name; two vocabulary-sized aggs, no
+    window over corpus rows.
 
     Everything after the corpus-collapsing first agg runs on
     VOCABULARY-sized data; a 10x bigger corpus with the same
@@ -1176,7 +1176,7 @@ def pipe7_master_data_dedup(spark, sf_dir):
     component-equivalent by the per-subgraph sparsification argument),
     and components come from star-contraction CC (the sparsified star
     edges roughly double the graph's effective diameter, which is
-    exactly the shape min-label propagation pays per-hop for and
+    exactly the shape a per-hop min-label propagation pays for and
     O(log d) contraction shrugs off — 4 rounds, measured 25 s vs 39 s
     at sf1 for the CC stage alone). The oracle still closes over ALL
     ed-1 pairs, gating the equivalence. Measured: sf1 35.1 -> 28.6 s,

@@ -15,7 +15,10 @@ after a testdata regeneration.
 
 from __future__ import annotations
 
+import logging
 import os
+
+_log = logging.getLogger("finporter_spark")
 
 IO_ROOT = "/tmp/finporter_spark_io"
 
@@ -46,7 +49,9 @@ def stage_once(sf_dir, name, write_fn, *source_tables, extra_fingerprint=""):
     stat-based fingerprint of the source parquet files is recorded after
     the write; a mismatch (regenerated testdata, or a changed
     ``extra_fingerprint`` — e.g. the staged layout) forces a restage, so
-    reuse can never serve stale data. Returns the staged path.
+    reuse can never serve stale data. Each call logs
+    ``staging hit: <path>`` or ``staging rebuild: <path> (<reason>)`` at
+    INFO on the ``finporter_spark`` logger. Returns the staged path.
     """
     from finporter_spark.operators.scale import source_fingerprint
 
@@ -59,10 +64,17 @@ def stage_once(sf_dir, name, write_fn, *source_tables, extra_fingerprint=""):
     marker = os.path.join(path, "_staged_fingerprint")
     try:
         with open(marker) as fh:
-            if fh.read() == fp:
-                return path
-    except OSError:
-        pass
+            staged = fh.read()
+    except FileNotFoundError:
+        staged = None
+    if staged == fp:
+        _log.info("staging hit: %s", path)
+        return path
+    reason = (
+        "no _staged_fingerprint marker" if staged is None
+        else "fingerprint changed"
+    )
+    _log.info("staging rebuild: %s (%s)", path, reason)
     write_fn(path)
     with open(marker, "w") as fh:
         fh.write(fp)

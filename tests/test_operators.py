@@ -353,14 +353,15 @@ def test_approx_count_distinct_within_tolerance(spark, sf_dir):
 def test_connected_components_chain_and_islands(spark):
     """Chain 1-2-3 collapses to one cluster even though (1,3) was never a
     pair; isolated pair forms its own; diameter > 1 needs iterations."""
-    from finporter_spark.operators.dedup import connected_components
+    from finporter_spark.operators import connected_components_star
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)],
         "id_l long, id_r long",
     )
     got = {
-        r.id: r.cluster for r in connected_components(pairs).collect()
+        r.node: r.component
+        for r in connected_components_star(pairs, "id_l", "id_r").collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10,
                    20: 20, 21: 20, 22: 20, 23: 20}
@@ -640,14 +641,36 @@ def test_rolling_hll_rollup_within_tolerance(spark, sf_dir):
         assert abs(approx[k] - n) / n < 0.05, (k, approx[k], n)
 
 
+def _union_find_components(edges):
+    """Reference labels on the driver: (node, min node id of its
+    component) for every node on a non-self-loop edge."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a == b:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # the smaller id stays root, so a root is its component min
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(x, find(x)) for x in parent}
+
+
 def test_star_cc_matches_min_label_cc_on_random_graphs(spark):
     """large-star/small-star contraction must produce the same
-    (node, min-id component) labels as the min-label propagation CC on
+    (node, min-id component) labels as a union-find reference on
     arbitrary graphs — random sparse graphs with several components,
     parallel edges, self loops, and reversed duplicates."""
     import random
 
-    from finporter_spark.operators.dedup import connected_components
     from finporter_spark.operators.graph import connected_components_star
 
     random.seed(11)
@@ -661,19 +684,13 @@ def test_star_cc_matches_min_label_cc_on_random_graphs(spark):
                 edges.append((b, a))  # reversed duplicate
         edges.append((5, 5))  # self loop
         df = spark.createDataFrame(edges, "src long, dst long")
-        want = {
-            (r.id, r.cluster)
-            for r in connected_components(
-                df, "src", "dst", max_iter=64
-            ).collect()
-        }
-        # the min-label CC includes self-loop-only nodes; star CC drops
-        # isolated (self-loop-only) nodes — align the domains
+        # node 5 appears only if a random edge touches it: star CC
+        # drops self-loops, and so does the reference
+        want = _union_find_components(edges)
         got = {
             (r.node, r.component)
             for r in connected_components_star(df, "src", "dst").collect()
         }
-        want = {(i, c) for (i, c) in want if i in {x for x, _ in got}}
         assert got == want, f"trial {trial}"
 
 
@@ -700,6 +717,20 @@ def test_star_cc_chain_converges_in_log_rounds(spark):
     # halving: measured 6 rounds on this chain (was 12). The bound
     # locks the optimization in — pure alternation cannot meet it.
     assert stats["rounds"] <= 8, stats
+
+
+def test_star_cc_raises_when_not_converged(spark):
+    """Unconverged labels never come back silently: a chain that needs
+    several rounds, capped at one, raises instead of returning."""
+    from finporter_spark.operators.graph import connected_components_star
+
+    chain = spark.range(63).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+    )
+    stats: dict = {}
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components_star(chain, max_iter=1, stats=stats)
+    assert stats == {"rounds": 1, "converged": False}
 
 
 def test_star_cc_fixed_point_detected_immediately(spark):

@@ -8,7 +8,11 @@ Usage:
       [--sf /root/testdata/sf0.1] [--reps 2]
 
 Each run executes under its own job group; job ids are read back from
-the status tracker. Streaming entries launch micro-batch jobs from
+the status tracker. Two stage counts are printed: ``stages`` sums the
+stage ids each job lists, so a stage that a later job skips (its
+shuffle output is reused) counts once per job that lists it;
+``executed`` counts the distinct stages that completed tasks, which is
+the work that actually ran. Streaming entries launch micro-batch jobs from
 scheduler threads outside the group — use tools/stream_probe.py for
 those instead.
 """
@@ -57,6 +61,7 @@ def main() -> None:
         # claim needs the cross-rep variance visible
         jobs_per_rep: list[int] = []
         stages_per_rep: list[int] = []
+        executed_per_rep: list[int] = []
         for r in range(args.reps):
             gc.collect()
             group = f"js-{name}-{r}"
@@ -71,15 +76,20 @@ def main() -> None:
             ids = tracker.getJobIdsForGroup(group)
             infos = [tracker.getJobInfo(i) for i in ids]
             jobs_per_rep.append(len(ids))
-            stages_per_rep.append(
-                sum(len(i.stageIds) for i in infos if i is not None)
+            stage_ids = [s for i in infos if i is not None for s in i.stageIds]
+            stages_per_rep.append(len(stage_ids))
+            stage_infos = [tracker.getStageInfo(s) for s in set(stage_ids)]
+            executed_per_rep.append(
+                sum(1 for si in stage_infos if si and si.numCompletedTasks > 0)
             )
         print(
             f"{name}: jobs={jobs_per_rep[-1]} stages={stages_per_rep[-1]} "
+            f"executed={executed_per_rep[-1]} "
             f"min={min(walls):.3f}s runs="
             + ",".join(f"{w:.3f}" for w in walls)
             + f" jobs_per_rep={jobs_per_rep}"
             + f" stages_per_rep={stages_per_rep}"
+            + f" executed_per_rep={executed_per_rep}"
         )
 
 
