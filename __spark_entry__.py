@@ -9,9 +9,12 @@ rows-only checks here and threshold checks in tests/).
 
 from __future__ import annotations
 
+import atexit
 import logging
 import os
+import shutil
 import sys
+import tempfile
 import zipfile
 from collections.abc import Callable
 
@@ -33,7 +36,9 @@ def _ship_package(spark: SparkSession) -> None:
     SparkContext the package's ``.py`` files are zipped and shipped with
     ``addPyFile``, whether or not the repo is already on the workers'
     PYTHONPATH, so a driver-supplied session with a different cwd/env
-    still works. A failure to zip or ship is logged as a warning on the
+    still works. The zip goes to a directory this process creates (and
+    removes at exit), so concurrent processes never write one file. A
+    failure to zip or ship is logged as a warning on the
     ``finporter_spark`` logger and the query goes on: workers that have
     the repo on PYTHONPATH do not need the zip.
     """
@@ -41,7 +46,9 @@ def _ship_package(spark: SparkSession) -> None:
     if id(sc) in _SHIPPED:
         return
     _SHIPPED.add(id(sc))
-    zpath = os.path.join("/tmp", "finporter_spark_pkg.zip")
+    zdir = tempfile.mkdtemp(prefix="finporter_spark_pkg_")
+    atexit.register(shutil.rmtree, zdir, True)
+    zpath = os.path.join(zdir, "finporter_spark_pkg.zip")
     try:
         with zipfile.ZipFile(zpath, "w") as zf:
             pkg = os.path.join(_REPO, "finporter_spark")
@@ -85,10 +92,11 @@ def oracle_sql() -> dict[str, str]:
 def baselines() -> dict[str, str]:
     """Declared small-SF baseline queries -> their scale-path twins.
 
-    Entries listed here (e.g. p16_fuzzy_join, x6_stateful_running_totals,
-    l9/l10 brute-force pair scans) are deliberately NOT 100 TB operators:
-    they validate or demo the twin named as the value. Production use
-    should pick the twin."""
+    Entries listed here (e.g. p16_fuzzy_join, the l9 brute-force pair
+    scan, the x17/x19 Python-state stream demos) are deliberately NOT
+    100 TB operators: they validate or demo the twin named as the value.
+    Production use should pick the twin. Retired twins that now run
+    their survivor are aliases, not baselines (``catalog.ALIASES``)."""
     from finporter_spark.queries.catalog import catalog_baselines
 
     return catalog_baselines()

@@ -3,13 +3,14 @@ local[$SPARK_GRAFT_CPUS]. Prints ONE COMPACT JSON line:
 {"metric": ..., "value": secs, "unit": "sec", "queries": {...}, "sf": ...,
  "stats": {"n": ..., "median_s": ..., "p90_s": ...}, "full_map": path}
 
-The stdout line is deliberately small: the suite is 157 queries and a
-157-entry per-query map makes the line long enough that log-capture
-pipelines clip it mid-JSON (round-8's committed artifact had
-"parsed": null for exactly this reason). So "queries" on stdout carries
-only the TOP_N slowest queries; the COMPLETE per-query map is written
-to $SPARK_GRAFT_BENCH_FULL (default BENCH_FULL_r12.json next to this
-file) and committed separately.
+The stdout line is deliberately small: the suite is len(HEADLINE)
+(~200) queries, and a per-query map that long makes the line long
+enough that log-capture pipelines clip it mid-JSON (round-8's committed
+artifact had "parsed": null for exactly this reason). So "queries" on
+stdout carries only the TOP_N slowest queries; the COMPLETE per-query
+map is written to $SPARK_GRAFT_BENCH_FULL (default
+BENCH_FULL_r16_c<cores>.json next to this file, <cores> being the
+session's local core count) and committed separately.
 
 Each query executes end-to-end into the `noop` sink (full plan runs, no
 driver collect), which is what a cluster deployment would measure.
@@ -144,7 +145,6 @@ HEADLINE = [
     "pipe5_market_surveillance",
     "w11b_ewma_unbounded",
     "w13_compound_balance",
-    "w14_holt_trend",
     "o18_weighted_sample",
     "f1_rebalance_drift",
     "f2_fifo_realized_gains",
@@ -239,7 +239,6 @@ HEADLINE = [
     "p18_variant_extract",
     "s16_xml_roundtrip",
     "a45_attribution",
-    "w14c_holt_recursive",
     "l42_label_propagation",
     "p19_lateral_topk",
     # round-12 additions
@@ -561,7 +560,8 @@ def main() -> None:
     full_path = os.environ.get(
         "SPARK_GRAFT_BENCH_FULL",
         os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL_r15.json"
+            os.path.dirname(os.path.abspath(__file__)),
+            f"BENCH_FULL_r16_c{spark.sparkContext.defaultParallelism}.json",
         ),
     )
     with open(full_path, "w") as fh:

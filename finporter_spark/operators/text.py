@@ -109,16 +109,6 @@ def fingerprint(col: Column) -> Column:
     )
 
 
-def rolling_hashes(col: Column, window: int = 8) -> Column:
-    """Rolling (Rabin-Karp-style) window hashes over the token stream as
-    array<bigint> — the building block for content-defined chunking.
-    Linear: hashes the n-gram shingle array (see dedup.shingles for why
-    not a per-element transform); map-only."""
-    from finporter_spark.operators.dedup import shingles
-
-    return F.transform(shingles(col, window), lambda s: F.xxhash64(s))
-
-
 def bm25_scores(
     df: DataFrame,
     query_terms: Sequence[str],

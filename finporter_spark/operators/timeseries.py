@@ -237,202 +237,3 @@ def ewma_unbounded(
         out_name=out_name,
         row_index_col="_ewma_i",  # reuse the one window pass
     ).drop("_ewma_a", "_ewma_b", "_ewma_i")
-
-
-def matrix_affine_scan(
-    df: DataFrame,
-    partition_cols: Sequence[str],
-    order_cols: Sequence[str | Column],
-    a_cols: Sequence[str],
-    b_cols: Sequence[str],
-    out_cols: Sequence[str],
-    epoch_rows: int = 512,
-    row_index_col: str | None = None,
-) -> DataFrame:
-    """Vector-state generalization of :func:`affine_scan`: the exact
-    distributed prefix scan for y_i = M_i·y_{i-1} + c_i where y is a
-    d-vector, M_i a per-row d×d matrix (``a_cols``: d² columns,
-    row-major) and c_i a per-row d-vector (``b_cols``). Matrix-affine
-    maps compose just like scalar ones, so the same three stages apply:
-    per-epoch exact local scans carry (P_k = M_k···M_1, Q_k) per row,
-    the carry recursion runs over per-epoch summaries (d²+d doubles
-    per epoch — vanishing), and a JVM expression finishes every row
-    (y = P·carry + Q componentwise). Covers Holt's linear-trend
-    smoothing (d=2 — see :func:`holt_trend`), damped-trend variants,
-    scalar-observation Kalman predictors, and any fixed-d linear
-    recurrence. Same contracts as affine_scan (epoch-bounded ‖ΠM‖,
-    2^31 rows/key, null keys kept, name-collision guard).
-    """
-    import numpy as np
-    import pandas as pd
-
-    from finporter_spark.caching import owns_cache
-
-    d = len(b_cols)
-    assert len(a_cols) == d * d and len(out_cols) == d
-    pcols = list(partition_cols)
-    p_flat = [f"_mP_{j}_{k}" for j in range(d) for k in range(d)]
-    q_flat = [f"_mQ_{j}" for j in range(d)]
-    c_flat = [f"_mC_{j}" for j in range(d)]
-    reserved = set(
-        ["_g", "_epoch", "_last"] + p_flat + q_flat + c_flat
-    ) | set(out_cols)
-    clash = reserved.intersection(df.columns) - (
-        {row_index_col} if row_index_col else set()
-    )
-    if clash:
-        raise ValueError(
-            f"matrix_affine_scan: input columns {sorted(clash)} collide "
-            "with internal/output names — rename them first"
-        )
-    if row_index_col:
-        staged = df.withColumn("_g", F.col(row_index_col).cast("long"))
-    else:
-        w = Window.partitionBy(*pcols).orderBy(*order_cols)
-        staged = df.withColumn("_g", F.row_number().over(w).cast("long"))
-    staged = staged.withColumn(
-        "_epoch", ((F.col("_g") - 1) / epoch_rows).cast("long")
-    )
-    row_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in staged.schema.fields
-    ) + ", " + ", ".join(f"{c} double" for c in p_flat + q_flat)
-
-    def _local(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_g")
-        Ms = pdf[list(a_cols)].to_numpy(dtype="float64").reshape(-1, d, d)
-        Cs = pdf[list(b_cols)].to_numpy(dtype="float64")
-        P = np.eye(d)
-        Q = np.zeros(d)
-        Ps, Qs = [], []
-        for M, c in zip(Ms, Cs):
-            P = M @ P
-            Q = M @ Q + c
-            Ps.append(P.ravel().copy())
-            Qs.append(Q.copy())
-        pdf = pdf.copy()
-        for idx, name in enumerate(p_flat):
-            pdf[name] = [p[idx] for p in Ps]
-        for idx, name in enumerate(q_flat):
-            pdf[name] = [q[idx] for q in Qs]
-        return pdf
-
-    local = staged.groupBy(*pcols, "_epoch").applyInPandas(
-        _local, schema=row_schema
-    ).persist()
-    summaries = local.groupBy(*pcols, "_epoch").agg(
-        F.max(F.struct("_g", *p_flat, *q_flat)).alias("_last")
-    ).select(
-        *pcols,
-        "_epoch",
-        *[F.col(f"_last.{c}").alias(c) for c in p_flat + q_flat],
-    )
-    ftypes = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    carry_schema = ", ".join(
-        f"`{c}` {ftypes[c]}" for c in pcols
-    ) + ", _epoch long, " + ", ".join(f"{c} double" for c in c_flat)
-
-    def _carries(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_epoch")
-        As = pdf[p_flat].to_numpy(dtype="float64").reshape(-1, d, d)
-        Bs = pdf[q_flat].to_numpy(dtype="float64")
-        y = np.zeros(d)
-        outs = []
-        for A, B in zip(As, Bs):
-            outs.append(y.copy())
-            y = A @ y + B
-        res = pdf[pcols + ["_epoch"]].copy()
-        for idx, name in enumerate(c_flat):
-            res[name] = [o[idx] for o in outs]
-        return res
-
-    carries = summaries.groupBy(*pcols).applyInPandas(
-        _carries, schema=carry_schema
-    )
-    cr = carries.select(
-        *[F.col(c).alias(f"_cr_{c}") for c in pcols],
-        F.col("_epoch").alias("_cr_epoch"),
-        *c_flat,
-    )
-    cond = F.col("_epoch") == F.col("_cr_epoch")
-    for c in pcols:
-        cond = cond & F.col(c).eqNullSafe(F.col(f"_cr_{c}"))
-    out = local.join(cr, cond)
-    for j, oc in enumerate(out_cols):
-        expr = F.col(q_flat[j])
-        for k in range(d):
-            expr = expr + F.col(f"_mP_{j}_{k}") * F.col(c_flat[k])
-        out = out.withColumn(oc, expr)
-    out = out.drop(
-        "_g", "_epoch", "_cr_epoch",
-        *p_flat, *q_flat, *c_flat,
-        *[f"_cr_{c}" for c in pcols],
-    )
-    return owns_cache(out, local)
-
-
-def holt_trend(
-    df: DataFrame,
-    partition_cols: Sequence[str],
-    order_cols: Sequence[str | Column],
-    value_col: str,
-    alpha: float,
-    beta: float,
-    epoch_rows: int = 512,
-    level_name: str = "level",
-    trend_name: str = "trend",
-) -> DataFrame:
-    """Holt's linear-trend exponential smoothing (level l, trend b):
-
-        l_i = α·x_i + (1-α)(l_{i-1} + b_{i-1})
-        b_i = β(l_i - l_{i-1}) + (1-β)·b_{i-1}
-
-    (seeds l_1 = x_1, b_1 = 0), expressed as the 2-state linear
-    recurrence [l;b]_i = M·[l;b]_{i-1} + c_i with
-    M = [[1-α, 1-α], [-αβ, 1-αβ]], c_i = [α·x_i, αβ·x_i] and the seed
-    encoded in c_1 — run exactly at any history length by
-    :func:`matrix_affine_scan`. No window-sum closed form exists here
-    (M's eigenvalues are complex for most (α,β), so no log-space SQL
-    equivalent either — the catalog entry is rows-only by declaration,
-    with the recursion-parity check in pytest)."""
-    w = Window.partitionBy(*partition_cols).orderBy(*order_cols)
-    x = F.col(value_col)
-    prepped = (
-        df.withColumn("_h_i", F.row_number().over(w))
-        .withColumn(
-            "_h_m00",
-            F.when(F.col("_h_i") == 1, 0.0).otherwise(1.0 - alpha),
-        )
-        .withColumn(
-            "_h_m01",
-            F.when(F.col("_h_i") == 1, 0.0).otherwise(1.0 - alpha),
-        )
-        .withColumn(
-            "_h_m10",
-            F.when(F.col("_h_i") == 1, 0.0).otherwise(-alpha * beta),
-        )
-        .withColumn(
-            "_h_m11",
-            F.when(F.col("_h_i") == 1, 0.0).otherwise(1.0 - alpha * beta),
-        )
-        .withColumn(
-            "_h_c0",
-            F.when(F.col("_h_i") == 1, x).otherwise(F.lit(alpha) * x),
-        )
-        .withColumn(
-            "_h_c1",
-            F.when(F.col("_h_i") == 1, F.lit(0.0)).otherwise(
-                F.lit(alpha * beta) * x
-            ),
-        )
-    )
-    return matrix_affine_scan(
-        prepped,
-        partition_cols,
-        order_cols,
-        ["_h_m00", "_h_m01", "_h_m10", "_h_m11"],
-        ["_h_c0", "_h_c1"],
-        [level_name, trend_name],
-        epoch_rows=epoch_rows,
-        row_index_col="_h_i",
-    ).drop("_h_i", "_h_m00", "_h_m01", "_h_m10", "_h_m11", "_h_c0", "_h_c1")

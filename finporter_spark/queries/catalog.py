@@ -59,6 +59,11 @@ CATALOG: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] 
 # keep users from mistaking a baseline for a scale path.
 BASELINES: dict[str, str] = {}
 
+# alias name -> (survivor, reason). An alias is a retired twin whose
+# answer is its survivor's: it stays registered under its old name with
+# the survivor's callable and oracle, and carries no code of its own.
+ALIASES: dict[str, tuple[str, str]] = {}
+
 
 def query(name: str, oracle: str | None = None, baseline_of: str | None = None):
     """Register a catalog query. ``baseline_of`` marks the entry as a
@@ -72,6 +77,13 @@ def query(name: str, oracle: str | None = None, baseline_of: str | None = None):
         return fn
 
     return deco
+
+
+def alias(name: str, survivor: str, reason: str) -> None:
+    """Register ``name`` as an alias of the registered query
+    ``survivor`` (recorded in :data:`ALIASES` with ``reason``)."""
+    CATALOG[name] = CATALOG[survivor]
+    ALIASES[name] = (survivor, reason)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1614,3 +1626,28 @@ from finporter_spark.queries import catalog_r12  # noqa: E402,F401
 from finporter_spark.queries import catalog_r13  # noqa: E402,F401
 
 from finporter_spark.queries import catalog_r14  # noqa: E402,F401
+
+# Retired same-answer twins: each name now runs its survivor.
+alias(
+    "l10_embedding_near_dup",
+    "l19_blocked_allpairs",
+    "brute-force cross join of the exact pair set l19 computes blocked",
+)
+alias(
+    "x6_stateful_running_totals",
+    "x6b_builtin_running_totals",
+    "per-key Python state for counts a built-in streaming agg keeps "
+    "in the JVM state store; x17/x19 cover Python stream state",
+)
+alias(
+    "w14_holt_trend",
+    "w14b_holt_exact",
+    "matrix-scan Holt for a single series longer than a task; no "
+    "catalog table has one (events span 30 days per type at every sf)",
+)
+alias(
+    "w14c_holt_recursive",
+    "w14b_holt_exact",
+    "recursive-CTE Holt, bit-identical to w14b and ~10x slower; "
+    "l21b still runs a Spark WITH RECURSIVE",
+)

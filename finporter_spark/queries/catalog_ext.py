@@ -627,62 +627,6 @@ def l9_ngram_jaccard(spark, sf_dir):
 
 
 @query(
-    "l10_embedding_near_dup",
-    """
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-               FROM embeddings)
-    SELECT id_l, id_r, round(cosine, 6) AS cosine FROM (
-      SELECT a.vec_id AS id_l, b.vec_id AS id_r,
-             list_dot_product(a.e, b.e)
-               / (sqrt(list_dot_product(a.e, a.e))
-                  * sqrt(list_dot_product(b.e, b.e))) AS cosine
-      FROM v a JOIN v b ON a.vec_id < b.vec_id
-    ) WHERE cosine >= 0.4
-    """,
-    baseline_of="l19_blocked_allpairs",
-)
-def l10_embedding_near_dup(spark, sf_dir):
-    """Exact embedding-cosine near-dup candidate pairs (threshold 0.4 on
-    this corpus). Brute-force pair scoring is the correctness baseline;
-    the LSH-bucketed path (l3_lsh_knn) is the 100 TB strategy."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-    )
-    # precompute per-vector norms once (vs per-pair: 2/3 fewer lambda
-    # evaluations in the O(n^2) scoring loop)
-    emb = emb.withColumn(
-        "nrm",
-        F.sqrt(
-            F.aggregate(
-                F.zip_with("e", "e", lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        ),
-    ).cache()
-    a = emb.select(
-        F.col("vec_id").alias("id_l"), F.col("e").alias("ea"), F.col("nrm").alias("na")
-    )
-    b = emb.repartition(32, "vec_id").select(
-        F.col("vec_id").alias("id_r"), F.col("e").alias("eb"), F.col("nrm").alias("nb")
-    )
-    dot = F.aggregate(
-        F.zip_with("ea", "eb", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos = dot / (F.col("na") * F.col("nb"))
-    return (
-        F.broadcast(a)
-        .join(b, F.col("id_l") < F.col("id_r"))
-        .select("id_l", "id_r", cos.alias("cosine"))
-        .filter(F.col("cosine") >= 0.4)
-        .withColumn("cosine", F.round("cosine", 6))
-    )
-
-
-@query(
     "l19_blocked_allpairs",
     """
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
@@ -697,10 +641,11 @@ def l10_embedding_near_dup(spark, sf_dir):
     """,
 )
 def l19_blocked_allpairs(spark, sf_dir):
-    """Same exact result as l10, produced the way a 100 TB corpus would:
-    block-matrix tiling + one BLAS matmul per tile (see
-    operators/similarity.blocked_allpairs_cosine). Shuffle ∝ n·B, task
-    memory = two blocks; l10's broadcast NLJ is the small-corpus baseline."""
+    """Exact embedding-cosine near-dup pairs (threshold 0.4), produced
+    the way a 100 TB corpus would: block-matrix tiling + one BLAS matmul
+    per tile (see operators/similarity.blocked_allpairs_cosine). Shuffle
+    ∝ n·B, task memory = two blocks. Also registered as the alias
+    l10_embedding_near_dup."""
     from finporter_spark.operators.similarity import blocked_allpairs_cosine
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -1340,61 +1285,6 @@ def q5_local_supplier_volume(spark, sf_dir):
         .groupBy("n_name")
         .agg(F.sum(rev.cast("decimal(28,6)")).cast("double").alias("revenue"))
     )
-
-
-from finporter_spark.queries.staging import (  # noqa: F401,E402
-    stage_x6_drop as _stage_x6_drop,
-)
-
-
-@query(
-    "x6_stateful_running_totals",
-    "SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n FROM events GROUP BY user_id",
-    baseline_of="x6b_builtin_running_totals",
-)
-def x6_stateful_running_totals(spark, sf_dir):
-    """X6: custom stateful streaming operator (applyInPandasWithState) —
-    SEMANTICS DEMO, not a scale path (catalog BASELINES tag): the
-    per-key Python callback is 12.7× super-linear at the sf1→10 decade
-    (250 s at sf10). Production code wants the equality-tested JVM
-    state-store twin ``x6b_builtin_running_totals`` (decade-flat
-    2.0/1.5/3.6 s); this entry exists to exhibit the
-    applyInPandasWithState API shape for operators the built-ins
-    genuinely can't express.
-
-    Per-user state carried across micro-batches. 8 staged files (under
-    availableNow's single drain, all land in ONE batch) => update mode
-    emits exactly one row per key, equal to the batch aggregate; the
-    oracle checks the exact per-key counts (float totals are
-    threshold-tested in tests/, not hashed — pandas partial sums aren't
-    decimal-routable). 8-way staging keeps the write AND the stream
-    ingest parallel (a coalesce(1) here serialized both).
-
-    State partitions: 32, NOT the drain-tuned 8 the commit-bound
-    streams use (x7's interval join pays per-partition store commits
-    and wants few) — applyInPandasWithState invokes Python once per
-    KEY, so on high-cardinality keys the per-key callback cost
-    dominates and wants maximum worker parallelism. A/B at both SFs:
-    8 -> 32 partitions is 6.3 s -> 2.0 s at sf0.1 and 42 s -> 15 s at
-    sf1 (150k keys). On a cluster this is the same executors x cores
-    sizing rule as any shuffle.
-    """
-    from finporter_spark.streaming.pipeline import (
-        run_stream_to_memory,
-        stream_running_totals,
-    )
-
-    path = _stage_x6_drop(spark, sf_dir)
-    sdf = (
-        spark.readStream.schema("user_id bigint, ts timestamp, value double")
-        .option("header", True)
-        .csv(path)
-    )
-    out = run_stream_to_memory(
-        stream_running_totals(sdf), "x6_mem", output_mode="update",
-        state_partitions=32,
-    )
-    return out.select("user_id", "n")
 
 
 @query(

@@ -12,8 +12,8 @@ all with full DuckDB value-hash oracles):
   ``w24_stl_decompose`` (trend/seasonal/residual),
   ``w26_changepoint`` (CUSUM-square argmax level-shift locator),
   ``w27_ar1_fit`` (AR(1) φ/intercept), ``w14b_holt_exact``
-  (arrival-order Holt recurrence — the hash-green twin of w14's
-  matrix scan, recursive-CTE oracle).
+  (arrival-order Holt recurrence, recursive-CTE oracle; the catalog's
+  one Holt evaluator, aliased as w14 and w14c).
 - Crawl-side curation: ``l41_url_canonical_dedup`` (URL
   canonicalization + canonical-URL dup groups) and
   ``pipe8_crawl_curation`` (URL dedup → Gopher repetition gate →
@@ -478,8 +478,7 @@ def x17_transform_with_state_top2(spark, sf_dir):
     ``addPyFile`` so the query runs under the bare driver gate, not
     just pytest.
 
-    Semantics demo of the API family (like x6 for
-    ``applyInPandasWithState``): count+max+max2 ARE expressible as a
+    Semantics demo of the API family: count+max+max2 ARE expressible as a
     built-in streaming agg — the point is the protocol: 8 staged files
     drained at ``maxFilesPerTrigger=4`` force 2 micro-batches (the
     minimum cross-batch proof; round-13 cut it from 4 — same proof,
@@ -492,11 +491,10 @@ def x17_transform_with_state_top2(spark, sf_dir):
     batch top-2 the oracle computes.
 
     Scale shape: per-key state is 3 longs (bounded); the per-batch
-    Python callback is the same cost class as x6 (per-key pandas
-    dispatch) — production code with built-in-expressible semantics
-    wants x6b's JVM state store; this operator is for semantics the
-    built-ins genuinely can't express (custom eviction, top-k with
-    k-sized state, model state)."""
+    Python callback is a per-key pandas dispatch — production code
+    with built-in-expressible semantics wants x6b's JVM state store;
+    this operator is for semantics the built-ins genuinely can't
+    express (custom eviction, top-k with k-sized state, model state)."""
     import pandas as pd  # noqa: F401 — imported for the closure below
 
     from finporter_spark.queries.staging import stage_x6_drop as _stage_x6_drop
@@ -593,7 +591,7 @@ def x17_transform_with_state_top2(spark, sf_dir):
             outputMode="Update",
             timeMode="None",
         )
-        # state partitions 8, not x6's 32: transformWithStateInPandas
+        # state partitions 8, not x6b's 32: transformWithStateInPandas
         # dispatches Arrow batches per PARTITION (not one Python call
         # per key like applyInPandasWithState), so the per-batch
         # RocksDB instance load+commit × partitions dominates at drain
@@ -780,7 +778,7 @@ def l45b_pq_rerank_topk(spark, sf_dir):
 
 
 # =====================================================================
-# W14b — Holt linear-trend smoothing, exact sequential twin of w14
+# W14b — Holt linear-trend smoothing, exact sequential recurrence
 # =====================================================================
 
 
@@ -815,25 +813,23 @@ def l45b_pq_rerank_topk(spark, sf_dir):
 )
 def w14b_holt_exact(spark, sf_dir):
     """W14b: Holt's linear-trend smoothing of the daily total series,
-    evaluated SEQUENTIALLY per key — the hash-green twin of w14.
+    evaluated SEQUENTIALLY per key (also registered as the aliases
+    w14_holt_trend and w14c_holt_recursive).
 
-    w14 runs the matrix-affine Blelloch scan (the long-single-series
-    scale path: per-epoch 2×2 local scans + a vanishing carry
-    recursion), but scan reassociation drifts the last float ulps from
-    the sequential recurrence (parity 1e-8 in tests/test_r6_ops.py) —
-    too coarse to gamble a 6 dp value hash on. w14b instead evaluates
-    the textbook recurrence l' = 0.3·x + 0.7·(l + t),
-    t' = 0.1·(l' − l) + 0.9·t in ARRIVAL ORDER inside one Arrow
-    applyInPandas per event type, the SAME literals and association
-    the oracle's recursive CTE states — bit-identical doubles, full
-    value-hash oracle for a 2-state recurrence. Inputs are exact
+    A reassociating scan would drift the last float ulps from the
+    sequential recurrence — too coarse to gamble a 6 dp value hash
+    on. w14b instead evaluates the textbook recurrence
+    l' = 0.3·x + 0.7·(l + t), t' = 0.1·(l' − l) + 0.9·t in ARRIVAL
+    ORDER inside one Arrow applyInPandas per event type, the SAME
+    literals and association the oracle's recursive CTE states —
+    bit-identical doubles, full value-hash oracle for a 2-state
+    recurrence. Inputs are exact
     (daily totals in bigint cents / 100).
 
     Scale contract: per-ENTITY series (the standard forecasting
     shape — each group's days fit one Arrow batch; the group count is
-    what scales). A single series longer than a task is w14's scan
-    territory; that split is exactly x6 vs x6b in the streaming
-    family."""
+    what scales). The events table spans 30 days per type at every
+    scale factor, so no catalog series comes near a task's memory."""
     import pandas as pd
 
     e = _t(spark, sf_dir, "events")

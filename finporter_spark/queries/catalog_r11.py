@@ -685,12 +685,12 @@ def x19_transform_with_state_timers(spark, sf_dir):
     input-vs-timer ordering inside a batch.
 
     Scale: per-key state is 5 longs + one registered timer (RocksDB
-    column families); the per-batch Python dispatch is the x17/x6 cost
+    column families); the per-batch Python dispatch is the x17 cost
     class — the operator exists for semantics built-ins cannot express
     (session CONTENTS with custom eviction); gap sessions whose output
     is only aggregates want x3's built-in session window — hence the
-    ``baseline_of="x3_session_window"`` tag: ``baselines()`` lists all
-    four Python-stateful demos (x6, x17, x19 → scale twins) so a
+    ``baseline_of="x3_session_window"`` tag: ``baselines()`` lists the
+    Python-stateful demos (x17, x19 → scale twins) so a
     consumer filtering machine-readably never routes 100 TB through
     the per-key Python dispatch path."""
     out = _x19_drained(spark, sf_dir)

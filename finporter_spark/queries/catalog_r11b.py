@@ -279,122 +279,6 @@ def l42_label_propagation(spark, sf_dir):
 
 
 # =====================================================================
-# W14c — Holt recurrence via Spark 4 RECURSIVE CTE (JVM-native)
-# =====================================================================
-
-
-@query(
-    "w14c_holt_recursive",
-    """
-    WITH RECURSIVE daily AS (
-      SELECT event_type, CAST(ts AS DATE) AS day,
-             SUM(CAST(round(value * 100) AS BIGINT)) AS tc
-      FROM events GROUP BY 1, 2
-    ), o AS (
-      SELECT event_type, day, CAST(tc AS DOUBLE) / 100.0 AS x,
-             row_number() OVER (PARTITION BY event_type ORDER BY day)
-               AS rn
-      FROM daily
-    ), rec AS (
-      SELECT event_type, day, x, rn, x AS l,
-             CAST(0.0 AS DOUBLE) AS t
-      FROM o WHERE rn = 1
-      UNION ALL
-      SELECT o.event_type, o.day, o.x, o.rn,
-             0.3 * o.x + 0.7 * (rec.l + rec.t) AS l,
-             0.1 * ((0.3 * o.x + 0.7 * (rec.l + rec.t)) - rec.l)
-               + 0.9 * rec.t AS t
-      FROM rec JOIN o
-        ON o.event_type = rec.event_type AND o.rn = rec.rn + 1
-    )
-    SELECT event_type, CAST(day AS TIMESTAMP) AS day,
-           ROUND(l, 6) AS level, ROUND(t, 6) AS trend
-    FROM rec
-    """,
-)
-def w14c_holt_recursive(spark, sf_dir):
-    """W14c: Holt's linear-trend recurrence evaluated by a SPARK-SIDE
-    recursive CTE (``WITH RECURSIVE``, new in Spark 4) — the engine
-    surface that retires w14's founding caveat. When w14 was declared
-    rows-only, the reason was "a sequential recurrence is not
-    SQL-expressible": w14 reassociates it as a matrix scan (ulp drift),
-    w14b evaluates it in arrival order inside an Arrow ``applyInPandas``
-    batch. Spark 4's recursive CTE states the textbook recurrence
-    l' = 0.3·x + 0.7·(l + t), t' = 0.1·(l' − l) + 0.9·t DIRECTLY in
-    SQL, entirely JVM-side — no Python worker anywhere — and the oracle
-    is the SAME recursive CTE text on DuckDB, so the hash certifies two
-    independent recursive-CTE engines stepping the identical recurrence
-    (output bit-identical to w14b, asserted in tests/test_r11b_ops.py).
-
-    Scale shape: the recursion runs over the PINNED daily aggregate
-    (``localCheckpoint``, the a37 domain-pin pattern) — one corpus scan
-    builds the (types × days)-bounded input, then each of the
-    n_days iterations joins the 1-row-per-type frontier against the
-    pinned table; iteration count is the CALENDAR length, not the
-    corpus size (decade-flat past the scan). Cost model: per-iteration
-    scheduling constant × days — ``spark.sql.cteRecursionLevelLimit``
-    is sized at runtime from the pinned aggregate's max series length
-    (so a calendar past the 100-row default runs instead of aborting
-    mid-recursion); a years-long single series still belongs to w14's
-    scan or w14b's Arrow batch (that split is x6 vs x6b) because the
-    per-iteration scheduling constant, not the limit, is the cost.
-    Plan-compile, not execution, dominates cold runs."""
-    e = _t(spark, sf_dir, "events")
-    daily = e.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("tc")
-    )
-    o = daily.select(
-        "event_type",
-        "day",
-        (F.col("tc").cast("double") / F.lit(100.0)).alias("x"),
-        F.row_number()
-        .over(Window.partitionBy("event_type").orderBy("day"))
-        .alias("rn"),
-    )
-    # pin: one corpus scan; the 30-iteration loop re-reads 150 rows,
-    # never the events table (lazy: the sizing action below
-    # materializes it)
-    o = o.localCheckpoint(eager=False)
-    # the recursion must cover the longest per-type calendar: a series
-    # longer than spark.sql.cteRecursionLevelLimit (default 100) would
-    # abort MID-recursion with an opaque engine error — size the limit
-    # from the pinned aggregate (cheap: it is already materialized) so
-    # a longer calendar either runs or the operator's docs route it to
-    # w14/w14b explicitly. The conf change is RAISE-ONLY and session-
-    # global by design: the limit is read when the recursion EXECUTES
-    # (lazily, possibly long after this builder returns), so a
-    # set/restore bracket here would restore before execution and
-    # re-break the query; a raised ceiling is benign for every other
-    # recursive-CTE entry (none relies on hitting the default guard).
-    n_days = o.agg(F.max("rn")).first()[0] or 0
-    cur = int(spark.conf.get("spark.sql.cteRecursionLevelLimit", "100"))
-    spark.conf.set(
-        "spark.sql.cteRecursionLevelLimit",
-        str(max(cur, 100, n_days + 10)),
-    )
-    o.createOrReplaceTempView("w14c_o")
-    return spark.sql(
-        """
-        WITH RECURSIVE rec AS (
-          SELECT event_type, day, x, rn, x AS l,
-                 CAST(0.0 AS DOUBLE) AS t
-          FROM w14c_o WHERE rn = 1
-          UNION ALL
-          SELECT o.event_type, o.day, o.x, o.rn,
-                 0.3 * o.x + 0.7 * (rec.l + rec.t) AS l,
-                 0.1 * ((0.3 * o.x + 0.7 * (rec.l + rec.t)) - rec.l)
-                   + 0.9 * rec.t AS t
-          FROM rec JOIN w14c_o o
-            ON o.event_type = rec.event_type AND o.rn = rec.rn + 1
-        )
-        SELECT event_type, CAST(day AS TIMESTAMP) AS day,
-               ROUND(l, 6) AS level, ROUND(t, 6) AS trend
-        FROM rec
-        """
-    )
-
-
-# =====================================================================
 # A45 — position-based multi-touch attribution (exact basis points)
 # =====================================================================
 

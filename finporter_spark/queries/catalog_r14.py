@@ -13,8 +13,8 @@
   applied to the base table equals the batch o10 changelog apply.
 - ``l21b_bpe_merges``: the BPE merge recursion as a recursive CTE
   over vocabulary-sized single-row state — the hash-green twin that
-  retires l21's rows-only status (the w14c move, applied to the
-  tokenizer family).
+  retires l21's rows-only status (a recurrence stated as a Spark 4
+  recursive CTE, applied to the tokenizer family).
 - ``pipe9b_stream_curation_quality``: the ingest curation funnel
   extended with the trained quality-score gate (l26's logistic
   weights broadcast map-only into the funnel).
@@ -349,8 +349,8 @@ _L21B_ORACLE = """
 def l21b_bpe_merges(spark, sf_dir):
     """L21b: BPE merge TRAINING as a recursive CTE — the hash-green
     twin that retires l21's rows-only status (the last LLM-family
-    ≈-operator; the w14c move — "recurrences aren't SQL-expressible"
-    retired via Spark 4 ``WITH RECURSIVE`` — applied to the tokenizer).
+    ≈-operator; "recurrences aren't SQL-expressible" retired via
+    Spark 4 ``WITH RECURSIVE``, applied to the tokenizer).
     The merge loop's state is the word-frequency table with each
     word's current SYMBOL SEQUENCE — vocabulary-sized, so it rides the
     recursion as ONE ROW holding an array of (encoded word, freq)
@@ -385,15 +385,14 @@ def l21b_bpe_merges(spark, sf_dir):
     hash-gated end-to-end (l21 remains the production operator: its
     driver-side loop over the collected counter costs one pass where
     this costs a job per merge; this entry is the ENGINE-SURFACE
-    twin, the x6/x6b split).
+    twin).
 
     Scale: the recursion state is |vocabulary| structs in one row —
     independent of corpus size; per-step cost is one sort + one
     linear fold over the pair multiset on one executor. A 100 TB
     corpus changes only the word-frequency aggregate
     (map-combinable); a vocabulary too large for one row belongs to
-    l21's driver loop, exactly like w14c routes long calendars to
-    w14b."""
+    l21's driver loop."""
     docs = _t(spark, sf_dir, "documents")
     wf = (
         docs.select(

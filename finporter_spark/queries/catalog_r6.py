@@ -899,48 +899,6 @@ def w13_compound_balance(spark, sf_dir):
 
 
 # =====================================================================
-# W14 — Holt linear-trend smoothing (vector-state scan; rows-only)
-# =====================================================================
-
-
-@query("w14_holt_trend")
-def w14_holt_trend(spark, sf_dir):
-    """W14: Holt's linear-trend exponential smoothing of the daily
-    series per instrument — level AND trend state, the forecasting
-    primitive one step beyond EWMA. Runs on
-    `operators/timeseries.matrix_affine_scan` (the vector-state
-    Blelloch scan: per-epoch exact 2x2-matrix local scans, a
-    vanishing-size matrix-carry recursion, JVM finish). NO ORACLE BY
-    DECLARATION: the 2-state recurrence has no window-sum closed form
-    and M's eigenvalues are complex for these (α,β), so no log-space
-    SQL equivalent exists either — correctness is pinned by the
-    sequential-recursion parity tests in tests/test_r6_ops.py
-    (random-matrix property test + Holt recursion on this exact daily
-    series), and the driver records the rows-only check."""
-    from finporter_spark.operators.timeseries import holt_trend
-
-    daily = (
-        _t(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_format(F.col("ts").cast("date"), "yyyy-MM-dd").alias(
-                "day"
-            ),
-        )
-        .agg((dsum(F.col("value")) / F.count("*")).alias("v"))
-    )
-    out = holt_trend(
-        daily, ["event_type"], ["day"], "v", 0.3, 0.1
-    )
-    return out.select(
-        "event_type",
-        "day",
-        F.round("level", 6).alias("level"),
-        F.round("trend", 6).alias("trend"),
-    )
-
-
-# =====================================================================
 # O18 — deterministic weighted sampling (Efraimidis–Spirakis)
 # =====================================================================
 

@@ -660,8 +660,7 @@ def a20_cuped_metric(spark, sf_dir):
 
 
 # =====================================================================
-# X6b — running totals via the BUILT-IN streaming aggregation (the
-# JVM-state twin of x6's applyInPandasWithState demonstrator)
+# X6b — running totals via the BUILT-IN streaming aggregation
 # =====================================================================
 
 
@@ -672,21 +671,18 @@ def a20_cuped_metric(spark, sf_dir):
 )
 def x6b_builtin_running_totals(spark, sf_dir):
     """X6b: per-key running counts as a BUILT-IN streaming aggregation
-    (groupBy().count() in update mode) — the JVM-state twin of x6.
-
-    x6 exists to demonstrate the custom-state escape hatch
-    (applyInPandasWithState), but that API invokes Python ONCE PER KEY
-    per batch: at the sf10 decade (~1.5M keys) the callback overhead
-    alone is ~4 min (DECADE_BENCH x6: 5.6/19.6/250 s — mildly
-    super-linear because per-batch state-store I/O grows with the key
-    count). When the stateful semantics ARE expressible as an
-    aggregation — running counts/sums/min/max per key — the built-in
-    streaming agg keeps all state updates in the JVM state store with
-    map-side partial aggregation and no Python boundary. This entry
-    pins that guidance with a measured twin: same staged CSV drop,
-    same single availableNow drain (update mode emits exactly one row
-    per key, equal to the batch aggregate the oracle runs), same
-    32-way state partitioning. The 100 TB rule it encodes: reach for
+    (groupBy().count() in update mode); also registered as the alias
+    x6_stateful_running_totals. A per-key Python callback
+    (applyInPandasWithState) invokes Python ONCE PER KEY per batch:
+    ~4 min of callback overhead at the sf10 decade (~1.5M keys;
+    DECADE_BENCH x6: 5.6/19.6/250 s). When the stateful semantics ARE
+    expressible as an aggregation — running counts/sums/min/max per
+    key — the built-in streaming agg keeps all state updates in the JVM
+    state store with map-side partial aggregation and no Python
+    boundary. This entry pins that guidance: one staged CSV drop, one
+    availableNow drain (update mode emits exactly one row per key,
+    equal to the batch aggregate the oracle runs), 32-way state
+    partitioning. The 100 TB rule it encodes: reach for
     applyInPandasWithState only for semantics aggregation can't
     express (conditional resets, multi-counter transitions, custom
     eviction); otherwise the built-in agg is the scale path.
@@ -694,7 +690,7 @@ def x6b_builtin_running_totals(spark, sf_dir):
     from finporter_spark.queries.staging import stage_x6_drop as _stage_x6_drop
     from finporter_spark.streaming.pipeline import run_stream_to_memory
 
-    path = _stage_x6_drop(spark, sf_dir)  # same drop as x6, one writer
+    path = _stage_x6_drop(spark, sf_dir)
     sdf = (
         spark.readStream.schema("user_id bigint, ts timestamp, value double")
         .option("header", True)

@@ -114,8 +114,8 @@ def stage_media(spark, sf_dir, name, make_fn, n_files: int = 32):
 
 
 def stage_x6_drop(spark, sf_dir):
-    """Stage the 8-way CSV drop x6 AND x6b drain (one writer, one
-    staging key — a layout change edits exactly one place, so the two
+    """Stage the 8-way CSV drop x6b and x17 drain (one writer, one
+    staging key — a layout change edits exactly one place, so the
     consumers can never silently diverge on a shared fixture)."""
     from pyspark.sql import functions as F
 

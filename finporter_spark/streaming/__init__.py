@@ -1,19 +1,11 @@
 from finporter_spark.streaming.pipeline import (
     stream_decode_files,
-    stream_tumbling_agg,
-    stream_session_agg,
-    stream_dedup,
-    stream_running_totals,
     stream_transform,
     run_stream_to_memory,
 )
 
 __all__ = [
     "stream_decode_files",
-    "stream_tumbling_agg",
-    "stream_session_agg",
-    "stream_dedup",
-    "stream_running_totals",
     "stream_transform",
     "run_stream_to_memory",
 ]

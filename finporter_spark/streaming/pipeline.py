@@ -3,9 +3,10 @@
 The reference is batch-only; its real-world deployment pattern — brokers
 drop export files, each gets transformed — is exactly Spark's file-source
 micro-batch model, so X1 reuses the SAME column expressions as the batch
-decode path (one definition, two execution modes). Windowed aggregations
-(X2/X3), watermarks (X4) and stateful dedup (X5) extend the engine for the
-events/telemetry shape of the testdata.
+decode path (one definition, two execution modes). This module holds the
+file-source reader, the drain helpers, stream-stream interval joins and
+the versioned merge sinks; windowed aggregation (X2/X3), watermarks (X4)
+and stateful dedup (X5) are plain Spark calls in the catalog's x-queries.
 
 Design for scale: file streams checkpoint per-batch; aggregations carry
 watermarks so state is bounded; dedup uses dropDuplicatesWithinWatermark so
@@ -124,61 +125,6 @@ def stream_decode_files(
         .option("maxFilesPerTrigger", 16)
     )
     return reader.load(path)
-
-
-def stream_tumbling_agg(
-    events: DataFrame,
-    ts_col: str = "ts",
-    window: str = "10 minutes",
-    slide: str | None = None,
-    watermark: str = "30 minutes",
-    keys: Sequence[str] = ("event_type",),
-) -> DataFrame:
-    """X2: tumbling (or sliding, when ``slide`` given) window aggregation
-    with a watermark bounding state. Mirrors the batch x2 catalog query."""
-    win = (
-        F.window(ts_col, window, slide) if slide else F.window(ts_col, window)
-    )
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(win.alias("w"), *keys)
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("value").cast("decimal(28,6)")).cast("double").alias("total"),
-        )
-        .select(F.col("w.start").alias("window_start"), *keys, "n", "total")
-    )
-
-
-def stream_session_agg(
-    events: DataFrame,
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-    keys: Sequence[str] = ("user_id",),
-) -> DataFrame:
-    """X3: session windows per key; watermark closes sessions."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap).alias("sw"), *keys)
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            *keys, F.col("sw.start").alias("session_start"), "n_events"
-        )
-    )
-
-
-def stream_dedup(
-    events: DataFrame,
-    keys: Sequence[str] = ("event_id",),
-    ts_col: str = "ts",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """X5: stateful exact dedup over a stream; state bounded by the
-    watermark (keys older than the watermark age out)."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        list(keys)
-    )
 
 
 STATE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "4"))
@@ -591,79 +537,3 @@ def stream_interval_join(
     if how == "left_outer":
         return lw.join(rw, cond, "left_outer").drop(rw[key])
     return lw.join(rw, cond).drop(rw[key])
-
-
-def stream_running_totals(
-    events: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-    output_mode: str = "update",
-    state_ttl: str | None = None,
-) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: per-key
-    running totals that survive across micro-batches.
-
-    This is the escape hatch for stateful semantics Spark's built-ins
-    don't express (conditional resets, custom eviction, multi-counter
-    state); the state here is deliberately minimal — (count, total) per
-    key — so batch equivalence is exactly groupBy/sum, which the oracle
-    checks. State is Arrow-exchanged per group.
-
-    State lifetime: ``withWatermark`` alone does NOT clean arbitrary
-    stateful state — with ``state_ttl=None`` per-key state lives for the
-    whole query (correct for running totals over a bounded key domain,
-    unbounded growth on high-cardinality keys). Passing ``state_ttl``
-    (e.g. ``"2 hours"``) turns on EventTimeTimeout: a key idle past
-    last-event-time + TTL once the watermark reaches it is REMOVED from
-    the store (and restarts from zero if it reappears) — the bounded-
-    state shape for high-cardinality key streams.
-    """
-    import pandas as pd
-
-    out_schema = (
-        f"{key_col} bigint, n bigint, total double"
-    )
-    state_schema = "n bigint, total double"
-    ttl_ms = (
-        int(pd.Timedelta(state_ttl).total_seconds() * 1000)
-        if state_ttl is not None
-        else None
-    )
-
-    def update(key, pdfs, state):
-        if ttl_ms is not None and state.hasTimedOut:
-            # watermark passed last-event + TTL with no new data: evict
-            state.remove()
-            return
-        n, total = state.get if state.exists else (0, 0.0)
-        max_ts = None
-        for pdf in pdfs:
-            n += len(pdf)
-            # decimal-exact not needed in state: per-key partial order is
-            # the arrival order, same as the single-batch oracle compare
-            total += float(pdf[value_col].sum())
-            m = pdf[ts_col].max()
-            if max_ts is None or m > max_ts:
-                max_ts = m
-        state.update((n, total))
-        if ttl_ms is not None and max_ts is not None:
-            state.setTimeoutTimestamp(
-                int(pd.Timestamp(max_ts).value // 1_000_000) + ttl_ms
-            )
-        yield pd.DataFrame(
-            {key_col: [key[0]], "n": [n], "total": [total]}
-        )
-
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            out_schema,
-            state_schema,
-            output_mode,
-            "EventTimeTimeout" if ttl_ms is not None else "NoTimeout",
-        )
-    )

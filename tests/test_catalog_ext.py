@@ -39,9 +39,6 @@ def test_catalog_covers_declared_surface():
         # and now carry full value-hash oracles
         "l21_bpe_tokenize",
         "a14_rolling_hll_rollup",
-        # rows-only by declaration: 2-state matrix recurrence has no
-        # SQL closed form (complex eigenvalues); exact pytest parity
-        "w14_holt_trend",
     }
 
 

@@ -229,39 +229,6 @@ def test_l45b_rerank_recall_vs_exact(spark, sf_dir):
         assert mine and mine[0].rank == 1 and mine[0].dist2 == 0.0
 
 
-def test_w14b_matches_scan_holt_on_same_series(spark, sf_dir):
-    """The exact-sequential twin and w14's matrix-affine scan agree to
-    1e-6 on the SAME daily-total series — ties the hash-green w14b to
-    the scan-based scale path (same contract as x6 vs x6b)."""
-    from finporter_spark.operators.timeseries import holt_trend
-
-    daily = (
-        _t(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day"),
-        )
-        .agg(
-            (
-                F.sum(F.round(F.col("value") * 100).cast("bigint"))
-                / 100.0
-            ).alias("v")
-        )
-    )
-    scan = {
-        (r.event_type, r.day): (r.level, r.trend)
-        for r in holt_trend(
-            daily, ["event_type"], ["day"], "v", 0.3, 0.1
-        ).collect()
-    }
-    got = CATALOG["w14b_holt_exact"][0](spark, sf_dir).collect()
-    assert len(got) == len(scan)
-    for r in got:
-        day = r.day.strftime("%Y-%m-%d")
-        l, t = scan[(r.event_type, day)]
-        assert abs(r.level - l) < 1e-6 and abs(r.trend - t) < 1e-6, r
-
-
 def test_a38_matches_pure_python_midranks(spark, sf_dir):
     """Doubled-midrank U equals the textbook tie-corrected
     Mann–Whitney computed driver-side."""

@@ -393,81 +393,24 @@ def test_affine_scan_property_random_coefficients(spark):
             assert got[(k, t)] == pytest.approx(y, rel=1e-9, abs=1e-9)
 
 
-def test_matrix_affine_scan_matches_numpy_recursion(spark):
-    """Property: the vector-state scan == the sequential matrix
-    recursion for random per-row 2x2 maps (norm-bounded), two keys,
-    epoch size forcing several carries."""
-    import random
-
-    import numpy as np
-
-    rng = random.Random(99)
-    rows = []
-    for k in ("a", "b"):
-        for t in range(101):
-            rows.append(
-                tuple(
-                    [k, t]
-                    + [rng.uniform(-0.7, 0.7) for _ in range(4)]
-                    + [rng.uniform(-5, 5) for _ in range(2)]
-                )
-            )
-    from finporter_spark.operators.timeseries import matrix_affine_scan
-
-    df = spark.createDataFrame(
-        rows,
-        "k string, t int, m00 double, m01 double, m10 double, "
-        "m11 double, c0 double, c1 double",
-    ).repartition(5)
-    got = {
-        (r.k, r.t): (r.y0, r.y1)
-        for r in matrix_affine_scan(
-            df,
-            ["k"],
-            ["t"],
-            ["m00", "m01", "m10", "m11"],
-            ["c0", "c1"],
-            ["y0", "y1"],
-            epoch_rows=16,
-        ).collect()
-    }
-    series: dict = {}
-    for row in rows:
-        series.setdefault(row[0], []).append(row[1:])
-    for k, pts in series.items():
-        y = np.zeros(2)
-        for t, m00, m01, m10, m11, c0, c1 in sorted(pts):
-            y = np.array([[m00, m01], [m10, m11]]) @ y + np.array(
-                [c0, c1]
-            )
-            assert got[(k, t)][0] == pytest.approx(y[0], rel=1e-9, abs=1e-9)
-            assert got[(k, t)][1] == pytest.approx(y[1], rel=1e-9, abs=1e-9)
-
-
 def test_holt_trend_matches_sequential_recursion(spark, sf_dir):
-    """holt_trend == the literal Holt recursion per instrument."""
-    from finporter_spark.operators.timeseries import holt_trend
-
+    """w14_holt_trend (an alias of w14b_holt_exact) == the literal Holt
+    recursion over the daily-total series per event type."""
     a, b = 0.3, 0.1
     daily = (
         _t(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_format(F.col("ts").cast("date"), "yyyy-MM-dd").alias(
-                "day"
-            ),
-        )
-        .agg(F.avg("value").alias("v"))
+        .groupBy("event_type", F.to_date("ts").alias("day"))
+        .agg(F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("tc"))
+        .collect()
     )
     got = {
-        (r.event_type, r.day): (r.level, r.trend)
-        for r in holt_trend(
-            daily, ["event_type"], ["day"], "v", a, b, epoch_rows=8
-        ).collect()
+        (r.event_type, r.day.date()): (r.level, r.trend)
+        for r in CATALOG["w14_holt_trend"][0](spark, sf_dir).collect()
     }
+    assert len(got) == len(daily)
     series: dict = {}
-    for r in daily.collect():
-        series.setdefault(r.event_type, []).append((r.day, r.v))
+    for r in daily:
+        series.setdefault(r.event_type, []).append((r.day, r.tc / 100.0))
     for et, pts in series.items():
         l = t = None
         for day, x in sorted(pts):
@@ -477,8 +420,8 @@ def test_holt_trend_matches_sequential_recursion(spark, sf_dir):
                 l_new = a * x + (1 - a) * (l + t)
                 t = b * (l_new - l) + (1 - b) * t
                 l = l_new
-            assert got[(et, day)][0] == pytest.approx(l, abs=1e-8)
-            assert got[(et, day)][1] == pytest.approx(t, abs=1e-8)
+            assert got[(et, day)][0] == pytest.approx(l, abs=1e-6)
+            assert got[(et, day)][1] == pytest.approx(t, abs=1e-6)
 
 
 def test_o18_weighted_sample_properties(spark, sf_dir):

@@ -81,7 +81,6 @@ QUERIES = [
     # round-7: the ten steepest 0.1->1 entries from SCALING.md measured
     # one decade further (VERDICT r6 #5), plus the reworked f2
     "u5_udtf_bigrams",
-    "x6_stateful_running_totals",
     "j8_interval_join",
     "l25_span_dedup",
     "l5_language_id",
@@ -98,7 +97,7 @@ QUERIES = [
     "x12_datasource_stream",
     "l31_triangle_count",
     "w15_interval_coverage",
-    # round-8: the JVM built-in streaming-agg twin of x6 — the measured
+    # round-8: running totals as a JVM built-in streaming agg — the
     # scale-path alternative to per-key Python callbacks
     "x6b_builtin_running_totals",
     # round-8 batch 2/3: new operators measured at both decades from
@@ -185,7 +184,6 @@ QUERIES = [
     "p18_variant_extract",
     "s16_xml_roundtrip",
     "a45_attribution",
-    "w14c_holt_recursive",
     "l42_label_propagation",
     "p19_lateral_topk",
     # round-12 additions
@@ -214,8 +212,8 @@ QUERIES = [
 
 
 def main() -> None:
-    # big-SF streaming drains (x6 at sf10: 60M rows through a Python
-    # stateful operator) legitimately exceed the 120 s wedge guard —
+    # big-SF streaming drains (60M events at sf10 through a stateful
+    # stream) legitimately exceed the 120 s wedge guard —
     # raise it for the sweep so the cost is MEASURED, not errored
     os.environ.setdefault("SPARK_GRAFT_STREAM_TIMEOUT", "600")
     if "--skip-gen" not in sys.argv:

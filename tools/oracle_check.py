@@ -82,6 +82,7 @@ def main():
     only = set(argv[1:])
 
     import __spark_entry__ as entry_mod
+    from finporter_spark.queries.catalog import ALIASES
     from finporter_spark.session import get_session
 
     spark = get_session("oracle-check")
@@ -103,6 +104,7 @@ def main():
         if only and name not in only:
             continue
         t0 = time.time()
+        alias = f" alias of {ALIASES[name][0]}" if name in ALIASES else ""
         try:
             sdf = fn(spark, sf_dir)
             spdf = spark_pdf(sdf)
@@ -173,11 +175,12 @@ def main():
             "err": "; ".join(problems)[:500] if problems else None,
         }
         if problems:
-            print(f"FAIL  {name}: " + "; ".join(problems))
+            print(f"FAIL  {name}:{alias} " + "; ".join(problems))
             n_fail += 1
             failures.append(name)
         else:
-            print(f"ok    {name}: {len(spdf)} rows [{time.time()-t0:.1f}s]")
+            print(f"ok    {name}: {len(spdf)} rows "
+                  f"[{time.time()-t0:.1f}s]{alias}")
             n_pass += 1
 
     print(

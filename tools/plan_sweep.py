@@ -23,7 +23,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from finporter_spark.queries.catalog import catalog_queries
+from finporter_spark.queries.catalog import ALIASES, catalog_queries
 from finporter_spark.session import get_session
 
 SKIP_PREFIX = ("x", "pipe3", "pipe9", "o19", "o20")
@@ -36,7 +36,7 @@ def main() -> None:
     qs = catalog_queries()
     rows = []
     for name in sorted(qs):
-        if name.startswith(SKIP_PREFIX):
+        if name.startswith(SKIP_PREFIX) or name in ALIASES:
             continue
         try:
             df = qs[name](spark, sf)
