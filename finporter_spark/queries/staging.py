@@ -15,6 +15,7 @@ after a testdata regeneration.
 
 from __future__ import annotations
 
+import hashlib
 import logging
 import os
 
@@ -24,9 +25,14 @@ IO_ROOT = "/tmp/finporter_spark_io"
 
 
 def io_dir(sf_dir: str, name: str) -> str:
-    """Deterministic scratch dir per (query, scale factor)."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return os.path.join(IO_ROOT, f"{name}_{tag}")
+    """Deterministic scratch dir per (query, dataset) under ``IO_ROOT``
+    (read at call time). The dataset is keyed on a short hash of its
+    resolved path, so two datasets that share a basename never restage
+    over each other; the basename stays in the name for readability."""
+    real = os.path.realpath(sf_dir)
+    tag = os.path.basename(real) or "sf"
+    key = hashlib.sha1(real.encode()).hexdigest()[:10]
+    return os.path.join(IO_ROOT, f"{name}_{tag}_{key}")
 
 
 def src_fp(sf_dir, *tables):

@@ -67,4 +67,6 @@ def test_every_alias_runs_a_registered_survivor():
 def test_no_alias_is_timed_by_the_bench():
     import bench
 
-    assert not set(ALIASES) & set(bench.HEADLINE)
+    timed = bench.timed_queries()
+    assert len(timed) == len(set(timed))
+    assert set(timed) == set(CATALOG) - set(ALIASES)

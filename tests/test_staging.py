@@ -38,3 +38,23 @@ def test_stage_once_logs_hit_and_rebuild_reason(tmp_path, monkeypatch, caplog):
         )
         assert stage() == (path, [f"staging hit: {path}"])
     assert writes == [path, path]
+
+
+def test_io_dir_is_keyed_on_the_dataset_not_its_basename(
+    tmp_path, monkeypatch
+):
+    monkeypatch.setattr(staging, "IO_ROOT", str(tmp_path / "io"))
+    a, b = tmp_path / "a" / "sf0.001", tmp_path / "b" / "sf0.001"
+    a.mkdir(parents=True)
+    b.mkdir(parents=True)
+    assert staging.io_dir(str(a), "q") != staging.io_dir(str(b), "q")
+    link = tmp_path / "link"
+    link.symlink_to(a)
+    monkeypatch.chdir(tmp_path / "a")
+    assert (
+        staging.io_dir(str(a), "q")
+        == staging.io_dir(str(link), "q")
+        == staging.io_dir("sf0.001", "q")
+        == staging.io_dir(str(a) + "/", "q")
+    )
+    assert staging.io_dir(str(a), "q").startswith(str(tmp_path / "io"))

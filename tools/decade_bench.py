@@ -8,6 +8,10 @@ per-file media decode are excluded: their sf-flat (commit-bound) and
 embarrassingly-parallel behavior is established in SCALING.md; this
 sweep exists to catch super-linear RELATIONAL plans two decades out.
 
+Each (query, sf) pair is one timed run after one untimed warm run
+(tools/measure.py), so first-touch staging and compile stay out of the
+number.
+
 Usage: python tools/decade_bench.py [--skip-gen]
 Writes DECADE_BENCH.json {query: {sf: sec}} and prints a table.
 """
@@ -18,13 +22,12 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from finporter_spark.queries.catalog import catalog_queries
-from finporter_spark.session import get_session
+from tools.measure import measure_query, session
 
 GEN_ROOT = "/tmp/finporter_testdata"
 SFS = [
@@ -146,7 +149,6 @@ QUERIES = [
     # round-9: the rewired/converted queries re-measured (pipe7's edge
     # sparsification + star CC; the md5/deterministic families), plus
     # the new operators measured at both decades from birth
-    "l2_minhash_near_dup",
     "l2_simhash_near_dup",
     "l3_lsh_knn",
     "l3_ivf_knn",
@@ -237,11 +239,8 @@ def main() -> None:
     # (sf10 -> level 1, m=8); the operator's own sf10 scaling is
     # measured in IVFADC_DECADE.json (zipf_10 auto-residual row)
     skip = {("l49_ivfadc_auto", "10")}
-    spark = get_session("decade-bench")
+    spark = session("decade-bench", SFS[0][1])
     qs = catalog_queries()
-    qs["q1_pricing_summary"](spark, SFS[0][1]).write.format("noop").mode(
-        "overwrite"
-    ).save()
     for name in QUERIES:
         if name in results:
             continue
@@ -249,45 +248,8 @@ def main() -> None:
         for sf, d in SFS:
             if (name, sf) in skip:
                 continue
-            # first call may stage fixtures; run twice, time the second
-            if name in ("z1_bucketed_join", "l2_minhash_near_dup",
-                        "l21_bpe_tokenize", "l13_decontaminate",
-                        "x7_stream_stream_join", "x11_stream_budget_gate",
-                        "x12_datasource_stream",
-                        "x14_datasource_stream_parallel",
-                        "l3_ivf_knn", "l20_fuzzy_decontaminate",
-                        "x15_stream_outer_interval_join",
-                        "x16_stream_full_outer_interval_join",
-                        "x17_transform_with_state_top2",
-                        "l45_pq_ann_topk", "l45b_pq_rerank_topk",
-                        "x18_stream_psi_monitor", "l45c_ivfadc_topk",
-                        "x19_transform_with_state_timers",
-                        "x18b_stream_psi_weekly",
-                        "s17_variant_roundtrip",
-                        "l46_ivfadc_structured",
-                        "l46b_ivfadc_residual",
-                        "l46c_ivfadc_m8",
-                        "x20_stream_ann_ingest",
-                        "l47_ivfadc_zipf",
-                        # not staging: the rank-select ladder's plan
-                        # compile dominates a cold first run (measured
-                        # 5.0 s first vs 2.0 s steady at sf0.1 — the
-                        # round-12 "a7/a16 slowdown" was this + load,
-                        # not a plan change); time the steady state
-                        "x21_stream_minhash_dedup",
-                        "pipe9_stream_ingest_curation",
-                        "l49_ivfadc_auto",
-                        "x22_stream_cdc_upsert",
-                        "l21b_bpe_merges",
-                        "pipe9b_stream_curation_quality",
-                        "a7_percentiles",
-                        "a16_event_value_percentiles"):
-                qs[name](spark, d).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            t0 = time.time()
-            qs[name](spark, d).write.format("noop").mode("overwrite").save()
-            results[name][sf] = round(time.time() - t0, 3)
+            rep = measure_query(spark, name, lambda: qs[name](spark, d), 1)
+            results[name][sf] = round(rep[0].wall, 3)
         r = results[name]
         print(
             f"{name:32} {r.get('0.1', '-'):>8} {r.get('1', '-'):>8} "

@@ -37,7 +37,7 @@ sys.path.insert(0, REPO)
 
 import numpy as np
 
-from finporter_spark.session import get_session
+from tools.measure import measure_query, session
 
 SFS = [
     ("0.1", "/root/testdata/sf0.1", 16),
@@ -83,7 +83,7 @@ def main() -> None:
         _zipf_fingerprint,
     )
 
-    spark = get_session("ivfadc-decade")
+    spark = session("ivfadc-decade", SFS[0][1])
     results = {}
     # structured-corpus ladder: every row is sized LIVE by the rule
     # (operators.similarity.ivfadc_params) from the corpus count — the
@@ -232,10 +232,7 @@ def main() -> None:
                 codes=codes,
             )
 
-        run().write.format("noop").mode("overwrite").save()  # warm
-        t0 = time.time()
-        run().write.format("noop").mode("overwrite").save()
-        wall = round(time.time() - t0, 3)
+        wall = round(measure_query(spark, f"ivfadc-{sf}", run, 1)[0].wall, 3)
 
         rows = run().collect()
         pdf = emb.select(

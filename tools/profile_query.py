@@ -6,25 +6,23 @@ Usage:
       [--sf /root/testdata/sf0.1] [--reps 3] [--plans-dir plans/r14] \
       [--suffix before]
 
-Plans are written as <plans-dir>/<query>_<suffix>.txt. Timing methodology
-matches bench.py (noop sink, min of reps, gc between runs).
+Plans are written as <plans-dir>/<query>_<suffix>.txt. Timing goes
+through ``tools.measure.measure_query``, the loop bench.py uses.
 """
 
 from __future__ import annotations
 
 import argparse
 import contextlib
-import gc
 import io
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from finporter_spark.queries.catalog import catalog_queries
-from finporter_spark.session import get_session
+from tools.measure import measure_query, session
 
 
 def main() -> None:
@@ -39,16 +37,8 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    extra = {
-        "spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=768m"
-    }
-    spark = get_session("profile-query", extra_conf=extra)
+    spark = session("profile-query", args.sf)
     qs = catalog_queries()
-
-    # warm-up (same as bench)
-    qs["q1_pricing_summary"](spark, args.sf).write.format("noop").mode(
-        "overwrite"
-    ).save()
 
     for name in args.queries:
         if name not in qs:
@@ -66,16 +56,12 @@ def main() -> None:
             print(f"plan -> {p}")
         if args.no_time:
             continue
-        spark.sparkContext.setJobDescription(f"profile:{name}")
-        runs = []
-        for _ in range(args.reps):
-            t0 = time.time()
-            qs[name](spark, args.sf).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs.append(time.time() - t0)
-            gc.collect()
-        spark.sparkContext.setJobDescription(None)
+        runs = [
+            r.wall
+            for r in measure_query(
+                spark, name, lambda: qs[name](spark, args.sf), args.reps
+            )
+        ]
         print(
             f"{name}: min={min(runs):.3f}s runs="
             + ",".join(f"{r:.3f}" for r in runs)

@@ -14,13 +14,12 @@ from __future__ import annotations
 import os
 import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from finporter_spark.queries.catalog import ALIASES, catalog_queries
-from finporter_spark.session import get_session
+from tools.measure import measure_query, session
 
 SF1 = "/tmp/finporter_testdata/sf1"
 SFS = [
@@ -38,18 +37,14 @@ def main() -> None:
              "--sf", "1.0"],
             check=True,
         )
-    spark = get_session("scaling-sweep")
+    spark = session("scaling-sweep", SFS[0])
     qs = catalog_queries()
-    qs["q1_pricing_summary"](spark, SFS[0]).write.format("noop").mode(
-        "overwrite"
-    ).save()
     rows = []
     for name in sorted(set(qs) - set(ALIASES)):  # an alias runs its survivor
-        times = []
-        for sf in SFS:
-            t0 = time.time()
-            qs[name](spark, sf).write.format("noop").mode("overwrite").save()
-            times.append(time.time() - t0)
+        times = [
+            measure_query(spark, name, lambda: qs[name](spark, sf), 1)[0].wall
+            for sf in SFS
+        ]
         r01 = times[2] / times[1] if times[1] > 0 else float("nan")
         r1 = times[3] / times[2] if times[2] > 0 else float("nan")
         rows.append((name, *times, r01, r1))
@@ -68,8 +63,9 @@ def main() -> None:
             "(round 5: p16 26x -> sub-linear via distinct-pair scoring,\n"
             "m9 12x -> 1.3x via a parallel staged layout, l15 via a\n"
             "broadcast model join).\n\n"
-            "Caveat: single-shot timings in ONE shared JVM across every\n"
-            "(query, sf) pair — cross-query cache eviction inflates\n"
+            "Caveat: one timed run after one untimed warm run per\n"
+            "(query, sf) pair, in ONE shared JVM (`tools/measure.py`);\n"
+            "cross-query cache eviction inflates\n"
             "cache-reliant entries vs a solo warm run (e.g. l10 reads\n"
             "~1.7 s solo, simhash ~2.8 s). Treat ratios as signal and\n"
             "absolutes as upper bounds; BENCH_r*.json is the headline\n"
