@@ -27,26 +27,7 @@ from __future__ import annotations
 import os
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
-
-from finporter_spark.operators.dedup import (
-    exact_dedup,
-    keep_latest,
-    minhash_near_duplicates,
-    normalized_text,
-    simhash_near_duplicates,
-)
-from finporter_spark.operators.joins import asof_join, range_join
-from finporter_spark.operators.similarity import brute_force_knn
-from finporter_spark.operators.text import (
-    LANG_MARKERS,
-    TOKEN_RE,
-    fingerprint,
-    language_id,
-    quality_score,
-    token_count,
-    tokens,
-)
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 # name -> (spark_fn, oracle_sql | None)
 CATALOG: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {}
@@ -139,1448 +120,8 @@ def DAVG(expr: str) -> str:
     return f"{DSUM(expr)} / COUNT({expr})"
 
 
-# =====================================================================
-# Aggregation — A1 flagship (TPC-H Q1 shape)
-# =====================================================================
-
-@query(
-    "q1_pricing_summary",
-    f"""
-    SELECT l_returnflag, l_linestatus,
-           {DSUM('l_quantity')} AS sum_qty,
-           {DSUM('l_extendedprice')} AS sum_base_price,
-           {DSUM('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
-           {DSUM('l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS sum_charge,
-           {DAVG('l_quantity')} AS avg_qty,
-           {DAVG('l_extendedprice')} AS avg_price,
-           {DAVG('l_discount')} AS avg_disc,
-           COUNT(*) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-)
-def q1_pricing_summary(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp")
-    )
-    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc * (1 + F.col("l_tax"))
-    return l.groupBy("l_returnflag", "l_linestatus").agg(
-        dsum(F.col("l_quantity")).alias("sum_qty"),
-        dsum(F.col("l_extendedprice")).alias("sum_base_price"),
-        dsum(disc).alias("sum_disc_price"),
-        dsum(charge).alias("sum_charge"),
-        davg(F.col("l_quantity")).alias("avg_qty"),
-        davg(F.col("l_extendedprice")).alias("avg_price"),
-        davg(F.col("l_discount")).alias("avg_disc"),
-        F.count("*").alias("count_order"),
-    )
-
-
-@query(
-    "q1_pricing_summary_decimal",
-    """
-    WITH l AS (
-      SELECT CAST(l_quantity AS DECIMAL(12,2)) AS qty,
-             CAST(l_extendedprice AS DECIMAL(12,2)) AS price,
-             CAST(l_extendedprice AS DECIMAL(12,2))
-               * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))
-               AS disc_price,
-             CAST(l_extendedprice AS DECIMAL(12,2))
-               * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))
-               * (CAST(1 AS DECIMAL(3,2)) + CAST(l_tax AS DECIMAL(4,2)))
-               AS charge,
-             l_returnflag, l_linestatus
-      FROM lineitem
-      WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-    )
-    SELECT l_returnflag, l_linestatus,
-           CAST(SUM(qty) AS DOUBLE) AS sum_qty,
-           CAST(SUM(price) AS DOUBLE) AS sum_base_price,
-           CAST(SUM(disc_price) AS DOUBLE) AS sum_disc_price,
-           CAST(SUM(charge) AS DOUBLE) AS sum_charge,
-           CAST(SUM(qty) / COUNT(*) AS DOUBLE) AS avg_qty,
-           CAST(SUM(price) / COUNT(*) AS DOUBLE) AS avg_price,
-           COUNT(*) AS count_order
-    FROM l GROUP BY l_returnflag, l_linestatus
-    """,
-)
-def q1_pricing_summary_decimal(spark, sf_dir):
-    """q1's decimal-money twin (the dsum/davg ``money=True`` route,
-    SURVEY §1.2): every money expression stays DECIMAL end-to-end —
-    inputs typed to their true scales (price 2 dp, discount/tax 2 dp)
-    so products stay exact and IN-RANGE on both engines
-    ((12,2)×(5,2)→(18,4), ×(5,2)→(24,6) — never past precision 38,
-    where Spark would round and DuckDB would refuse), sums are exact
-    decimal adds (order-independent — no float summation-order terms),
-    and only the OUTPUT boundary casts to double for the 9 dp hash.
-    tests/test_catalog.py asserts the twin agrees with the double-route
-    q1 at 1e-9 and that the money=True helpers yield DecimalType."""
-    l = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp")
-    )
-    one = F.lit(1).cast("decimal(3,2)")
-    qty = F.col("l_quantity").cast("decimal(12,2)")
-    price = F.col("l_extendedprice").cast("decimal(12,2)")
-    disc_price = price * (one - F.col("l_discount").cast("decimal(4,2)"))
-    charge = disc_price * (one + F.col("l_tax").cast("decimal(4,2)"))
-    n = F.count("*")
-    return l.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum(qty).cast("double").alias("sum_qty"),
-        F.sum(price).cast("double").alias("sum_base_price"),
-        F.sum(disc_price).cast("double").alias("sum_disc_price"),
-        F.sum(charge).cast("double").alias("sum_charge"),
-        (F.sum(qty) / n).cast("double").alias("avg_qty"),
-        (F.sum(price) / n).cast("double").alias("avg_price"),
-        n.alias("count_order"),
-    )
-
-
-# =====================================================================
-# P — projection / filter / scalar expressions
-# =====================================================================
-
-@query(
-    "p1_projection",
-    """
-    SELECT l_orderkey AS okey, l_linenumber AS line,
-           l_extendedprice * (1 - l_discount) AS disc_price, l_quantity
-    FROM lineitem
-    """,
-)
-def p1_projection(spark, sf_dir):
-    return _t(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("okey"),
-        F.col("l_linenumber").alias("line"),
-        (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("disc_price"),
-        F.col("l_quantity"),
-    )
-
-
-@query(
-    "p2_filter",
-    """
-    SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag, l_discount
-    FROM lineitem
-    WHERE (l_quantity BETWEEN 10 AND 20 AND l_returnflag IN ('A', 'R')
-           AND NOT (l_discount > 0.05))
-       OR (l_quantity > 45 AND l_linestatus = 'O')
-    """,
-)
-def p2_filter(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
-    cond = (
-        F.col("l_quantity").between(10, 20)
-        & F.col("l_returnflag").isin("A", "R")
-        & ~(F.col("l_discount") > 0.05)
-    ) | ((F.col("l_quantity") > 45) & (F.col("l_linestatus") == "O"))
-    return l.filter(cond).select(
-        "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag", "l_discount"
-    )
-
-
-@query(
-    "p3_null_predicates",
-    """
-    SELECT o_orderkey,
-           NULLIF(o_orderstatus, 'O') AS st,
-           NULLIF(o_orderstatus, 'O') IS NULL AS is_open,
-           NULLIF(o_orderstatus, 'O') IS NOT DISTINCT FROM 'F' AS nse_f,
-           COALESCE(NULLIF(o_orderstatus, 'O'), 'OPEN') AS st_filled
-    FROM orders
-    """,
-)
-def p3_null_predicates(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    st = F.nullif(F.col("o_orderstatus"), F.lit("O"))
-    return o.select(
-        "o_orderkey",
-        st.alias("st"),
-        st.isNull().alias("is_open"),
-        st.eqNullSafe(F.lit("F")).alias("nse_f"),
-        F.coalesce(st, F.lit("OPEN")).alias("st_filled"),
-    )
-
-
-@query(
-    "p4_string_funcs",
-    """
-    SELECT p_partkey,
-           p_brand || '/' || p_type AS brand_type,
-           upper(p_name) AS uname, lower(p_type) AS ltype,
-           trim(p_name) AS tname, substring(p_name, 1, 5) AS pfx,
-           CAST(length(p_name) AS BIGINT) AS nlen,
-           replace(p_name, ' ', '_') AS under,
-           lpad(CAST(p_size AS VARCHAR), 4, '0') AS size4
-    FROM part
-    """,
-)
-def p4_string_funcs(spark, sf_dir):
-    p = _t(spark, sf_dir, "part")
-    return p.select(
-        "p_partkey",
-        F.concat(F.col("p_brand"), F.lit("/"), F.col("p_type")).alias("brand_type"),
-        F.upper("p_name").alias("uname"),
-        F.lower("p_type").alias("ltype"),
-        F.trim("p_name").alias("tname"),
-        F.substring("p_name", 1, 5).alias("pfx"),
-        F.length("p_name").cast("bigint").alias("nlen"),
-        F.replace(F.col("p_name"), F.lit(" "), F.lit("_")).alias("under"),
-        F.lpad(F.col("p_size").cast("string"), 4, "0").alias("size4"),
-    )
-
-
-@query(
-    "p5_regex",
-    r"""
-    SELECT p_partkey,
-           regexp_extract(p_brand, 'Brand#(\d+)', 1) AS brand_num,
-           regexp_matches(p_type, '^ECO') AS is_eco,
-           regexp_replace(p_name, '[aeiou]', '*', 'g') AS starred
-    FROM part
-    """,
-)
-def p5_regex(spark, sf_dir):
-    p = _t(spark, sf_dir, "part")
-    return p.select(
-        "p_partkey",
-        F.regexp_extract("p_brand", r"Brand#(\d+)", 1).alias("brand_num"),
-        F.col("p_type").rlike("^ECO").alias("is_eco"),
-        F.regexp_replace("p_name", "[aeiou]", "*").alias("starred"),
-    )
-
-
-@query(
-    "p6_datetime",
-    """
-    SELECT o_orderkey,
-           CAST(year(o_orderdate) AS BIGINT) AS yr,
-           CAST(month(o_orderdate) AS BIGINT) AS mo,
-           date_trunc('month', o_orderdate) AS month_start,
-           CAST(datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS days_since,
-           strftime(o_orderdate, '%Y-%m-%d') AS iso_day
-    FROM orders
-    """,
-)
-def p6_datetime(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        F.year("o_orderdate").cast("bigint").alias("yr"),
-        F.month("o_orderdate").cast("bigint").alias("mo"),
-        F.date_trunc("month", F.col("o_orderdate")).alias("month_start"),
-        F.datediff(F.col("o_orderdate").cast("date"), F.lit("1995-01-01").cast("date"))
-        .cast("bigint")
-        .alias("days_since"),
-        F.date_format("o_orderdate", "yyyy-MM-dd").alias("iso_day"),
-    )
-
-
-@query(
-    "p7_math",
-    """
-    SELECT l_orderkey, l_linenumber,
-           l_extendedprice * l_quantity AS gross,
-           abs(l_extendedprice - 1000.0) AS dist,
-           CAST(floor(l_quantity) AS BIGINT) AS qfloor,
-           CAST(ceil(l_discount * 10) AS BIGINT) AS dceil,
-           CAST(sign(l_discount - 0.05) AS DOUBLE) AS dsign,
-           sqrt(l_quantity) AS qroot
-    FROM lineitem
-    """,
-)
-def p7_math(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
-    return l.select(
-        "l_orderkey",
-        "l_linenumber",
-        (F.col("l_extendedprice") * F.col("l_quantity")).alias("gross"),
-        F.abs(F.col("l_extendedprice") - 1000.0).alias("dist"),
-        F.floor("l_quantity").cast("bigint").alias("qfloor"),
-        F.ceil(F.col("l_discount") * 10).cast("bigint").alias("dceil"),
-        F.signum(F.col("l_discount") - 0.05).cast("double").alias("dsign"),
-        F.sqrt("l_quantity").alias("qroot"),
-    )
-
-
-@query(
-    "p8_try_cast",
-    r"""
-    SELECT o_orderkey,
-           TRY_CAST(regexp_extract(o_orderpriority, '^(\d+)', 1) AS BIGINT) AS prio_num,
-           TRY_CAST(o_orderpriority AS DOUBLE) AS bad_double,
-           TRY_CAST(strftime(o_orderdate, '%Y') AS BIGINT) AS yr
-    FROM orders
-    """,
-)
-def p8_try_cast(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        F.regexp_extract("o_orderpriority", r"^(\d+)", 1)
-        .try_cast("bigint")
-        .alias("prio_num"),
-        F.col("o_orderpriority").try_cast("double").alias("bad_double"),
-        F.date_format("o_orderdate", "yyyy").try_cast("bigint").alias("yr"),
-    )
-
-
-@query(
-    "p9_case_coalesce",
-    """
-    SELECT o_orderkey,
-           CASE WHEN o_totalprice > 200000 THEN 'big'
-                WHEN o_totalprice > 100000 THEN 'mid'
-                ELSE 'small' END AS bucket,
-           COALESCE(NULLIF(o_orderstatus, 'P'), 'PENDING') AS status
-    FROM orders
-    """,
-)
-def p9_case_coalesce(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        F.when(F.col("o_totalprice") > 200000, "big")
-        .when(F.col("o_totalprice") > 100000, "mid")
-        .otherwise("small")
-        .alias("bucket"),
-        F.coalesce(F.nullif(F.col("o_orderstatus"), F.lit("P")), F.lit("PENDING")).alias(
-            "status"
-        ),
-    )
-
-
-@query(
-    "p10_surrogate_id",
-    """
-    SELECT o_orderkey,
-           'A' || strftime(o_orderdate, '%Y%m%d') ||
-           (CASE WHEN length(CAST(rn AS VARCHAR)) > 5 THEN CAST(rn AS VARCHAR)
-                 ELSE lpad(CAST(rn AS VARCHAR), 5, '0') END) AS txnID
-    FROM (SELECT o_orderkey, o_orderdate,
-                 row_number() OVER (PARTITION BY strftime(o_orderdate, '%Y%m')
-                                    ORDER BY o_orderkey) AS rn
-          FROM orders)
-    """,
-)
-def p10_surrogate_id(spark, sf_dir):
-    # Surrogate-ID numbering restarts per order month: the window is
-    # PARTITIONED, so rows fan out across tasks instead of funnelling
-    # through one unbounded global-sort task (the reference's analogue
-    # is per-file numbering, TxnIDGenerator.swift:28-33 +
-    # TransformHandler.swift:113 — see with_transaction_ids_per_file).
-    # IDs remain unique because the yyyyMMdd segment embeds the month.
-    o = _t(spark, sf_dir, "orders")
-    rn = F.row_number().over(
-        Window.partitionBy(F.date_format("o_orderdate", "yyyyMM")).orderBy(
-            "o_orderkey"
-        )
-    )
-    o = o.withColumn("rn", rn)
-    rs = F.col("rn").cast("string")
-    padded = F.when(F.length(rs) > 5, rs).otherwise(F.lpad(rs, 5, "0"))
-    return o.select(
-        "o_orderkey",
-        F.concat(F.lit("A"), F.date_format("o_orderdate", "yyyyMMdd"), padded).alias(
-            "txnID"
-        ),
-    )
-
-
-@query(
-    "p11_explode_array",
-    """
-    SELECT o_orderkey, unnest([o_orderkey, o_custkey, o_orderkey + o_custkey]) AS v
-    FROM orders
-    """,
-)
-def p11_explode_array(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        F.explode(
-            F.array(
-                F.col("o_orderkey"),
-                F.col("o_custkey"),
-                F.col("o_orderkey") + F.col("o_custkey"),
-            )
-        ).alias("v"),
-    )
-
-
-@query(
-    "p12_json",
-    """
-    SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-    FROM events
-    """,
-)
-def p12_json(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    return e.select(
-        "event_id", F.get_json_object("props", "$.k").cast("bigint").alias("k")
-    )
-
-
-# =====================================================================
-# J — joins
-# =====================================================================
-
-@query(
-    "j1_join_agg",
-    f"""
-    SELECT c_mktsegment, COUNT(*) AS n_orders, {DSUM('o_totalprice')} AS revenue
-    FROM customer JOIN orders ON o_custkey = c_custkey
-    GROUP BY c_mktsegment
-    """,
-)
-def j1_join_agg(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.join(c, o.o_custkey == c.c_custkey, "inner")
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count("*").alias("n_orders"),
-            dsum(F.col("o_totalprice")).alias("revenue"),
-        )
-    )
-
-
-@query(
-    "j2_left_join",
-    """
-    SELECT c_custkey, COUNT(o_orderkey) AS n_orders
-    FROM customer LEFT JOIN orders ON o_custkey = c_custkey
-    GROUP BY c_custkey
-    """,
-)
-def j2_left_join(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("n_orders"))
-    )
-
-
-@query(
-    "j3_semi_join",
-    """
-    SELECT c_custkey, c_mktsegment FROM customer
-    WHERE EXISTS (SELECT 1 FROM orders
-                  WHERE o_custkey = c_custkey AND o_orderstatus = 'F')
-    """,
-)
-def j3_semi_join(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
-        "c_custkey", "c_mktsegment"
-    )
-
-
-@query(
-    "j3_anti_join",
-    """
-    SELECT c_custkey, c_mktsegment FROM customer
-    WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-    """,
-)
-def j3_anti_join(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
-        "c_custkey", "c_mktsegment"
-    )
-
-
-@query(
-    "j4_broadcast_dim",
-    """
-    SELECT r_name, COUNT(*) AS n_customers
-    FROM customer
-    JOIN nation ON n_nationkey = c_nationkey
-    JOIN region ON r_regionkey = n_regionkey
-    GROUP BY r_name
-    """,
-)
-def j4_broadcast_dim(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    # dims broadcast explicitly: at 100 TB the fact side never shuffles here
-    return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("r_name")
-        .agg(F.count("*").alias("n_customers"))
-    )
-
-
-@query(
-    "j5_range_join",
-    """
-    SELECT s_suppkey, COUNT(*) AS n_richer
-    FROM supplier JOIN customer ON c_acctbal > s_acctbal
-    GROUP BY s_suppkey
-    """,
-)
-def j5_range_join(spark, sf_dir):
-    """J5 inequality join as a rank/CDF MERGE — zero row pairs
-    materialized. History: the naive theta-join is a nested loop over
-    |S|×|C| pairs (23 s at sf1); the round-1 banded decomposition
-    (equi-join on 64 bands + residual filter) divided the quadratic by
-    a constant and still measured 61.6× for 10× data at the sf1→sf10
-    decade (DECADE_BENCH.json, round-7 verdict WEAK flag). The count
-    ``n_richer(s) = |{c : c_acctbal > s_acctbal}|`` never needed pairs:
-    it is |C| minus the rank of s_acctbal in the customer-balance
-    distribution. :func:`finporter_spark.operators.joins.
-    count_exceeding` computes exactly that — union-merge both sides,
-    one window per balance band (running right-count in value-DESC
-    order), plus a broadcast suffix ladder for the higher bands. Work
-    is O(|S|+|C|) through one keyed shuffle; the only joins in the plan
-    are broadcasts (asserted NLJ/SMJ-free in tests/test_plans.py).
-    Suppliers no customer out-earns are absent (inner-join semantics),
-    matching the oracle."""
-    from finporter_spark.operators.joins import count_exceeding
-
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_acctbal")
-    c = _t(spark, sf_dir, "customer").select("c_acctbal")
-    return (
-        count_exceeding(s, ["s_suppkey"], "s_acctbal", c, "c_acctbal")
-        .select("s_suppkey", F.col("n_greater").alias("n_richer"))
-        .filter(F.col("n_richer") > 0)
-    )
-
-
-@query(
-    "j6_asof_join",
-    """
-    SELECT event_id, user_id, ts, p_event_id, p_ts, p_value FROM (
-      SELECT l.event_id, l.user_id, l.ts,
-             r.event_id AS p_event_id, r.ts AS p_ts, r.value AS p_value,
-             row_number() OVER (PARTITION BY l.event_id
-                                ORDER BY r.ts DESC, r.event_id DESC) AS rn
-      FROM events l
-      LEFT JOIN events r
-        ON r.user_id = l.user_id AND r.event_type = 'purchase' AND r.ts <= l.ts
-    ) WHERE rn = 1
-    """,
-)
-def j6_asof_join(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.col("ts").alias("p_ts"),
-        F.col("event_id").alias("p_event_id"),
-        F.col("value").alias("p_value"),
-    )
-    out = asof_join(
-        e.select("event_id", "user_id", "ts"),
-        purchases,
-        on=["user_id"],
-        left_ts="ts",
-        right_ts="p_ts",
-        right_cols=["p_event_id", "p_ts", "p_value"],
-        tiebreakers=["p_event_id"],
-        left_id=["event_id"],
-    )
-    return out.select("event_id", "user_id", "ts", "p_event_id", "p_ts", "p_value")
-
-
-@query(
-    "j6b_asof_forward",
-    """
-    SELECT event_id, user_id, ts, n_event_id, n_ts FROM (
-      SELECT l.event_id, l.user_id, l.ts,
-             r.event_id AS n_event_id, r.ts AS n_ts,
-             row_number() OVER (PARTITION BY l.event_id
-                                ORDER BY r.ts ASC, r.event_id DESC) AS rn
-      FROM events l
-      LEFT JOIN events r
-        ON r.user_id = l.user_id AND r.event_type = 'error'
-       AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 6 HOUR
-    ) WHERE rn = 1
-    """,
-)
-def j6b_asof_forward(spark, sf_dir):
-    """J6 forward direction WITH a tolerance horizon: for each event,
-    the user's FIRST error within the next 6 hours (time-to-failure /
-    next-action attribution shape). The tolerance is the scale lever the
-    backward entry doesn't exercise: it bounds the match fan-out BEFORE
-    the rank filter, which is what keeps the intermediate finite on a
-    dense right-hand timeline."""
-    e = _t(spark, sf_dir, "events")
-    errors = e.filter(F.col("event_type") == "error").select(
-        "user_id",
-        F.col("ts").alias("n_ts"),
-        F.col("event_id").alias("n_event_id"),
-    )
-    out = asof_join(
-        e.select("event_id", "user_id", "ts"),
-        errors,
-        on=["user_id"],
-        left_ts="ts",
-        right_ts="n_ts",
-        right_cols=["n_event_id", "n_ts"],
-        tolerance=F.expr("INTERVAL 6 HOURS"),
-        direction="forward",
-        tiebreakers=["n_event_id"],
-        left_id=["event_id"],
-    )
-    return out.select("event_id", "user_id", "ts", "n_event_id", "n_ts")
-
-
-@query(
-    "j6c_asof_highcard",
-    """
-    SELECT event_id, user_id, ts, v_event_id, v_ts FROM (
-      SELECT l.event_id, l.user_id, l.ts,
-             r.event_id AS v_event_id, r.ts AS v_ts,
-             row_number() OVER (PARTITION BY l.event_id
-                                ORDER BY r.ts ASC, r.event_id DESC) AS rn
-      FROM (SELECT * FROM events WHERE event_type = 'purchase') l
-      LEFT JOIN (SELECT * FROM events WHERE event_type = 'view') r
-        ON r.user_id = l.user_id
-       AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 1 HOUR
-    ) WHERE rn = 1
-    """,
-)
-def j6c_asof_highcard(spark, sf_dir):
-    """J6 high-cardinality stress shape: purchase -> the same user's
-    first view within the next hour (post-purchase attribution). Unlike
-    j6/j6b (whose right sides are small filtered sets), BOTH sides here
-    scale with the corpus and the key domain is every user — the shape
-    where a wrong plan degenerates: an as-of expressed without the equi
-    key would be a nested-loop over |L|x|R|, and without the tolerance
-    the per-key fan-out is unbounded on dense timelines.
-    tests/test_plans.py::test_j6c_asof_plan pins the contract: ONE
-    equi-join on user_id (hash/sort-merge, never
-    BroadcastNestedLoop/Cartesian) with the range bound as a join-time
-    predicate, then ONE window — so work is shuffle(|L|+|R|) + bounded
-    per-key scoring at any SF."""
-    e = _t(spark, sf_dir, "events")
-    views = e.filter(F.col("event_type") == "view").select(
-        "user_id",
-        F.col("ts").alias("v_ts"),
-        F.col("event_id").alias("v_event_id"),
-    )
-    out = asof_join(
-        e.filter(F.col("event_type") == "purchase").select(
-            "event_id", "user_id", "ts"
-        ),
-        views,
-        on=["user_id"],
-        left_ts="ts",
-        right_ts="v_ts",
-        right_cols=["v_event_id", "v_ts"],
-        tolerance=F.expr("INTERVAL 1 HOUR"),
-        direction="forward",
-        tiebreakers=["v_event_id"],
-        left_id=["event_id"],
-    )
-    return out.select("event_id", "user_id", "ts", "v_event_id", "v_ts")
-
-
-@query(
-    "j7_cross_join",
-    """
-    SELECT r_name, os FROM region
-    CROSS JOIN (SELECT DISTINCT o_orderstatus AS os FROM orders)
-    """,
-)
-def j7_cross_join(spark, sf_dir):
-    r = _t(spark, sf_dir, "region")
-    st = _t(spark, sf_dir, "orders").select(
-        F.col("o_orderstatus").alias("os")
-    ).distinct()
-    return r.select("r_name").crossJoin(st)
-
-
-# =====================================================================
-# A — aggregation
-# =====================================================================
-
-@query(
-    "a2_count_distinct",
-    """
-    SELECT o_orderpriority, CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_cust
-    FROM orders GROUP BY o_orderpriority
-    """,
-)
-def a2_count_distinct(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    return o.groupBy("o_orderpriority").agg(
-        F.countDistinct("o_custkey").alias("n_cust")
-    )
-
-
-@query("a3_approx_count_distinct", None)  # ≈ operator: rows-only driver check
-def a3_approx_count_distinct(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    return o.groupBy("o_orderstatus").agg(
-        F.approx_count_distinct("o_custkey").alias("approx_cust")
-    )
-
-
-@query(
-    "a4_rollup",
-    """
-    SELECT r_name, n_name, COUNT(*) AS n_cust
-    FROM customer
-    JOIN nation ON n_nationkey = c_nationkey
-    JOIN region ON r_regionkey = n_regionkey
-    GROUP BY ROLLUP (r_name, n_name)
-    """,
-)
-def a4_rollup(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .rollup("r_name", "n_name")
-        .agg(F.count("*").alias("n_cust"))
-    )
-
-
-@query(
-    "a5_filtered_agg",
-    f"""
-    SELECT o_orderstatus,
-           COUNT(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 END) AS n_urgent,
-           {DSUM("CASE WHEN o_orderpriority = '1-URGENT' THEN o_totalprice END")} AS urgent_rev,
-           COUNT(*) AS n_total
-    FROM orders GROUP BY o_orderstatus
-    """,
-)
-def a5_filtered_agg(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    urgent = F.col("o_orderpriority") == "1-URGENT"
-    return o.groupBy("o_orderstatus").agg(
-        F.count(F.when(urgent, 1)).alias("n_urgent"),
-        dsum(F.when(urgent, F.col("o_totalprice"))).alias("urgent_rev"),
-        F.count("*").alias("n_total"),
-    )
-
-
-@query(
-    "a6_collect_sorted",
-    """
-    SELECT c_mktsegment,
-           string_agg(DISTINCT o_orderpriority, ',' ORDER BY o_orderpriority) AS priorities
-    FROM customer JOIN orders ON o_custkey = c_custkey
-    GROUP BY c_mktsegment
-    """,
-)
-def a6_collect_sorted(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy("c_mktsegment")
-        .agg(
-            F.concat_ws(",", F.sort_array(F.collect_set("o_orderpriority"))).alias(
-                "priorities"
-            )
-        )
-    )
-
-
-@query(
-    "a7_percentiles",
-    """
-    SELECT l_returnflag,
-           quantile_cont(l_extendedprice, 0.25) AS p25,
-           quantile_cont(l_extendedprice, 0.5) AS p50,
-           quantile_cont(l_extendedprice, 0.75) AS p75
-    FROM lineitem GROUP BY l_returnflag
-    """,
-)
-def a7_percentiles(spark, sf_dir):
-    # EXACT interpolated percentiles via the distributed two-phase
-    # rank-select (operators/scale.exact_percentiles) — F.percentile
-    # would buffer and sort each group's full value set in one task
-    # (~N/3 rows per task here: 3 groups), a memory scale-killer at
-    # corpus size; rank-select sorts only the ≤6 ladder buckets that
-    # contain a target rank
-    from finporter_spark.operators.scale import exact_percentiles
-
-    l = _t(spark, sf_dir, "lineitem")
-    long = exact_percentiles(
-        l, ["l_returnflag"], "l_extendedprice", [0.25, 0.5, 0.75]
-    )
-    return long.groupBy("l_returnflag").agg(
-        F.max(F.when(F.col("fraction") == 0.25, F.col("value"))).alias("p25"),
-        F.max(F.when(F.col("fraction") == 0.5, F.col("value"))).alias("p50"),
-        F.max(F.when(F.col("fraction") == 0.75, F.col("value"))).alias("p75"),
-    )
-
-
-# =====================================================================
-# W — window functions
-# =====================================================================
-
-@query(
-    "w1_ranking",
-    """
-    SELECT c_custkey, c_mktsegment, c_acctbal,
-           CAST(row_number() OVER w AS INT) AS rn,
-           CAST(rank() OVER w AS INT) AS rnk,
-           CAST(dense_rank() OVER w AS INT) AS drnk,
-           CAST(ntile(4) OVER w AS INT) AS quartile
-    FROM customer
-    WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey)
-    """,
-)
-def w1_ranking(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_mktsegment").orderBy(
-        F.col("c_acctbal").desc(), F.col("c_custkey")
-    )
-    return c.select(
-        "c_custkey",
-        "c_mktsegment",
-        "c_acctbal",
-        F.row_number().over(w).alias("rn"),
-        F.rank().over(w).alias("rnk"),
-        F.dense_rank().over(w).alias("drnk"),
-        F.ntile(4).over(w).alias("quartile"),
-    )
-
-
-@query(
-    "w2_lag_lead",
-    """
-    SELECT event_id, user_id, ts, value,
-           lag(value) OVER w AS prev_value,
-           lead(value) OVER w AS next_value,
-           first_value(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS first_seen
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    """,
-)
-def w2_lag_lead(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wf = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return e.select(
-        "event_id",
-        "user_id",
-        "ts",
-        "value",
-        F.lag("value").over(w).alias("prev_value"),
-        F.lead("value").over(w).alias("next_value"),
-        F.first("value").over(wf).alias("first_seen"),
-    )
-
-
-@query(
-    "w3_running_sum",
-    """
-    SELECT event_id, user_id, ts,
-           sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_sum,
-           avg(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-              ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS mov_avg3
-    FROM events
-    """,
-)
-def w3_running_sum(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return e.select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.sum("value")
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .alias("run_sum"),
-        F.avg("value").over(w.rowsBetween(-2, Window.currentRow)).alias("mov_avg3"),
-    )
-
-
-# =====================================================================
-# O — sort / limit / set ops
-# =====================================================================
-
-@query(
-    "o1_sort_nulls",
-    """
-    SELECT o_orderkey, NULLIF(o_orderpriority, '5-LOW') AS pr
-    FROM orders
-    ORDER BY pr ASC NULLS LAST, o_orderkey
-    """,
-)
-def o1_sort_nulls(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey", F.nullif(F.col("o_orderpriority"), F.lit("5-LOW")).alias("pr")
-    ).orderBy(F.asc_nulls_last("pr"), F.asc("o_orderkey"))
-
-
-@query(
-    "o2_topk",
-    """
-    SELECT o_orderkey, o_totalprice FROM orders
-    ORDER BY o_totalprice DESC, o_orderkey LIMIT 10
-    """,
-)
-def o2_topk(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.select("o_orderkey", "o_totalprice")
-        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-        .limit(10)
-    )
-
-
-@query(
-    "o3_union",
-    """
-    SELECT o_custkey AS custkey FROM orders WHERE o_orderpriority = '1-URGENT'
-    UNION
-    SELECT o_custkey FROM orders WHERE o_totalprice > 300000
-    """,
-)
-def o3_union(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    a = o.filter(F.col("o_orderpriority") == "1-URGENT").select(
-        F.col("o_custkey").alias("custkey")
-    )
-    b = o.filter(F.col("o_totalprice") > 300000).select(
-        F.col("o_custkey").alias("custkey")
-    )
-    return a.unionByName(b).distinct()
-
-
-@query(
-    "o4_intersect",
-    """
-    SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
-    INTERSECT
-    SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
-    """,
-)
-def o4_intersect(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    a = o.filter(F.col("o_orderstatus") == "F").select(
-        F.col("o_custkey").alias("custkey")
-    )
-    b = o.filter(F.col("o_orderstatus") == "O").select(
-        F.col("o_custkey").alias("custkey")
-    )
-    return a.intersect(b)
-
-
-@query(
-    "o4_except",
-    """
-    SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
-    EXCEPT
-    SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
-    """,
-)
-def o4_except(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    a = o.filter(F.col("o_orderstatus") == "F").select(
-        F.col("o_custkey").alias("custkey")
-    )
-    b = o.filter(F.col("o_orderstatus") == "O").select(
-        F.col("o_custkey").alias("custkey")
-    )
-    return a.subtract(b)  # subtract == set EXCEPT (distinct) semantics
-
-
-@query(
-    "o5_dedup_latest",
-    """
-    SELECT user_id, event_id, ts, value FROM (
-      SELECT user_id, event_id, ts, value,
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY ts DESC, event_id DESC) AS rn
-      FROM events
-    ) WHERE rn = 1
-    """,
-)
-def o5_dedup_latest(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    latest = keep_latest(
-        e, keys=["user_id"], order_by=[F.col("ts").desc(), F.col("event_id").desc()]
-    )
-    return latest.select("user_id", "event_id", "ts", "value")
-
-
-# =====================================================================
-# X — streaming semantics, batch shape (X2/X3); stream-mode tests in tests/
-# =====================================================================
-
-@query(
-    "x2_tumbling_window",
-    f"""
-    SELECT make_timestamp(CAST(floor(epoch(ts) / 600) AS BIGINT) * 600 * 1000000)
-             AS window_start,
-           event_type, COUNT(*) AS n, {DSUM('value')} AS total
-    FROM events GROUP BY 1, 2
-    """,
-)
-def x2_tumbling_window(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), dsum(F.col("value")).alias("total"))
-        .select(
-            F.col("w.start").alias("window_start"), "event_type", "n", "total"
-        )
-    )
-
-
-@query(
-    "x3_session_window",
-    """
-    WITH flagged AS (
-      SELECT user_id, ts,
-             CASE WHEN lag(ts) OVER w IS NULL
-                       OR ts - lag(ts) OVER w >= INTERVAL '30 minutes'
-                  THEN 1 ELSE 0 END AS new_s
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), sessions AS (
-      SELECT user_id, ts,
-             SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-      FROM flagged
-    )
-    SELECT user_id, MIN(ts) AS session_start, COUNT(*) AS n_events
-    FROM sessions GROUP BY user_id, sid
-    """,
-)
-def x3_session_window(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id", F.col("sw.start").alias("session_start"), "n_events"
-        )
-    )
-
-
-# =====================================================================
-# L — LLM-data-pipeline operators
-# =====================================================================
-
-@query(
-    "l1_exact_dedup",
-    r"""
-    SELECT min(doc_id) AS doc_id, content_hash FROM (
-      SELECT doc_id,
-             sha256(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS content_hash
-      FROM documents
-    ) GROUP BY content_hash
-    """,
-)
-def l1_exact_dedup(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    return exact_dedup(d, "text", "doc_id")
-
-
-# --- l2 deterministic-oracle generators -----------------------------
-# The md5 hash family (operators/dedup.md5_long) is reproducible in
-# DuckDB SQL, so the WHOLE MinHash-LSH / SimHash pipeline — signatures,
-# banding, candidate join, verify — can be re-stated as a CTE chain and
-# the approximate operators graded by FULL value hash (the a19 KMV
-# pattern: approximate ≠ unhashable). Accuracy vs true Jaccard/Hamming
-# stays a pytest recall/threshold concern; the oracle gates that both
-# engines compute the SAME sketch bit-for-bit.
-
-_L2_TOKS = "string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')"
-
-
-def _l2_shingles_sql(n: int = 3) -> str:
-    """DuckDB mirror of operators.dedup.shingles (word n-grams)."""
-    join = " || ' ' || ".join(
-        f"t[i+{j}]" if j else "t[i]" for j in range(n)
-    )
-    return (
-        f"list_transform(generate_series(1, greatest(len(t)-{n - 1}, 0)),"
-        f" i -> {join})"
-    )
-
-
-def _md5l(expr: str) -> str:
-    return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
-
-
-def _l2_sig_ctes(k: int = 32, shingle_n: int = 3) -> str:
-    """The shared signature CTE chain (tk/sh/hs/sig) — DuckDB mirror of
-    operators.dedup.minhash_signatures with hash_family='md5'. Reused
-    by the l2 near-dup and l20 fuzzy-decontamination oracles."""
-    members = ",\n             ".join(
-        "MIN(%s) AS h%d" % (_md5l(f"CAST(shh AS VARCHAR) || ':{i}'"), i)
-        for i in range(k)
-    )
-    return f"""tk AS (
-      SELECT doc_id, {_L2_TOKS} AS t FROM documents
-    ), sh AS (
-      SELECT doc_id, unnest({_l2_shingles_sql(shingle_n)}) AS sh FROM tk
-    ), hs AS (
-      SELECT doc_id, {_md5l('sh')} AS shh FROM sh
-    ), sig AS (
-      SELECT doc_id, {members}
-      FROM hs GROUP BY doc_id
-    )"""
-
-
-def _l2_band_union(k: int = 32, bands: int = 8) -> str:
-    """DuckDB mirror of operators.dedup.band_hash over the sig CTE."""
-    rows = k // bands
-    return "\n      UNION ALL\n      ".join(
-        f"SELECT doc_id, {b} AS band_id, md5(concat_ws(':', "
-        + ", ".join(
-            f"CAST(h{b * rows + j} AS VARCHAR)" for j in range(rows)
-        )
-        + ")) AS bh FROM sig"
-        for b in range(bands)
-    )
-
-
-def _l2_eq_sum(k: int = 32, a: str = "sa", b: str = "sb") -> str:
-    return " + ".join(
-        f"(CASE WHEN {a}.h{i} = {b}.h{i} THEN 1 ELSE 0 END)"
-        for i in range(k)
-    )
-
-
-def _l2_minhash_oracle(
-    k: int = 32, bands: int = 8, thr: float = 0.5, shingle_n: int = 3
-) -> str:
-    eq = _l2_eq_sum(k)
-    return f"""
-    WITH {_l2_sig_ctes(k, shingle_n)}, band AS (
-      {_l2_band_union(k, bands)}
-    ), pr AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM band a JOIN band b
-        ON a.band_id = b.band_id AND a.bh = b.bh AND a.doc_id < b.doc_id
-    )
-    SELECT id_a, id_b, est_jaccard FROM (
-      SELECT p.id_a, p.id_b, ({eq}) / {float(k)!r} AS est_jaccard
-      FROM pr p
-      JOIN sig sa ON sa.doc_id = p.id_a
-      JOIN sig sb ON sb.doc_id = p.id_b
-    ) WHERE est_jaccard >= {thr!r}
-    """
-
-
-def _l2_simhash_oracle(
-    bits: int = 60,
-    block_bits: int = 15,
-    max_hamming: int = 3,
-    shingle_n: int = 3,
-) -> str:
-    n_blocks = bits // block_bits
-    mask = (1 << block_bits) - 1
-    votes = ",\n             ".join(
-        f"SUM((h >> {i}) & 1) AS c{i}" for i in range(bits)
-    )
-    fp = "\n           + ".join(
-        f"((CASE WHEN 2*c{i} > n THEN CAST(1 AS BIGINT) ELSE 0 END) << {i})"
-        for i in range(bits)
-    )
-    block_selects = "\n      UNION ALL\n      ".join(
-        f"SELECT doc_id, fp, {b} AS bi, (fp >> {b * block_bits}) & {mask}"
-        f" AS bv FROM fp"
-        for b in range(n_blocks)
-    )
-    return f"""
-    WITH tk AS (
-      SELECT doc_id, {_L2_TOKS} AS t FROM documents
-    ), sh AS (
-      SELECT doc_id,
-             unnest(list_distinct({_l2_shingles_sql(shingle_n)})) AS sh
-      FROM tk
-    ), hs AS (
-      SELECT doc_id, {_md5l('sh')} AS h FROM sh
-    ), v AS (
-      SELECT doc_id, COUNT(*) AS n,
-             {votes}
-      FROM hs GROUP BY doc_id
-    ), fp AS (
-      SELECT doc_id,
-           {fp} AS fp
-      FROM v
-    ), bl AS (
-      {block_selects}
-    ), cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-             a.fp AS fa, b.fp AS fb
-      FROM bl a JOIN bl b
-        ON a.bi = b.bi AND a.bv = b.bv AND a.doc_id < b.doc_id
-    )
-    SELECT id_a, id_b, hamming FROM (
-      SELECT id_a, id_b, CAST(bit_count(xor(fa, fb)) AS INT) AS hamming
-      FROM cand
-    ) WHERE hamming <= {max_hamming}
-    """
-
-
-@query("l2_minhash_near_dup", _l2_minhash_oracle())
-def l2_minhash_near_dup(spark, sf_dir):
-    """MinHash-LSH near-dup over the persisted signature table: the
-    signature pass runs once per (corpus fingerprint, params) and lands
-    as parquet dataset state (operators/dedup.load_or_build_signatures);
-    steady-state cost is the banded self-join over a signature scan.
-
-    Hash family is md5 (operators/dedup.md5_long) so the signatures —
-    and therefore the exact pair set and estimates — are bit-identical
-    in DuckDB: the oracle replays signatures -> banding -> verify as a
-    CTE chain and the gate is a full value hash. Recall vs true Jaccard
-    remains pytest's concern (tests/test_recall_sf01.py)."""
-    from finporter_spark.operators.dedup import load_or_build_signatures
-    from finporter_spark.operators.scale import source_fingerprint
-    from finporter_spark.queries.staging import io_dir as _io_dir
-
-    d = _t(spark, sf_dir, "documents")
-    sigs = load_or_build_signatures(
-        d,
-        cache_path=_io_dir(sf_dir, "l2_sigs_md5_n3_k32"),
-        fingerprint=source_fingerprint(
-            os.path.join(sf_dir, "documents.parquet")
-        ),
-        text_col="text", id_col="doc_id", shingle_n=3, num_hashes=32,
-        hash_family="md5",
-    )
-    return minhash_near_duplicates(
-        d, "text", "doc_id", shingle_n=3, num_hashes=32, bands=8,
-        jaccard_threshold=0.5, signatures=sigs, hash_family="md5",
-    )
-
-
-@query("l2_simhash_near_dup", _l2_simhash_oracle())
-def l2_simhash_near_dup(spark, sf_dir):
-    """SimHash near-dup on the md5 (60-bit) fingerprint family: same
-    pigeonhole blocking as the 64-bit xxhash64 default (4 blocks >
-    max_hamming=3), but the fingerprints are reproducible in DuckDB so
-    the blocked join's exact output is value-hash gated."""
-    d = _t(spark, sf_dir, "documents")
-    return simhash_near_duplicates(
-        d, "text", "doc_id", bits=60, max_hamming=3, block_bits=15,
-        hash_family="md5",
-    )
-
-
-@query(
-    "l3_knn_cosine",
-    """
-    WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv
-               FROM embeddings WHERE vec_id < 10),
-         c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings)
-    SELECT q_id, vec_id, cosine, CAST(rank AS INT) AS rank FROM (
-      SELECT q_id, vec_id, cosine,
-             row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) AS rank
-      FROM (
-        SELECT q.q_id, c.vec_id,
-               round(list_dot_product(qv, cv) /
-                     (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))), 6)
-                 AS cosine
-        FROM q CROSS JOIN c
-      )
-    ) WHERE rank <= 5
-    """,
-)
-def l3_knn_cosine(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), "embedding"
-    )
-    return brute_force_knn(q, emb, k=5)
-
-
-def _l3_lsh_oracle() -> str:
-    from finporter_spark.operators.similarity import (
-        lsh_exact_probe_oracle_sql,
-    )
-
-    return lsh_exact_probe_oracle_sql(
-        dim=64, k=5, n_planes=9, n_tables=7, n_probes=26
-    )
-
-
-@query("l3_lsh_knn", _l3_lsh_oracle())
-def l3_lsh_knn(spark, sf_dir):
-    """Margin-ordered multi-probe, multi-table sign-LSH (9 planes ×
-    7 tables × 26 probes): measured 0.89 recall@5 at a ~0.32 candidate
-    fraction on sf0.1 — the best point of the round-7 equal-budget
-    sweep (0.90 needs fraction 0.35, over the ≤0.33 budget; the exact
-    l19 path covers higher-recall needs). tests/test_recall_sf01.py
-    pins both the recall floor and the candidate-fraction ceiling.
-
-    Probe selection runs as deterministic JVM expressions
-    (operators/similarity.lsh_bucket_knn_exact_probe) whose double sums
-    are sequential folds a DuckDB oracle restates verbatim — the
-    approximate operator is graded by FULL value hash (the a19
-    pattern), with no Python stage."""
-    from finporter_spark.operators.similarity import (
-        lsh_bucket_knn_exact_probe,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), "embedding"
-    )
-    return lsh_bucket_knn_exact_probe(
-        q, emb, dim=64, k=5, n_planes=9, n_tables=7, n_probes=26
-    )
-
-
 _NORM = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
 _TOKS = f"string_split({_NORM}, ' ')"
-
-
-@query(
-    "l4_quality_score",
-    f"""
-    SELECT doc_id,
-           CAST(len({_TOKS}) AS INT) AS n_tokens,
-           CAST(list_sum(list_transform({_TOKS}, t -> length(t))) AS BIGINT)
-             / CAST(NULLIF(len({_TOKS}), 0) AS DOUBLE) AS mean_token_len,
-           CAST(len(list_filter({_TOKS},
-                t -> t IN ('the','a','an','and','or','of','to','in','is','it'))) AS INT)
-             / CAST(NULLIF(len({_TOKS}), 0) AS DOUBLE) AS stopword_ratio
-    FROM documents
-    """,
-)
-def l4_quality_score(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    t = F.col("text")
-    toks = tokens(t)
-    n_tok = F.size(toks)
-    stop = F.array(
-        *[F.lit(s) for s in ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")]
-    )
-    return d.select(
-        "doc_id",
-        n_tok.alias("n_tokens"),
-        (
-            F.aggregate(toks, F.lit(0).cast("long"), lambda a, x: a + F.length(x))
-            / F.nullif(n_tok, F.lit(0)).cast("double")
-        ).alias("mean_token_len"),
-        (
-            F.size(F.filter(toks, lambda x: F.array_contains(stop, x)))
-            / F.nullif(n_tok, F.lit(0)).cast("double")
-        ).alias("stopword_ratio"),
-    )
-
-
-def _lang_hits_sql(markers) -> str:
-    inlist = ",".join(f"'{m}'" for m in markers)
-    return f"len(list_filter({_TOKS}, t -> t IN ({inlist})))"
-
-
-@query(
-    "l5_language_id",
-    f"""
-    WITH h AS (
-      SELECT doc_id, lang,
-             {_lang_hits_sql(LANG_MARKERS['en'])} AS en_h,
-             {_lang_hits_sql(LANG_MARKERS['fr'])} AS fr_h,
-             {_lang_hits_sql(LANG_MARKERS['es'])} AS es_h,
-             {_lang_hits_sql(LANG_MARKERS['de'])} AS de_h
-      FROM documents
-    )
-    SELECT doc_id, lang,
-           CASE WHEN de_h > 0 AND de_h >= en_h AND de_h >= es_h AND de_h >= fr_h THEN 'de'
-                WHEN en_h > 0 AND en_h >= es_h AND en_h >= fr_h THEN 'en'
-                WHEN es_h > 0 AND es_h >= fr_h THEN 'es'
-                WHEN fr_h > 0 THEN 'fr'
-                ELSE 'und' END AS lang_pred
-    FROM h
-    """,
-)
-def l5_language_id(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    return language_id(d).select("doc_id", "lang", "lang_pred")
-
-
-@query(
-    "l6_fingerprint",
-    f"""
-    SELECT doc_id,
-           sha256(array_to_string(list_sort(list_distinct({_TOKS})), ' ')) AS fp
-    FROM documents
-    """,
-)
-def l6_fingerprint(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    return d.select("doc_id", fingerprint(F.col("text")).alias("fp"))
-
-
-@query(
-    "l7_token_count",
-    f"""
-    SELECT doc_id,
-           CAST(len({_TOKS}) AS BIGINT) AS n_ws_tokens,
-           CAST(len(regexp_extract_all(text, '{TOKEN_RE}')) AS BIGINT) AS n_bpe_tokens
-    FROM documents
-    """,
-)
-def l7_token_count(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        token_count(F.col("text"), "ws").cast("bigint").alias("n_ws_tokens"),
-        token_count(F.col("text"), "regex").cast("bigint").alias("n_bpe_tokens"),
-    )
-
-
-@query(
-    "l8_tfidf_top_terms",
-    f"""
-    WITH tf AS (
-      SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-      FROM (SELECT doc_id, unnest({_TOKS}) AS term FROM documents)
-      GROUP BY doc_id, term
-    ), df AS (
-      SELECT term, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df FROM tf GROUP BY term
-    ), n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents)
-    SELECT doc_id, term, tfidf, CAST(rank AS INT) AS rank FROM (
-      SELECT tf.doc_id, tf.term,
-             round(tf.tf * ln(CAST(n.n_docs AS DOUBLE) / df.df), 6) AS tfidf,
-             row_number() OVER (PARTITION BY tf.doc_id
-                                ORDER BY round(tf.tf * ln(CAST(n.n_docs AS DOUBLE) / df.df), 6) DESC,
-                                         tf.term) AS rank
-      FROM tf JOIN df USING (term) CROSS JOIN n
-    ) WHERE rank <= 3
-    """,
-)
-def l8_tfidf_top_terms(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    terms = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
-    tf = terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    # document frequency as a window over tf — (doc,term) is unique there,
-    # so count(*) == count(distinct doc). One pass; the groupBy+self-join
-    # formulation computes the explode->agg subplan twice.
-    df_ = F.count("*").over(Window.partitionBy("term"))
-    # corpus size as a broadcast 1-row aggregate crossJoined in — keeps
-    # the whole query lazy (no driver-side action in the query body)
-    n = d.agg(F.count("*").cast("double").alias("_n_docs"))
-    tfidf = F.round(F.col("tf") * F.log(F.col("_n_docs") / df_), 6)
-    scored = tf.crossJoin(F.broadcast(n)).select(
-        "doc_id", "term", tfidf.alias("tfidf")
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("tfidf").desc(), F.col("term")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-    )
 
 
 def catalog_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -1598,34 +139,17 @@ def catalog_baselines() -> dict[str, str]:
     return dict(BASELINES)
 
 
-# Extension entries (S/U/X/L9-L10/M) register themselves on import.
-from finporter_spark.queries import catalog_ext  # noqa: E402,F401
-# Training-data prep entries (L12-L14/O7/S4) likewise.
-from finporter_spark.queries import catalog_prep  # noqa: E402,F401
-# TPC-H-shaped analytical suite (q2-q22 adaptations).
-from finporter_spark.queries import catalog_tpch  # noqa: E402,F401
-
-from finporter_spark.queries import catalog_r6  # noqa: E402,F401
-
-from finporter_spark.queries import catalog_r7  # noqa: E402,F401
-
-from finporter_spark.queries import catalog_r8  # noqa: E402,F401
-
-from finporter_spark.queries import catalog_r8b  # noqa: E402,F401
-
-from finporter_spark.queries import catalog_r9  # noqa: E402,F401
-
-from finporter_spark.queries import catalog_r10  # noqa: E402,F401
-
-from finporter_spark.queries import catalog_r11  # noqa: E402,F401
-
-from finporter_spark.queries import catalog_r11b  # noqa: E402,F401
-
-from finporter_spark.queries import catalog_r12  # noqa: E402,F401
-
-from finporter_spark.queries import catalog_r13  # noqa: E402,F401
-
-from finporter_spark.queries import catalog_r14  # noqa: E402,F401
+# One module per domain; each registers its queries on import.
+from finporter_spark.queries import tpch  # noqa: E402,F401
+from finporter_spark.queries import relational  # noqa: E402,F401
+from finporter_spark.queries import ingest  # noqa: E402,F401
+from finporter_spark.queries import text_prep  # noqa: E402,F401
+from finporter_spark.queries import ann  # noqa: E402,F401
+from finporter_spark.queries import graph  # noqa: E402,F401
+from finporter_spark.queries import stats  # noqa: E402,F401
+from finporter_spark.queries import timeseries  # noqa: E402,F401
+from finporter_spark.queries import multimodal  # noqa: E402,F401
+from finporter_spark.queries import streaming  # noqa: E402,F401
 
 # Retired same-answer twins: each name now runs its survivor.
 alias(

@@ -1,31 +1,219 @@
-"""Catalog extension #3: the full TPC-H-shaped analytical suite.
+"""TPC-H-shaped analytical queries: the q family.
 
-Round 1 shipped the three flagship shapes (Q1/Q3/Q5). This module covers
-the REST of the TPC-H query classes expressible over the driver testdata
-(which is a TPC-H subset: no ``partsupp``, no commit/receipt dates, no
-comment/phone/shipmode columns — queries needing those are adapted to
-the same *plan shape* over available columns, noted per entry).
-
-Why this matters beyond coverage: each entry exercises a distinct
-optimizer/execution pattern the engine must get right at 100 TB —
-EXISTS→semi-join (q4), single-pass scan-agg (q6), multi-way join with
-two dimension copies (q7), conditional-aggregate market share (q8),
-left-outer + double aggregation (q13), scalar-subquery gates
+The driver testdata is a TPC-H subset (no ``partsupp``, no
+commit/receipt dates, no comment/phone/shipmode columns); queries that
+need those are adapted to the same *plan shape* over available columns,
+noted per entry. Each entry exercises a distinct optimizer pattern:
+EXISTS -> semi-join (q4), single-pass scan-agg (q6), multi-way joins
+with two dimension copies (q7), conditional-aggregate market share
+(q8), left-outer + double aggregation (q13), scalar-subquery gates
 (q11/q15/q17/q22), disjunctive join predicates (q19), double-aggregate
-IN gates (q18/q20), argmin-per-group (q2), and window-based existence
-logic (q21). 19 queries total, all hash-checked at sf0.01 and sf0.001.
+IN gates (q18/q20), argmin-per-group (q2) and window-based existence
+logic (q21). q1 has a DECIMAL money twin (``q1_pricing_summary_decimal``).
 
-Cross-engine determinism follows catalog.py's rules: money aggregates
-through DECIMAL(28,6), computed integers as BIGINT, every top-k with a
-total order on a unique key. Per-row doubles stay raw (bit-equal on both
-engines from the same parquet bits).
+Cross-engine determinism follows ``catalog.py``'s rules: money
+aggregates through DECIMAL(28,6), computed integers as BIGINT, every
+top-k with a total order on a unique key.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from finporter_spark.queries.catalog import DAVG, DSUM, _t, davg, dsum, query
+from finporter_spark.queries.catalog import (
+    DAVG,
+    DSUM,
+    _t,
+    davg,
+    dsum,
+    query,
+)
+
+
+# =====================================================================
+# Aggregation — A1 flagship (TPC-H Q1 shape)
+# =====================================================================
+
+@query(
+    "q1_pricing_summary",
+    f"""
+    SELECT l_returnflag, l_linestatus,
+           {DSUM('l_quantity')} AS sum_qty,
+           {DSUM('l_extendedprice')} AS sum_base_price,
+           {DSUM('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
+           {DSUM('l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS sum_charge,
+           {DAVG('l_quantity')} AS avg_qty,
+           {DAVG('l_extendedprice')} AS avg_price,
+           {DAVG('l_discount')} AS avg_disc,
+           COUNT(*) AS count_order
+    FROM lineitem
+    WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+    GROUP BY l_returnflag, l_linestatus
+    """,
+)
+def q1_pricing_summary(spark, sf_dir):
+    l = _t(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp")
+    )
+    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    charge = disc * (1 + F.col("l_tax"))
+    return l.groupBy("l_returnflag", "l_linestatus").agg(
+        dsum(F.col("l_quantity")).alias("sum_qty"),
+        dsum(F.col("l_extendedprice")).alias("sum_base_price"),
+        dsum(disc).alias("sum_disc_price"),
+        dsum(charge).alias("sum_charge"),
+        davg(F.col("l_quantity")).alias("avg_qty"),
+        davg(F.col("l_extendedprice")).alias("avg_price"),
+        davg(F.col("l_discount")).alias("avg_disc"),
+        F.count("*").alias("count_order"),
+    )
+
+
+@query(
+    "q1_pricing_summary_decimal",
+    """
+    WITH l AS (
+      SELECT CAST(l_quantity AS DECIMAL(12,2)) AS qty,
+             CAST(l_extendedprice AS DECIMAL(12,2)) AS price,
+             CAST(l_extendedprice AS DECIMAL(12,2))
+               * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))
+               AS disc_price,
+             CAST(l_extendedprice AS DECIMAL(12,2))
+               * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))
+               * (CAST(1 AS DECIMAL(3,2)) + CAST(l_tax AS DECIMAL(4,2)))
+               AS charge,
+             l_returnflag, l_linestatus
+      FROM lineitem
+      WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+    )
+    SELECT l_returnflag, l_linestatus,
+           CAST(SUM(qty) AS DOUBLE) AS sum_qty,
+           CAST(SUM(price) AS DOUBLE) AS sum_base_price,
+           CAST(SUM(disc_price) AS DOUBLE) AS sum_disc_price,
+           CAST(SUM(charge) AS DOUBLE) AS sum_charge,
+           CAST(SUM(qty) / COUNT(*) AS DOUBLE) AS avg_qty,
+           CAST(SUM(price) / COUNT(*) AS DOUBLE) AS avg_price,
+           COUNT(*) AS count_order
+    FROM l GROUP BY l_returnflag, l_linestatus
+    """,
+)
+def q1_pricing_summary_decimal(spark, sf_dir):
+    """q1's decimal-money twin (the dsum/davg ``money=True`` route,
+    SURVEY §1.2): every money expression stays DECIMAL end-to-end —
+    inputs typed to their true scales (price 2 dp, discount/tax 2 dp)
+    so products stay exact and IN-RANGE on both engines
+    ((12,2)×(5,2)→(18,4), ×(5,2)→(24,6) — never past precision 38,
+    where Spark would round and DuckDB would refuse), sums are exact
+    decimal adds (order-independent — no float summation-order terms),
+    and only the OUTPUT boundary casts to double for the 9 dp hash.
+    tests/test_catalog.py asserts the twin agrees with the double-route
+    q1 at 1e-9 and that the money=True helpers yield DecimalType."""
+    l = _t(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp")
+    )
+    one = F.lit(1).cast("decimal(3,2)")
+    qty = F.col("l_quantity").cast("decimal(12,2)")
+    price = F.col("l_extendedprice").cast("decimal(12,2)")
+    disc_price = price * (one - F.col("l_discount").cast("decimal(4,2)"))
+    charge = disc_price * (one + F.col("l_tax").cast("decimal(4,2)"))
+    n = F.count("*")
+    return l.groupBy("l_returnflag", "l_linestatus").agg(
+        F.sum(qty).cast("double").alias("sum_qty"),
+        F.sum(price).cast("double").alias("sum_base_price"),
+        F.sum(disc_price).cast("double").alias("sum_disc_price"),
+        F.sum(charge).cast("double").alias("sum_charge"),
+        (F.sum(qty) / n).cast("double").alias("avg_qty"),
+        (F.sum(price) / n).cast("double").alias("avg_price"),
+        n.alias("count_order"),
+    )
+
+
+# =====================================================================
+# Q — additional flagship query shapes (multi-join, SQL-API path)
+# =====================================================================
+
+@query(
+    "q3_shipping_priority",
+    f"""
+    SELECT l_orderkey,
+           {DSUM('l_extendedprice * (1 - l_discount)')} AS revenue,
+           o_orderdate, o_orderpriority
+    FROM customer JOIN orders ON c_custkey = o_custkey
+                  JOIN lineitem ON l_orderkey = o_orderkey
+    WHERE c_mktsegment = 'BUILDING'
+      AND o_orderdate < TIMESTAMP '1995-03-15 00:00:00'
+      AND l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
+    GROUP BY l_orderkey, o_orderdate, o_orderpriority
+    ORDER BY revenue DESC, l_orderkey
+    LIMIT 10
+    """,
+)
+def q3_shipping_priority(spark, sf_dir):
+    """TPC-H Q3 shape through the spark.sql path: the engine's SQL parser
+    IS Spark SQL (SURVEY §7 non-goals) — register the entity views and
+    hand Catalyst the same text a user would write."""
+    for t in ("customer", "orders", "lineitem"):
+        _t(spark, sf_dir, t).createOrReplaceTempView(t)
+    return spark.sql(
+        """
+        SELECT l_orderkey,
+               CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
+                    AS DECIMAL(28,6))) AS DOUBLE) AS revenue,
+               o_orderdate, o_orderpriority
+        FROM customer JOIN orders ON c_custkey = o_custkey
+                      JOIN lineitem ON l_orderkey = o_orderkey
+        WHERE c_mktsegment = 'BUILDING'
+          AND o_orderdate < TIMESTAMP '1995-03-15 00:00:00'
+          AND l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
+        GROUP BY l_orderkey, o_orderdate, o_orderpriority
+        ORDER BY revenue DESC, l_orderkey
+        LIMIT 10
+        """
+    )
+
+
+@query(
+    "q5_local_supplier_volume",
+    f"""
+    SELECT n_name, {DSUM('l_extendedprice * (1 - l_discount)')} AS revenue
+    FROM customer
+    JOIN orders ON c_custkey = o_custkey
+    JOIN lineitem ON l_orderkey = o_orderkey
+    JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+    JOIN nation ON s_nationkey = n_nationkey
+    JOIN region ON n_regionkey = r_regionkey
+    WHERE r_name = 'ASIA'
+      AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+      AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
+    GROUP BY n_name
+    """,
+)
+def q5_local_supplier_volume(spark, sf_dir):
+    """TPC-H Q5 shape: 6-table join — Catalyst reorders, broadcasts the
+    dimension chain (nation/region/supplier at this SF), and the fact
+    table shuffles at most twice (customer and order keys)."""
+    c = _t(spark, sf_dir, "customer")
+    o = _t(spark, sf_dir, "orders").filter(
+        (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
+        & (F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
+    )
+    l = _t(spark, sf_dir, "lineitem")
+    s = _t(spark, sf_dir, "supplier")
+    n = _t(spark, sf_dir, "nation")
+    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    return (
+        c.join(o, c.c_custkey == o.o_custkey)
+        .join(l, l.l_orderkey == o.o_orderkey)
+        .join(
+            s,
+            (l.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey),
+        )
+        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .groupBy("n_name")
+        .agg(F.sum(rev.cast("decimal(28,6)")).cast("double").alias("revenue"))
+    )
 
 
 def _ts(s: str):

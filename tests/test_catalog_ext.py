@@ -53,7 +53,7 @@ def test_s7_quarantine_routes_only_corrupted_keys(spark, sf_dir):
     )
     assert keys  # the corruption pattern must actually hit rows
     # both channels are persisted parquet sinks, not an in-memory cache
-    from finporter_spark.queries.catalog_ext import _io_dir
+    from finporter_spark.queries.staging import io_dir as _io_dir
 
     for channel in ("quarantine", "clean"):
         sink = os.path.join(_io_dir(sf_dir, "s7"), channel)

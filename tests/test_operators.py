@@ -373,7 +373,7 @@ def test_hll_sketch_within_tolerance(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from finporter_spark.queries.catalog import _t
-    from finporter_spark.queries.catalog_ext import a10_hll_sketch
+    from finporter_spark.queries.stats import a10_hll_sketch
 
     approx = {
         r.event_type: r.approx_users
@@ -397,7 +397,7 @@ def test_kll_quantiles_within_rank_tolerance(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from finporter_spark.queries.catalog import _t
-    from finporter_spark.queries.catalog_ext import a11_kll_quantiles
+    from finporter_spark.queries.stats import a11_kll_quantiles
 
     got = {
         r.event_type: (r.p50, r.p95)
@@ -615,7 +615,7 @@ def test_rolling_hll_rollup_within_tolerance(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from finporter_spark.queries.catalog import _t
-    from finporter_spark.queries.catalog_ext import a14_rolling_hll_rollup
+    from finporter_spark.queries.stats import a14_rolling_hll_rollup
 
     approx = {
         r.day: r.approx_users_7d

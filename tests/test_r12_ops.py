@@ -253,7 +253,7 @@ def test_x20_streaming_codes_equal_batch_build(spark, sf_dir):
     )
     from finporter_spark.queries.catalog import _t
     from finporter_spark.queries.staging import io_dir as _io_dir
-    from finporter_spark.queries.catalog_r10 import _PQ_M, _pq_books
+    from finporter_spark.queries.ann import _PQ_M, _pq_books
 
     streamed = sorted(
         tuple(r)
@@ -456,7 +456,7 @@ def test_codes_cache_fingerprint_invalidates(spark, sf_dir):
     )
     from finporter_spark.queries.catalog import _t
     from finporter_spark.queries.staging import io_dir as _io_dir
-    from finporter_spark.queries.catalog_r10 import _pq_books
+    from finporter_spark.queries.ann import _pq_books
 
     emb = _t(spark, sf_dir, "embeddings")
     books = _pq_books(spark, sf_dir, emb)

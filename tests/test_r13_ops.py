@@ -337,11 +337,9 @@ def test_zipf_hot_cell_frozen_quantizer_and_split(spark):
         split_hot_cells,
     )
     from finporter_spark.queries.staging import io_dir as _io_dir
-    from finporter_spark.queries.catalog_r12 import (
+    from finporter_spark.queries.ann import (
         _emb_fingerprint,
         _staged_structured_embeddings,
-    )
-    from finporter_spark.queries.catalog_r13 import (
         _staged_zipf_embeddings,
         _zipf_fingerprint,
     )

@@ -60,14 +60,14 @@ def _trained_cents(spark, sf_dir, kind):
     from finporter_spark.queries.staging import io_dir as _io_dir
 
     if kind == "zipf":
-        from finporter_spark.queries.catalog_r13 import (
+        from finporter_spark.queries.ann import (
             _staged_zipf_embeddings as stage,
             _zipf_fingerprint as fpf,
         )
 
         root = _io_dir(sf_dir, "l49_plan")
     else:
-        from finporter_spark.queries.catalog_r12 import (
+        from finporter_spark.queries.ann import (
             _emb_fingerprint as fpf,
             _staged_structured_embeddings as stage,
         )
@@ -136,11 +136,9 @@ def test_ivfadc_plan_auto_types_both_corpora(spark):
         ivfadc_plan_topk,
     )
     from finporter_spark.queries.staging import io_dir as _io_dir
-    from finporter_spark.queries.catalog_r12 import (
+    from finporter_spark.queries.ann import (
         _emb_fingerprint,
         _staged_structured_embeddings,
-    )
-    from finporter_spark.queries.catalog_r13 import (
         _staged_zipf_embeddings,
         _zipf_fingerprint,
     )
@@ -221,13 +219,11 @@ def test_split_and_rebuild_codes_frozen_quantizer(spark):
         split_and_rebuild_codes,
     )
     from finporter_spark.queries.staging import io_dir as _io_dir
-    from finporter_spark.queries.catalog_r12 import (
+    from finporter_spark.queries.ann import (
         _emb_fingerprint,
         _staged_structured_embeddings,
         _L46_ITERS,
         _L46_K,
-    )
-    from finporter_spark.queries.catalog_r13 import (
         _staged_zipf_embeddings,
         _zipf_fingerprint,
     )
@@ -375,7 +371,7 @@ def test_l21b_equals_reference_trainer(spark, sf_dir):
     tokenizer family is reference-anchored end-to-end."""
     from finporter_spark.operators.tokenizer import train_bpe
     from finporter_spark.queries.catalog import CATALOG
-    from finporter_spark.queries.catalog_r14 import _L21B_MERGES
+    from finporter_spark.queries.text_prep import _L21B_MERGES
 
     rows = CATALOG["l21b_bpe_merges"][0](spark, sf_dir).collect()
     got = [

@@ -20,7 +20,7 @@ def test_triangle_count_known_graphs(spark):
     K4 (4 triangles), a 4-cycle (0), and a hub star plus one chord
     (exactly 1 triangle — the hub-adversarial case the orientation
     exists for)."""
-    from finporter_spark.queries.catalog_r8 import _count_triangles
+    from finporter_spark.queries.graph import _count_triangles
 
     def run(edges):
         df = spark.createDataFrame(edges, "u bigint, v bigint")

@@ -249,7 +249,7 @@ def test_window_rms_partial_window_and_nonsquare():
     """m14's RMS helper drops a trailing partial window and computes
     the literal sqrt-mean-square on a non-constant window."""
     np = pytest.importorskip("numpy")
-    from finporter_spark.queries.catalog_r8b import _window_rms
+    from finporter_spark.queries.multimodal import _window_rms
 
     x = np.concatenate([np.full(256, 3.0), np.full(256, 4.0),
                         np.full(100, 99.0)])
@@ -384,7 +384,7 @@ def test_fastss_pairs_equal_brute_force(spark, names):
     Levenshtein over adversarial short strings on a 2-letter alphabet
     (maximal deletion-variant collisions: inserts, deletes, empty
     strings, shared variants between distance-2 pairs)."""
-    from finporter_spark.queries.catalog_r8b import _ed1_name_pairs
+    from finporter_spark.queries.text_prep import _ed1_name_pairs
 
     c = spark.createDataFrame(
         [(n, 1) for n in names], "c_name string, n_rows bigint"
@@ -941,10 +941,8 @@ def test_ed1_cc_edges_component_equivalent(spark, sf_dir):
 
     from finporter_spark.operators.graph import connected_components_star
     from finporter_spark.queries.catalog import _t
-    from finporter_spark.queries.catalog_r8b import (
-        _ed1_cc_edges,
-        _ed1_name_pairs,
-    )
+    from finporter_spark.queries.graph import _ed1_cc_edges
+    from finporter_spark.queries.text_prep import _ed1_name_pairs
 
     n = (
         _t(spark, sf_dir, "customer")
@@ -969,7 +967,7 @@ def test_ed1_cc_edges_are_all_distance_one(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from finporter_spark.queries.catalog import _t
-    from finporter_spark.queries.catalog_r8b import _ed1_cc_edges
+    from finporter_spark.queries.graph import _ed1_cc_edges
 
     n = (
         _t(spark, sf_dir, "customer")

@@ -400,9 +400,7 @@ def _structured_truth(spark, sf_dir=SF01, k=10):
     (numpy over the staged parquet; id tie-break matches the engine)."""
     import numpy as np
 
-    from finporter_spark.queries.catalog_r12 import (
-        _staged_structured_embeddings,
-    )
+    from finporter_spark.queries.ann import _staged_structured_embeddings
 
     se = _staged_structured_embeddings(spark, sf_dir)
     emb = se.orderBy("vec_id").collect()
@@ -456,7 +454,7 @@ def test_l46b_residual_beats_plain_at_same_budget_sf01(spark):
     )
     from finporter_spark.queries.catalog import CATALOG
     from finporter_spark.queries.staging import io_dir as _io_dir
-    from finporter_spark.queries.catalog_r12 import (
+    from finporter_spark.queries.ann import (
         _L46_ITERS,
         _L46_K,
         _staged_structured_embeddings,
@@ -467,7 +465,7 @@ def test_l46b_residual_beats_plain_at_same_budget_sf01(spark):
     res_rec = _mean_recall(res_rows, truth)
 
     se = _staged_structured_embeddings(spark, SF01)
-    from finporter_spark.queries.catalog_r12 import _emb_fingerprint
+    from finporter_spark.queries.ann import _emb_fingerprint
 
     fp = _emb_fingerprint(SF01)
     cents = load_or_train_centroids_det(
@@ -507,7 +505,7 @@ def test_ivfadc_staged_codes_identical_to_inline(spark, emb01):
         load_or_train_centroids_det,
     )
     from finporter_spark.queries.catalog import CATALOG
-    from finporter_spark.queries.catalog_r10 import _pq_books
+    from finporter_spark.queries.ann import _pq_books
     from finporter_spark.queries.staging import io_dir as _io_dir
 
     staged = sorted(
@@ -591,7 +589,7 @@ def test_catalog_dial_is_rule_derived():
     constants must BE the rule's output at the declared reference
     densities (the import-time raise guards m; this pins the rest)."""
     from finporter_spark.operators.similarity import ivfadc_params
-    from finporter_spark.queries.catalog_r12 import (
+    from finporter_spark.queries.ann import (
         _L46_K,
         _L46_NPROBE,
         _L46_REF_N,
@@ -654,7 +652,7 @@ def test_sized_dial_recall_struct_decade(spark, sfdir, floor):
         load_or_train_pq_books,
     )
     from finporter_spark.queries.staging import io_dir as _io_dir
-    from finporter_spark.queries.catalog_r12 import (
+    from finporter_spark.queries.ann import (
         _emb_fingerprint,
         _staged_structured_embeddings,
     )
@@ -712,7 +710,7 @@ def test_zipf_sf10_residual_recovers_skew_recall(spark):
         residual_vectors,
     )
     from finporter_spark.queries.staging import io_dir as _io_dir
-    from finporter_spark.queries.catalog_r13 import (
+    from finporter_spark.queries.ann import (
         _staged_zipf_embeddings,
         _zipf_fingerprint,
     )
@@ -797,7 +795,7 @@ def test_ivfadc_plan_auto_zipf_recall(spark):
         ivfadc_plan_topk,
     )
     from finporter_spark.queries.staging import io_dir as _io_dir
-    from finporter_spark.queries.catalog_r13 import (
+    from finporter_spark.queries.ann import (
         _staged_zipf_embeddings,
         _zipf_fingerprint,
     )

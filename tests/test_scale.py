@@ -529,7 +529,7 @@ def test_a7_plan_has_no_percentile_buffer(spark, sf_dir):
     value buffer + sort is the scale-killer the rank-select replaces)
     and no un-partitioned window (every window partitions by group or
     (group, bucket), so no task sees the whole corpus)."""
-    from finporter_spark.queries.catalog import a7_percentiles
+    from finporter_spark.queries.stats import a7_percentiles
 
     p = plan(a7_percentiles(spark, sf_dir))
     assert "percentile" not in p.lower()

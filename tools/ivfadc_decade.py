@@ -74,11 +74,9 @@ def main() -> None:
         io_dir as _io_dir,
         src_fp as _src_fp,
     )
-    from finporter_spark.queries.catalog_r12 import (
+    from finporter_spark.queries.ann import (
         _emb_fingerprint,
         _staged_structured_embeddings,
-    )
-    from finporter_spark.queries.catalog_r13 import (
         _staged_zipf_embeddings,
         _zipf_fingerprint,
     )
