@@ -1690,7 +1690,7 @@ def ivfadc_topk(
 
     Determinism: every decision (cell assign, probe order, ADC fold,
     rerank) is 6 dp-rounded with lowest-index tie-breaks — the DuckDB
-    oracle (catalog_r11 l45c) unrolls both Lloyd trainings and makes
+    oracle (queries/ann.py l45c) unrolls both Lloyd trainings and makes
     bit-identical choices. Returns (query_id, cand_id, rank, dist2).
 
     ``codes``: a pre-built (cand_id, _cell, _c0.._c{m-1}) table — pass
@@ -2006,7 +2006,7 @@ def ivfadc_residual_topk(
     on a CLUSTERED corpus the residual distribution is tight around 0,
     so the same m × k codebook budget spends its precision where the
     data actually is — measured on the planted-cluster corpus
-    (catalog_r12 l46b): +17 pp recall at shortlist=50 over plain PQ at
+    (queries/ann.py l46b): +17 pp recall at shortlist=50 over plain PQ at
     the identical probe/rerank budget; on structure-free embeddings it
     buys ~0 (round-11 measurement, the reason it was deferred then).
 

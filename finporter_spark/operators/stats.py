@@ -4,7 +4,7 @@ Both operators take a pre-quantized INTEGER value column plus a 0/1
 sample flag and compute their statistic from integer cross-counts over
 the distinct-value domain — the construction that makes a statistical
 test full-value-hash reproducible across engines (see
-queries/catalog_r10.py a37/a38 for the oracle mirrors and the scale
+queries/stats.py a37/a38 for the oracle mirrors and the scale
 contract: one corpus pass to the bounded domain, one domain-sized
 window, one scalar aggregate).
 

@@ -11,12 +11,32 @@ each one has a full value-hash oracle.
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
 
 from pyspark.sql import functions as F
 
-from finporter_spark.operators.similarity import brute_force_knn, ivfadc_params
+from finporter_spark.operators.scale import source_fingerprint
+from finporter_spark.operators.similarity import (
+    blocked_allpairs_cosine,
+    brute_force_knn,
+    ivf_knn_det,
+    ivfadc_params,
+    ivfadc_plan,
+    ivfadc_plan_topk,
+    ivfadc_residual_topk,
+    ivfadc_topk,
+    load_or_build_ivfadc_codes,
+    load_or_train_centroids_det,
+    load_or_train_pq_books,
+    lsh_bucket_knn_exact_probe,
+    lsh_exact_probe_oracle_sql,
+    pq_rerank,
+    pq_topk,
+    residual_vectors,
+    semantic_dedup,
+)
 from finporter_spark.queries.catalog import _t, query
 from finporter_spark.queries.staging import (
     io_dir as _io_dir,
@@ -53,10 +73,6 @@ def l3_knn_cosine(spark, sf_dir):
 
 
 def _l3_lsh_oracle() -> str:
-    from finporter_spark.operators.similarity import (
-        lsh_exact_probe_oracle_sql,
-    )
-
     return lsh_exact_probe_oracle_sql(
         dim=64, k=5, n_planes=9, n_tables=7, n_probes=26
     )
@@ -76,10 +92,6 @@ def l3_lsh_knn(spark, sf_dir):
     are sequential folds a DuckDB oracle restates verbatim — the
     approximate operator is graded by FULL value hash (the a19
     pattern), with no Python stage."""
-    from finporter_spark.operators.similarity import (
-        lsh_bucket_knn_exact_probe,
-    )
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"), "embedding"
@@ -118,6 +130,26 @@ def _ivf_mean_cte(a_name: str, prev_c: str, m_name: str, c_name: str) -> str:
                           FROM {m_name} GROUP BY cid) mm USING (cid))"""
 
 
+# The embeddings table as the oracles' corpus CTE ``e``.
+_EMB_E = """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
+               FROM embeddings)"""
+
+
+def _ivf_ctes(k, iters: int) -> str:
+    """The coarse IVF quantizer over ``e`` as CTEs: seeds ``c0`` = the
+    ``k`` smallest vec_ids (``k`` may be a SQL scalar), ``iters`` Lloyd
+    rounds ending in ``c{iters}``, then the final assignment df/af."""
+    rounds = ",".join(
+        _ivf_dist_cte(f"c{r - 1}", f"d{r}", f"a{r}")
+        + ","
+        + _ivf_mean_cte(f"a{r}", f"c{r - 1}", f"m{r}", f"c{r}")
+        for r in range(1, iters + 1)
+    )
+    return f"""c0 AS (SELECT CAST(vec_id AS INT) AS cid,
+                  list_transform(emb, x -> ROUND(x, 6)) AS cen
+           FROM e WHERE vec_id < {k}),
+    {rounds},
+    {_ivf_dist_cte(f'c{iters}', 'df', 'af')}"""
 
 
 _PQ_M = 4       # subspaces
@@ -134,18 +166,22 @@ _PQ_QMOD = 101
 _PQ_QMAX = _PQ_QMOD * 50
 
 
-def _pq_sub_ctes(i: int) -> str:
-    """Unrolled deterministic k-means for subspace ``i`` (the l22 CTE
-    pattern, applied to the slice): init = slices of the k smallest
-    vec_ids, two assign/update rounds, final assignment = the code."""
-    lo = i * _PQ_SUB
+def _pq_sub_ctes(
+    i: int, sub: int = _PQ_SUB, p: str = "", src: str = "e", lut: bool = True
+) -> str:
+    """Unrolled deterministic k-means for subspace ``i`` (``sub`` dims)
+    of ``src``, every CTE name prefixed ``p`` (the l22 CTE pattern,
+    applied to the slice): init = slices of the _PQ_K smallest vec_ids,
+    two assign/update rounds, final assignment ``{p}a3_i`` = the code;
+    with ``lut``, the per-query distance table ``{p}lut_i``."""
+    lo = i * sub
 
     def dist(src_c: str, d: str, a: str) -> str:
         return f"""
     {d} AS (SELECT s.vec_id, c.cid,
               ROUND(list_sum(list_transform(list_zip(s.s, c.cen),
                     z -> (z[1] - z[2])*(z[1] - z[2]))), 6) AS d
-       FROM s{i} s CROSS JOIN {src_c} c),
+       FROM {p}s{i} s CROSS JOIN {src_c} c),
     {a} AS (SELECT vec_id, cid, d FROM (
          SELECT vec_id, cid, d,
                 row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rk
@@ -154,42 +190,122 @@ def _pq_sub_ctes(i: int) -> str:
     def mean(a: str, prev_c: str, mname: str, cname: str) -> str:
         return f"""
     {mname} AS (SELECT {a}.cid, g.i, ROUND(AVG(s.s[g.i]), 6) AS v
-       FROM {a} JOIN s{i} s USING (vec_id)
-            CROSS JOIN generate_series(1, {_PQ_SUB}) AS g(i)
+       FROM {a} JOIN {p}s{i} s USING (vec_id)
+            CROSS JOIN generate_series(1, {sub}) AS g(i)
        GROUP BY {a}.cid, g.i),
     {cname} AS (SELECT {prev_c}.cid, COALESCE(mm.cen, {prev_c}.cen) AS cen
        FROM {prev_c} LEFT JOIN (SELECT cid, array_agg(v ORDER BY i) AS cen
                           FROM {mname} GROUP BY cid) mm USING (cid))"""
 
-    return f"""
-    s{i} AS (SELECT vec_id, emb[{lo + 1}:{lo + _PQ_SUB}] AS s FROM e),
-    c0_{i} AS (SELECT CAST(vec_id AS INT) AS cid,
+    ctes = f"""
+    {p}s{i} AS (SELECT vec_id, emb[{lo + 1}:{lo + sub}] AS s FROM {src}),
+    {p}c0_{i} AS (SELECT CAST(vec_id AS INT) AS cid,
                   list_transform(s, x -> ROUND(x, 6)) AS cen
-           FROM s{i} WHERE vec_id < {_PQ_K}),
-    {dist(f'c0_{i}', f'd1_{i}', f'a1_{i}')},
-    {mean(f'a1_{i}', f'c0_{i}', f'm1_{i}', f'c1_{i}')},
-    {dist(f'c1_{i}', f'd2_{i}', f'a2_{i}')},
-    {mean(f'a2_{i}', f'c1_{i}', f'm2_{i}', f'c2_{i}')},
-    {dist(f'c2_{i}', f'd3_{i}', f'a3_{i}')},
-    lut_{i} AS (SELECT q.vec_id AS query_id, c.cid,
+           FROM {p}s{i} WHERE vec_id < {_PQ_K}),
+    {dist(f'{p}c0_{i}', f'{p}d1_{i}', f'{p}a1_{i}')},
+    {mean(f'{p}a1_{i}', f'{p}c0_{i}', f'{p}m1_{i}', f'{p}c1_{i}')},
+    {dist(f'{p}c1_{i}', f'{p}d2_{i}', f'{p}a2_{i}')},
+    {mean(f'{p}a2_{i}', f'{p}c1_{i}', f'{p}m2_{i}', f'{p}c2_{i}')},
+    {dist(f'{p}c2_{i}', f'{p}d3_{i}', f'{p}a3_{i}')}"""
+    if not lut:
+        return ctes
+    return ctes + f""",
+    {p}lut_{i} AS (SELECT q.vec_id AS query_id, c.cid,
               ROUND(list_sum(list_transform(
-                    list_zip(q.emb[{lo + 1}:{lo + _PQ_SUB}], c.cen),
+                    list_zip(q.emb[{lo + 1}:{lo + sub}], c.cen),
                     z -> (z[1] - z[2])*(z[1] - z[2]))), 6) AS d
-       FROM e q CROSS JOIN c2_{i} c
+       FROM e q CROSS JOIN {p}c2_{i} c
        WHERE q.vec_id % {_PQ_QMOD} = 0 AND q.vec_id < {_PQ_QMAX})"""
 
 
+def _pq_codes(m: int = _PQ_M, p: str = "") -> str:
+    """The ``codes`` CTE: each vector's ``m`` subspace codes c0..c{m-1}
+    from the final assignments ``{p}a3_i``."""
+    cols = ", ".join(f"{p}a3_{i}.cid AS c{i}" for i in range(m))
+    joins = " ".join(
+        f"JOIN {p}a3_{i} USING (vec_id)" if i else f"FROM {p}a3_0"
+        for i in range(m)
+    )
+    return f"codes AS (SELECT {p}a3_0.vec_id, {cols} {joins})"
+
+
+def _adc_sum(m: int = _PQ_M) -> str:
+    """The asymmetric distance: the sum of the ``m`` joined LUT rows."""
+    return " + ".join(f"l{i}.d" for i in range(m))
+
+
+def _probe(n_probe: int) -> str:
+    """Each fixed-workload query's ``n_probe`` nearest coarse cells
+    (query_id, cid), read off the final assignment distances ``df``."""
+    return f"""(SELECT vec_id AS query_id, cid FROM (
+         SELECT vec_id, cid,
+                row_number() OVER (PARTITION BY vec_id ORDER BY d, cid)
+                  AS rk
+         FROM df WHERE vec_id % {_PQ_QMOD} = 0 AND vec_id < {_PQ_QMAX})
+       WHERE rk <= {n_probe})"""
+
+
+def _rerank(shortlist: int) -> str:
+    """The tail of every re-ranking ANN oracle: the ``shortlist`` best
+    ADC candidates per query (from ``score``), re-ranked by exact
+    squared distance, top _PQ_TOPK kept."""
+    return f"""short AS (SELECT query_id, cand_id FROM (
+      SELECT query_id, cand_id,
+             row_number() OVER (
+               PARTITION BY query_id ORDER BY adist, cand_id) AS rk
+      FROM score) WHERE rk <= {shortlist}),
+    exact AS (SELECT s.query_id, s.cand_id,
+                ROUND(list_sum(list_transform(list_zip(eq.emb, ec.emb),
+                      z -> (z[1] - z[2])*(z[1] - z[2]))), 6) AS dist2
+              FROM short s
+              JOIN e eq ON eq.vec_id = s.query_id
+              JOIN e ec ON ec.vec_id = s.cand_id)
+    SELECT query_id, cand_id, rank, dist2 FROM (
+      SELECT query_id, cand_id, dist2,
+             CAST(row_number() OVER (
+               PARTITION BY query_id ORDER BY dist2, cand_id) AS INT)
+               AS rank
+      FROM exact) WHERE rank <= {_PQ_TOPK}
+    """
+
+
+def _ivfadc_oracle(
+    corpus_cte: str,
+    k: int,
+    iters: int,
+    n_probe: int,
+    shortlist: int,
+    m: int = _PQ_M,
+    p: str = "",
+) -> str:
+    """Plain IVFADC over the corpus CTE ``e``: the coarse Lloyd unroll
+    (``k`` cells, ``iters`` rounds), ``m`` per-subspace PQ unrolls (CTE
+    prefix ``p``), ADC scored only inside each query's ``n_probe``
+    probed cells, then the exact re-rank of the ``shortlist``."""
+    subs = ",".join(_pq_sub_ctes(i, 64 // m, p) for i in range(m))
+    lut_joins = " ".join(
+        f"JOIN {p}lut_{i} l{i} ON l{i}.cid = codes.c{i}"
+        f" AND l{i}.query_id = qp.query_id"
+        for i in range(m)
+    )
+    return f"""
+    WITH {corpus_cte},
+    {_ivf_ctes(k, iters)},
+    qp AS {_probe(n_probe)},
+    {subs},
+    {_pq_codes(m, p)},
+    score AS (SELECT qp.query_id, codes.vec_id AS cand_id,
+                     ROUND({_adc_sum(m)}, 6) AS adist
+              FROM codes
+              JOIN af ON af.vec_id = codes.vec_id
+              JOIN qp ON qp.cid = af.cid
+              {lut_joins}),
+    {_rerank(shortlist)}"""
 
 
 def _pq_books(spark, sf_dir, emb):
     """Codebooks as cached dataset state (ingest-time cost, the IVF
     centroid contract) — trained once per corpus, shared by l45/l45b."""
-    from finporter_spark.operators.similarity import load_or_train_pq_books
-    from finporter_spark.queries.staging import (
-        io_dir as _io_dir,
-        src_fp as _src_fp,
-    )
-
     return load_or_train_pq_books(
         emb, "vec_id", "embedding", m=_PQ_M, k=_PQ_K, iters=2,
         cache_path=_io_dir(
@@ -207,7 +323,7 @@ _L46_SHORT = _L46_DIAL["shortlist"]  # 200 (recall 0.855 at sf0.1)
 _L46B_SHORT = 50     # residual-PQ budget (recall 0.785 vs plain 0.615)
 _L46_CLUSTERS = 64
 _L46_SCALE = 150     # center amplitude, per-mille
-# the l46/l46b oracles unroll catalog_r10's _PQ_M (=4) subspace
+# the l46/l46b oracles unroll _PQ_M (=4) subspace
 # trainings — fail LOUDLY at import if the rule ever disagrees with
 # the oracle construction instead of hash-diffing later
 if _L46_DIAL["m"] != 4:
@@ -218,7 +334,7 @@ if _L46_DIAL["m"] != 4:
     )
 
 # the planted-center table CTE, shared by the struct AND zipf corpus
-# oracles (catalog_r13 reuses it with a skewed cluster draw)
+# oracles (the zipf corpus reuses it with a skewed cluster draw)
 _CL_CTE = f"""
     cl AS (SELECT c.c AS cid,
                   list((CAST('0x' || substr(md5('cl' || CAST(c.c AS VARCHAR)
@@ -243,8 +359,6 @@ _STRUCT_E = f"""{_CL_CTE},
 def _struct_centroid_rows():
     """Driver-side mirror of the oracle's ``cl`` CTE: hashlib md5 ==
     SQL md5, so both engines derive the identical center table."""
-    import hashlib
-
     return [
         (
             c,
@@ -272,10 +386,6 @@ def _emb_fingerprint(sf_dir):
     the stamp folds the recipe tag in: a testdata regeneration AND a
     recipe bump (_L46_CLUSTERS/_L46_SCALE/version) each invalidate the
     derived caches, not just the staged parquet they feed from."""
-    import os
-
-    from finporter_spark.operators.scale import source_fingerprint
-
     return (
         source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
         + f"|planted{_L46_CLUSTERS}-s{_L46_SCALE}-v1"
@@ -285,8 +395,6 @@ def _emb_fingerprint(sf_dir):
 def _staged_structured_embeddings(spark, sf_dir):
     """The planted-cluster corpus as staged dataset state (vec_id,
     embedding array<double>), once per testdata version."""
-    from finporter_spark.queries.staging import stage_once as _stage_once
-
     def _write(p):
         cdf = spark.createDataFrame(
             _struct_centroid_rows(), "cid int, cen array<double>"
@@ -318,122 +426,19 @@ def _staged_structured_embeddings(spark, sf_dir):
     return spark.read.parquet(path)
 
 
-def _l46_oracle(corpus_cte: str | None = None) -> str:
-    """Plain IVFADC on a planted-cluster corpus: the l45c composition
-    (coarse Lloyd unroll + per-subspace PQ unrolls + probe/ADC/rerank)
-    with the given corpus CTE as ``e`` (default: the balanced
-    structured corpus; catalog_r13's l47 passes the Zipf-skewed one)
-    and k_coarse=64."""
-
-    if corpus_cte is None:
-        corpus_cte = _STRUCT_E
-    ivf_rounds = []
-    prev = "c0"
-    for r in range(1, _L46_ITERS + 1):
-        ivf_rounds.append(_ivf_dist_cte(prev, f"d{r}", f"a{r}"))
-        ivf_rounds.append(_ivf_mean_cte(f"a{r}", prev, f"m{r}", f"c{r}"))
-        prev = f"c{r}"
-    ivf = ",".join(ivf_rounds)
-    subs = ",".join(_pq_sub_ctes(i) for i in range(_PQ_M))
-    code_joins = " ".join(
-        f"JOIN a3_{i} USING (vec_id)" if i else "FROM a3_0"
-        for i in range(_PQ_M)
+def _l46_oracle(corpus_cte: str = _STRUCT_E) -> str:
+    """Plain IVFADC on a planted-cluster corpus with k_coarse=64: the
+    l45c composition on ``corpus_cte`` (default: the balanced structured
+    corpus; l47 passes the Zipf-skewed one)."""
+    return _ivfadc_oracle(
+        corpus_cte, _L46_K, _L46_ITERS, _L46_NPROBE, _L46_SHORT
     )
-    code_cols = ", ".join(f"a3_{i}.cid AS c{i}" for i in range(_PQ_M))
-    lut_joins = " ".join(
-        f"JOIN lut_{i} l{i} ON l{i}.cid = codes.c{i}"
-        f" AND l{i}.query_id = qp.query_id"
-        for i in range(_PQ_M)
-    )
-    ad = " + ".join(f"l{i}.d" for i in range(_PQ_M))
-    return f"""
-    WITH {corpus_cte},
-    c0 AS (SELECT CAST(vec_id AS INT) AS cid,
-                  list_transform(emb, x -> ROUND(x, 6)) AS cen
-           FROM e WHERE vec_id < {_L46_K}),
-    {ivf},
-    {_ivf_dist_cte(prev, 'df', 'af')},
-    qp AS (SELECT vec_id AS query_id, cid FROM (
-         SELECT vec_id, cid,
-                row_number() OVER (PARTITION BY vec_id ORDER BY d, cid)
-                  AS rk
-         FROM df WHERE vec_id % {_PQ_QMOD} = 0 AND vec_id < {_PQ_QMAX})
-       WHERE rk <= {_L46_NPROBE}),
-    {subs},
-    codes AS (SELECT a3_0.vec_id, {code_cols} {code_joins}),
-    score AS (SELECT qp.query_id, codes.vec_id AS cand_id,
-                     ROUND({ad}, 6) AS adist
-              FROM codes
-              JOIN af ON af.vec_id = codes.vec_id
-              JOIN qp ON qp.cid = af.cid
-              {lut_joins}),
-    short AS (SELECT query_id, cand_id FROM (
-      SELECT query_id, cand_id,
-             row_number() OVER (
-               PARTITION BY query_id ORDER BY adist, cand_id) AS rk
-      FROM score) WHERE rk <= {_L46_SHORT}),
-    exact AS (SELECT s.query_id, s.cand_id,
-                ROUND(list_sum(list_transform(list_zip(eq.emb, ec.emb),
-                      z -> (z[1] - z[2])*(z[1] - z[2]))), 6) AS dist2
-              FROM short s
-              JOIN e eq ON eq.vec_id = s.query_id
-              JOIN e ec ON ec.vec_id = s.cand_id)
-    SELECT query_id, cand_id, rank, dist2 FROM (
-      SELECT query_id, cand_id, dist2,
-             CAST(row_number() OVER (
-               PARTITION BY query_id ORDER BY dist2, cand_id) AS INT)
-               AS rank
-      FROM exact) WHERE rank <= {_PQ_TOPK}
-    """
-
-
-
-
-def _res_pq_sub_ctes(i: int) -> str:
-    """Per-subspace PQ Lloyd unroll over the RESIDUAL table ``r``
-    (catalog_r10's ``_pq_sub_ctes`` with r as the training corpus and
-    NO per-query lut — residual LUTs are per-(query, cell), generated
-    separately)."""
-    sub = 16
-    lo = i * sub
-
-    def dist(src_c: str, d: str, a: str) -> str:
-        return f"""
-    {d} AS (SELECT s.vec_id, c.cid,
-              ROUND(list_sum(list_transform(list_zip(s.s, c.cen),
-                    z -> (z[1] - z[2])*(z[1] - z[2]))), 6) AS d
-       FROM rs{i} s CROSS JOIN {src_c} c),
-    {a} AS (SELECT vec_id, cid, d FROM (
-         SELECT vec_id, cid, d,
-                row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rk
-         FROM {d}) WHERE rk = 1)"""
-
-    def mean(a: str, prev_c: str, mname: str, cname: str) -> str:
-        return f"""
-    {mname} AS (SELECT {a}.cid, g.i, ROUND(AVG(s.s[g.i]), 6) AS v
-       FROM {a} JOIN rs{i} s USING (vec_id)
-            CROSS JOIN generate_series(1, {sub}) AS g(i)
-       GROUP BY {a}.cid, g.i),
-    {cname} AS (SELECT {prev_c}.cid, COALESCE(mm.cen, {prev_c}.cen) AS cen
-       FROM {prev_c} LEFT JOIN (SELECT cid, array_agg(v ORDER BY i) AS cen
-                          FROM {mname} GROUP BY cid) mm USING (cid))"""
-
-    return f"""
-    rs{i} AS (SELECT vec_id, emb[{lo + 1}:{lo + sub}] AS s FROM r),
-    rc0_{i} AS (SELECT CAST(vec_id AS INT) AS cid,
-                  list_transform(s, x -> ROUND(x, 6)) AS cen
-           FROM rs{i} WHERE vec_id < 16),
-    {dist(f'rc0_{i}', f'rd1_{i}', f'ra1_{i}')},
-    {mean(f'ra1_{i}', f'rc0_{i}', f'rm1_{i}', f'rc1_{i}')},
-    {dist(f'rc1_{i}', f'rd2_{i}', f'ra2_{i}')},
-    {mean(f'ra2_{i}', f'rc1_{i}', f'rm2_{i}', f'rc2_{i}')},
-    {dist(f'rc2_{i}', f'rd3_{i}', f'ra3_{i}')}"""
 
 
 def _l46b_oracle(
-    corpus_cte: str | None = None,
-    k_sql: str | None = None,
-    shortlist: int | None = None,
+    corpus_cte: str = _STRUCT_E,
+    k_sql: str = str(_L46_K),
+    shortlist: int = _L46B_SHORT,
 ) -> str:
     """Residual IVFADC: coarse Lloyd (k=64), residual table
     r = e − centroid[cell], per-subspace PQ Lloyd unrolls ON r,
@@ -441,26 +446,14 @@ def _l46b_oracle(
     exact rerank on the structured vectors.
 
     Parameterized for reuse (the _l46_oracle contract): ``corpus_cte``
-    swaps the corpus (catalog_r14's l49 passes the Zipf CTE + a
-    corpus-sized ``kk`` dial CTE), ``k_sql`` the coarse seeding bound
-    (a literal or a scalar subquery over ``kk``), ``shortlist`` the
-    re-rank budget. Defaults reproduce the l46b text exactly."""
-
-    if corpus_cte is None:
-        corpus_cte = _STRUCT_E
-    if k_sql is None:
-        k_sql = str(_L46_K)
-    if shortlist is None:
-        shortlist = _L46B_SHORT
-    ivf_rounds = []
-    prev = "c0"
-    for rr in range(1, _L46_ITERS + 1):
-        ivf_rounds.append(_ivf_dist_cte(prev, f"d{rr}", f"a{rr}"))
-        ivf_rounds.append(_ivf_mean_cte(f"a{rr}", prev, f"m{rr}", f"c{rr}"))
-        prev = f"c{rr}"
-    ivf = ",".join(ivf_rounds)
-    subs = ",".join(_res_pq_sub_ctes(i) for i in range(_PQ_M))
-    sub = 16
+    swaps the corpus (l49 passes the Zipf CTE + a corpus-sized ``kk``
+    dial CTE), ``k_sql`` the coarse seeding bound (a literal or a
+    scalar subquery over ``kk``), ``shortlist`` the re-rank budget.
+    Defaults reproduce the l46b text exactly."""
+    subs = ",".join(
+        _pq_sub_ctes(i, p="r", src="r", lut=False) for i in range(_PQ_M)
+    )
+    sub = _PQ_SUB
     rluts = ",".join(
         f"""
     rlut_{i} AS (SELECT qp.query_id, qp.cid AS cell, b.cid AS code,
@@ -477,66 +470,32 @@ def _l46b_oracle(
        CROSS JOIN rc2_{i} b)"""
         for i in range(_PQ_M)
     )
-    code_joins = " ".join(
-        f"JOIN ra3_{i} USING (vec_id)" if i else "FROM ra3_0"
-        for i in range(_PQ_M)
-    )
-    code_cols = ", ".join(f"ra3_{i}.cid AS c{i}" for i in range(_PQ_M))
     lut_joins = " ".join(
         f"JOIN rlut_{i} l{i} ON l{i}.code = codes.c{i}"
         f" AND l{i}.query_id = qp.query_id AND l{i}.cell = qp.cid"
         for i in range(_PQ_M)
     )
-    ad = " + ".join(f"l{i}.d" for i in range(_PQ_M))
     return f"""
     WITH {corpus_cte},
-    c0 AS (SELECT CAST(vec_id AS INT) AS cid,
-                  list_transform(emb, x -> ROUND(x, 6)) AS cen
-           FROM e WHERE vec_id < {k_sql}),
-    {ivf},
-    {_ivf_dist_cte(prev, 'df', 'af')},
+    {_ivf_ctes(k_sql, _L46_ITERS)},
     afm AS MATERIALIZED (SELECT * FROM af),
-    cfm AS MATERIALIZED (SELECT * FROM {prev}),
+    cfm AS MATERIALIZED (SELECT * FROM c{_L46_ITERS}),
     r AS MATERIALIZED (SELECT e.vec_id,
                  list_transform(list_zip(e.emb, cc.cen),
                                 z -> z[1] - z[2]) AS emb
           FROM e JOIN afm ON afm.vec_id = e.vec_id
           JOIN cfm cc ON cc.cid = afm.cid),
-    qp AS MATERIALIZED (SELECT vec_id AS query_id, cid FROM (
-         SELECT vec_id, cid,
-                row_number() OVER (PARTITION BY vec_id ORDER BY d, cid)
-                  AS rk
-         FROM df WHERE vec_id % {_PQ_QMOD} = 0 AND vec_id < {_PQ_QMAX})
-       WHERE rk <= {_L46_NPROBE}),
+    qp AS MATERIALIZED {_probe(_L46_NPROBE)},
     {subs},
     {rluts},
-    codes AS (SELECT ra3_0.vec_id, {code_cols} {code_joins}),
+    {_pq_codes(p="r")},
     score AS (SELECT qp.query_id, codes.vec_id AS cand_id,
-                     ROUND({ad}, 6) AS adist
+                     ROUND({_adc_sum()}, 6) AS adist
               FROM codes
               JOIN afm ON afm.vec_id = codes.vec_id
               JOIN qp ON qp.cid = afm.cid
               {lut_joins}),
-    short AS (SELECT query_id, cand_id FROM (
-      SELECT query_id, cand_id,
-             row_number() OVER (
-               PARTITION BY query_id ORDER BY adist, cand_id) AS rk
-      FROM score) WHERE rk <= {shortlist}),
-    exact AS (SELECT s.query_id, s.cand_id,
-                ROUND(list_sum(list_transform(list_zip(eq.emb, ec.emb),
-                      z -> (z[1] - z[2])*(z[1] - z[2]))), 6) AS dist2
-              FROM short s
-              JOIN e eq ON eq.vec_id = s.query_id
-              JOIN e ec ON ec.vec_id = s.cand_id)
-    SELECT query_id, cand_id, rank, dist2 FROM (
-      SELECT query_id, cand_id, dist2,
-             CAST(row_number() OVER (
-               PARTITION BY query_id ORDER BY dist2, cand_id) AS INT)
-               AS rank
-      FROM exact) WHERE rank <= {_PQ_TOPK}
-    """
-
-
+    {_rerank(shortlist)}"""
 
 
 _ZIPF_RES = 1_000_000  # draw resolution (md5 % RES against int bounds)
@@ -585,10 +544,6 @@ _ZIPF_E = f"""{_CL_CTE},
 def _zipf_fingerprint(sf_dir):
     """Source stamp for the l47 caches: embeddings parquet identity ×
     the Zipf recipe (clusters, amplitude, thresholds version)."""
-    import os
-
-    from finporter_spark.operators.scale import source_fingerprint
-
     return (
         source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
         + f"|zipf{_L46_CLUSTERS}-s{_L46_SCALE}-r{_ZIPF_RES}-v1"
@@ -600,8 +555,6 @@ def _staged_zipf_embeddings(spark, sf_dir):
     state (vec_id, embedding array<double>) — same centers as the
     balanced struct fixture, cluster membership drawn against the
     Zipf(1) thresholds."""
-    from finporter_spark.queries.staging import stage_once as _stage_once
-
     def _write(p):
         cdf = spark.createDataFrame(
             _struct_centroid_rows(), "cid int, cen array<double>"
@@ -678,8 +631,6 @@ def l19_blocked_allpairs(spark, sf_dir):
     per tile (see operators/similarity.blocked_allpairs_cosine). Shuffle
     ∝ n·B, task memory = two blocks. Also registered as the alias
     l10_embedding_near_dup."""
-    from finporter_spark.operators.similarity import blocked_allpairs_cosine
-
     emb = _t(spark, sf_dir, "embeddings")
     return blocked_allpairs_cosine(emb, threshold=0.4, n_blocks=8)
 
@@ -687,21 +638,9 @@ def l19_blocked_allpairs(spark, sf_dir):
 def _l3_ivf_oracle(
     n_centroids: int = 16, iters: int = 3, n_probe: int = 4, k: int = 5
 ) -> str:
-    rounds = []
-    prev = "c0"
-    for r in range(1, iters + 1):
-        rounds.append(_ivf_dist_cte(prev, f"d{r}", f"a{r}"))
-        rounds.append(_ivf_mean_cte(f"a{r}", prev, f"m{r}", f"c{r}"))
-        prev = f"c{r}"
-    round_ctes = ",".join(rounds)
     return f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-               FROM embeddings),
-    c0 AS (SELECT CAST(vec_id AS INT) AS cid,
-                  list_transform(emb, x -> ROUND(x, 6)) AS cen
-           FROM e WHERE vec_id < {n_centroids}),
-    {round_ctes},
-    {_ivf_dist_cte(prev, 'df', 'af')},
+    WITH {_EMB_E},
+    {_ivf_ctes(n_centroids, iters)},
     qp AS (SELECT vec_id AS q_id, cid FROM (
          SELECT vec_id, cid,
                 row_number() OVER (PARTITION BY vec_id ORDER BY d, cid)
@@ -742,11 +681,6 @@ def l3_ivf_knn(spark, sf_dir):
     (ivf_knn_det), so the oracle unrolls the SAME Lloyd rounds as CTEs
     and the approximate operator is graded by full value hash. Recall
     stays pytest's concern (tests/test_recall_sf01.py)."""
-    from finporter_spark.operators.similarity import (
-        ivf_knn_det,
-        load_or_train_centroids_det,
-    )
-
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"), "embedding"
@@ -776,29 +710,15 @@ def _l22_dist_cte(src_e: str, src_c: str, d_name: str, a_name: str) -> str:
          FROM {d_name}) WHERE rk = 1)"""
 
 
-def _l22_mean_cte(a_name: str, prev_c: str, m_name: str, c_name: str) -> str:
-    """One centroid-update round: per-(cluster, dim) mean rounded to 6 dp
-    (same as the Spark side), empty clusters keep the previous centroid."""
-    return f"""
-    {m_name} AS (SELECT {a_name}.cid, g.i, ROUND(AVG(e.emb[g.i]), 6) AS v
-       FROM {a_name} JOIN e USING (vec_id)
-            CROSS JOIN generate_series(1, 64) AS g(i)
-       GROUP BY {a_name}.cid, g.i),
-    {c_name} AS (SELECT {prev_c}.cid, COALESCE(mm.cen, {prev_c}.cen) AS cen
-       FROM {prev_c} LEFT JOIN (SELECT cid, array_agg(v ORDER BY i) AS cen
-                          FROM {m_name} GROUP BY cid) mm USING (cid))"""
-
-
 _L22_ORACLE = f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-               FROM embeddings),
+    WITH {_EMB_E},
     c0 AS (SELECT CAST(vec_id AS INT) AS cid,
                   list_transform(emb, x -> ROUND(x, 6)) AS cen
            FROM e WHERE vec_id < 8),
     {_l22_dist_cte('e', 'c0', 'd1', 'a1')},
-    {_l22_mean_cte('a1', 'c0', 'm1', 'c1')},
+    {_ivf_mean_cte('a1', 'c0', 'm1', 'c1')},
     {_l22_dist_cte('e', 'c1', 'd2', 'a2')},
-    {_l22_mean_cte('a2', 'c1', 'm2', 'c2')},
+    {_ivf_mean_cte('a2', 'c1', 'm2', 'c2')},
     {_l22_dist_cte('e', 'c2', 'd3', 'a3')},
     dup AS (SELECT DISTINCT y.vec_id
             FROM a3 x JOIN a3 y ON x.cid = y.cid AND x.vec_id < y.vec_id
@@ -825,8 +745,6 @@ def l22_semantic_dedup(spark, sf_dir):
     one map-only assignment + one keyed mean shuffle per round with
     k x dim driver state (the IVF-centroid pattern). The oracle unrolls
     both Lloyd rounds as SQL CTEs (the l18 PageRank pattern)."""
-    from finporter_spark.operators.similarity import semantic_dedup
-
     emb = _t(spark, sf_dir, "embeddings")
     return semantic_dedup(
         emb, "vec_id", "embedding", k=8, iters=2, threshold=0.4
@@ -836,25 +754,17 @@ def l22_semantic_dedup(spark, sf_dir):
 def _l45_core() -> str:
     """Shared oracle core: per-subspace Lloyd unrolls + codes + ADC
     scores (``score(query_id, cand_id, adist)``)."""
-    subs = ",".join(_pq_sub_ctes(i) for i in range(_PQ_M))
-    code_joins = " ".join(
-        f"JOIN a3_{i} USING (vec_id)" if i else "FROM a3_0"
-        for i in range(_PQ_M)
-    )
-    code_cols = ", ".join(f"a3_{i}.cid AS c{i}" for i in range(_PQ_M))
     lut_joins = " ".join(
         f"JOIN lut_{i} l{i} ON l{i}.cid = codes.c{i}"
         + ("" if i == 0 else " AND l{i}.query_id = l0.query_id".format(i=i))
         for i in range(_PQ_M)
     )
-    ad = " + ".join(f"l{i}.d" for i in range(_PQ_M))
     return f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-               FROM embeddings),
-    {subs},
-    codes AS (SELECT a3_0.vec_id, {code_cols} {code_joins}),
+    WITH {_EMB_E},
+    {",".join(_pq_sub_ctes(i) for i in range(_PQ_M))},
+    {_pq_codes()},
     score AS (SELECT l0.query_id, codes.vec_id AS cand_id,
-                     ROUND({ad}, 6) AS adist
+                     ROUND({_adc_sum()}, 6) AS adist
               FROM codes {lut_joins})"""
 
 
@@ -876,24 +786,7 @@ _PQ_SHORTLIST = 100
 def _l45b_oracle() -> str:
     return f"""
     {_l45_core()},
-    short AS (SELECT query_id, cand_id FROM (
-      SELECT query_id, cand_id,
-             row_number() OVER (
-               PARTITION BY query_id ORDER BY adist, cand_id) AS rk
-      FROM score) WHERE rk <= {_PQ_SHORTLIST}),
-    exact AS (SELECT s.query_id, s.cand_id,
-                ROUND(list_sum(list_transform(list_zip(eq.emb, ec.emb),
-                      z -> (z[1] - z[2])*(z[1] - z[2]))), 6) AS dist2
-              FROM short s
-              JOIN e eq ON eq.vec_id = s.query_id
-              JOIN e ec ON ec.vec_id = s.cand_id)
-    SELECT query_id, cand_id, rank, dist2 FROM (
-      SELECT query_id, cand_id, dist2,
-             CAST(row_number() OVER (
-               PARTITION BY query_id ORDER BY dist2, cand_id) AS INT)
-               AS rank
-      FROM exact) WHERE rank <= {_PQ_TOPK}
-    """
+    {_rerank(_PQ_SHORTLIST)}"""
 
 
 @query("l45_pq_ann_topk", _l45_oracle())
@@ -921,8 +814,6 @@ def l45_pq_ann_topk(spark, sf_dir):
     Deterministic end to end (md5-free: determinism comes from
     smallest-id init + 6 dp rounding): full value-hash oracle with the
     entire per-subspace Lloyd unrolled as generated SQL CTEs."""
-    from finporter_spark.operators.similarity import pq_topk
-
     emb = _t(spark, sf_dir, "embeddings")
     books = _pq_books(spark, sf_dir, emb)
     queries = emb.where(
@@ -954,8 +845,6 @@ def l45b_pq_rerank_topk(spark, sf_dir):
     stage is one keyed join against the vector store + a per-query
     top-k window. Full value-hash oracle: the shared Lloyd-unroll core
     plus shortlist + exact-distance re-rank CTEs."""
-    from finporter_spark.operators.similarity import pq_rerank, pq_topk
-
     emb = _t(spark, sf_dir, "embeddings")
     books = _pq_books(spark, sf_dir, emb)
     queries = emb.where(
@@ -985,68 +874,12 @@ _IVF_ITERS = 3
 
 def _l45c_oracle() -> str:
     """Compose the two Lloyd unrolls: the coarse 16-cell IVF quantizer
-    (catalog_ext's l3_ivf CTEs — same params, so Spark shares the SAME
-    cached centroids) and l45's per-subspace PQ codebooks, then score
-    ADC only where the candidate's cell is probed."""
-    ivf_rounds = []
-    prev = "c0"
-    for r in range(1, _IVF_ITERS + 1):
-        ivf_rounds.append(_ivf_dist_cte(prev, f"d{r}", f"a{r}"))
-        ivf_rounds.append(_ivf_mean_cte(f"a{r}", prev, f"m{r}", f"c{r}"))
-        prev = f"c{r}"
-    ivf = ",".join(ivf_rounds)
-    subs = ",".join(_pq_sub_ctes(i) for i in range(_PQ_M))
-    code_joins = " ".join(
-        f"JOIN a3_{i} USING (vec_id)" if i else "FROM a3_0"
-        for i in range(_PQ_M)
+    (l3_ivf's CTEs — same params, so Spark shares the SAME cached
+    centroids) and l45's per-subspace PQ codebooks, then score ADC only
+    where the candidate's cell is probed."""
+    return _ivfadc_oracle(
+        _EMB_E, _IVF_K, _IVF_ITERS, _IVFADC_NPROBE, _IVFADC_SHORTLIST
     )
-    code_cols = ", ".join(f"a3_{i}.cid AS c{i}" for i in range(_PQ_M))
-    lut_joins = " ".join(
-        f"JOIN lut_{i} l{i} ON l{i}.cid = codes.c{i}"
-        f" AND l{i}.query_id = qp.query_id"
-        for i in range(_PQ_M)
-    )
-    ad = " + ".join(f"l{i}.d" for i in range(_PQ_M))
-    return f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-               FROM embeddings),
-    c0 AS (SELECT CAST(vec_id AS INT) AS cid,
-                  list_transform(emb, x -> ROUND(x, 6)) AS cen
-           FROM e WHERE vec_id < {_IVF_K}),
-    {ivf},
-    {_ivf_dist_cte(prev, 'df', 'af')},
-    qp AS (SELECT vec_id AS query_id, cid FROM (
-         SELECT vec_id, cid,
-                row_number() OVER (PARTITION BY vec_id ORDER BY d, cid)
-                  AS rk
-         FROM df WHERE vec_id % {_PQ_QMOD} = 0 AND vec_id < {_PQ_QMAX})
-       WHERE rk <= {_IVFADC_NPROBE}),
-    {subs},
-    codes AS (SELECT a3_0.vec_id, {code_cols} {code_joins}),
-    score AS (SELECT qp.query_id, codes.vec_id AS cand_id,
-                     ROUND({ad}, 6) AS adist
-              FROM codes
-              JOIN af ON af.vec_id = codes.vec_id
-              JOIN qp ON qp.cid = af.cid
-              {lut_joins}),
-    short AS (SELECT query_id, cand_id FROM (
-      SELECT query_id, cand_id,
-             row_number() OVER (
-               PARTITION BY query_id ORDER BY adist, cand_id) AS rk
-      FROM score) WHERE rk <= {_IVFADC_SHORTLIST}),
-    exact AS (SELECT s.query_id, s.cand_id,
-                ROUND(list_sum(list_transform(list_zip(eq.emb, ec.emb),
-                      z -> (z[1] - z[2])*(z[1] - z[2]))), 6) AS dist2
-              FROM short s
-              JOIN e eq ON eq.vec_id = s.query_id
-              JOIN e ec ON ec.vec_id = s.cand_id)
-    SELECT query_id, cand_id, rank, dist2 FROM (
-      SELECT query_id, cand_id, dist2,
-             CAST(row_number() OVER (
-               PARTITION BY query_id ORDER BY dist2, cand_id) AS INT)
-               AS rank
-      FROM exact) WHERE rank <= {_PQ_TOPK}
-    """
 
 
 @query("l45c_ivfadc_topk", _l45c_oracle())
@@ -1080,7 +913,7 @@ def l45c_ivfadc_topk(spark, sf_dir):
     for residuals to exploit) does not buy the m×k×n_probe LUT blowup.
     Round 12 re-validated the decision on the planted-cluster corpus
     and REVERSED it there: +17 pp at the same budget — see
-    catalog_r12 ``l46b_ivfadc_residual``; the split stands (plain PQ
+    ``l46b_ivfadc_residual``; the split stands (plain PQ
     for structureless data, residual for clustered). Round 12 also
     staged the corpus codes as ingest-time dataset state
     (``load_or_build_ivfadc_codes`` — the codes ARE the index; staged
@@ -1089,15 +922,8 @@ def l45c_ivfadc_topk(spark, sf_dir):
     trainings unrolled as CTEs (the l3_ivf + l45 generators composed),
     probe/assign/ADC/rerank decisions all 6 dp-rounded with
     lowest-index tie-breaks — bit-identical cross-engine."""
-    from finporter_spark.operators.similarity import (
-        ivfadc_topk,
-        load_or_build_ivfadc_codes,
-        load_or_train_centroids_det,
-    )
-
     emb = _t(spark, sf_dir, "embeddings")
     books = _pq_books(spark, sf_dir, emb)
-    from finporter_spark.queries.staging import src_fp as _src_fp
 
     cents = load_or_train_centroids_det(
         emb, "vec_id", "embedding", dim=64,
@@ -1108,7 +934,6 @@ def l45c_ivfadc_topk(spark, sf_dir):
     # the codes table IS the index: assignment + PQ encoding are staged
     # once per (corpus, params) like the quantizer/codebooks themselves
     # (round-11 verdict #2 — at sf10 the per-run re-encode dominated)
-    from finporter_spark.operators.scale import source_fingerprint
 
     codes = load_or_build_ivfadc_codes(
         emb, "vec_id", "embedding", cents, books,
@@ -1157,14 +982,6 @@ def l46_ivfadc_structured(spark, sf_dir):
     Lloyd trainings (coarse 64×3, PQ 4×(16×2)), probe, ADC and rerank
     all unrolled in DuckDB over the same parquet — bit-identical
     decisions via the 6 dp/lowest-index contract."""
-    from finporter_spark.operators.similarity import (
-        ivfadc_topk,
-        load_or_build_ivfadc_codes,
-        load_or_train_centroids_det,
-        load_or_train_pq_books,
-    )
-    from finporter_spark.queries.staging import io_dir as _io_dir
-
     se = _staged_structured_embeddings(spark, sf_dir)
     cents = load_or_train_centroids_det(
         se, "vec_id", "embedding", dim=64,
@@ -1218,15 +1035,6 @@ def l46b_ivfadc_residual(spark, sf_dir):
     once; full value-hash oracle unrolls coarse Lloyd, the residual
     table, FOUR residual-PQ Lloyd trainings, per-cell LUTs, ADC and
     rerank — bit-identical cross-engine."""
-    from finporter_spark.operators.similarity import (
-        ivfadc_residual_topk,
-        load_or_build_ivfadc_codes,
-        load_or_train_centroids_det,
-        load_or_train_pq_books,
-        residual_vectors,
-    )
-    from finporter_spark.queries.staging import io_dir as _io_dir
-
     se = _staged_structured_embeddings(spark, sf_dir)
     cents = load_or_train_centroids_det(
         se, "vec_id", "embedding", dim=64,
@@ -1271,116 +1079,13 @@ def l46b_ivfadc_residual(spark, sf_dir):
 # the entry certifies the rule's level-1 output end-to-end
 _L46C_REF_N = 80_000
 _L46C_M = ivfadc_params(_L46C_REF_N, 64)["m"]
-_L46C_SUB = 64 // _L46C_M  # 8-dim subspaces at m=8
-
-
-def _m8_pq_sub_ctes(i: int) -> str:
-    """catalog_r10's ``_pq_sub_ctes`` parameterized to the m=8 split
-    (8-dim subspaces): init = slices of the 16 smallest vec_ids, two
-    Lloyd rounds, final assignment = the code, per-query LUT."""
-
-    lo = i * _L46C_SUB
-
-    def dist(src_c: str, d: str, a: str) -> str:
-        return f"""
-    {d} AS (SELECT s.vec_id, c.cid,
-              ROUND(list_sum(list_transform(list_zip(s.s, c.cen),
-                    z -> (z[1] - z[2])*(z[1] - z[2]))), 6) AS d
-       FROM ms{i} s CROSS JOIN {src_c} c),
-    {a} AS (SELECT vec_id, cid, d FROM (
-         SELECT vec_id, cid, d,
-                row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rk
-         FROM {d}) WHERE rk = 1)"""
-
-    def mean(a: str, prev_c: str, mname: str, cname: str) -> str:
-        return f"""
-    {mname} AS (SELECT {a}.cid, g.i, ROUND(AVG(s.s[g.i]), 6) AS v
-       FROM {a} JOIN ms{i} s USING (vec_id)
-            CROSS JOIN generate_series(1, {_L46C_SUB}) AS g(i)
-       GROUP BY {a}.cid, g.i),
-    {cname} AS (SELECT {prev_c}.cid, COALESCE(mm.cen, {prev_c}.cen) AS cen
-       FROM {prev_c} LEFT JOIN (SELECT cid, array_agg(v ORDER BY i) AS cen
-                          FROM {mname} GROUP BY cid) mm USING (cid))"""
-
-    return f"""
-    ms{i} AS (SELECT vec_id, emb[{lo + 1}:{lo + _L46C_SUB}] AS s FROM e),
-    mc0_{i} AS (SELECT CAST(vec_id AS INT) AS cid,
-                  list_transform(s, x -> ROUND(x, 6)) AS cen
-           FROM ms{i} WHERE vec_id < 16),
-    {dist(f'mc0_{i}', f'md1_{i}', f'ma1_{i}')},
-    {mean(f'ma1_{i}', f'mc0_{i}', f'mm1_{i}', f'mc1_{i}')},
-    {dist(f'mc1_{i}', f'md2_{i}', f'ma2_{i}')},
-    {mean(f'ma2_{i}', f'mc1_{i}', f'mm2_{i}', f'mc2_{i}')},
-    {dist(f'mc2_{i}', f'md3_{i}', f'ma3_{i}')},
-    mlut_{i} AS (SELECT q.vec_id AS query_id, c.cid,
-              ROUND(list_sum(list_transform(
-                    list_zip(q.emb[{lo + 1}:{lo + _L46C_SUB}], c.cen),
-                    z -> (z[1] - z[2])*(z[1] - z[2]))), 6) AS d
-       FROM e q CROSS JOIN mc2_{i} c
-       WHERE q.vec_id % {_PQ_QMOD} = 0 AND q.vec_id < {_PQ_QMAX})"""
 
 
 def _l46c_oracle() -> str:
-
-    ivf_rounds = []
-    prev = "c0"
-    for r in range(1, _L46_ITERS + 1):
-        ivf_rounds.append(_ivf_dist_cte(prev, f"d{r}", f"a{r}"))
-        ivf_rounds.append(_ivf_mean_cte(f"a{r}", prev, f"m{r}", f"c{r}"))
-        prev = f"c{r}"
-    ivf = ",".join(ivf_rounds)
-    m = _L46C_M
-    subs = ",".join(_m8_pq_sub_ctes(i) for i in range(m))
-    code_joins = " ".join(
-        f"JOIN ma3_{i} USING (vec_id)" if i else "FROM ma3_0"
-        for i in range(m)
+    return _ivfadc_oracle(
+        _STRUCT_E, _L46_K, _L46_ITERS, _L46_NPROBE, _L46B_SHORT,
+        m=_L46C_M, p="m",
     )
-    code_cols = ", ".join(f"ma3_{i}.cid AS c{i}" for i in range(m))
-    lut_joins = " ".join(
-        f"JOIN mlut_{i} l{i} ON l{i}.cid = codes.c{i}"
-        f" AND l{i}.query_id = qp.query_id"
-        for i in range(m)
-    )
-    ad = " + ".join(f"l{i}.d" for i in range(m))
-    return f"""
-    WITH {_STRUCT_E},
-    c0 AS (SELECT CAST(vec_id AS INT) AS cid,
-                  list_transform(emb, x -> ROUND(x, 6)) AS cen
-           FROM e WHERE vec_id < {_L46_K}),
-    {ivf},
-    {_ivf_dist_cte(prev, 'df', 'af')},
-    qp AS (SELECT vec_id AS query_id, cid FROM (
-         SELECT vec_id, cid,
-                row_number() OVER (PARTITION BY vec_id ORDER BY d, cid)
-                  AS rk
-         FROM df WHERE vec_id % {_PQ_QMOD} = 0 AND vec_id < {_PQ_QMAX})
-       WHERE rk <= {_L46_NPROBE}),
-    {subs},
-    codes AS (SELECT ma3_0.vec_id, {code_cols} {code_joins}),
-    score AS (SELECT qp.query_id, codes.vec_id AS cand_id,
-                     ROUND({ad}, 6) AS adist
-              FROM codes
-              JOIN af ON af.vec_id = codes.vec_id
-              JOIN qp ON qp.cid = af.cid
-              {lut_joins}),
-    short AS (SELECT query_id, cand_id FROM (
-      SELECT query_id, cand_id,
-             row_number() OVER (
-               PARTITION BY query_id ORDER BY adist, cand_id) AS rk
-      FROM score) WHERE rk <= {_L46B_SHORT}),
-    exact AS (SELECT s.query_id, s.cand_id,
-                ROUND(list_sum(list_transform(list_zip(eq.emb, ec.emb),
-                      z -> (z[1] - z[2])*(z[1] - z[2]))), 6) AS dist2
-              FROM short s
-              JOIN e eq ON eq.vec_id = s.query_id
-              JOIN e ec ON ec.vec_id = s.cand_id)
-    SELECT query_id, cand_id, rank, dist2 FROM (
-      SELECT query_id, cand_id, dist2,
-             CAST(row_number() OVER (
-               PARTITION BY query_id ORDER BY dist2, cand_id) AS INT)
-               AS rank
-      FROM exact) WHERE rank <= {_PQ_TOPK}
-    """
 
 
 @query("l46c_ivfadc_m8", _l46c_oracle())
@@ -1409,14 +1114,6 @@ def l46c_ivfadc_m8(spark, sf_dir):
     Same staged-state contract (books/codes keyed by corpus + m);
     same 6 dp/lowest-index determinism; scale shape identical to l46
     with codes twice as wide — still m+1 small ints per candidate."""
-    from finporter_spark.operators.similarity import (
-        ivfadc_topk,
-        load_or_build_ivfadc_codes,
-        load_or_train_centroids_det,
-        load_or_train_pq_books,
-    )
-    from finporter_spark.queries.staging import io_dir as _io_dir
-
     se = _staged_structured_embeddings(spark, sf_dir)
     cents = load_or_train_centroids_det(
         se, "vec_id", "embedding", dim=64,
@@ -1448,7 +1145,7 @@ def l46c_ivfadc_m8(spark, sf_dir):
     )
 
 
-@query("l47_ivfadc_zipf", _l46_oracle(corpus_cte=_ZIPF_E))
+@query("l47_ivfadc_zipf", _l46_oracle(_ZIPF_E))
 def l47_ivfadc_zipf(spark, sf_dir):
     """L47: IVFADC on the ZIPF-POPULATED planted-cluster corpus — the
     skew case the balanced l46 fixture could not stress (round-12
@@ -1490,14 +1187,6 @@ def l47_ivfadc_zipf(spark, sf_dir):
     as literals in BOTH engines — no cross-engine float arithmetic in
     the draw), the center shift, both Lloyd trainings, probe, ADC and
     rerank, all unrolled in DuckDB over the same parquet."""
-    from finporter_spark.operators.similarity import (
-        ivfadc_topk,
-        load_or_build_ivfadc_codes,
-        load_or_train_centroids_det,
-        load_or_train_pq_books,
-    )
-    from finporter_spark.queries.staging import io_dir as _io_dir
-
     ze = _staged_zipf_embeddings(spark, sf_dir)
     fp = _zipf_fingerprint(sf_dir)
     cents = load_or_train_centroids_det(
@@ -1549,11 +1238,10 @@ _L49_SHORT = 200
 
 
 def _l49_oracle() -> str:
-    """The residual-IVFADC unroll (catalog_r12._l46b_oracle) on the
-    Zipf corpus with the coarse k computed IN SQL from the corpus
-    count — the DuckDB mirror of the ivfadc_plan flow for the branch
-    the entry pins (level 0, m=4, residual codes)."""
-
+    """The residual-IVFADC unroll (``_l46b_oracle``) on the Zipf corpus
+    with the coarse k computed IN SQL from the corpus count — the DuckDB
+    mirror of the ivfadc_plan flow for the branch the entry pins (level
+    0, m=4, residual codes)."""
     return _l46b_oracle(
         corpus_cte=_ZIPF_E + "," + _L49_K_CTE,
         k_sql="(SELECT k FROM kk)",
@@ -1589,12 +1277,6 @@ def l49_ivfadc_auto(spark, sf_dir):
     state keyed by dial AND code type; the query side is l46b's shape
     (broadcast probe LUTs per (query, cell), ADC over staged residual
     codes, exact re-rank on Q × shortlist raw rows)."""
-    from finporter_spark.operators.similarity import (
-        ivfadc_plan,
-        ivfadc_plan_topk,
-    )
-    from finporter_spark.queries.staging import io_dir as _io_dir
-
     ze = _staged_zipf_embeddings(spark, sf_dir)
     plan = ivfadc_plan(
         ze, "vec_id", "embedding", 64,

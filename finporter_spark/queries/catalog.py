@@ -20,6 +20,9 @@ doubles rounded to 9 dp. Design rules that make that hold at any SF:
 
 Every callable takes (spark, sf_dir) and returns a DataFrame; oracles run
 against the same parquet registered as DuckDB views.
+
+The queries live in one module per domain (imported at the bottom of
+this module); this module holds the registry and the helpers they share.
 """
 
 from __future__ import annotations
@@ -120,6 +123,8 @@ def DAVG(expr: str) -> str:
     return f"{DSUM(expr)} / COUNT({expr})"
 
 
+# The DuckDB tokenizer every text oracle uses: lowercase, collapse
+# whitespace, split on spaces (operators.text.tokens on the Spark side).
 _NORM = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
 _TOKS = f"string_split({_NORM}, ' ')"
 

@@ -7,26 +7,15 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from finporter_spark.operators.graph import connected_components_star, pagerank
 from finporter_spark.queries.catalog import CATALOG, _t, query
+from finporter_spark.queries.text_prep import _L9_SHINGLES
 
 
 @query(
     "l11_dedup_clusters",
-    r"""
-    WITH RECURSIVE t AS (
-      SELECT doc_id,
-             string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')),
-                          ' ') AS toks
-      FROM documents WHERE doc_id < 300
-    ), idx AS (
-      SELECT doc_id, toks,
-             unnest(generate_series(1, len(toks) - 2)) AS i
-      FROM t
-    ), sh AS (
-      SELECT doc_id, array_to_string(toks[i:i+2], ' ') AS sh FROM idx
-    ), s AS (
-      SELECT doc_id, list(DISTINCT sh) AS shs FROM sh GROUP BY doc_id
-    ), p AS (
+    f"""
+    WITH RECURSIVE {_L9_SHINGLES}, p AS (
       SELECT a.doc_id AS id_l, b.doc_id AS id_r
       FROM s a JOIN s b ON a.doc_id < b.doc_id
       WHERE CAST(len(list_intersect(a.shs, b.shs)) AS DOUBLE)
@@ -48,8 +37,6 @@ def l11_dedup_clusters(spark, sf_dir):
     min doc id of each component. The oracle recomputes the same
     closure with a recursive CTE. Downstream dedup keeps one doc per
     cluster (min id = the canonical survivor)."""
-    from finporter_spark.operators.graph import connected_components_star
-
     pairs = CATALOG["l9_ngram_jaccard"][0](spark, sf_dir)
     return connected_components_star(pairs, "id_l", "id_r").select(
         F.col("node").alias("id"), F.col("component").alias("cluster")
@@ -114,8 +101,6 @@ def l18_pagerank(spark, sf_dir):
     unrolls the same five iterations in SQL; both sides round to 9 dp
     (the hash comparison's own granularity) so the equality is
     bitwise."""
-    from finporter_spark.operators.graph import pagerank
-
     d = _t(spark, sf_dir, "documents")
     # max+1, not count(): ids are the modulus domain (matches the oracle
     # even if the id space ever grows sparse)
@@ -159,10 +144,6 @@ def l30_chain_components(spark, sf_dir):
     linked-list-shaped graphs (event timelines, provenance chains).
     Canonical label = min event id per component, so the oracle
     re-derives components directly from the per-user grouping."""
-    from pyspark.sql import Window
-
-    from finporter_spark.operators.graph import connected_components_star
-
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     edges = (
@@ -522,8 +503,6 @@ def pipe7_master_data_dedup(spark, sf_dir):
     sf10 247 (r8) -> 53.2 s — the 1->10 decade ratio drops from 8.4x
     to 1.9x (sublinear; edge count ~ Σ(B-1) saturates as digit buckets
     fill)."""
-    from finporter_spark.operators.graph import connected_components_star
-
     n = (
         _t(spark, sf_dir, "customer")
         .groupBy("c_name")

@@ -12,6 +12,7 @@ rejected-row side channel (``FINporter.swift:41``,
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -22,7 +23,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from finporter_spark.operators.scale import source_fingerprint
 from finporter_spark.queries.catalog import CATALOG, _t, query
+from finporter_spark.queries.relational import _P18_JSON_CTE, _p18_json_expr
 from finporter_spark.queries.staging import (
     io_dir as _io_dir,
     stage_once as _stage_once,
@@ -296,7 +299,6 @@ def s13_datasource_roundtrip(spark, sf_dir):
 
     # reuse s12's staged input fixture (idempotent, fingerprint-guarded:
     # running the s12 entry stages it when absent or stale)
-    from finporter_spark.queries.catalog import CATALOG
 
     CATALOG["s12_python_datasource"][0](spark, sf_dir).limit(1).collect()
     in_path = _io_dir(sf_dir, "s12")
@@ -335,8 +337,6 @@ def s8_partitioned_prune(spark, sf_dir):
     plan-asserted in tests/test_plans.py). At 100 TB this is the
     difference between reading 3 months and reading 7 years. Staging
     reuses the z1 pattern: written once per (sf_dir, source mtimes)."""
-    from finporter_spark.operators.scale import source_fingerprint
-
     path = _io_dir(sf_dir, "s8")
     fp = source_fingerprint(os.path.join(sf_dir, "orders.parquet"))
     marker = os.path.join(path, "_staged_fingerprint")
@@ -404,7 +404,6 @@ def s9_schema_evolution(spark, sf_dir):
     NULL pattern with a CASE."""
     o = _t(spark, sf_dir, "orders")
     path = _io_dir(sf_dir, "s9")
-    import shutil
 
     shutil.rmtree(path, ignore_errors=True)
     o.filter(F.col("o_orderkey") % 2 == 0).select(
@@ -446,11 +445,6 @@ def s14_dynamic_partition_overwrite(spark, sf_dir):
     fingerprint-staged initial load + re-execution in the test). Read
     back through the partitioned reader; partition pruning on the
     overwritten day is preserved (day stays a partition column)."""
-    from finporter_spark.queries.staging import (
-        io_dir as _io_dir,
-        stage_once as _stage_once,
-    )
-
     e = _t(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -505,7 +499,7 @@ def s15_orc_pushdown(spark, sf_dir):
     """S15: ORC SCAN-side contract — predicate pushdown + column
     pruning through Spark's built-in ORC source (zlib-compressed
     write). The lossless write→read identity for ORC is s4's entry
-    (``s4_orc_roundtrip``, catalog_prep); what s4 does NOT certify is
+    (``s4_orc_roundtrip``); what s4 does NOT certify is
     the read path a warehouse user actually depends on at 100 TB: that
     a filtered, projected query over an ORC table pushes the predicate
     into the ORC reader (row-group / stripe-statistics skipping, the
@@ -532,8 +526,6 @@ def s15_orc_pushdown(spark, sf_dir):
             .option("compression", "zlib")
             .orc(p)
         )
-
-    from finporter_spark.queries.staging import stage_once as _stage_once
 
     _stage_once(sf_dir, "s15", _write, "supplier",
                 extra_fingerprint="orc-zlib-v2")
@@ -622,19 +614,8 @@ def s16_xml_roundtrip(spark, sf_dir):
 # S17 — VARIANT through parquet (the storage half of schema-on-read)
 # =====================================================================
 
-_S17_ORACLE = """
-    WITH j AS (
-      SELECT event_id,
-             '{"t":"' || event_type || '","ks":['
-               || CAST(event_id % 5 AS VARCHAR) || ','
-               || CAST(event_id % 7 AS VARCHAR)
-               || '],"nested":{"cents":'
-               || CAST(CAST(round(value * 100) AS BIGINT) AS VARCHAR)
-               || CASE WHEN event_id % 3 = 0
-                       THEN ',"tag":"hot"' ELSE '' END
-               || '}}' AS js
-      FROM events
-    ), x AS (
+_S17_ORACLE = f"""
+    WITH {_P18_JSON_CTE}, x AS (
       SELECT json_extract_string(js, '$.t') AS t,
              COALESCE(json_extract_string(js, '$.nested.tag'), '') AS tag,
              CAST(json_extract(js, '$.nested.cents') AS BIGINT) AS cents,
@@ -672,9 +653,6 @@ def s17_variant_roundtrip(spark, sf_dir):
     enters). Staged once per corpus fingerprint (the _stage_once
     contract); scale shape is a map-only parse at ingest plus an
     ordinary keyed agg at read."""
-    from finporter_spark.queries.staging import stage_once as _stage_once
-    from finporter_spark.queries.relational import _p18_json_expr
-
     def _write(p):
         (
             _t(spark, sf_dir, "events")

@@ -4,15 +4,29 @@ decoded and transformed inside the engine).
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Window, functions as F
 
+from finporter_spark.operators.audio import (
+    _MP3_SAMPLE_RATES,
+    extract_mp3_metadata,
+    extract_wav_features,
+    mp3_mux,
+    wav_decode,
+    wav_encode,
+)
+from finporter_spark.operators.gif import gif_encode
+from finporter_spark.operators.jpeg import jpeg_decode, jpeg_encode
 from finporter_spark.operators.multimodal import (
     attach_image_meta,
+    dhash_image,
+    png_decode,
+    png_encode,
     resize_image,
     sample_frames,
 )
-from finporter_spark.queries.catalog import _t, query
+from finporter_spark.queries.catalog import CATALOG, _t, query
 from finporter_spark.queries.staging import stage_media as _stage_media
 
 
@@ -87,6 +101,35 @@ def m1_image_metadata(spark, sf_dir):
     )
 
 
+def _resized_png_stats(spark, sf_dir, name, make):
+    """Stage ``make``'s images under ``name``, resize them to 16x16 and
+    decode each resized PNG back to its width, height and pixel sum:
+    the row the m2/m4/m7 oracles predict."""
+    media = _stage_media(spark, sf_dir, name, make)
+    resized = resize_image(media, "content", size=(16, 16))
+
+    def _verify(batches):
+        for pdf in batches:
+            ws, hs, sums = [], [], []
+            for b in pdf["resized"]:
+                arr = png_decode(bytes(b))
+                hs.append(arr.shape[0])
+                ws.append(arr.shape[1])
+                sums.append(int(arr.sum()))
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "width": ws,
+                    "height": hs,
+                    "pixel_sum": sums,
+                }
+            )
+
+    return resized.mapInPandas(
+        _verify, "doc_id bigint, width int, height int, pixel_sum bigint"
+    )
+
+
 @query(
     "m2_image_resize",
     """
@@ -113,10 +156,6 @@ def m2_image_resize(spark, sf_dir):
     AGAIN and summed. The oracle predicts the exact pixel sum from the
     nearest-neighbor index map (src = (dst*extent_in)//16), so encode,
     decode, resample, and re-encode must all be pixel-correct."""
-    import numpy as np
-
-    from finporter_spark.operators.multimodal import png_decode, png_encode
-
     def _make(batches):
         for pdf in batches:
             content = []
@@ -130,29 +169,7 @@ def m2_image_resize(spark, sf_dir):
                 content.append(png_encode(px[:, :, None]))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": content})
 
-    media = _stage_media(spark, sf_dir, "m2_media", _make)
-    resized = resize_image(media, "content", size=(16, 16))
-
-    def _verify(batches):
-        for pdf in batches:
-            ws, hs, sums = [], [], []
-            for b in pdf["resized"]:
-                arr = png_decode(bytes(b))
-                hs.append(arr.shape[0])
-                ws.append(arr.shape[1])
-                sums.append(int(arr.sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": ws,
-                    "height": hs,
-                    "pixel_sum": sums,
-                }
-            )
-
-    return resized.mapInPandas(
-        _verify, "doc_id bigint, width int, height int, pixel_sum bigint"
-    )
+    return _resized_png_stats(spark, sf_dir, "m2_media", _make)
 
 
 @query(
@@ -178,10 +195,6 @@ def m3_frame_sample(spark, sf_dir):
     kept frame Huffman-decodes to a block-constant image whose mean the
     oracle predicts exactly (even values survive the DCT quantizer
     round-trip, as in m8)."""
-    import numpy as np
-
-    from finporter_spark.operators.jpeg import jpeg_decode, jpeg_encode
-
     def _make(batches):
         for pdf in batches:
             content = []
@@ -251,11 +264,6 @@ def m4_jpeg_resize(spark, sf_dir):
     16x16, PNG-encoded, decoded AGAIN, and pixel-summed — the oracle
     predicts the exact sum, so entropy coding, DCT/IDCT, resampling,
     and both codecs must all be bit-correct."""
-    import numpy as np
-
-    from finporter_spark.operators.jpeg import jpeg_encode
-    from finporter_spark.operators.multimodal import png_decode
-
     def _make(batches):
         for pdf in batches:
             content = []
@@ -270,29 +278,7 @@ def m4_jpeg_resize(spark, sf_dir):
                 content.append(jpeg_encode(px[:, :, None]))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": content})
 
-    media = _stage_media(spark, sf_dir, "m4_media", _make)
-    resized = resize_image(media, "content", size=(16, 16))
-
-    def _verify(batches):
-        for pdf in batches:
-            ws, hs, sums = [], [], []
-            for b in pdf["resized"]:
-                arr = png_decode(bytes(b))
-                hs.append(arr.shape[0])
-                ws.append(arr.shape[1])
-                sums.append(int(arr.sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": ws,
-                    "height": hs,
-                    "pixel_sum": sums,
-                }
-            )
-
-    return resized.mapInPandas(
-        _verify, "doc_id bigint, width int, height int, pixel_sum bigint"
-    )
+    return _resized_png_stats(spark, sf_dir, "m4_media", _make)
 
 
 @query(
@@ -324,13 +310,6 @@ def m5_wav_features(spark, sf_dir):
     window). Each doc becomes a 16-bit PCM WAV whose samples are
     s(i) = ((i + doc_id) % 201) - 100; the oracle recomputes per-frame
     energy and amplitude sums exactly."""
-    import numpy as np
-
-    from finporter_spark.operators.audio import (
-        extract_wav_features,
-        wav_encode,
-    )
-
     def _make(batches):
         for pdf in batches:
             content = []
@@ -366,10 +345,6 @@ def m6_mjpeg_frames(spark, sf_dir):
     Huffman-decoded and averaged. Frames are block-constant at even
     value ((doc_id + f) * 2) % 256, so decode is exact and the oracle
     predicts every frame mean."""
-    import numpy as np
-
-    from finporter_spark.operators.jpeg import jpeg_decode, jpeg_encode
-
     def _make(batches):
         for pdf in batches:
             content = []
@@ -430,11 +405,6 @@ def m7_gif_resize(spark, sf_dir):
     over a 16-gray palette (c -> c*17 per channel) make every decoded
     pixel SQL-predictable; the oracle sums the nearest-neighbor-sampled
     values across all three identical channels."""
-    import numpy as np
-
-    from finporter_spark.operators.gif import gif_encode
-    from finporter_spark.operators.multimodal import png_decode
-
     def _make(batches):
         pal = (np.arange(16, dtype=np.uint8)[:, None] * 17).repeat(3, axis=1)
         for pdf in batches:
@@ -448,29 +418,7 @@ def m7_gif_resize(spark, sf_dir):
                 content.append(gif_encode(idx.astype(np.int64), pal))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": content})
 
-    media = _stage_media(spark, sf_dir, "m7_media", _make)
-    resized = resize_image(media, "content", size=(16, 16))
-
-    def _verify(batches):
-        for pdf in batches:
-            ws, hs, sums = [], [], []
-            for b in pdf["resized"]:
-                arr = png_decode(bytes(b))
-                hs.append(arr.shape[0])
-                ws.append(arr.shape[1])
-                sums.append(int(arr.sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": ws,
-                    "height": hs,
-                    "pixel_sum": sums,
-                }
-            )
-
-    return resized.mapInPandas(
-        _verify, "doc_id bigint, width int, height int, pixel_sum bigint"
-    )
+    return _resized_png_stats(spark, sf_dir, "m7_media", _make)
 
 
 @query(
@@ -496,9 +444,6 @@ def m8_mp4_frames(spark, sf_dir):
     offsets; each frame then Huffman-decodes to a block-constant image
     whose mean the oracle predicts exactly (even values survive the
     DCT quantizer round-trip)."""
-    import numpy as np
-
-    from finporter_spark.operators.jpeg import jpeg_decode, jpeg_encode
     from finporter_spark.operators.mp4 import mp4_mux
 
     def _make(batches):
@@ -562,9 +507,6 @@ def m9_mkv_frames(spark, sf_dir):
     Huffman-decodes to a block-constant image whose mean the oracle
     predicts exactly (even values survive the DCT quantizer
     round-trip)."""
-    import numpy as np
-
-    from finporter_spark.operators.jpeg import jpeg_decode, jpeg_encode
     from finporter_spark.operators.mkv import mkv_mux
 
     def _make(batches):
@@ -640,12 +582,6 @@ def m5b_mp3_metadata(spark, sf_dir):
     bits alternating, CBR for even docs / VBR for odd, ID3v1 trailer on
     even docs); the oracle recomputes every field exactly — including
     the floor-division duration and average-bitrate math the walk uses."""
-    from finporter_spark.operators.audio import (
-        _MP3_SAMPLE_RATES,
-        extract_mp3_metadata,
-        mp3_mux,
-    )
-
     def _make(batches):
         for pdf in batches:
             content = []
@@ -691,10 +627,7 @@ def m10_avi_frames(spark, sf_dir):
     against idx1. sample_frames emits the video stream's chunks; each
     frame Huffman-decodes to a block-constant image whose mean the
     oracle predicts exactly."""
-    import numpy as np
-
     from finporter_spark.operators.avi import avi_mux
-    from finporter_spark.operators.jpeg import jpeg_decode, jpeg_encode
 
     def _make(batches):
         for pdf in batches:
@@ -784,14 +717,6 @@ def m11_image_dhash_dedup(spark, sf_dir):
 
     Plan: map-only Arrow decode+hash, ONE shuffle (window keyed on the
     hash) for group stats — the image twin of l1's exact text dedup."""
-    import numpy as np
-
-    from finporter_spark.operators.multimodal import (
-        dhash_image,
-        png_encode,
-    )
-    from pyspark.sql import Window
-
     def _make(batches):
         for pdf in batches:
             content = []
@@ -856,8 +781,6 @@ def m12_scene_cut(spark, sf_dir):
     frame once, the shuffle moves only (id, idx, mean) triples, never
     pixels. Oracle predicts the flagged cuts exactly from the staged
     fixture's generation formula."""
-    from finporter_spark.queries.catalog import CATALOG
-
     frames = CATALOG["m8_mp4_frames"][0](spark, sf_dir)
     w = Window.partitionBy("doc_id").orderBy("frame_idx")
     delta = F.col("frame_mean") - F.lag("frame_mean").over(w)
@@ -899,10 +822,6 @@ def m13_spectral_peak(spark, sf_dir):
     quantization spreads only ~1e-4 of it elsewhere. The oracle
     predicts the full (doc, window) grid analytically. Window count =
     2 + doc_id % 2 (docs get 2 or 3 windows -> the UNION ALL shape)."""
-    import numpy as np
-
-    from finporter_spark.operators.audio import wav_decode, wav_encode
-
     def _make(batches):
         for pdf in batches:
             content = []
@@ -918,8 +837,6 @@ def m13_spectral_peak(spark, sf_dir):
             yield pd.DataFrame(
                 {"doc_id": pdf["doc_id"], "content": content}
             )
-
-    from finporter_spark.queries.staging import stage_media as _stage_media
 
     media = _stage_media(spark, sf_dir, "m13_media", _make)
 
@@ -961,8 +878,6 @@ def _window_rms(x, win: int):
     """RMS per complete length-``win`` window of 1-D samples ``x``;
     a trailing partial window is DROPPED (the m13 full-windows-only
     contract). Vectorized: one reshape, one mean, one sqrt."""
-    import numpy as np
-
     x = np.asarray(x, dtype=np.float64)
     nw = len(x) // win
     if nw == 0:
@@ -1001,10 +916,6 @@ def m14_rms_loudness(spark, sf_dir):
     rms) triples leave the executor. Cites the m13 staging discipline
     (32-part fixture layout so the Python decode parallelizes like a
     production multi-file media table)."""
-    import numpy as np
-
-    from finporter_spark.operators.audio import wav_decode, wav_encode
-
     def _make(batches):
         for pdf in batches:
             content = []
@@ -1023,8 +934,6 @@ def m14_rms_loudness(spark, sf_dir):
             yield pd.DataFrame(
                 {"doc_id": pdf["doc_id"], "content": content}
             )
-
-    from finporter_spark.queries.staging import stage_media as _stage_media
 
     media = _stage_media(spark, sf_dir, "m14_media", _make)
 
@@ -1093,10 +1002,6 @@ def m15_image_histogram(spark, sf_dir):
     shuffle — only (doc_id, channel, bin, n) rows leave the executor,
     and zero bins are omitted (sparse histogram contract, matching
     the oracle's inner shape)."""
-    import numpy as np
-
-    from finporter_spark.operators.multimodal import png_decode, png_encode
-
     def _make(batches):
         for pdf in batches:
             content = []
@@ -1110,8 +1015,6 @@ def m15_image_histogram(spark, sf_dir):
             yield pd.DataFrame(
                 {"doc_id": pdf["doc_id"], "content": content}
             )
-
-    from finporter_spark.queries.staging import stage_media as _stage_media
 
     media = _stage_media(spark, sf_dir, "m15_media", _make)
 
@@ -1179,10 +1082,6 @@ def m16_silence_bounds(spark, sf_dir):
     Operator: `wav_decode` + the m14 `_window_rms` helper + one
     threshold scan per clip in Arrow-batched `mapInPandas` — samples
     never shuffle; (doc_id, first, last, count) is all that leaves."""
-    import numpy as np
-
-    from finporter_spark.operators.audio import wav_decode, wav_encode
-
     def _make(batches):
         for pdf in batches:
             content = []
@@ -1201,8 +1100,6 @@ def m16_silence_bounds(spark, sf_dir):
             yield pd.DataFrame(
                 {"doc_id": pdf["doc_id"], "content": content}
             )
-
-    from finporter_spark.queries.staging import stage_media as _stage_media
 
     media = _stage_media(spark, sf_dir, "m16_media", _make)
 

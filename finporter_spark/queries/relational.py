@@ -11,15 +11,38 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import Window, functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import pandas_udf, udtf
+from pyspark.sql.types import DoubleType
 
-from finporter_spark.operators.dedup import keep_latest
-from finporter_spark.operators.joins import asof_join
-from finporter_spark.operators.prep import stratified_sample
+from finporter_spark.operators.dedup import (
+    apply_changelog,
+    keep_latest,
+    upsert_by_key,
+)
+from finporter_spark.operators.graph import connected_components_star
+from finporter_spark.operators.joins import asof_join, count_exceeding
+from finporter_spark.operators.prep import (
+    sample_u,
+    stratified_sample,
+    three_way_split,
+)
+from finporter_spark.operators.scale import (
+    bucketed_join_ready,
+    compact_files,
+    ensure_bucketed,
+    global_order_ffill,
+    global_rank,
+    hex_order_index,
+    salted_agg,
+    salted_replicate_join,
+    source_fingerprint,
+    write_zordered,
+)
 from finporter_spark.queries.catalog import (
     DSUM,
     _TOKS,
@@ -442,8 +465,6 @@ def j5_range_join(spark, sf_dir):
     are broadcasts (asserted NLJ/SMJ-free in tests/test_plans.py).
     Suppliers no customer out-earns are absent (inner-join semantics),
     matching the oracle."""
-    from finporter_spark.operators.joins import count_exceeding
-
     s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_acctbal")
     c = _t(spark, sf_dir, "customer").select("c_acctbal")
     return (
@@ -468,6 +489,12 @@ def j5_range_join(spark, sf_dir):
     """,
 )
 def j6_asof_join(spark, sf_dir):
+    return _prior_purchase(spark, sf_dir)
+
+
+def _prior_purchase(spark, sf_dir, tolerance=None):
+    """Each event with its user's latest purchase at or before it (j6),
+    no older than ``tolerance`` when given (j12)."""
     e = _t(spark, sf_dir, "events")
     purchases = e.filter(F.col("event_type") == "purchase").select(
         "user_id",
@@ -482,6 +509,7 @@ def j6_asof_join(spark, sf_dir):
         left_ts="ts",
         right_ts="p_ts",
         right_cols=["p_event_id", "p_ts", "p_value"],
+        tolerance=tolerance,
         tiebreakers=["p_event_id"],
         left_id=["event_id"],
     )
@@ -834,8 +862,6 @@ def u5_udtf_bigrams(spark, sf_dir):
     ``normalized_text`` with ASCII \\s so all three engines agree;
     single-token and empty documents yield no bigrams on both sides
     (generate_series(1, 0) is empty, as is the Python loop)."""
-    from pyspark.sql.functions import udtf
-
     @udtf(returnType="pos int, bigram string", useArrow=True)
     class Bigrams:
         def eval(self, text: str):
@@ -871,8 +897,6 @@ def u6_arrow_udf(spark, sf_dir):
     never BatchEvalPython — the plan suite forbids the latter
     catalog-wide). u1 is the pandas_udf (Series-native) form; this is
     the scalar-native form that legacy UDF code migrates to first."""
-    from pyspark.sql.types import DoubleType
-
     @F.udf(DoubleType(), useArrow=True)
     def score(bal: float, name: str) -> float:
         return round(bal * 1.07 + float(len(name)), 6)
@@ -938,8 +962,6 @@ def o6_upsert_merge(spark, sf_dir):
     """O6 upsert: a 10% update batch merged into events — update rows win
     on the key via source-priority ordering; union + one keyed shuffle,
     no join (operators/dedup.upsert_by_key)."""
-    from finporter_spark.operators.dedup import upsert_by_key
-
     e = _t(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "value", F.lit(0).alias("src")
     )
@@ -984,8 +1006,6 @@ def o9_scd2_history(spark, sf_dir):
     (lead), open-ended rows are current. One window sort per customer —
     exactly one shuffle on the dimension key, no join against existing
     state needed because lead() derives closure from the log itself."""
-    from pyspark.sql import Window
-
     o = _t(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return o.select(
@@ -1000,9 +1020,7 @@ def o9_scd2_history(spark, sf_dir):
     )
 
 
-@query(
-    "o10_cdc_apply",
-    """
+_O10_ORACLE = """
     WITH ch AS (
       SELECT CASE WHEN event_type = 'click' THEN user_id + 10000000
                   ELSE user_id END AS key,
@@ -1024,8 +1042,10 @@ def o9_scd2_history(spark, sf_dir):
     FROM customer c
     FULL OUTER JOIN latest l ON c.c_custkey = l.key
     WHERE l.op IS NULL OR l.op <> 'D'
-    """,
-)
+    """
+
+
+@query("o10_cdc_apply", _O10_ORACLE)
 def o10_cdc_apply(spark, sf_dir):
     """O10: CDC changelog apply — the three-verb merge (insert/update/
     delete) every lakehouse MERGE INTO performs, built from primitives:
@@ -1040,8 +1060,6 @@ def o10_cdc_apply(spark, sf_dir):
     is one broadcast-or-shuffled join — the base table itself is never
     re-sorted (operators/dedup.apply_changelog; op-ordering semantics
     incl. delete-then-resurrect and insert-then-delete unit-tested)."""
-    from finporter_spark.operators.dedup import apply_changelog
-
     e = _t(spark, sf_dir, "events")
     ch = e.select(
         F.when(F.col("event_type") == "click", F.col("user_id") + 10000000)
@@ -1092,8 +1110,6 @@ def o11_per_key_cap(spark, sf_dir):
     shuffle on the cap key, and at scale a pre-filter via an
     approximate per-key count keeps the exact window off the
     un-capped majority."""
-    from pyspark.sql import Window
-
     d = _t(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(
         F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
@@ -1220,12 +1236,6 @@ def z1_bucketed_join(spark, sf_dir):
     DDL-only registration after that — so the steady-state cost is the
     zero-exchange join, not the one-off ingest shuffle. A changed source
     fingerprint forces a restage (no stale buckets)."""
-    from finporter_spark.operators.scale import (
-        bucketed_join_ready,
-        ensure_bucketed,
-        source_fingerprint,
-    )
-
     tag = re.sub(
         r"[^A-Za-z0-9_]", "_",
         os.path.basename(os.path.normpath(sf_dir)) or "sf",
@@ -1280,8 +1290,6 @@ def z4_salted_join(spark, sf_dir):
     reducers. Hash-oracled against the plain join (salting must be
     invisible in the result); `tests/test_scale.py` forces the shuffled
     path (broadcast off) and pins `_salt` into the join partitioning."""
-    from finporter_spark.operators.scale import salted_replicate_join
-
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = _t(spark, sf_dir, "nation")
@@ -1320,8 +1328,6 @@ def z2_salted_agg(spark, sf_dir):
     table; salting spreads each key over 16 sub-groups first, then
     merges the tiny partials. Decimal routing keeps the double sum
     bit-equal to the oracle across both phases."""
-    from finporter_spark.operators.scale import salted_agg
-
     l = _t(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.col("l_quantity").cast("decimal(28,6)").alias("qty_dec"),
@@ -1355,8 +1361,6 @@ def z3_zorder_scan(spark, sf_dir):
     sort column only ever prunes itself); clustering quality is
     asserted in tests/test_scale.py. Oracle = the same filter on the
     original table: passes only if the clustered rewrite is lossless."""
-    from finporter_spark.operators.scale import write_zordered
-
     path = _stage_once(
         sf_dir,
         "z3",
@@ -1566,10 +1570,6 @@ def o8_compact_small_files(spark, sf_dir):
     The oracle is the identity SELECT: compaction must preserve every
     row exactly. tests/test_scale.py asserts the file count actually
     shrinks and sizes stay within the target."""
-    import shutil
-
-    from finporter_spark.operators.scale import compact_files
-
     small = _io_dir(sf_dir, "o8_small")
     compact = _io_dir(sf_dir, "o8_compact")
     shutil.rmtree(small, ignore_errors=True)
@@ -1643,8 +1643,6 @@ def o12_epoch_shuffle(spark, sf_dir):
     keyed shuffle, no single-partition stage (plan-asserted in
     tests/test_plans.py). md5, not xxhash64: identical hex on both
     engines, so the oracle re-derives the exact order."""
-    from finporter_spark.operators.scale import hex_order_index
-
     d = _t(spark, sf_dir, "documents")
     return hex_order_index(
         d.select("doc_id"),
@@ -1685,8 +1683,6 @@ def o13_source_mix(spark, sf_dir):
     one window shuffle on source + a map-side key, and consumers sort
     or range-bucket by stride_key exactly like o12. Deterministic
     (md5), so reruns and engines agree on the mix."""
-    from pyspark.sql import Window
-
     d = _t(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(
         F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
@@ -1731,8 +1727,6 @@ def o14_three_way_split(spark, sf_dir):
     docs yields exactly one val + one test) — Bernoulli draws wobble,
     rank-modulo does not. One window shuffle on the stratum key;
     rerun/engine-stable via md5."""
-    from finporter_spark.operators.prep import three_way_split
-
     return three_way_split(_t(spark, sf_dir, "documents"))
 
 
@@ -1899,8 +1893,6 @@ def u7_iterator_model_score(spark, sf_dir):
     Inference itself is a vectorized numpy matmul over the stacked
     batch. This is the 100 TB embedding-scoring pattern: map-only, no
     shuffle, init cost ∝ tasks not rows."""
-    from pyspark.sql.functions import pandas_udf
-
     @pandas_udf("double")
     def score(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         import numpy as np
@@ -1964,7 +1956,6 @@ def o18_weighted_sample(spark, sf_dir):
     and ties proper are broken by doc_id."""
     d = _t(spark, sf_dir, "documents")
     w_col = 0.1 + (F.col("n_chars") % 97) / 97.0
-    from finporter_spark.operators.prep import sample_u
 
     u = sample_u(F.col("doc_id"))
     key = F.pow(u, 1.0 / w_col)
@@ -2044,8 +2035,6 @@ def p16b_er_clusters(spark, sf_dir):
     small-SF all-pairs oracle baseline (SURVEY §2B-ext row updated).
     The oracle recomputes the closure with a recursive CTE; singleton
     names (no fuzzy match) label themselves."""
-    from finporter_spark.operators.graph import connected_components_star
-
     SEP = "\t"  # never occurs in p_brand/p_name (word tokens)
     p = _t(spark, sf_dir, "part")
     names = p.select(
@@ -2185,8 +2174,6 @@ def z6_global_rank(spark, sf_dir):
     (value, event_id) is a total order. pct = rank/total gives the
     exact empirical CDF — the quantile-normalized feature column.
     """
-    from finporter_spark.operators.scale import global_rank
-
     e = _t(spark, sf_dir, "events").select("event_id", "value")
     # the ladder (range-pin, offset map, parallel window) lives in
     # operators/scale.global_rank — shared with l38's sorted-neighborhood
@@ -2244,8 +2231,6 @@ def j9_band_count(spark, sf_dir):
     staged column were ever re-typed DECIMAL, recompute the shifted
     bounds on a decimal cast (the a29 quantization pattern) before
     comparing."""
-    from finporter_spark.operators.joins import count_exceeding
-
     s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_acctbal")
     c = _t(spark, sf_dir, "customer").select("c_acctbal")
     lo = count_exceeding(
@@ -2310,8 +2295,6 @@ def j11_nearest_below_join(spark, sf_dir):
     O(|S|+|C|) through one range exchange. Suppliers below every
     customer keep NULL (nothing to fill yet), matching the oracle's
     empty-set MAX."""
-    from finporter_spark.operators.scale import global_order_ffill
-
     s = _t(spark, sf_dir, "supplier").select(
         "s_suppkey",
         "s_acctbal",
@@ -2372,28 +2355,8 @@ def j12_asof_tolerance(spark, sf_dir):
     underlying join prune to a time-banded equi-ish join instead of an
     unbounded inequality — at 100 TB the tolerance is what keeps the
     per-key scan window finite."""
-    from finporter_spark.operators.joins import asof_join
-
-    e = _t(spark, sf_dir, "events")
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.col("ts").alias("p_ts"),
-        F.col("event_id").alias("p_event_id"),
-        F.col("value").alias("p_value"),
-    )
-    out = asof_join(
-        e.select("event_id", "user_id", "ts"),
-        purchases,
-        on=["user_id"],
-        left_ts="ts",
-        right_ts="p_ts",
-        right_cols=["p_event_id", "p_ts", "p_value"],
-        tolerance=F.expr("INTERVAL 2 HOURS"),
-        tiebreakers=["p_event_id"],
-        left_id=["event_id"],
-    )
-    return out.select(
-        "event_id", "user_id", "ts", "p_event_id", "p_ts", "p_value"
+    return _prior_purchase(
+        spark, sf_dir, tolerance=F.expr("INTERVAL 2 HOURS")
     )
 
 
@@ -2421,10 +2384,8 @@ def _p18_json_expr():
     )
 
 
-@query(
-    "p18_variant_extract",
-    """
-    WITH j AS (
+# The DuckDB mirror of _p18_json_expr: the document as a JSON string.
+_P18_JSON_CTE = """j AS (
       SELECT event_id,
              '{"t":"' || event_type || '","ks":['
                || CAST(event_id % 5 AS VARCHAR) || ','
@@ -2435,7 +2396,13 @@ def _p18_json_expr():
                        THEN ',"tag":"hot"' ELSE '' END
                || '}}' AS js
       FROM events
-    )
+    )"""
+
+
+@query(
+    "p18_variant_extract",
+    f"""
+    WITH {_P18_JSON_CTE}
     SELECT event_id,
            json_extract_string(js, '$.t') AS t,
            CAST(json_extract(js, '$.ks[1]') AS BIGINT) AS k2,

@@ -1,11 +1,5 @@
-"""Shared staging / fixture-state layer for the query catalogs.
-
-Round-14 verdict #8: every catalog file used to reach into
-``catalog_ext``'s underscore privates (``_io_dir``/``_stage_once``/
-``_src_fp``) for its staged input fixtures and dataset-state cache
-paths — the shared layer now lives here under public names, catalog
-files depend on IT rather than on each other's internals, and
-``catalog_ext`` re-exports the old names so nothing external breaks.
+"""Shared staging / fixture-state layer for the catalog's domain
+modules: staged input drops and dataset-state cache paths.
 
 Contract: staged drops are INPUT fixtures, not the operator under
 test; everything is keyed by (name, scale factor) and guarded by a

@@ -11,9 +11,24 @@ construction their streaming twins (x18, x18b) reuse.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Window, functions as F
 
-from finporter_spark.operators.stats import normal_sf_two_sided_sql
+from finporter_spark.operators.prep import profile_columns
+from finporter_spark.operators.scale import exact_percentiles, global_rank
+from finporter_spark.operators.stats import (
+    dunn_posthoc,
+    erfc_poly_sql,
+    kruskal_wallis,
+    kruskal_wallis_by,
+    ks_2sample,
+    ks_2sample_by,
+    mann_whitney_u,
+    mann_whitney_u_by,
+    normal_sf_two_sided,
+    normal_sf_two_sided_sql,
+)
 from finporter_spark.queries.catalog import (
     DSUM,
     _t,
@@ -130,7 +145,6 @@ def a7_percentiles(spark, sf_dir):
     # (~N/3 rows per task here: 3 groups), a memory scale-killer at
     # corpus size; rank-select sorts only the ≤6 ladder buckets that
     # contain a target rank
-    from finporter_spark.operators.scale import exact_percentiles
 
     l = _t(spark, sf_dir, "lineitem")
     long = exact_percentiles(
@@ -326,8 +340,6 @@ def a14_rolling_hll_rollup(spark, sf_dir):
     rows-only in the gate, relative error vs the exact trailing
     distinct asserted <5% in tests/test_operators.py (the a10
     contract)."""
-    from pyspark.sql import Window
-
     e = _t(spark, sf_dir, "events")
     daily = (
         e.select(F.to_date("ts").alias("day"), "user_id")
@@ -426,8 +438,6 @@ def a13_profile_columns(spark, sf_dir):
     Expand plan scans the corpus once (vs the oracle's per-column
     re-reads, which is why the oracle is written as UNION ALL);
     unpivot is a map-side stack."""
-    from finporter_spark.operators.prep import profile_columns
-
     return profile_columns(
         _t(spark, sf_dir, "documents"),
         ["doc_id", "lang", "source", "n_chars"],
@@ -460,8 +470,6 @@ def a16_event_value_percentiles(spark, sf_dir):
     p100 edge fractions (rank 1 / rank n: d = 0, lo == hi) and a deep
     p99 tail. Still exact vs DuckDB quantile_cont; no per-group value
     buffer anywhere in the plan (tests/test_scale.py plan assert)."""
-    from finporter_spark.operators.scale import exact_percentiles
-
     long = exact_percentiles(
         _t(spark, sf_dir, "events"),
         ["event_type"],
@@ -1211,8 +1219,6 @@ def a25_conversion_latency(spark, sf_dir):
     (unix_timestamp truncation on both engines), so interpolated
     percentiles hash bit-for-bit.
     """
-    from finporter_spark.operators.scale import exact_percentiles
-
     e = _t(spark, sf_dir, "events")
     fv = (
         e.filter(F.col("event_type") == "view")
@@ -1639,8 +1645,6 @@ def a29_decile_stats(spark, sf_dir):
     coarser than any engine ulp and finer than the data's 2-decimal
     resolution, so the banding is identical cross-engine by
     construction."""
-    from finporter_spark.operators.scale import exact_percentiles
-
     e = _t(spark, sf_dir, "events")
     fr = [round(0.1 * i, 1) for i in range(1, 10)]
     bounds = (
@@ -1973,8 +1977,6 @@ def a33_gini_coefficient(spark, sf_dir):
     weighted sum — identical even though tied x values make G itself
     tie-insensitive (equal x under different i sum to the same
     total; the determinism is still pinned for the hash)."""
-    from finporter_spark.operators.scale import global_rank
-
     o = _t(spark, sf_dir, "orders")
     spend = o.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
@@ -2475,8 +2477,6 @@ def a37_ks_test(spark, sf_dir):
     table — the corpus never sorts globally; the single-partition
     window touches only the bounded distinct-value table (the a16
     percentile-ladder contract)."""
-    from finporter_spark.operators.stats import ks_2sample
-
     e = _t(spark, sf_dir, "events").where(
         F.col("event_type").isin("view", "purchase")
     )
@@ -2558,8 +2558,6 @@ def a38_mann_whitney_u(spark, sf_dir):
     Scale shape: identical to a37 — one corpus pass to the bounded
     distinct-value domain, one domain-sized cumulative window, one
     scalar aggregate."""
-    from finporter_spark.operators.stats import mann_whitney_u
-
     e = _t(spark, sf_dir, "events").where(
         F.col("event_type").isin("view", "purchase")
     )
@@ -2965,7 +2963,6 @@ def a41_two_proportion_ztest(spark, sf_dir):
     pp = (F.col("x0") + F.col("x1")).cast("double") / (
         F.col("n0") + F.col("n1")
     )
-    from finporter_spark.operators.stats import normal_sf_two_sided
 
     out = w.select(
         "n0", "x0", "n1", "x1",
@@ -3213,8 +3210,6 @@ def a43_ks_weekly(spark, sf_dir):
     is localCheckpoint-pinned so the corpus is scanned once). Same
     integer-exactness contract: bigint cross-counts, one final
     division, Smirnov p rounded 6 dp on week-sized output."""
-    from finporter_spark.operators.stats import ks_2sample_by
-
     e = _t(spark, sf_dir, "events").where(
         F.col("event_type").isin("view", "purchase")
     )
@@ -3299,8 +3294,6 @@ def a44_mwu_weekly(spark, sf_dir):
     week-sized output, NULL z on zero variance, and ``p_value`` — the
     two-sided normal p from the rounded z (A&S erfc polynomial,
     oracle-mirrored) — NULL exactly where z is."""
-    from finporter_spark.operators.stats import mann_whitney_u_by
-
     e = _t(spark, sf_dir, "events").where(
         F.col("event_type").isin("view", "purchase")
     )
@@ -3508,36 +3501,21 @@ def a45_attribution(spark, sf_dir):
 # A46 — Kruskal–Wallis k-arm omnibus test (md5 3-way split)
 # =====================================================================
 
-_A46_ORACLE = """
-    WITH m AS (
-      SELECT user_id,
-             SUM(CAST(round(value * 100) AS BIGINT)) AS iv,
-             CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8)
-                  AS BIGINT) % 3 AS arm
-      FROM events GROUP BY user_id
-    ), g AS (
-      SELECT iv,
-             SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS c0,
+# The exact 3-arm Kruskal–Wallis oracle pieces: the md5 arm draw, the
+# per-value arm counts, the midrank sums (doubled, bigint-exact) and the
+# tie-corrected H with its df=2 p-value.
+_KW3_ARM = """CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8)
+                  AS BIGINT) % 3 AS arm"""
+_KW3_COUNTS = """SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS c0,
              SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS c1,
              SUM(CASE WHEN arm = 2 THEN 1 ELSE 0 END) AS c2,
-             COUNT(*) AS c
-      FROM m GROUP BY iv
-    ), cum AS (
-      SELECT iv, c0, c1, c2, c,
-             COALESCE(SUM(c) OVER (ORDER BY iv
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS f
-      FROM g
-    ), agg AS (
-      SELECT SUM(c0) AS n0, SUM(c1) AS n1, SUM(c2) AS n2,
+             COUNT(*) AS c"""
+_KW3_RANKS = """SUM(c0) AS n0, SUM(c1) AS n1, SUM(c2) AS n2,
              SUM(c0 * (2 * f + c + 1)) AS r0,
              SUM(c1 * (2 * f + c + 1)) AS r1,
              SUM(c2 * (2 * f + c + 1)) AS r2,
-             SUM(c * c * c - c) AS tie3
-      FROM cum
-    ), hh AS (
-      SELECT n0, n1, n2,
-             ((12.0 * (((CAST(r0 AS DOUBLE) * CAST(r0 AS DOUBLE))
+             SUM(c * c * c - c) AS tie3"""
+_KW3_H = """((12.0 * (((CAST(r0 AS DOUBLE) * CAST(r0 AS DOUBLE))
                           / (4.0 * CAST(n0 AS DOUBLE))
                         + (CAST(r1 AS DOUBLE) * CAST(r1 AS DOUBLE))
                           / (4.0 * CAST(n1 AS DOUBLE)))
@@ -3550,12 +3528,38 @@ _A46_ORACLE = """
                  / (CAST((n0 + n1) + n2 AS DOUBLE)
                     * CAST((n0 + n1) + n2 AS DOUBLE)
                     * CAST((n0 + n1) + n2 AS DOUBLE)
-                    - CAST((n0 + n1) + n2 AS DOUBLE))) AS hx
+                    - CAST((n0 + n1) + n2 AS DOUBLE))) AS hx"""
+_KW3_P = """round(hx, 6) AS h,
+           round(LEAST(1.0, exp(-(hx / 2.0)) * 1.0), 6) AS p_approx"""
+# per-user cent totals ranked over the whole period (a46, a47)
+_KW3_USER_CTES = f"""m AS (
+      SELECT user_id,
+             SUM(CAST(round(value * 100) AS BIGINT)) AS iv,
+             {_KW3_ARM}
+      FROM events GROUP BY user_id
+    ), g AS (
+      SELECT iv,
+             {_KW3_COUNTS}
+      FROM m GROUP BY iv
+    ), cum AS (
+      SELECT iv, c0, c1, c2, c,
+             COALESCE(SUM(c) OVER (ORDER BY iv
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+               AS f
+      FROM g
+    ), agg AS (
+      SELECT {_KW3_RANKS}
+      FROM cum
+    )"""
+
+_A46_ORACLE = f"""
+    WITH {_KW3_USER_CTES}, hh AS (
+      SELECT n0, n1, n2,
+             {_KW3_H}
       FROM agg
     )
     SELECT n0, n1, n2,
-           round(hx, 6) AS h,
-           round(LEAST(1.0, exp(-(hx / 2.0)) * 1.0), 6) AS p_approx
+           {_KW3_P}
     FROM hh
     """
 
@@ -3583,8 +3587,6 @@ def a46_kruskal_wallis(spark, sf_dir):
 
     Pure-Python midrank cross-check + chi-square identity tests:
     tests/test_r12_ops.py."""
-    from finporter_spark.operators.stats import kruskal_wallis
-
     e = _t(spark, sf_dir, "events")
     m = e.groupBy("user_id").agg(
         F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("iv")
@@ -3634,33 +3636,7 @@ def _a47_pair_sql(i: int, j: int) -> str:
 
 
 _A47_ORACLE = f"""
-    WITH m AS (
-      SELECT user_id,
-             SUM(CAST(round(value * 100) AS BIGINT)) AS iv,
-             CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8)
-                  AS BIGINT) % 3 AS arm
-      FROM events GROUP BY user_id
-    ), g AS (
-      SELECT iv,
-             SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS c0,
-             SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS c1,
-             SUM(CASE WHEN arm = 2 THEN 1 ELSE 0 END) AS c2,
-             COUNT(*) AS c
-      FROM m GROUP BY iv
-    ), cum AS (
-      SELECT iv, c0, c1, c2, c,
-             COALESCE(SUM(c) OVER (ORDER BY iv
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS f
-      FROM g
-    ), agg AS (
-      SELECT SUM(c0) AS n0, SUM(c1) AS n1, SUM(c2) AS n2,
-             SUM(c0 * (2 * f + c + 1)) AS r0,
-             SUM(c1 * (2 * f + c + 1)) AS r1,
-             SUM(c2 * (2 * f + c + 1)) AS r2,
-             SUM(c * c * c - c) AS tie3
-      FROM cum
-    ), dn AS (
+    WITH {_KW3_USER_CTES}, dn AS (
       SELECT *, CAST((n0 + n1) + n2 AS DOUBLE) AS nd FROM agg
     )
     SELECT arm_i, arm_j, ni, nj, mean_rank_i, mean_rank_j, z, p_adj,
@@ -3699,8 +3675,6 @@ def a47_dunn_posthoc(spark, sf_dir):
     evaluate bit-identically on the rounded z) — and ``significant``
     decides p_adj ≤ 0.05 on the ROUNDED p, so the hash certifies z,
     the p-value, AND the decision on all three pairs."""
-    from finporter_spark.operators.stats import dunn_posthoc
-
     e = _t(spark, sf_dir, "events")
     m = e.groupBy("user_id").agg(
         F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("iv")
@@ -3722,19 +3696,15 @@ def a47_dunn_posthoc(spark, sf_dir):
 # A46b — weekly (grouped) Kruskal–Wallis: k-arm drift at the cadence
 # =====================================================================
 
-_A46B_ORACLE = """
+_A46B_ORACLE = f"""
     WITH s AS (
       SELECT date_trunc('week', ts) AS wk,
              CAST(round(value * 100) AS BIGINT) AS iv,
-             CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8)
-                  AS BIGINT) % 3 AS arm
+             {_KW3_ARM}
       FROM events
     ), g AS (
       SELECT wk, iv,
-             SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS c0,
-             SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS c1,
-             SUM(CASE WHEN arm = 2 THEN 1 ELSE 0 END) AS c2,
-             COUNT(*) AS c
+             {_KW3_COUNTS}
       FROM s GROUP BY 1, 2
     ), cum AS (
       SELECT wk, iv, c0, c1, c2, c,
@@ -3744,33 +3714,15 @@ _A46B_ORACLE = """
       FROM g
     ), agg AS (
       SELECT wk,
-             SUM(c0) AS n0, SUM(c1) AS n1, SUM(c2) AS n2,
-             SUM(c0 * (2 * f + c + 1)) AS r0,
-             SUM(c1 * (2 * f + c + 1)) AS r1,
-             SUM(c2 * (2 * f + c + 1)) AS r2,
-             SUM(c * c * c - c) AS tie3
+             {_KW3_RANKS}
       FROM cum GROUP BY wk
     ), hh AS (
       SELECT wk, n0, n1, n2,
-             ((12.0 * (((CAST(r0 AS DOUBLE) * CAST(r0 AS DOUBLE))
-                          / (4.0 * CAST(n0 AS DOUBLE))
-                        + (CAST(r1 AS DOUBLE) * CAST(r1 AS DOUBLE))
-                          / (4.0 * CAST(n1 AS DOUBLE)))
-                       + (CAST(r2 AS DOUBLE) * CAST(r2 AS DOUBLE))
-                         / (4.0 * CAST(n2 AS DOUBLE))))
-               / (CAST((n0 + n1) + n2 AS DOUBLE)
-                  * (CAST((n0 + n1) + n2 AS DOUBLE) + 1.0))
-              - 3.0 * (CAST((n0 + n1) + n2 AS DOUBLE) + 1.0))
-             / (1.0 - CAST(tie3 AS DOUBLE)
-                 / (CAST((n0 + n1) + n2 AS DOUBLE)
-                    * CAST((n0 + n1) + n2 AS DOUBLE)
-                    * CAST((n0 + n1) + n2 AS DOUBLE)
-                    - CAST((n0 + n1) + n2 AS DOUBLE))) AS hx
+             {_KW3_H}
       FROM agg
     )
     SELECT wk, n0, n1, n2,
-           round(hx, 6) AS h,
-           round(LEAST(1.0, exp(-(hx / 2.0)) * 1.0), 6) AS p_approx
+           {_KW3_P}
     FROM hh
     """
 
@@ -3793,8 +3745,6 @@ def a46b_kw_weekly(spark, sf_dir):
     stays closed-form. Note the unit here is EVENTS (weekly per-user
     totals would thin to ~1 obs/arm/week); a46 keeps the per-user
     grain for the whole-period read."""
-    from finporter_spark.operators.stats import kruskal_wallis_by
-
     e = _t(spark, sf_dir, "events")
     s = e.select(
         F.date_trunc("week", "ts").alias("wk"),
@@ -3822,10 +3772,6 @@ def _a48_oracle() -> str:
     Q(x;3) = erfc(√(x/2)) + e^{−x/2}·√(x/2)/Γ(3/2) — the branch
     operators.stats._kw_h_and_p filled in round 13 (previously a
     documented NULL: "neither engine has erf")."""
-    import math as _math
-
-    from finporter_spark.operators.stats import erfc_poly_sql
-
     nd = "CAST((((n0 + n1) + n2) + n3) AS DOUBLE)"
     terms = [
         f"(CAST(r{i} AS DOUBLE) * CAST(r{i} AS DOUBLE))"
@@ -3839,7 +3785,7 @@ def _a48_oracle() -> str:
         f" / (1.0 - CAST(tie3 AS DOUBLE)"
         f" / ({nd} * {nd} * {nd} - {nd}))"
     )
-    c1 = 1.0 / _math.gamma(1.5)
+    c1 = 1.0 / math.gamma(1.5)
     y = "sqrt((hx / 2.0))"
     p = (
         f"round(LEAST(1.0, {erfc_poly_sql(y)}"
@@ -3906,8 +3852,6 @@ def a48_kw_4arm(spark, sf_dir):
     (KW at k=2 == squared MWU z, so p_approx == the MWU two-sided
     normal p) is pinned in tests/test_r13_ops.py, plus a
     4-arm pure-Python reference under hypothesis."""
-    from finporter_spark.operators.stats import kruskal_wallis
-
     e = _t(spark, sf_dir, "events")
     m = e.groupBy("user_id").agg(
         F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("iv")

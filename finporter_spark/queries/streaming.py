@@ -16,7 +16,34 @@ import shutil
 
 import pandas as pd
 from pyspark.sql import Window, functions as F
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
+from finporter_spark.operators.dedup import (
+    apply_changelog,
+    band_hash,
+    load_or_build_signatures,
+    minhash_signatures_fn,
+    normalized_text,
+)
+from finporter_spark.operators.scale import source_fingerprint, vacuum_versions
+from finporter_spark.operators.similarity import (
+    build_ivfadc_codes,
+    load_or_train_centroids_det,
+)
+from finporter_spark.operators.text import tokens
+from finporter_spark.queries.ann import (
+    _EMB_E,
+    _PQ_M,
+    _ivf_ctes,
+    _pq_books,
+    _pq_codes,
+    _pq_sub_ctes,
+)
 from finporter_spark.queries.catalog import (
     CATALOG,
     DSUM,
@@ -25,10 +52,13 @@ from finporter_spark.queries.catalog import (
     dsum,
     query,
 )
+from finporter_spark.queries.relational import _O10_ORACLE
 from finporter_spark.queries.staging import (
     io_dir as _io_dir,
+    src_fp as _src_fp,
     stage_once as _stage_once,
     stage_x15_drop as _x15_staged_drop,
+    stage_x6_drop as _stage_x6_drop,
 )
 from finporter_spark.queries.stats import (
     _A40_ORACLE,
@@ -37,9 +67,22 @@ from finporter_spark.queries.stats import (
     _psi_table_weekly,
     _x18_reference,
 )
+from finporter_spark.queries.text_prep import (
+    _L26_FEAT,
+    _l26_iter,
+    _l2_band_union,
+    _l2_sig_ctes,
+)
 from finporter_spark.streaming.pipeline import (
+    ensure_worker_protobuf,
+    list_versions,
+    read_version,
+    run_stream_foreach_batch,
     run_stream_to_memory,
     stream_decode_files,
+    stream_interval_join,
+    versioned_keep_first_sink,
+    versioned_keep_latest_sink,
 )
 
 
@@ -267,6 +310,51 @@ def x2_sliding_window(spark, sf_dir):
     )
 
 
+_EVENTS_CSV = (
+    "event_id bigint, ts timestamp, user_id bigint, event_type string"
+)
+
+
+def _stage_x7_drop(spark, sf_dir):
+    """The events CSV drop, 8 files, that x7 and x13 drain (staged once
+    under x7's name)."""
+    return _stage_once(
+        sf_dir,
+        "x7",
+        lambda p: _t(spark, sf_dir, "events")
+        .select(
+            "event_id",
+            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
+            "user_id",
+            "event_type",
+        )
+        .repartition(8)
+        .write.mode("overwrite")
+        .csv(p, header=True),
+        "events",
+    )
+
+
+def _event_stream(spark, path, prefix, per_trigger, kind=None, user=None):
+    """One side of a stream-stream join: the events CSV under ``path``
+    read ``per_trigger`` files per micro-batch, kept to ``event_type ==
+    kind`` when given, with the id and ts renamed ``<prefix>_id`` and
+    ``<prefix>_ts`` and user_id renamed ``user`` when given."""
+    sdf = (
+        spark.readStream.schema(_EVENTS_CSV)
+        .option("header", True)
+        .option("maxFilesPerTrigger", per_trigger)
+        .csv(path)
+    )
+    if kind is not None:
+        sdf = sdf.filter(F.col("event_type") == kind)
+    return sdf.select(
+        F.col("event_id").alias(f"{prefix}_id"),
+        F.col("ts").alias(f"{prefix}_ts"),
+        F.col("user_id").alias(user) if user else "user_id",
+    )
+
+
 @query(
     "x7_stream_stream_join",
     """
@@ -285,44 +373,11 @@ def x7_stream_stream_join(spark, sf_dir):
     with watermarks + the interval bound (what lets Spark evict join
     state at scale). The drain retention exceeds the 30-day data span, so
     the availableNow output is exactly the batch join the oracle runs."""
-    from finporter_spark.streaming.pipeline import stream_interval_join
-
-    path = _stage_once(
-        sf_dir,
-        "x7",
-        lambda p: _t(spark, sf_dir, "events")
-        .select(
-            "event_id",
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-            "user_id",
-            "event_type",
-        )
-        .repartition(8)
-        .write.mode("overwrite")
-        .csv(p, header=True),
-        "events",
-    )
-
-    def side(kind, prefix):
-        return (
-            spark.readStream.schema(
-                "event_id bigint, ts timestamp, user_id bigint, "
-                "event_type string"
-            )
-            .option("header", True)
-            .option("maxFilesPerTrigger", 4)  # force multi-batch buffering
-            .csv(path)
-            .filter(F.col("event_type") == kind)
-            .select(
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("ts").alias(f"{prefix}_ts"),
-                "user_id",
-            )
-        )
-
+    path = _stage_x7_drop(spark, sf_dir)
+    # 4 of the 8 files per trigger: a multi-batch drain buffers join state
     joined = stream_interval_join(
-        side("view", "view"),
-        side("purchase", "purchase"),
+        _event_stream(spark, path, "view", 4, kind="view"),
+        _event_stream(spark, path, "purchase", 4, kind="purchase"),
         key="user_id",
         ts_left="view_ts",
         ts_right="purchase_ts",
@@ -368,29 +423,10 @@ def x15_stream_outer_interval_join(spark, sf_dir):
     the drained output equals the batch left-outer join exactly — the
     oracle gates it. maxFilesPerTrigger=1 + staged mtimes pin the batch
     order (file source processes oldest-mtime first)."""
-    from finporter_spark.streaming.pipeline import stream_interval_join
-
     path = _x15_staged_drop(spark, sf_dir)
-
-    def side(sub, prefix):
-        return (
-            spark.readStream.schema(
-                "event_id bigint, ts timestamp, user_id bigint, "
-                "event_type string"
-            )
-            .option("header", True)
-            .option("maxFilesPerTrigger", 1)
-            .csv(os.path.join(path, sub))
-            .select(
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("ts").alias(f"{prefix}_ts"),
-                "user_id",
-            )
-        )
-
     joined = stream_interval_join(
-        side("left", "view"),
-        side("right", "purchase"),
+        _event_stream(spark, os.path.join(path, "left"), "view", 1),
+        _event_stream(spark, os.path.join(path, "right"), "purchase", 1),
         key="user_id",
         ts_left="view_ts",
         ts_right="purchase_ts",
@@ -444,8 +480,6 @@ def x4_watermark_latedrop(spark, sf_dir):
     (31-minute delay: the max-ts offsets within the 10-minute window
     grid are 316s/372s/… at the shipped SFs, so the watermark never
     lands exactly on a window edge.)"""
-    import shutil
-
     def _write(p):
         os.makedirs(p, exist_ok=True)
         e = _t(spark, sf_dir, "events")
@@ -508,10 +542,6 @@ def x8_foreach_batch_sink(spark, sf_dir):
     would MERGE on). The returned aggregate reads the SINK's output, so
     the oracle match proves the custom sink received exactly the full
     input across batches — no loss, no duplication."""
-    import shutil
-
-    from finporter_spark.streaming.pipeline import run_stream_foreach_batch
-
     path = _stage_events_csv(spark, sf_dir)
     out = _io_dir(sf_dir, "x8_out")
     ckpt = _io_dir(sf_dir, "x8_ckpt")
@@ -565,10 +595,6 @@ def x9_incremental_mv(spark, sf_dir):
     final state must equal the one-shot batch aggregate over the whole
     input: the oracle proves incremental == batch.
     """
-    import shutil
-
-    from finporter_spark.streaming.pipeline import run_stream_foreach_batch
-
     path = _stage_events_csv(spark, sf_dir)
     root = _io_dir(sf_dir, "x9_state")
     ckpt = _io_dir(sf_dir, "x9_ckpt")
@@ -655,14 +681,6 @@ def pipe3_stream_corpus_ingest(spark, sf_dir):
     discovered from the sink — x9's exactly-once pattern); the oracle is
     the one-shot batch pipeline over the whole corpus, proving
     incremental ingestion == batch rebuild."""
-    import shutil
-
-    from finporter_spark.operators.dedup import normalized_text
-    from finporter_spark.streaming.pipeline import (
-        run_stream_foreach_batch,
-        versioned_keep_first_sink,
-    )
-
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     path = _stage_once(
         sf_dir,
@@ -721,12 +739,7 @@ def x11_stream_budget_gate(spark, sf_dir):
     source — the custom-state path Spark's built-in streaming ops
     (dedup, windowed agg) can't express. Oracle: the equivalent batch
     running-sum window."""
-    import shutil
-
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from finporter_spark.operators.text import tokens
-    from finporter_spark.streaming.pipeline import run_stream_to_memory
 
     BUDGET = 400
 
@@ -813,11 +826,9 @@ def x12_datasource_stream(spark, sf_dir):
     the right tier for drop-folder tailing; bulk backfills go through
     the partition-parallel batch reader (s12/s13, Arrow-batched), which
     is the 100 TB path."""
-    from finporter_spark.queries.catalog import CATALOG
     from finporter_spark.sources.finport_datasource import (
         FinportDataSource,
     )
-    from finporter_spark.streaming.pipeline import run_stream_to_memory
 
     # ensure the s12 fixture is staged (idempotent)
     CATALOG["s12_python_datasource"][0](spark, sf_dir).limit(1).collect()
@@ -864,48 +875,10 @@ def x13_stream_semi_join(spark, sf_dir):
     output is exactly the batch EXISTS the oracle runs. Outer
     stream-stream joins are deliberately not drained this way — see
     stream_interval_join's docstring."""
-    from finporter_spark.queries.staging import stage_once as _stage_once
-    from finporter_spark.streaming.pipeline import (
-        run_stream_to_memory,
-        stream_interval_join,
-    )
-
-    path = _stage_once(
-        sf_dir,
-        "x7",  # same drop as x7: identical layout, staged once
-        lambda p: _t(spark, sf_dir, "events")
-        .select(
-            "event_id",
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-            "user_id",
-            "event_type",
-        )
-        .repartition(8)
-        .write.mode("overwrite")
-        .csv(p, header=True),
-        "events",
-    )
-
-    def side(kind, prefix):
-        return (
-            spark.readStream.schema(
-                "event_id bigint, ts timestamp, user_id bigint, "
-                "event_type string"
-            )
-            .option("header", True)
-            .option("maxFilesPerTrigger", 4)  # force multi-batch buffering
-            .csv(path)
-            .filter(F.col("event_type") == kind)
-            .select(
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("ts").alias(f"{prefix}_ts"),
-                "user_id",
-            )
-        )
-
+    path = _stage_x7_drop(spark, sf_dir)
     joined = stream_interval_join(
-        side("view", "view"),
-        side("purchase", "purchase"),
+        _event_stream(spark, path, "view", 4, kind="view"),
+        _event_stream(spark, path, "purchase", 4, kind="purchase"),
         key="user_id",
         ts_left="view_ts",
         ts_right="purchase_ts",
@@ -945,9 +918,6 @@ def x6b_builtin_running_totals(spark, sf_dir):
     express (conditional resets, multi-counter transitions, custom
     eviction); otherwise the built-in agg is the scale path.
     """
-    from finporter_spark.queries.staging import stage_x6_drop as _stage_x6_drop
-    from finporter_spark.streaming.pipeline import run_stream_to_memory
-
     path = _stage_x6_drop(spark, sf_dir)
     sdf = (
         spark.readStream.schema("user_id bigint, ts timestamp, value double")
@@ -992,12 +962,9 @@ def x14_datasource_stream_parallel(spark, sf_dir):
     complete mode, so the drained answer equals the batch relational
     oracle under any micro-batch split; DECADE_BENCH carries the
     x12-vs-x14 throughput comparison."""
-    from finporter_spark.queries.catalog import CATALOG
-    from finporter_spark.queries.staging import io_dir as _io_dir
     from finporter_spark.sources.finport_datasource import (
         FinportParallelDataSource,
     )
-    from finporter_spark.streaming.pipeline import run_stream_to_memory
 
     CATALOG["s12_python_datasource"][0](spark, sf_dir).limit(1).collect()
     in_path = _io_dir(sf_dir, "s12")
@@ -1031,34 +998,13 @@ def x16_stream_full_outer_interval_join(spark, sf_dir):
     Sentinels (negative ids) are filtered; the drained result equals
     the batch FULL JOIN exactly (the oracle). Shares x15's staged drop
     (same fingerprint key) — one staging serves both queries."""
-    from finporter_spark.queries.staging import stage_x15_drop as _x15_staged_drop
-    from finporter_spark.streaming.pipeline import (
-        run_stream_to_memory,
-        stream_interval_join,
-    )
-
     path = _x15_staged_drop(spark, sf_dir)
-
-    def side(sub, prefix):
-        return (
-            spark.readStream.schema(
-                "event_id bigint, ts timestamp, user_id bigint, "
-                "event_type string"
-            )
-            .option("header", True)
-            .option("maxFilesPerTrigger", 1)
-            .csv(os.path.join(path, sub))
-            .select(
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("ts").alias(f"{prefix}_ts"),
-                F.col("user_id").alias(f"{prefix}_user"),
-            )
-        )
-
-    lw = side("left", "view").withWatermark("view_ts", "30 minutes")
-    rw = side("right", "purchase").withWatermark(
-        "purchase_ts", "30 minutes"
-    )
+    lw = _event_stream(
+        spark, os.path.join(path, "left"), "view", 1, user="view_user"
+    ).withWatermark("view_ts", "30 minutes")
+    rw = _event_stream(
+        spark, os.path.join(path, "right"), "purchase", 1, user="purchase_user"
+    ).withWatermark("purchase_ts", "30 minutes")
     cond = (
         (lw["view_user"] == rw["purchase_user"])
         & (rw["purchase_ts"] >= lw["view_ts"])
@@ -1139,20 +1085,11 @@ def x17_transform_with_state_top2(spark, sf_dir):
     with built-in-expressible semantics wants x6b's JVM state store;
     this operator is for semantics the built-ins genuinely can't
     express (custom eviction, top-k with k-sized state, model state)."""
-    import pandas as pd  # noqa: F401 — imported for the closure below
-
-    from finporter_spark.queries.staging import stage_x6_drop as _stage_x6_drop
-    from finporter_spark.streaming.pipeline import (
-        ensure_worker_protobuf,
-        run_stream_to_memory,
-    )
-
     ensure_worker_protobuf(spark)
     from pyspark.sql.streaming import (  # needs protobuf on sys.path
         StatefulProcessor,
         StatefulProcessorHandle,
     )
-    from pyspark.sql.types import LongType, StructField, StructType
 
     state_schema = StructType(
         [
@@ -1290,9 +1227,6 @@ def x18_stream_psi_monitor(spark, sf_dir):
     Scale: the static side (9 edges + 10 p_ref rows per type) is a
     broadcast; streaming state is #types × 10 counters — bounded
     regardless of stream length."""
-    from finporter_spark.queries.staging import stage_once as _stage_once
-    from finporter_spark.streaming.pipeline import run_stream_to_memory
-
     s, el, rb, n = _x18_reference(spark, sf_dir)
 
     def write_current(p):
@@ -1350,8 +1284,6 @@ def _stage_x19_slices(spark, sf_dir):
     fire. Round 13 drains at maxFilesPerTrigger=4 — (0..3)(4..6,s1)(s2),
     3 batches instead of 5: the same two-sentinel watermark proof and
     >= 2 data batches, at 3/5 of the per-batch harness cost."""
-    from finporter_spark.queries.staging import stage_once as _stage_once
-
     def _write(p):
         # clean first: a restage after a LAYOUT change must not leave
         # the old layout's files behind (a stale slice would be drained
@@ -1425,23 +1357,10 @@ def _x19_drained(spark, sf_dir):
     """Drive the timer-evicting session processor over the staged
     slices; returns the RAW memory-sink table (incl. the via_timer
     flag the equality test asserts on)."""
-    import pandas as pd  # noqa: F401
-
-    from finporter_spark.streaming.pipeline import (
-        ensure_worker_protobuf,
-        run_stream_to_memory,
-    )
-
     ensure_worker_protobuf(spark)
     from pyspark.sql.streaming import (  # needs protobuf on sys.path
         StatefulProcessor,
         StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
     )
 
     state_schema = StructType(
@@ -1690,9 +1609,6 @@ def x18b_stream_psi_weekly(spark, sf_dir):
     wall-clock, so a production deployment ages out closed weeks with
     a watermark on the week column; here the window is the fixed
     current period."""
-    from finporter_spark.queries.staging import stage_once as _stage_once
-    from finporter_spark.streaming.pipeline import run_stream_to_memory
-
     s, el, rb, n = _x18_reference(spark, sf_dir)
 
     def write_current(p):
@@ -1788,14 +1704,6 @@ def o19_vacuum_versions(spark, sf_dir):
     Scale: vacuum is O(#versions) directory renames + deletes, no data
     movement, no Spark job; each removal is an atomic rename to a
     tombstone so readers never observe a half-deleted version."""
-    import shutil
-
-    from finporter_spark.operators.scale import vacuum_versions
-    from finporter_spark.queries.staging import io_dir as _io_dir
-    from finporter_spark.streaming.pipeline import (
-        versioned_keep_first_sink,
-    )
-
     root = _io_dir(sf_dir, "o19_state")
     shutil.rmtree(root, ignore_errors=True)
     merge, read_final = versioned_keep_first_sink(
@@ -1826,32 +1734,11 @@ def _x20_oracle() -> str:
     """Batch derivation of the full codes table: coarse Lloyd unroll
     (l3_ivf's k=16 CTEs) for the cell + l45's per-subspace PQ unrolls
     for the codes, joined per vector."""
-    from finporter_spark.queries.ann import _ivf_dist_cte, _ivf_mean_cte
-    from finporter_spark.queries.ann import _PQ_M, _pq_sub_ctes
-
-    ivf_rounds = []
-    prev = "c0"
-    for r in range(1, 4):
-        ivf_rounds.append(_ivf_dist_cte(prev, f"d{r}", f"a{r}"))
-        ivf_rounds.append(_ivf_mean_cte(f"a{r}", prev, f"m{r}", f"c{r}"))
-        prev = f"c{r}"
-    ivf = ",".join(ivf_rounds)
-    subs = ",".join(_pq_sub_ctes(i) for i in range(_PQ_M))
-    code_joins = " ".join(
-        f"JOIN a3_{i} USING (vec_id)" if i else "FROM a3_0"
-        for i in range(_PQ_M)
-    )
-    code_cols = ", ".join(f"a3_{i}.cid AS c{i}" for i in range(_PQ_M))
     return f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-               FROM embeddings),
-    c0 AS (SELECT CAST(vec_id AS INT) AS cid,
-                  list_transform(emb, x -> ROUND(x, 6)) AS cen
-           FROM e WHERE vec_id < 16),
-    {ivf},
-    {_ivf_dist_cte(prev, 'df', 'af')},
-    {subs},
-    codes AS (SELECT a3_0.vec_id, {code_cols} {code_joins})
+    WITH {_EMB_E},
+    {_ivf_ctes(16, 3)},
+    {",".join(_pq_sub_ctes(i) for i in range(_PQ_M))},
+    {_pq_codes()}
     SELECT codes.vec_id AS cand_id, af.cid AS cell,
            {', '.join(f'codes.c{i}' for i in range(_PQ_M))}
     FROM codes JOIN af ON af.vec_id = codes.vec_id
@@ -1884,18 +1771,6 @@ def x20_stream_ann_ingest(spark, sf_dir):
     Scale: per-batch cost is a map-only projection over the batch's
     rows (embarrassingly parallel, no watermark needed — stateless);
     the plan carries no exchange at all."""
-    from finporter_spark.operators.similarity import (
-        build_ivfadc_codes,
-        load_or_train_centroids_det,
-    )
-    from finporter_spark.queries.staging import (
-        io_dir as _io_dir,
-        src_fp as _src_fp,
-        stage_once as _stage_once,
-    )
-    from finporter_spark.queries.ann import _PQ_M, _pq_books
-    from finporter_spark.streaming.pipeline import run_stream_to_memory
-
     emb = _t(spark, sf_dir, "embeddings")
     books = _pq_books(spark, sf_dir, emb)
     # fingerprint-guard the shared centroid cache exactly like its
@@ -1983,16 +1858,6 @@ def o20_time_travel_read(spark, sf_dir):
     Scale: a time-travel read is ONE parquet scan of the chosen
     snapshot — no replay, no log reconstruction; list/guard cost is a
     directory listing."""
-    import shutil
-
-    from finporter_spark.operators.scale import vacuum_versions
-    from finporter_spark.queries.staging import io_dir as _io_dir
-    from finporter_spark.streaming.pipeline import (
-        list_versions,
-        read_version,
-        versioned_keep_first_sink,
-    )
-
     root = _io_dir(sf_dir, "o20_state")
     shutil.rmtree(root, ignore_errors=True)
     merge, _read_final = versioned_keep_first_sink(
@@ -2025,19 +1890,29 @@ def o20_time_travel_read(spark, sf_dir):
 # =====================================================================
 
 
-def _x21_oracle() -> str:
-    """Batch mirror: the l2 md5 signature/banding CTEs, then per
-    bucket the FIRST (lowest) doc_id, then per doc the count of its 8
-    band buckets first claimed by an earlier doc."""
-    from finporter_spark.queries.text_prep import _l2_band_union, _l2_sig_ctes
-
-    return f"""
-    WITH {_l2_sig_ctes(32, 3)}, band AS (
+# The l2 md5 signature/banding CTEs, then per band bucket the FIRST
+# (lowest) doc_id; _X21_FLAGS adds each doc's is_dup verdict.
+_X21_FIRST_SEEN = f"""{_l2_sig_ctes(32, 3)}, band AS (
       {_l2_band_union(32, 8)}
     ), fs AS (
       SELECT band_id, bh, MIN(doc_id) AS first_doc
       FROM band GROUP BY band_id, bh
-    )
+    )"""
+_X21_FLAGS = _X21_FIRST_SEEN + """, flags AS (
+      SELECT b.doc_id,
+             SUM(CASE WHEN fs.first_doc < b.doc_id THEN 1 ELSE 0 END) > 0
+               AS is_dup
+      FROM band b
+      JOIN fs ON fs.band_id = b.band_id AND fs.bh = b.bh
+      GROUP BY b.doc_id
+    )"""
+
+
+def _x21_oracle() -> str:
+    """Batch mirror: per doc the count of its 8 band buckets first
+    claimed by an earlier doc."""
+    return f"""
+    WITH {_X21_FIRST_SEEN}
     SELECT b.doc_id,
            CAST(SUM(CASE WHEN fs.first_doc < b.doc_id THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_dup_bands,
@@ -2102,21 +1977,6 @@ def _x21_dedup_flags(spark, sf_dir, tag):
     through the band-bucket keep-first sink -> per-doc dup flags) with
     state/checkpoint dirs keyed by ``tag`` so independent consumers
     never clobber each other's drains."""
-    import shutil
-
-    from finporter_spark.operators.dedup import (
-        band_hash,
-        minhash_signatures_fn,
-    )
-    from finporter_spark.queries.staging import (
-        io_dir as _io_dir,
-        stage_once as _stage_once,
-    )
-    from finporter_spark.streaming.pipeline import (
-        run_stream_foreach_batch,
-        versioned_keep_first_sink,
-    )
-
     # expressions built ONCE and reused per micro-batch: Column objects
     # are unbound trees, and rebuilding the 32 signature members + 8
     # band structs per batch cost ~0.85 s/batch of pure driver py4j
@@ -2191,16 +2051,12 @@ def _x21_dedup_flags(spark, sf_dir, tag):
     # state l2 stages (identical md5 family/params/cache key) — read
     # the staged table instead of re-signaturing the corpus (at sf10
     # the recompute was ~1/3 of the row's wall)
-    import os as _os
-
-    from finporter_spark.operators.dedup import load_or_build_signatures
-    from finporter_spark.operators.scale import source_fingerprint
 
     sigs = load_or_build_signatures(
         _t(spark, sf_dir, "documents"),
         cache_path=_io_dir(sf_dir, "l2_sigs_md5_n3_k32"),
         fingerprint=source_fingerprint(
-            _os.path.join(sf_dir, "documents.parquet")
+            os.path.join(sf_dir, "documents.parquet")
         ),
         text_col="text", id_col="doc_id", shingle_n=3, num_hashes=32,
         hash_family="md5",
@@ -2232,8 +2088,6 @@ def _x21_flags_staged(spark, sf_dir):
     batching/arrival-order independent by x21's construction, so the
     staged table equals what any fresh drain would produce (certified
     by pipe9's own stage-chained oracle)."""
-    from finporter_spark.queries.staging import stage_once as _stage_once
-
     def _write(p):
         (
             _x21_dedup_flags(spark, sf_dir, "x21p")
@@ -2257,23 +2111,8 @@ def _pipe9_oracle() -> str:
     """The x21 banding/first-seen chain as a CTE, left-joined onto the
     corpus (docs too short to shingle carry no flag -> not dup), then
     the per-source funnel with a 30-token length floor."""
-    from finporter_spark.queries.catalog import _TOKS
-    from finporter_spark.queries.text_prep import _l2_band_union, _l2_sig_ctes
-
     return f"""
-    WITH {_l2_sig_ctes(32, 3)}, band AS (
-      {_l2_band_union(32, 8)}
-    ), fs AS (
-      SELECT band_id, bh, MIN(doc_id) AS first_doc
-      FROM band GROUP BY band_id, bh
-    ), flags AS (
-      SELECT b.doc_id,
-             SUM(CASE WHEN fs.first_doc < b.doc_id THEN 1 ELSE 0 END) > 0
-               AS is_dup
-      FROM band b
-      JOIN fs ON fs.band_id = b.band_id AND fs.bh = b.bh
-      GROUP BY b.doc_id
-    ), d AS (
+    WITH {_X21_FLAGS}, d AS (
       SELECT doc_id, source, len({_TOKS}) AS n_tokens FROM documents
     ), j AS (
       SELECT d.source, d.n_tokens,
@@ -2318,8 +2157,6 @@ def pipe9_stream_ingest_curation(spark, sf_dir):
     version under private dirs; this entry's timing measures the
     funnel, not a re-ingest) + one corpus scan for token counts + one
     source-keyed agg."""
-    from finporter_spark.operators.text import tokens
-
     flags = _x21_flags_staged(spark, sf_dir).select(
         "doc_id", "is_dup"
     )
@@ -2355,32 +2192,7 @@ def pipe9_stream_ingest_curation(spark, sf_dir):
 # =====================================================================
 
 
-@query(
-    "x22_stream_cdc_upsert",
-    """
-    WITH ch AS (
-      SELECT CASE WHEN event_type = 'click' THEN user_id + 10000000
-                  ELSE user_id END AS key,
-             ts, event_id, value,
-             CASE WHEN event_type = 'error' THEN 'D'
-                  WHEN event_type = 'signup' THEN 'I'
-                  ELSE 'U' END AS op
-      FROM events
-    ), latest AS (
-      SELECT key, op, value FROM (
-        SELECT key, op, value,
-               row_number() OVER (PARTITION BY key
-                                  ORDER BY ts DESC, event_id DESC) AS rn
-        FROM ch) WHERE rn = 1
-    )
-    SELECT COALESCE(c.c_custkey, l.key) AS custkey, c.c_name AS name,
-           COALESCE(l.value, c.c_acctbal) AS balance,
-           l.key IS NOT NULL AS changed
-    FROM customer c
-    FULL OUTER JOIN latest l ON c.c_custkey = l.key
-    WHERE l.op IS NULL OR l.op <> 'D'
-    """,
-)
+@query("x22_stream_cdc_upsert", _O10_ORACLE)
 def x22_stream_cdc_upsert(spark, sf_dir):
     """X22: streaming CDC at ingest — the correction-handling path the
     round-13 verdict named missing (#5): the versioned sinks were
@@ -2413,18 +2225,6 @@ def x22_stream_cdc_upsert(spark, sf_dir):
     table joins ONCE after the drain, never per batch. ts rides as
     unix micros (bigint) through the JSON staging so no timestamp
     serialization enters the hash."""
-    import shutil
-
-    from finporter_spark.operators.dedup import apply_changelog
-    from finporter_spark.queries.staging import (
-        io_dir as _io_dir,
-        stage_once as _stage_once,
-    )
-    from finporter_spark.streaming.pipeline import (
-        run_stream_foreach_batch,
-        versioned_keep_latest_sink,
-    )
-
     e = _t(spark, sf_dir, "events")
     ch = e.select(
         F.when(F.col("event_type") == "click", F.col("user_id") + 10000000)
@@ -2490,13 +2290,9 @@ def x22_stream_cdc_upsert(spark, sf_dir):
 
 def _pipe9b_oracle() -> str:
     """pipe9's stage-chained CTE funnel extended with the l26 quality
-    gate: the same 3-iteration GD unroll (catalog_prep's feat/w CTEs)
+    gate: the same 3-iteration GD unroll (text_prep's l26 feat/w CTEs)
     scores every document, and survivors of the dup + length gates
     must also clear p_en >= 0.5."""
-    from finporter_spark.queries.catalog import _TOKS
-    from finporter_spark.queries.text_prep import _l2_band_union, _l2_sig_ctes
-    from finporter_spark.queries.text_prep import _L26_FEAT, _l26_iter
-
     l26 = (
         _L26_FEAT.replace("{toks}", _TOKS).strip()
         + ",\n    w0 AS (SELECT 0.0 AS b, 0.0 AS c1, 0.0 AS c2, "
@@ -2504,19 +2300,7 @@ def _pipe9b_oracle() -> str:
         + ",".join(_l26_iter(i) for i in (1, 2, 3))
     )
     return f"""
-    WITH {_l2_sig_ctes(32, 3)}, band AS (
-      {_l2_band_union(32, 8)}
-    ), fs AS (
-      SELECT band_id, bh, MIN(doc_id) AS first_doc
-      FROM band GROUP BY band_id, bh
-    ), flags AS (
-      SELECT b.doc_id,
-             SUM(CASE WHEN fs.first_doc < b.doc_id THEN 1 ELSE 0 END) > 0
-               AS is_dup
-      FROM band b
-      JOIN fs ON fs.band_id = b.band_id AND fs.bh = b.bh
-      GROUP BY b.doc_id
-    ), {l26},
+    WITH {_X21_FLAGS}, {l26},
     score AS (
       SELECT doc_id,
              round(1.0/(1.0 + exp(-(w.b*x0 + w.c1*x1 + w.c2*x2
@@ -2578,9 +2362,6 @@ def pipe9b_stream_curation_quality(spark, sf_dir):
     Scale: pipe9's shape + one broadcast-scored corpus scan (the l26
     feature projection) and 3 mean-gradient aggregates for training —
     all map-combinable; nothing new materializes."""
-    from finporter_spark.operators.text import tokens
-    from finporter_spark.queries.catalog import CATALOG
-
     flags = _x21_flags_staged(spark, sf_dir).select("doc_id", "is_dup")
     score = CATALOG["l26_quality_classifier"][0](spark, sf_dir).select(
         "doc_id", "p_en"

@@ -17,6 +17,7 @@ from pyspark.sql import Window, functions as F
 
 from finporter_spark.operators.dedup import (
     exact_dedup,
+    load_or_build_signatures,
     minhash_near_duplicates,
     normalized_text,
     shingles,
@@ -25,12 +26,19 @@ from finporter_spark.operators.dedup import (
 from finporter_spark.operators.prep import (
     chunk_documents,
     decontaminate,
+    fuzzy_decontaminate,
+    pack_sequences,
     redact,
+    repeated_span_coverage,
+    repetition_profile,
+    sample_bucket,
+    span_dedup_stats,
 )
+from finporter_spark.operators.scale import global_rank, source_fingerprint
 from finporter_spark.operators.text import (
     LANG_MARKERS,
-    LANG_MARKERS as _PIPE_LANGS,
     TOKEN_RE,
+    bm25_scores,
     fingerprint,
     language_id,
     token_count,
@@ -73,8 +81,6 @@ def l1_exact_dedup(spark, sf_dir):
 # stays a pytest recall/threshold concern; the oracle gates that both
 # engines compute the SAME sketch bit-for-bit.
 
-_L2_TOKS = "string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')"
-
 
 def _l2_shingles_sql(n: int = 3) -> str:
     """DuckDB mirror of operators.dedup.shingles (word n-grams)."""
@@ -100,7 +106,7 @@ def _l2_sig_ctes(k: int = 32, shingle_n: int = 3) -> str:
         for i in range(k)
     )
     return f"""tk AS (
-      SELECT doc_id, {_L2_TOKS} AS t FROM documents
+      SELECT doc_id, {_TOKS} AS t FROM documents
     ), sh AS (
       SELECT doc_id, unnest({_l2_shingles_sql(shingle_n)}) AS sh FROM tk
     ), hs AS (
@@ -174,7 +180,7 @@ def _l2_simhash_oracle(
     )
     return f"""
     WITH tk AS (
-      SELECT doc_id, {_L2_TOKS} AS t FROM documents
+      SELECT doc_id, {_TOKS} AS t FROM documents
     ), sh AS (
       SELECT doc_id,
              unnest(list_distinct({_l2_shingles_sql(shingle_n)})) AS sh
@@ -216,10 +222,6 @@ def l2_minhash_near_dup(spark, sf_dir):
     in DuckDB: the oracle replays signatures -> banding -> verify as a
     CTE chain and the gate is a full value hash. Recall vs true Jaccard
     remains pytest's concern (tests/test_recall_sf01.py)."""
-    from finporter_spark.operators.dedup import load_or_build_signatures
-    from finporter_spark.operators.scale import source_fingerprint
-    from finporter_spark.queries.staging import io_dir as _io_dir
-
     d = _t(spark, sf_dir, "documents")
     sigs = load_or_build_signatures(
         d,
@@ -394,10 +396,9 @@ def l8_tfidf_top_terms(spark, sf_dir):
 # ≈-marked MinHash/SimHash/LSH operators are validated against).
 # =====================================================================
 
-@query(
-    "l9_ngram_jaccard",
-    r"""
-    WITH t AS (
+# The l9 oracle's shingle sets (l11 clusters the same pairs): distinct
+# word 3-grams per document, doc_id < 300.
+_L9_SHINGLES = r"""t AS (
       SELECT doc_id,
              string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')),
                           ' ') AS toks
@@ -410,7 +411,13 @@ def l8_tfidf_top_terms(spark, sf_dir):
       SELECT doc_id, array_to_string(toks[i:i+2], ' ') AS sh FROM idx
     ), s AS (
       SELECT doc_id, list(DISTINCT sh) AS shs FROM sh GROUP BY doc_id
-    )
+    )"""
+
+
+@query(
+    "l9_ngram_jaccard",
+    f"""
+    WITH {_L9_SHINGLES}
     SELECT id_l, id_r, round(jaccard, 6) AS jaccard FROM (
       SELECT a.doc_id AS id_l, b.doc_id AS id_r,
              CAST(len(list_intersect(a.shs, b.shs)) AS DOUBLE)
@@ -475,8 +482,6 @@ def l6_rolling_hash(spark, sf_dir):
     fold (acc*31 + charcode) mod p over the normalized text. Map-only,
     integer-exact in both engines; complements the set-based sha256
     fingerprint (l6_fingerprint) with an order-sensitive one."""
-    from finporter_spark.operators.dedup import normalized_text
-
     d = _t(spark, sf_dir, "documents")
     codes = F.transform(
         F.split(normalized_text(F.col("text")), ""),
@@ -506,10 +511,10 @@ def _pipe1_lang_case() -> str:
                   ELSE 'und' END AS lang_pred
       FROM (
         SELECT doc_id, n_tokens,
-               {_lang_hits_sql(_PIPE_LANGS['en'])} AS en_h,
-               {_lang_hits_sql(_PIPE_LANGS['fr'])} AS fr_h,
-               {_lang_hits_sql(_PIPE_LANGS['es'])} AS es_h,
-               {_lang_hits_sql(_PIPE_LANGS['de'])} AS de_h
+               {_lang_hits_sql(LANG_MARKERS['en'])} AS en_h,
+               {_lang_hits_sql(LANG_MARKERS['fr'])} AS fr_h,
+               {_lang_hits_sql(LANG_MARKERS['es'])} AS es_h,
+               {_lang_hits_sql(LANG_MARKERS['de'])} AS de_h
         FROM q
       )
     """
@@ -542,8 +547,6 @@ def pipe1_training_prep(spark, sf_dir):
     back is needed). This is the composition shape of a 100 TB
     training-data run: every stage map-only except the single dedup
     exchange on a uniformly distributed 256-bit key."""
-    from finporter_spark.operators.text import fingerprint, language_id, tokens
-
     d = _t(spark, sf_dir, "documents")
     q = d.select(
         "doc_id", "text", F.size(tokens(F.col("text"))).alias("n_tokens")
@@ -601,8 +604,6 @@ def l16_repetition_profile(spark, sf_dir):
     generations). Exact: duplicate-occurrence and top-gram fractions
     over word 3-grams; the oracle recomputes both, including the
     no-gram short-doc zeros."""
-    from finporter_spark.operators.prep import repetition_profile
-
     return repetition_profile(
         _t(spark, sf_dir, "documents"), "text", "doc_id", ngram_n=3
     )
@@ -646,8 +647,6 @@ def l17_pack_sequences(spark, sf_dir):
     is 64-way parallel instead of one global serial window (the same
     sharding a multi-worker loader applies); the oracle reproduces the
     shard hash, the cumsum, and the boundary-crossing splits exactly."""
-    from finporter_spark.operators.prep import pack_sequences
-
     return pack_sequences(
         _t(spark, sf_dir, "documents"), "text", "doc_id",
         seq_tokens=512, shards=64,
@@ -728,12 +727,6 @@ def pipe2_llm_corpus(spark, sf_dir):
     that each works alone. Shuffle budget: dedup groupBy + survivor
     join + repetition pair + shard window = all keyed on doc/hash,
     map-combined, no broadcast of anything data-sized."""
-    from finporter_spark.operators.dedup import exact_dedup
-    from finporter_spark.operators.prep import (
-        pack_sequences,
-        repetition_profile,
-    )
-
     d = _t(spark, sf_dir, "documents")
     # pin the ID-ONLY stage outputs (guide §2.4, the narrow-subtree
     # variant): unpinned, the dedup agg + survivor join subtree was
@@ -765,16 +758,10 @@ def pipe2_llm_corpus(spark, sf_dir):
 # plan)
 # =====================================================================
 
-_P4_TERMS = ("spark", "table", "join", "fast", "query", "window")
-_P4_QVEC = 7  # query = the embedding of vec_id 7 (deterministic, tiny)
-_P4_K = 100  # per-branch candidate depth
-_P4_RRF = 60  # the standard RRF dampening constant
-
-
-@query(
-    "pipe4_hybrid_retrieval",
-    f"""
-    WITH toks AS (
+# The BM25 query vocabulary (l24, pipe4) and its oracle CTEs: per-doc
+# token lengths, corpus stats, and tf/df over the vocabulary.
+_BM25_TERMS = ("spark", "table", "join", "fast", "query", "window")
+_BM25_CTES = f"""toks AS (
       SELECT doc_id, {_TOKS} AS toks FROM documents
     ), dl AS (
       SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl FROM toks
@@ -787,7 +774,17 @@ _P4_RRF = 60  # the standard RRF dampening constant
       GROUP BY doc_id, term
     ), dfreq AS (
       SELECT term, CAST(COUNT(*) AS DOUBLE) AS df FROM tf GROUP BY term
-    ), lex AS (
+    )"""
+
+_P4_QVEC = 7  # query = the embedding of vec_id 7 (deterministic, tiny)
+_P4_K = 100  # per-branch candidate depth
+_P4_RRF = 60  # the standard RRF dampening constant
+
+
+@query(
+    "pipe4_hybrid_retrieval",
+    f"""
+    WITH {_BM25_CTES}, lex AS (
       SELECT tf.doc_id,
              round(SUM(
                ln((s.n_docs - f.df + 0.5) / (f.df + 0.5) + 1.0)
@@ -842,11 +839,8 @@ def pipe4_hybrid_retrieval(spark, sf_dir):
     ranking (the l22 determinism canon) so both engines break ties on
     doc_id identically; ranks are ints, so the fused score is exact
     arithmetic cross-engine."""
-    from finporter_spark.operators.text import bm25_scores
-    from pyspark.sql import Window
-
     docs = _t(spark, sf_dir, "documents")
-    lex = bm25_scores(docs, list(_P4_TERMS)).select(
+    lex = bm25_scores(docs, list(_BM25_TERMS)).select(
         "doc_id", F.round("bm25", 6).alias("score")
     )
     lex_top = lex.orderBy(F.desc("score"), "doc_id").limit(_P4_K)
@@ -930,8 +924,6 @@ def l27_frequency_spectrum(spark, sf_dir):
     spectrum flags OCR noise; a truncated tail flags over-dedup). Two
     map-combinable aggregations: term counts (the l8/l21 shuffle
     shape), then a vocabulary-sized regroup on the capped frequency."""
-    from finporter_spark.operators.text import tokens
-
     d = _t(spark, sf_dir, "documents")
     tf = (
         d.select(F.explode(tokens(F.col("text"))).alias("term"))
@@ -1053,13 +1045,6 @@ def l20_fuzzy_decontaminate(spark, sf_dir):
     the oracle replays signatures -> banding -> verify -> anti-join and
     the gate is a full value hash. Recall vs exact Jaccard remains the
     pytest threshold test."""
-    import os
-
-    from finporter_spark.operators.dedup import load_or_build_signatures
-    from finporter_spark.operators.prep import fuzzy_decontaminate
-    from finporter_spark.operators.scale import source_fingerprint
-    from finporter_spark.queries.staging import io_dir as _io_dir
-
     docs = _t(spark, sf_dir, "documents")
     sigs = load_or_build_signatures(
         docs,
@@ -1205,7 +1190,6 @@ def l21_bpe_tokenize(spark, sf_dir):
     distributed trainer reproduces a pure-Python reference BPE exactly
     (same merges, same tokens) and that decode(encode(x))
     whitespace-roundtrips every document."""
-    from finporter_spark.operators.scale import source_fingerprint
     from finporter_spark.operators.tokenizer import (
         bpe_encode,
         load_or_train_merges,
@@ -1262,9 +1246,6 @@ def l23_curriculum_sample(spark, sf_dir):
     below only exists because the test file is a single row group — a
     real corpus scan is already thousands of tasks wide, and the
     operator itself never shuffles on a key."""
-    from finporter_spark.operators.prep import sample_bucket
-    from finporter_spark.operators.text import tokens
-
     d = _t(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
     n_tok = F.size(toks)
@@ -1296,26 +1277,10 @@ def l23_curriculum_sample(spark, sf_dir):
     )
 
 
-_BM25_TERMS = ("spark", "table", "join", "fast", "query", "window")
-
-
 @query(
     "l24_bm25_rank",
     f"""
-    WITH toks AS (
-      SELECT doc_id, {_TOKS} AS toks FROM documents
-    ), dl AS (
-      SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl FROM toks
-    ), stats AS (
-      SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs, AVG(dl) AS avgdl FROM dl
-    ), tf AS (
-      SELECT doc_id, term, CAST(COUNT(*) AS DOUBLE) AS tf
-      FROM (SELECT doc_id, unnest(toks) AS term FROM toks)
-      WHERE term IN ('spark','table','join','fast','query','window')
-      GROUP BY doc_id, term
-    ), dfreq AS (
-      SELECT term, CAST(COUNT(*) AS DOUBLE) AS df FROM tf GROUP BY term
-    )
+    WITH {_BM25_CTES}
     SELECT tf.doc_id,
            CAST(COUNT(*) AS INT) AS n_matched,
            CAST(SUM(
@@ -1337,8 +1302,6 @@ def l24_bm25_rank(spark, sf_dir):
     vocabulary BEFORE the posting aggregation, so the shuffle carries
     the inverted-index slice, not the corpus; df/N/avgdl are broadcast
     scalars; the dl join is the one corpus-keyed shuffle."""
-    from finporter_spark.operators.text import bm25_scores
-
     return bm25_scores(
         _t(spark, sf_dir, "documents"), list(_BM25_TERMS)
     )
@@ -1378,8 +1341,6 @@ def l25_span_dedup(spark, sf_dir):
     lower-id document. Exact span-level sibling of l2's whole-doc
     MinHash: three map-combinable keyed shuffles (fixed-width md5 span
     keys, not gram strings), no driver state."""
-    from finporter_spark.operators.prep import span_dedup_stats
-
     return span_dedup_stats(
         _t(spark, sf_dir, "documents"), ngram_n=8
     )
@@ -1442,7 +1403,6 @@ def l26_quality_classifier(spark, sf_dir):
     6 dp-rounded mean gradients make both engines' weights
     bit-identical (the l22 determinism canon)."""
     from finporter_spark.operators.ml import logreg_fit, logreg_score
-    from finporter_spark.operators.text import tokens
 
     d = _t(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
@@ -1732,8 +1692,6 @@ def l32_contamination_matrix(spark, sf_dir):
     re-measured decade-flat. Nothing all-pairs over documents exists
     anywhere in the plan.
     """
-    from finporter_spark.operators.text import tokens
-
     d = _t(spark, sf_dir, "documents")
     n = 8
     toks = d.select(
@@ -1839,8 +1797,6 @@ def l33_length_histogram(spark, sf_dir):
     (lang, bucket); token counts reuse the l4/l7 tokenizer so the
     histogram describes exactly what downstream operators consume.
     """
-    from finporter_spark.operators.text import tokens
-
     d = _t(spark, sf_dir, "documents")
     n = d.select(
         "lang", F.size(tokens(F.col("text"))).alias("n_tokens")
@@ -2006,8 +1962,6 @@ def l34_jaccard_join(spark, sf_dir):
     (10⁵+ vocabularies) even 3-grams never saturate; the width is the
     knob that buys the same guarantee on adversarially small
     vocabularies."""
-    from finporter_spark.operators.text import tokens
-
     tau = _JACCARD_TAU
     n = 5
     d = _t(spark, sf_dir, "documents")
@@ -2084,8 +2038,6 @@ def l35_dedup_keep_best(spark, sf_dir):
     then one linear join back to label every row with its survivor.
     The oracle spells the witness as a ROW_NUMBER window.
     """
-    from finporter_spark.operators.text import tokens
-
     d = _t(spark, sf_dir, "documents")
     stop = F.array(*[F.lit(s) for s in _STOPLIST])
     keyed = d.select(
@@ -2190,8 +2142,6 @@ def pipe6_corpus_curation(spark, sf_dir):
     stages as CTEs, so the hash gate certifies the COMPOSITION
     (including the drop-policy edge cases), not just the parts.
     """
-    from finporter_spark.operators.text import tokens
-
     tau = _JACCARD_TAU
     d = _t(spark, sf_dir, "documents")
     stop = F.array(*[F.lit(s) for s in _STOPLIST])
@@ -2391,8 +2341,6 @@ def l38_sorted_neighborhood(spark, sf_dir):
     name, never all-pairs. The levenshtein gate runs JVM-side on the
     w·|V| candidates. Oracle states the identical contract with the
     single-partition SQL window DuckDB can afford at sf0.01."""
-    from finporter_spark.operators.scale import global_rank
-
     names = (
         _t(spark, sf_dir, "customer").select("c_name").distinct()
     )
@@ -2556,10 +2504,6 @@ def l40_duplication_by_source(spark, sf_dir):
 # =====================================================================
 # L41 — URL canonicalization + canonical-URL dedup groups
 # =====================================================================
-
-# tracking params stripped by canonicalization (the usual crawl set)
-_TRACK_PREFIXES = ("utm_", "fbclid", "gclid", "msclkid")
-
 
 def _l41_raw_url_sql() -> str:
     """The synthesized raw-URL expression (DuckDB form). The corpus has
@@ -2826,8 +2770,6 @@ def pipe8_crawl_curation(spark, sf_dir):
     the funnel is three domain-sized aggregates joined on source.
     Full value-hash oracle: the l41 norm core + the l16 repetition
     CTEs + gates chained (the pipe6 stage-chained pattern)."""
-    from finporter_spark.operators.prep import repetition_profile
-
     d = _t(spark, sf_dir, "documents")
     canon = _l41_canonical_df(spark, sf_dir)
     surv = canon.groupBy("canonical_url").agg(
@@ -2961,8 +2903,6 @@ def l48_repeated_span_coverage(spark, sf_dir):
     doc-partitioned windows and one doc-keyed left join — per-task
     state is one document's duplicated anchors. Full value-hash
     oracle (exact integers; one exact int/int→double division)."""
-    from finporter_spark.operators.prep import repeated_span_coverage
-
     return repeated_span_coverage(
         _t(spark, sf_dir, "documents"), ngram_n=8
     )

@@ -5,8 +5,10 @@ pipeline (pipe5).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Window, functions as F
 
+from finporter_spark.operators.scale import exact_percentiles
 from finporter_spark.queries.catalog import (
     DSUM,
     _t,
@@ -127,8 +129,6 @@ def w4_range_frame(spark, sf_dir):
     the fractional remainder — invisible at small SFs (no event pair
     sits that close to the boundary), caught by the sf1 sweep where two
     rows flipped."""
-    from pyspark.sql import Window
-
     e = _t(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -180,8 +180,6 @@ def w5_gap_fill(spark, sf_dir):
     grouped daily rollup, a per-key `sequence()` grid (explode is
     map-only; grid length bounded by the date span), and a partitioned
     ignore-nulls `last` window. No driver-side date math, no Python."""
-    from pyspark.sql import Window
-
     e = _t(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("day")
@@ -242,8 +240,6 @@ def w6_sessionize(spark, sf_dir):
     (user_id, ts) ordering — one shuffle, both window passes reuse the
     sort — then a per-(user, session) hash agg. Scales as W-ops do:
     state ∝ one user's events per task, no driver involvement."""
-    from pyspark.sql import Window
-
     e = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("ts").over(w)
@@ -362,8 +358,6 @@ def w9_ohlc_downsample(spark, sf_dir):
     Spark's min_by/max_by would drop the window but tie-break
     non-deterministically — the rank formulation is the cross-engine
     canon."""
-    from pyspark.sql import Window
-
     e = _t(spark, sf_dir, "events")
     bar = (F.floor(F.col("ts").cast("double") / 600)).cast("long")
     wa = Window.partitionBy("event_type", "_bar").orderBy("ts", "event_id")
@@ -434,8 +428,6 @@ def w10_max_drawdown(spark, sf_dir):
     is 0 has no defined drawdown for that prefix). Window and
     aggregate share the user key — one
     corpus-sized exchange, the w9 pattern."""
-    from pyspark.sql import Window
-
     e = _t(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -487,8 +479,6 @@ def w7_streaks(spark, sf_dir):
     distinct shuffle + one window shuffle, both keyed on user_id; the
     island key (day - row_number) is a map-side expression, so the
     plan is two exchanges regardless of scale."""
-    from pyspark.sql import Window
-
     d = (
         _t(spark, sf_dir, "events")
         .select("user_id", F.to_date("ts").alias("day"))
@@ -1465,8 +1455,6 @@ def w17_mad_anomaly(spark, sf_dir):
     (ladder-2 6.6 s vs 1.6 s for ladder-1 at sf0.1, because its three
     internal passes each rebuilt ladder-1). Hash unchanged.
     """
-    from finporter_spark.operators.scale import exact_percentiles
-
     e = _t(spark, sf_dir, "events")
     ev = e.select("event_type", "value").localCheckpoint(eager=False)
     med = (
@@ -2211,8 +2199,6 @@ def w14b_holt_exact(spark, sf_dir):
     shape — each group's days fit one Arrow batch; the group count is
     what scales). The events table spans 30 days per type at every
     scale factor, so no catalog series comes near a task's memory."""
-    import pandas as pd
-
     e = _t(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.to_date("ts").alias("day")

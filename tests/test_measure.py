@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import logging
 
+from pyspark.sql import functions as F
+
 from finporter_spark.queries import staging
 from finporter_spark.queries.catalog import catalog_queries
 from tools.measure import measure_query
@@ -24,6 +26,27 @@ def test_measure_query_counts_jobs_per_rep_in_the_query_group(spark, sf_dir):
     grouped = set(tracker.getJobIdsForGroup("q1_pricing_summary")) - before
     # the warm run's jobs are in the group too, but not in any rep
     assert len(grouped) > sum(r.jobs for r in reps)
+
+
+def test_measure_query_counts_the_jobs_of_each_micro_batch(spark, sf_dir):
+    """x4 drains three staged files, one per trigger, on the stream's
+    own thread while it builds. Each micro-batch runs at least one job,
+    so every rep counts three or more jobs beyond its sink's own."""
+    x4 = catalog_queries()["x4_watermark_latedrop"]
+    reps = measure_query(
+        spark, "x4_watermark_latedrop", lambda: x4(spark, sf_dir), 2
+    )
+    (sink,) = measure_query(
+        spark,
+        "x4_sink_only",
+        lambda: spark.table("x4_mem")
+        .groupBy("window_start")
+        .agg(F.max("n").alias("n")),
+        1,
+    )
+    assert len(reps) == 2
+    for r in reps:
+        assert r.jobs >= sink.jobs + 3
 
 
 def test_staging_happens_in_the_warm_run_only(

@@ -18,7 +18,7 @@ STAGED dataset state (operators.similarity.load_or_build_ivfadc_codes
 codes_build_s (the one-time ingest cost, measured only when the cache
 is cold) separately from wall_s (the steady-state probe+ADC+rerank
 query cost over staged codes). A second sweep runs the SAME pipeline
-over the PLANTED-CLUSTER corpus (catalog_r12's structured embeddings,
+over the PLANTED-CLUSTER corpus (queries/ann.py's structured embeddings,
 rows "struct_*") so the recall column is measured on data with the
 structure real embeddings carry, not only on the random worst case.
 
@@ -94,7 +94,7 @@ def main() -> None:
         ("struct_1", "/tmp/finporter_testdata/sf1", None),
         ("struct_10", "/tmp/finporter_testdata/sf10", None),
     ]
-    # Zipf-populated corpus (catalog_r13): the skew case — the hottest
+    # Zipf-populated corpus (queries/ann.py): the skew case — the hottest
     # planted cluster holds ~21% of the corpus, so probing it scans
     # that whole share. The *_split row applies the quantizer-side
     # mitigation (split_hot_cells, cap 0.1) at the density where one

@@ -8,13 +8,12 @@ Usage:
       [--sf /root/testdata/sf0.1] [--reps 2]
 
 Runs go through ``tools.measure.measure_query``: one untimed warm run,
-then ``--reps`` timed runs under the query's job group. Two stage counts
+then ``--reps`` timed runs under the query's job tag. Two stage counts
 are printed: ``stages`` sums the stage ids each job lists, so a stage
 that a later job skips (its shuffle output is reused) counts once per
 job that lists it; ``executed`` counts the distinct stages that
-completed tasks, which is the work that actually ran. Streaming entries
-launch micro-batch jobs from scheduler threads outside the group — use
-tools/stream_probe.py for those instead.
+completed tasks, which is the work that actually ran. A streaming
+entry's micro-batch jobs carry the tag too, so they are counted.
 """
 
 from __future__ import annotations

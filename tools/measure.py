@@ -26,7 +26,7 @@ WARMUP = "q1_pricing_summary"
 
 
 class Rep(NamedTuple):
-    """One timed run: wall seconds, jobs in the query's job group, the
+    """One timed run: wall seconds, jobs under the query's job tag, the
     stage ids those jobs list, and the distinct stages that ran tasks."""
 
     wall: float
@@ -61,7 +61,10 @@ def measure_query(
     query stages or caches on first touch (staged layouts, ANN
     quantizers and codes, signatures, buckets), so every timed run
     measures the steady-state plan. Each run, plan building included,
-    is timed and executes under the Spark job group ``name``.
+    is timed and executes under the Spark job group ``name`` (for the
+    UI) and the job tag ``name`` (for the counts). A streaming query's
+    micro-batch thread replaces the job group with the stream's run
+    id but inherits the tag, so its jobs are counted too.
     ``gc.collect()`` runs after each run, outside the timed span: the
     iterative operators pin eager ``localCheckpoint`` blocks until
     Python drops their frames, and retained blocks evict the block
@@ -70,27 +73,28 @@ def measure_query(
     ``stages`` sums the stage ids each job lists, so a stage that a
     later job skips (its shuffle output is reused) counts once per job
     that lists it; ``executed`` counts the distinct stages that
-    completed tasks, which is the work that actually ran. Streaming
-    queries launch their micro-batch jobs from threads outside the
-    group, so their counts miss those jobs.
+    completed tasks, which is the work that actually ran.
     """
     sc = spark.sparkContext
     tracker = sc.statusTracker()
+    tagged = sc._jsc.sc().statusTracker().getJobIdsForTag
     out: list[Rep] = []
     for r in range(reps + 1):
-        before = set(tracker.getJobIdsForGroup(name))
+        before = set(tagged(name))
         sc.setJobGroup(name, name)
+        sc.addJobTag(name)
         try:
             t0 = time.time()
             build().write.format("noop").mode("overwrite").save()
             wall = time.time() - t0
         finally:
+            sc.removeJobTag(name)
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
         gc.collect()
         if r == 0:
             continue
-        ids = set(tracker.getJobIdsForGroup(name)) - before
+        ids = set(tagged(name)) - before
         infos = [tracker.getJobInfo(i) for i in ids]
         stage_ids = [s for i in infos if i is not None for s in i.stageIds]
         stage_infos = [tracker.getStageInfo(s) for s in set(stage_ids)]

@@ -7,8 +7,8 @@ branches is computed k times; big counts here mean repeated subtrees).
 
 Usage: python tools/plan_sweep.py [sf_dir] [out.json]
 
-Streaming entries (x*, pipe3/pipe9*, o19/o20) are skipped: their
-builders EXECUTE a drain, so "dump the plan" would run the query.
+Queries in ``queries/streaming.py`` are skipped: their builders
+EXECUTE a drain, so "dump the plan" would run the query.
 """
 
 from __future__ import annotations
@@ -23,10 +23,9 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from finporter_spark.queries import streaming
 from finporter_spark.queries.catalog import ALIASES, catalog_queries
 from finporter_spark.session import get_session
-
-SKIP_PREFIX = ("x", "pipe3", "pipe9", "o19", "o20")
 
 
 def main() -> None:
@@ -36,7 +35,7 @@ def main() -> None:
     qs = catalog_queries()
     rows = []
     for name in sorted(qs):
-        if name.startswith(SKIP_PREFIX) or name in ALIASES:
+        if qs[name].__module__ == streaming.__name__ or name in ALIASES:
             continue
         try:
             df = qs[name](spark, sf)
