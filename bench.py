@@ -14,10 +14,11 @@ The stdout line is deliberately small: a per-query map ~300 entries
 long makes the line long enough that log-capture pipelines clip it
 mid-JSON (round-8's committed artifact had "parsed": null for exactly
 this reason). So "queries" on stdout carries only the TOP_N slowest
-queries; the COMPLETE per-query map (walls, jobs and executed stages of
-every rep, load-normalized times, the probe ladder) is written to
-$SPARK_GRAFT_BENCH_FULL (default BENCH_FULL_r16_c<cores>.json next to
-this file, <cores> being the session's local core count).
+queries; the COMPLETE per-query map (walls, jobs, executed stages and
+compiled classes of every rep, load-normalized times, the probe ladder)
+is written to $SPARK_GRAFT_BENCH_FULL (default
+BENCH_FULL_r16_c<cores>.json next to this file, <cores> being the
+session's local core count).
 """
 
 from __future__ import annotations
@@ -87,16 +88,18 @@ def main() -> None:
     timings: dict[str, float] = {}
     # every rep is RECORDED, not just min-reduced: a comparer needs each
     # query's own noise band to tell a plan regression from
-    # cache-residency jitter; jobs and executed stages are the part of
-    # a rep that machine noise does not move
+    # cache-residency jitter; jobs, executed stages and compiled classes
+    # are the part of a rep that machine noise does not move
     rep_times: dict[str, list[float]] = {}
     rep_jobs: dict[str, list[int]] = {}
     rep_executed: dict[str, list[int]] = {}
+    rep_compiles: dict[str, list[int]] = {}
 
     def record(name: str, reps) -> float:
         rep_times.setdefault(name, []).extend(round(r.wall, 3) for r in reps)
         rep_jobs.setdefault(name, []).extend(r.jobs for r in reps)
         rep_executed.setdefault(name, []).extend(r.executed for r in reps)
+        rep_compiles.setdefault(name, []).extend(r.compiles for r in reps)
         return min(r.wall for r in reps)
 
     # PROBE LADDER: the probe is interleaved every LADDER_EVERY queries
@@ -211,6 +214,7 @@ def main() -> None:
                 "query_reps": rep_times,
                 "query_jobs": rep_jobs,
                 "query_executed": rep_executed,
+                "query_compiles": rep_compiles,
                 "sf": sf,
                 "reps": REPS,
                 "code_cache": CODE_CACHE,

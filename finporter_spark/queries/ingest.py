@@ -197,9 +197,10 @@ def s1_csv_gzip_roundtrip(spark, sf_dir):
     )
 
 
-@query(
-    "s12_python_datasource",
-    """
+# s12 reads the staged holdings of one account; s13 round-trips all
+# of them, so its oracle is s12's without the account filter
+_S12_FILTER = "    WHERE p_partkey % 7 = 3\n"
+_S12_ORACLE = """
     SELECT 'acct-' || CAST(p_partkey % 7 AS VARCHAR) AS accountID,
            'S' || CAST(p_partkey AS VARCHAR) AS securityID,
            CASE WHEN p_partkey % 5 = 0 THEN ''
@@ -210,7 +211,12 @@ def s1_csv_gzip_roundtrip(spark, sf_dir):
                 AS TIMESTAMP) AS acquiredAt
     FROM part
     WHERE p_partkey % 7 = 3
-    """,
+    """
+
+
+@query(
+    "s12_python_datasource",
+    _S12_ORACLE,
 )
 def s12_python_datasource(spark, sf_dir):
     """S12: the custom Spark 4 Python DataSource (`format("finport")`,
@@ -272,17 +278,7 @@ def s12_python_datasource(spark, sf_dir):
 
 @query(
     "s13_datasource_roundtrip",
-    """
-    SELECT 'acct-' || CAST(p_partkey % 7 AS VARCHAR) AS accountID,
-           'S' || CAST(p_partkey AS VARCHAR) AS securityID,
-           CASE WHEN p_partkey % 5 = 0 THEN ''
-                ELSE 'L' || CAST(p_partkey % 100 AS VARCHAR) END AS lotID,
-           CAST(p_size AS DOUBLE) AS shareCount,
-           CAST(p_retailprice AS DOUBLE) AS shareBasis,
-           CAST(DATE '2021-01-01' + INTERVAL (p_partkey % 365) DAY
-                AS TIMESTAMP) AS acquiredAt
-    FROM part
-    """,
+    _S12_ORACLE.replace(_S12_FILTER, ""),
 )
 def s13_datasource_roundtrip(spark, sf_dir):
     """S13: full connector roundtrip — read the staged holdings through

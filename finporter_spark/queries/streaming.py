@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import Window, functions as F
@@ -84,6 +85,28 @@ from finporter_spark.streaming.pipeline import (
     versioned_keep_first_sink,
     versioned_keep_latest_sink,
 )
+
+
+_STATE_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+
+
+@contextmanager
+def _rocksdb_state_store(spark):
+    """Run the block's streams on the RocksDB state store, then restore
+    the session's provider (or unset it if none was set)."""
+    prev = spark.conf.get(_STATE_PROVIDER, None)
+    spark.conf.set(
+        _STATE_PROVIDER,
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    )
+    try:
+        yield
+    finally:
+        if prev is not None:
+            spark.conf.set(_STATE_PROVIDER, prev)
+        else:
+            spark.conf.unset(_STATE_PROVIDER)
 
 
 # =====================================================================
@@ -1158,14 +1181,7 @@ def x17_transform_with_state_top2(spark, sf_dir):
             F.round(F.col("value") * 100).cast("bigint").alias("iv"),
         )
     )
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    with _rocksdb_state_store(spark):
         tws = sdf.groupBy("user_id").transformWithStateInPandas(
             Top2Processor(),
             outputStructType=out_schema,
@@ -1183,11 +1199,6 @@ def x17_transform_with_state_top2(spark, sf_dir):
         out = run_stream_to_memory(
             tws, "x17_mem", output_mode="update", state_partitions=8
         )
-    finally:
-        if prev is not None:
-            spark.conf.set(prov_key, prev)
-        else:
-            spark.conf.unset(prov_key)
     w = Window.partitionBy("user_id").orderBy(F.desc("n"))
     return (
         out.withColumn("_rk", F.row_number().over(w))
@@ -1477,14 +1488,7 @@ def _x19_drained(spark, sf_dir):
             F.round(F.col("value") * 100).cast("bigint").alias("iv"),
         )
     )
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    with _rocksdb_state_store(spark):
         tws = sdf.groupBy("user_id").transformWithStateInPandas(
             SessionProcessor(),
             outputStructType=out_schema,
@@ -1501,11 +1505,6 @@ def _x19_drained(spark, sf_dir):
         return run_stream_to_memory(
             tws, "x19_mem", output_mode="append", state_partitions=8
         )
-    finally:
-        if prev is not None:
-            spark.conf.set(prov_key, prev)
-        else:
-            spark.conf.unset(prov_key)
 
 
 @query(

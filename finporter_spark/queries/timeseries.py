@@ -505,6 +505,25 @@ def w7_streaks(spark, sf_dir):
 _W11_ALPHA = 0.2
 
 
+def _w11_summed(partition: str) -> str:
+    """The closed-form EWMA tail of the w11/w11b oracles: the running
+    weighted sum ``s`` over ``ranked`` (partitioned by ``partition``)
+    and the EWMA it yields."""
+    return f"""summed AS (
+      SELECT event_type, day, v, i, v1,
+             SUM(v * power(1.0 / (1.0 - {_W11_ALPHA}), i)) OVER (
+               PARTITION BY {partition} ORDER BY day
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s
+      FROM ranked
+    )
+    SELECT event_type, day,
+           round(power(1.0 - {_W11_ALPHA}, i - 1) * v1
+                 + {_W11_ALPHA} * power(1.0 - {_W11_ALPHA}, i)
+                   * (s - v1 / (1.0 - {_W11_ALPHA})), 6) AS ewma
+    FROM summed
+    """
+
+
 @query(
     "w11_ewma_daily",
     f"""
@@ -520,19 +539,7 @@ _W11_ALPHA = 0.2
                PARTITION BY event_type, substr(day, 1, 4) ORDER BY day
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v1
       FROM daily
-    ), summed AS (
-      SELECT event_type, day, v, i, v1,
-             SUM(v * power(1.0 / (1.0 - {_W11_ALPHA}), i)) OVER (
-               PARTITION BY event_type, yr ORDER BY day
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s
-      FROM ranked
-    )
-    SELECT event_type, day,
-           round(power(1.0 - {_W11_ALPHA}, i - 1) * v1
-                 + {_W11_ALPHA} * power(1.0 - {_W11_ALPHA}, i)
-                   * (s - v1 / (1.0 - {_W11_ALPHA})), 6) AS ewma
-    FROM summed
-    """,
+    ), {_w11_summed("event_type, yr")}""",
 )
 def w11_ewma_daily(spark, sf_dir):
     """W11: exponentially weighted moving average of the daily mean
@@ -751,19 +758,7 @@ def pipe5_market_surveillance(spark, sf_dir):
                PARTITION BY event_type ORDER BY day
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v1
       FROM daily
-    ), summed AS (
-      SELECT event_type, day, v, i, v1,
-             SUM(v * power(1.0 / (1.0 - {_W11_ALPHA}), i)) OVER (
-               PARTITION BY event_type ORDER BY day
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s
-      FROM ranked
-    )
-    SELECT event_type, day,
-           round(power(1.0 - {_W11_ALPHA}, i - 1) * v1
-                 + {_W11_ALPHA} * power(1.0 - {_W11_ALPHA}, i)
-                   * (s - v1 / (1.0 - {_W11_ALPHA})), 6) AS ewma
-    FROM summed
-    """,
+    ), {_w11_summed("event_type")}""",
 )
 def w11b_ewma_unbounded(spark, sf_dir):
     """W11b: EWMA over the FULL per-instrument history with no calendar

@@ -12,6 +12,15 @@ also be the right default on a 1000-executor cluster reading 100 TB:
 - ``spark.sql.shuffle.partitions`` defaults to cores locally; on a real
   cluster AQE coalesces from a high initial count, so we set an initial
   partition number instead of trusting one magic value.
+- Spark's generated-class cache holds 1000 classes, not 100: a
+  long-lived session serving a fixed query mix (bench.py, perfbench's
+  catalog mix, a user's driver) then compiles each whole-stage-codegen
+  class once. The catalog mix's working set is 121 classes per pass,
+  and a class costs ~49 KB of Metaspace, so the cache pins at most
+  ~49 MB. The cache key includes the compiling thread's classloader,
+  and a new SparkContext brings new executor classloaders, so a session
+  restart recompiles the executor-side classes whatever the size (x22:
+  23 of its 36).
 """
 
 from __future__ import annotations
@@ -52,6 +61,16 @@ def get_session(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
+        # Generated-class cache, LRU keyed on (classloader, source).
+        # Spark's 100 is below one catalog_mix pass (x22, l30, q1, q3
+        # compile 121 classes), so every repeated pass evicted and
+        # recompiled 83-90 of them (Janino, then the JIT again). 1000
+        # is ~8x that working set and ~8x the most one query compiles
+        # (pipe7: 128 on its first run). At ~49 KB of Metaspace per
+        # class it pins at most 1000 x 49 KB ~ 49 MB; a sweep of the
+        # whole registry grew Metaspace by 155 MB at 100 and 162 MB at
+        # 1000.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # managed tables (bucketed ingest) live outside the repo tree
         .config(
             "spark.sql.warehouse.dir",

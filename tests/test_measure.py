@@ -1,4 +1,5 @@
-"""The shared measurement loop: warm run, timed reps, job counts."""
+"""The shared measurement loop: warm run, timed reps, job and compile
+counts."""
 
 from __future__ import annotations
 
@@ -23,6 +24,8 @@ def test_measure_query_counts_jobs_per_rep_in_the_query_group(spark, sf_dir):
         assert r.wall > 0
         assert r.jobs >= 1
         assert r.executed <= r.stages
+        # the warm run compiled q1's classes; the timed reps reuse them
+        assert r.compiles == 0
     grouped = set(tracker.getJobIdsForGroup("q1_pricing_summary")) - before
     # the warm run's jobs are in the group too, but not in any rep
     assert len(grouped) > sum(r.jobs for r in reps)

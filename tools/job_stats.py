@@ -14,6 +14,8 @@ that a later job skips (its shuffle output is reused) counts once per
 job that lists it; ``executed`` counts the distinct stages that
 completed tasks, which is the work that actually ran. A streaming
 entry's micro-batch jobs carry the tag too, so they are counted.
+``compiles`` counts the generated classes a rep compiled; a timed rep
+that still compiles generates source that differs from run to run.
 """
 
 from __future__ import annotations
@@ -54,6 +56,7 @@ def main() -> None:
             + f" jobs_per_rep={[r.jobs for r in reps]}"
             + f" stages_per_rep={[r.stages for r in reps]}"
             + f" executed_per_rep={[r.executed for r in reps]}"
+            + f" compiles_per_rep={[r.compiles for r in reps]}"
         )
 
 

@@ -3,7 +3,7 @@
 ``session`` starts the measuring session and warms it up;
 ``measure_query`` times one query into the ``noop`` sink (the full plan
 runs, nothing is collected to the driver) and counts the Spark jobs and
-stages each run launched.
+stages each run launched and the generated classes it compiled.
 """
 
 from __future__ import annotations
@@ -17,22 +17,41 @@ from pyspark.sql import DataFrame, SparkSession
 from finporter_spark.queries.catalog import catalog_queries
 from finporter_spark.session import get_session
 
-# A wide catalog generates one whole-stage-codegen class per distinct
-# plan. Past ~150 queries the JVM's default 240 MB code cache fills, the
-# JIT stops compiling, and everything after runs slower (measured: the
-# q1 probe drifted 1.19 -> 1.55 s over a 156-query suite, a 30% spread).
+# The JVM's code cache holds JIT-compiled machine code. A wide catalog
+# generates one whole-stage-codegen class per distinct plan, and the JIT
+# compiles the hot ones. Past ~150 queries the default 240 MB code cache
+# fills, the JIT stops compiling, and everything after runs slower
+# (measured: the q1 probe drifted 1.19 -> 1.55 s over a 156-query suite,
+# a 30% spread). Spark's cache of the generated classes themselves is a
+# different cache, sized in ``get_session``
+# (``spark.sql.codegen.cache.maxEntries``).
 CODE_CACHE = "768m"
 WARMUP = "q1_pricing_summary"
 
 
 class Rep(NamedTuple):
     """One timed run: wall seconds, jobs under the query's job tag, the
-    stage ids those jobs list, and the distinct stages that ran tasks."""
+    stage ids those jobs list, the distinct stages that ran tasks, and
+    the generated classes Janino compiled (Spark's codegen class cache
+    missed)."""
 
     wall: float
     jobs: int
     stages: int
     executed: int
+    compiles: int
+
+
+def compile_count(spark: SparkSession) -> int:
+    """Generated classes this JVM has compiled so far: the event count
+    of Spark's ``CodegenMetrics`` compilation-time histogram, which
+    ``CodeGenerator`` updates on every codegen class-cache miss. The
+    counter is JVM-wide, so a delta over a run counts that run only
+    while nothing else runs in the JVM."""
+    return (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount()
+    )
 
 
 def session(app: str, sf_dir: str) -> SparkSession:
@@ -73,7 +92,9 @@ def measure_query(
     ``stages`` sums the stage ids each job lists, so a stage that a
     later job skips (its shuffle output is reused) counts once per job
     that lists it; ``executed`` counts the distinct stages that
-    completed tasks, which is the work that actually ran.
+    completed tasks, which is the work that actually ran. ``compiles``
+    is the :func:`compile_count` delta over the run, read outside the
+    timed span; a steady-state plan whose classes stay cached reads 0.
     """
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -81,6 +102,7 @@ def measure_query(
     out: list[Rep] = []
     for r in range(reps + 1):
         before = set(tagged(name))
+        compiled = compile_count(spark)
         sc.setJobGroup(name, name)
         sc.addJobTag(name)
         try:
@@ -91,6 +113,7 @@ def measure_query(
             sc.removeJobTag(name)
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
+        compiles = compile_count(spark) - compiled
         gc.collect()
         if r == 0:
             continue
@@ -101,5 +124,5 @@ def measure_query(
         executed = sum(
             1 for si in stage_infos if si and si.numCompletedTasks > 0
         )
-        out.append(Rep(wall, len(ids), len(stage_ids), executed))
+        out.append(Rep(wall, len(ids), len(stage_ids), executed, compiles))
     return out
