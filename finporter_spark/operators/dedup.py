@@ -12,6 +12,8 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from finporter_spark.caching import load_or_build
+
 
 def normalized_text(col: Column) -> Column:
     """Canonical text normalization for hashing: lowercase, collapse
@@ -208,34 +210,27 @@ def load_or_build_signatures(
 
     ``fingerprint`` identifies the corpus version (use
     ``operators.scale.source_fingerprint``); the build params are folded
-    into the staged marker so changing k or n forces a rebuild even at
-    the same path. A missing/stale/corrupt cache rebuilds and overwrites
-    — reuse can never serve signatures of a regenerated corpus.
+    into the cache key so changing k or n forces a rebuild even at the
+    same path. Cache rules: :func:`caching.load_or_build`.
 
     At 100 TB this is the difference between one signature pass per
     corpus snapshot (~#docs x k longs on disk, trivially small next to
     the text) and one per dedup job.
     """
-    import os
-
     spark = df.sparkSession
     key = f"{fingerprint}|n={shingle_n}|k={num_hashes}|id={id_col}"
     if hash_family != "xxhash64":  # keep pre-existing cache keys valid
         key += f"|hf={hash_family}"
-    marker = os.path.join(cache_path, "_staged_fingerprint")
-    try:
-        with open(marker) as fh:
-            if fh.read() == key:
-                return spark.read.parquet(cache_path)
-    except OSError:
-        pass
-    sig = minhash_signatures(
-        df, text_col, id_col, shingle_n, num_hashes, hash_family
+
+    def build(path):
+        minhash_signatures(
+            df, text_col, id_col, shingle_n, num_hashes, hash_family
+        ).write.mode("overwrite").parquet(path)
+        return spark.read.parquet(path)
+
+    return load_or_build(
+        cache_path, key, build, lambda: spark.read.parquet(cache_path)
     )
-    sig.write.mode("overwrite").parquet(cache_path)
-    with open(marker, "w") as fh:
-        fh.write(key)
-    return spark.read.parquet(cache_path)
 
 
 def band_hash(b: int, rows_per_band: int, hash_family: str) -> Column:

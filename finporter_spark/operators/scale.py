@@ -25,6 +25,8 @@ from typing import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from finporter_spark.caching import load_or_build
+
 # partial/merge expression pairs per algebraic aggregate
 _ALGEBRAIC = {
     "sum": (F.sum, F.sum),
@@ -180,25 +182,14 @@ def ensure_bucketed(
 
     Bucketing is a pay-the-shuffle-once-at-ingest strategy, so re-shuffling
     and rewriting the table on every query defeats the point. When ``path``
-    already holds a completed write (``_SUCCESS``) whose recorded
-    ``fingerprint`` matches, this registers the existing files as an
-    external bucketed table — pure DDL, no data movement. A changed
-    fingerprint (the caller derives it from the source files) forces a
-    restage, so regenerated inputs can never serve stale buckets.
+    holds a write staged for ``fingerprint`` (the caller derives it from
+    the source files), this registers the existing files as an external
+    bucketed table — pure DDL, no data movement. Cache rules:
+    :func:`caching.load_or_build`; no ``path`` writes the table each call.
     """
-    if not path:
-        write_bucketed(df, table, bucket_keys, n_buckets, sort_keys, path)
-        return
     spark = df.sparkSession
-    marker = os.path.join(path, "_bucket_fingerprint")
-    staged = os.path.exists(os.path.join(path, "_SUCCESS"))
-    if staged and fingerprint is not None:
-        try:
-            with open(marker) as fh:
-                staged = fh.read() == fingerprint
-        except OSError:
-            staged = False
-    if staged:
+
+    def register():
         if not spark.catalog.tableExists(table):
             cols = ", ".join(
                 f"`{f.name}` {f.dataType.simpleString()}"
@@ -212,11 +203,16 @@ def ensure_bucketed(
                 f"CLUSTERED BY ({', '.join(bucket_keys)}){sort} "
                 f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
             )
-        return
-    write_bucketed(df, table, bucket_keys, n_buckets, sort_keys, path)
-    if fingerprint is not None:
-        with open(marker, "w") as fh:
-            fh.write(fingerprint)
+        return table
+
+    load_or_build(
+        path or None,
+        fingerprint,
+        lambda p: write_bucketed(
+            df, table, bucket_keys, n_buckets, sort_keys, p
+        ),
+        register,
+    )
 
 
 def source_fingerprint(*paths: str) -> str:

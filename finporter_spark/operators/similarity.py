@@ -19,21 +19,19 @@ Python. One implementation per method:
 Every approximate path pins its decisions (6 dp rounds, lowest-index
 ties, left-folded sums) so a DuckDB oracle grades it by full value hash.
 Corpus-derived state (quantizers, codebooks, codes) is cached on disk by
-``_load_or_build``.
+``caching.load_or_build``.
 """
 
 from __future__ import annotations
 
-import logging
 import os
-from pathlib import Path
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-_log = logging.getLogger("finporter_spark")
+from finporter_spark.caching import load_or_build
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -493,41 +491,6 @@ def _sq_dist_array_sql(
     return f"array({entries})"
 
 
-def _load_or_build(path, fingerprint, marker, read, build, write):
-    """Serve corpus-derived ANN state (quantizer, codebooks, codes) from
-    the dataset-state cache at ``path``, or build and persist it.
-
-    ``read()`` returns the cached value, or None when its shape does not
-    match the caller's parameters; ``write(value)`` persists a fresh
-    ``build()`` and returns what to serve. A rebuild happens only when
-    ``_SUCCESS`` is absent (never written, or an interrupted write), when
-    ``fingerprint`` is given and the ``marker`` file is missing or
-    different, or when ``read`` returns None. Any other error raises: a
-    cache Spark cannot read must not retrain inside a timed query. Every
-    hit and rebuild is logged with the path and the rebuild reason.
-    ``path`` None builds without caching."""
-    if path is None:
-        return build()
-    marker_path = Path(path, marker)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        reason = "no _SUCCESS"
-    elif fingerprint is not None and not marker_path.exists():
-        reason = f"no {marker} marker"
-    elif fingerprint is not None and marker_path.read_text() != fingerprint:
-        reason = "fingerprint changed"
-    else:
-        value = read()
-        if value is not None:
-            _log.info("ANN cache hit: %s", path)
-            return value
-        reason = "cached shape does not match the parameters"
-    _log.info("ANN cache rebuild: %s (%s)", path, reason)
-    value = write(build())
-    if fingerprint is not None:
-        marker_path.write_text(fingerprint)
-    return value
-
-
 def load_or_train_centroids_det(
     vectors: DataFrame,
     id_col: str,
@@ -550,7 +513,7 @@ def load_or_train_centroids_det(
     corpus-DERIVED, so after a testdata regeneration a stale quantizer
     must retrain, not silently feed wrong cells to everything
     downstream (the codes-cache guard is only as strong as the caches
-    it derives from). Cache rules: :func:`_load_or_build`."""
+    it derives from). Cache rules: :func:`caching.load_or_build`."""
     spark = vectors.sparkSession
 
     def read():
@@ -564,18 +527,18 @@ def load_or_train_centroids_det(
             return out
         return None
 
-    def write(centroids):
-        spark.createDataFrame(
-            [(i, c) for i, c in enumerate(centroids)],
-            "cid int, vec array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(cache_path)
+    def build(path):
+        centroids = kmeans_fit(
+            vectors, id_col, vec_col, k=n_centroids, iters=iters
+        )
+        if path is not None:
+            spark.createDataFrame(
+                [(i, c) for i, c in enumerate(centroids)],
+                "cid int, vec array<double>",
+            ).coalesce(1).write.mode("overwrite").parquet(path)
         return centroids
 
-    return _load_or_build(
-        cache_path, fingerprint, "_fp", read,
-        lambda: kmeans_fit(vectors, id_col, vec_col, k=n_centroids, iters=iters),
-        write,
-    )
+    return load_or_build(cache_path, fingerprint, build, read)
 
 
 def ivf_knn_det(
@@ -1807,22 +1770,20 @@ def load_or_train_pq_books(
             return books
         return None
 
-    def write(books):
-        spark.createDataFrame(
-            [
-                (s, i, c)
-                for s, b in enumerate(books)
-                for i, c in enumerate(b)
-            ],
-            "sub int, cid int, vec array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(cache_path)
+    def build(path):
+        books = pq_fit(vectors, id_col, vec_col, m=m, k=k, iters=iters)
+        if path is not None:
+            spark.createDataFrame(
+                [
+                    (s, i, c)
+                    for s, b in enumerate(books)
+                    for i, c in enumerate(b)
+                ],
+                "sub int, cid int, vec array<double>",
+            ).coalesce(1).write.mode("overwrite").parquet(path)
         return books
 
-    return _load_or_build(
-        cache_path, fingerprint, "_fp", read,
-        lambda: pq_fit(vectors, id_col, vec_col, m=m, k=k, iters=iters),
-        write,
-    )
+    return load_or_build(cache_path, fingerprint, build, read)
 
 
 def build_ivfadc_codes(
@@ -1880,13 +1841,10 @@ def load_or_build_ivfadc_codes(
     semantically (oracle hashes unchanged, asserted in tests).
 
     ``fingerprint`` (recommended): a stamp of the SOURCE corpus (e.g.
-    ``operators.scale.source_fingerprint`` over its parquet files).
-    Unlike the KB-sized centroid/codebook caches, the codes table is
-    corpus-sized and corpus-DERIVED — serving it against regenerated
-    testdata would silently return the old corpus's index. With a
-    fingerprint the cache carries a ``_codes_fingerprint`` marker
-    (underscore-prefixed: invisible to the parquet reader) and a
-    mismatch rebuilds instead of serving stale codes."""
+    ``operators.scale.source_fingerprint`` over its parquet files), so
+    regenerated testdata rebuilds the corpus-sized codes instead of
+    serving the old corpus's index. Cache rules:
+    :func:`caching.load_or_build`."""
     spark = corpus.sparkSession
     m = len(codebooks)
     cols = ["cand_id", "_cell"] + [f"_c{i}" for i in range(m)]
@@ -1900,15 +1858,14 @@ def load_or_build_ivfadc_codes(
             return cached.select(*cols)
         return None
 
-    def write(enc):
-        enc.write.mode("overwrite").parquet(cache_path)
-        return spark.read.parquet(cache_path).select(*cols)
+    def build(path):
+        enc = builder(corpus, id_col, vec_col, centroids, codebooks)
+        if path is None:
+            return enc
+        enc.write.mode("overwrite").parquet(path)
+        return spark.read.parquet(path).select(*cols)
 
-    return _load_or_build(
-        cache_path, fingerprint, "_codes_fingerprint", read,
-        lambda: builder(corpus, id_col, vec_col, centroids, codebooks),
-        write,
-    )
+    return load_or_build(cache_path, fingerprint, build, read)
 
 
 def _centroid_df(spark, centroids: list[list[float]]) -> DataFrame:

@@ -38,6 +38,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from finporter_spark.caching import load_or_build
+
 END = "</w>"  # end-of-word marker, the classic Sennrich et al. formulation
 
 
@@ -128,31 +130,32 @@ def load_or_train_merges(
     """Merge table as persisted dataset state (the IVF-centroid pattern):
     one distributed word-frequency pass per corpus version, then the
     vocabulary-sized merge loop, persisted as parquet (rank, left,
-    right). A stale/missing cache retrains; the fingerprint folds in
-    n_merges so changing the budget rebuilds."""
-    import os
-
+    right). A stale/missing cache retrains; the cache key folds in
+    n_merges so changing the budget rebuilds. Cache rules:
+    :func:`caching.load_or_build`."""
     spark = df.sparkSession
-    key = f"{fingerprint}|merges={n_merges}|col={text_col}"
-    marker = os.path.join(cache_path, "_staged_fingerprint")
-    try:
-        with open(marker) as fh:
-            if fh.read() == key:
-                rows = spark.read.parquet(cache_path).orderBy("rank").collect()
-                return [(r.left, r.right) for r in rows]
-    except OSError:
-        pass
-    wf = [(r.word, r.freq) for r in word_frequencies(df, text_col).collect()]
-    # vocabulary-sized driver state: |distinct words| entries, NOT corpus
-    wf.sort()  # engine-order independence before deterministic training
-    merges = train_bpe(wf, n_merges)
-    spark.createDataFrame(
-        [(i, l, r) for i, (l, r) in enumerate(merges)],
-        "rank int, left string, right string",
-    ).write.mode("overwrite").parquet(cache_path)
-    with open(marker, "w") as fh:
-        fh.write(key)
-    return merges
+
+    def build(path):
+        wf = [
+            (r.word, r.freq) for r in word_frequencies(df, text_col).collect()
+        ]
+        # vocabulary-sized driver state: |distinct words| entries, NOT corpus
+        wf.sort()  # engine-order independence before deterministic training
+        merges = train_bpe(wf, n_merges)
+        spark.createDataFrame(
+            [(i, l, r) for i, (l, r) in enumerate(merges)],
+            "rank int, left string, right string",
+        ).write.mode("overwrite").parquet(path)
+        return merges
+
+    def read():
+        rows = spark.read.parquet(cache_path).orderBy("rank").collect()
+        return [(r.left, r.right) for r in rows]
+
+    return load_or_build(
+        cache_path, f"{fingerprint}|merges={n_merges}|col={text_col}",
+        build, read,
+    )
 
 
 def bpe_encode(

@@ -23,7 +23,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from finporter_spark.operators.scale import source_fingerprint
 from finporter_spark.queries.catalog import CATALOG, _t, query
 from finporter_spark.queries.relational import _P18_JSON_CTE, _p18_json_expr
 from finporter_spark.queries.staging import (
@@ -331,25 +330,18 @@ def s8_partitioned_prune(spark, sf_dir):
     (``partitionBy("order_month")``), then read back filtered to three
     months — the scan touches only those directories (PartitionFilters;
     plan-asserted in tests/test_plans.py). At 100 TB this is the
-    difference between reading 3 months and reading 7 years. Staging
-    reuses the z1 pattern: written once per (sf_dir, source mtimes)."""
-    path = _io_dir(sf_dir, "s8")
-    fp = source_fingerprint(os.path.join(sf_dir, "orders.parquet"))
-    marker = os.path.join(path, "_staged_fingerprint")
-    staged = False
-    try:
-        with open(marker) as fh:
-            staged = fh.read() == fp
-    except OSError:
-        pass
-    if not staged:
-        _t(spark, sf_dir, "orders").select(
+    difference between reading 3 months and reading 7 years. The layout
+    is staged once per (sf_dir, orders mtimes) by :func:`_stage_once`."""
+    path = _stage_once(
+        sf_dir,
+        "s8",
+        lambda p: _t(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_totalprice",
             F.date_format("o_orderdate", "yyyy-MM").alias("order_month"),
-        ).write.mode("overwrite").partitionBy("order_month").parquet(path)
-        with open(marker, "w") as fh:
-            fh.write(fp)
+        ).write.mode("overwrite").partitionBy("order_month").parquet(p),
+        "orders",
+    )
     months = ["1995-01", "1995-02", "1995-03"]
     return (
         spark.read.parquet(path)

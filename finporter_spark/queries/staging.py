@@ -10,10 +10,9 @@ after a testdata regeneration.
 from __future__ import annotations
 
 import hashlib
-import logging
 import os
 
-_log = logging.getLogger("finporter_spark")
+from finporter_spark.caching import load_or_build
 
 IO_ROOT = "/tmp/finporter_spark_io"
 
@@ -45,39 +44,19 @@ def stage_once(sf_dir, name, write_fn, *source_tables, extra_fingerprint=""):
 
     Staging drops (the CSV backlog a stream drains, the partitioned or
     bucketed layout a query reads) are INPUT fixtures, not the operator
-    under test — rewriting them per call just re-times the ingest. A
-    stat-based fingerprint of the source parquet files is recorded after
-    the write; a mismatch (regenerated testdata, or a changed
-    ``extra_fingerprint`` — e.g. the staged layout) forces a restage, so
-    reuse can never serve stale data. Each call logs
-    ``staging hit: <path>`` or ``staging rebuild: <path> (<reason>)`` at
-    INFO on the ``finporter_spark`` logger. Returns the staged path.
+    under test — rewriting them per call just re-times the ingest. The
+    drop at :func:`io_dir` is keyed on :func:`src_fp` of the source
+    tables plus ``extra_fingerprint`` (e.g. the staged layout), so
+    regenerated testdata or a changed layout restages. Reuse, restage
+    and logging follow :func:`finporter_spark.caching.load_or_build`;
+    ``write_fn(path)`` writes into a cleared ``path``. Returns the
+    staged path.
     """
-    from finporter_spark.operators.scale import source_fingerprint
-
     path = io_dir(sf_dir, name)
-    fp = source_fingerprint(
-        *[os.path.join(sf_dir, f"{t}.parquet") for t in source_tables]
-    )
+    fp = src_fp(sf_dir, *source_tables)
     if extra_fingerprint:
         fp = f"{fp}|{extra_fingerprint}"
-    marker = os.path.join(path, "_staged_fingerprint")
-    try:
-        with open(marker) as fh:
-            staged = fh.read()
-    except FileNotFoundError:
-        staged = None
-    if staged == fp:
-        _log.info("staging hit: %s", path)
-        return path
-    reason = (
-        "no _staged_fingerprint marker" if staged is None
-        else "fingerprint changed"
-    )
-    _log.info("staging rebuild: %s (%s)", path, reason)
-    write_fn(path)
-    with open(marker, "w") as fh:
-        fh.write(fp)
+    load_or_build(path, fp, write_fn, lambda: path)
     return path
 
 

@@ -1,12 +1,11 @@
-"""format("allocdata") Python DataSource: detect-by-header, per-file
-partitions, typed decode parity with the column-expression importer."""
+"""Python DataSources: the ``format("finport")`` batch, write and stream
+paths, plus the quarantine cache lifetime (``caching``)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from finporter_spark.sources.datasource import AllocDataSource
 
 def _drain(rdr, part):
     """Consume FinportReader.read (Arrow RecordBatches) into row tuples."""
@@ -14,65 +13,6 @@ def _drain(rdr, part):
     for batch in rdr.read(part):
         rows += [tuple(d.values()) for d in batch.to_pylist()]
     return rows
-
-
-HOLDINGS = (
-    "accountID,securityID,lotID,shareCount,shareBasis,acquiredAt\n"
-    "acc1,VTI,,10.25,175.5,2021-03-01T00:00:00Z\n"
-    "acc1,BND,lot9,5.0,,2020-10-31\n"
-)
-
-
-@pytest.fixture(scope="module")
-def registered(spark):
-    spark.dataSource.register(AllocDataSource)
-    return spark
-
-
-def test_detects_entity_and_types(registered, tmp_path):
-    (tmp_path / "h.csv").write_text(HOLDINGS)
-    df = registered.read.format("allocdata").load(str(tmp_path))
-    assert df.schema.simpleString() == (
-        "struct<accountID:string,securityID:string,lotID:string,"
-        "shareCount:double,shareBasis:double,acquiredAt:timestamp>"
-    )
-    rows = {r.securityID: r for r in df.collect()}
-    assert rows["VTI"].lotID == ""  # required key: empty, not null
-    assert rows["BND"].shareBasis is None  # optional empty -> null
-    assert rows["BND"].acquiredAt.hour == 0  # bare date, default tod
-
-
-def test_partition_per_file(registered, tmp_path):
-    (tmp_path / "a.csv").write_text(HOLDINGS)
-    (tmp_path / "b.csv").write_text(HOLDINGS)
-    df = registered.read.format("allocdata").load(str(tmp_path))
-    assert df.rdd.getNumPartitions() == 2
-    assert df.count() == 4
-
-
-def test_tod_tz_options(registered, tmp_path):
-    (tmp_path / "h.csv").write_text(HOLDINGS)
-    df = (
-        registered.read.format("allocdata")
-        .option("schema", "allocHolding")
-        .option("tod", "13:00:00")
-        .option("tz", "America/New_York")
-        .load(str(tmp_path))
-    )
-    bnd = df.filter(F.col("securityID") == "BND").first()
-    # 2020-10-31 13:00 EDT == 17:00 UTC
-    assert (bnd.acquiredAt.hour, bnd.acquiredAt.minute) == (17, 0)
-
-
-def test_matches_expression_importer(registered, tmp_path):
-    from finporter_spark.importers.allocdata import AllocDataImporter
-
-    (tmp_path / "h.csv").write_text(HOLDINGS)
-    via_ds = registered.read.format("allocdata").load(str(tmp_path))
-    via_exprs, _bad = AllocDataImporter().decode(registered, str(tmp_path))
-    assert sorted(map(tuple, via_ds.collect())) == sorted(
-        map(tuple, via_exprs.collect())
-    )
 
 
 def test_quarantine_cache_released_after_transform(spark, tmp_path):

@@ -4,12 +4,13 @@ counts."""
 from __future__ import annotations
 
 import logging
+import os
 
 from pyspark.sql import functions as F
 
 from finporter_spark.queries import staging
 from finporter_spark.queries.catalog import catalog_queries
-from tools.measure import measure_query
+from tools.measure import RebuildCounter, measure_query
 
 
 def test_measure_query_counts_jobs_per_rep_in_the_query_group(spark, sf_dir):
@@ -70,9 +71,19 @@ def test_staging_happens_in_the_warm_run_only(
         return df
 
     with caplog.at_level(logging.INFO, logger="finporter_spark"):
-        measure_query(spark, "s10_binaryfile_scan", build, 2)
+        measured = measure_query(spark, "s10_binaryfile_scan", build, 2)
     warm, *reps = timed
     assert len(reps) == 2
     assert [m.split(":")[0] for m in warm] == ["staging rebuild"]
     for msgs in reps:
         assert msgs and all(m.startswith("staging hit") for m in msgs)
+    assert [r.rebuilds for r in measured] == [0, 0]
+    # the counter sees a rebuild with the logger left at its default level
+    os.remove(
+        os.path.join(
+            staging.io_dir(sf_dir, "s10"), "_staged_fingerprint"
+        )
+    )
+    with RebuildCounter() as rebuilt:
+        s10(spark, sf_dir)
+    assert rebuilt.count == 1

@@ -265,31 +265,40 @@ def test_ann_cache_logs_hit_and_rebuild_reason(spark, sf_dir, tmp_path, caplog):
 
     caplog.set_level(logging.INFO, logger="finporter_spark")
     load("fp1")
-    assert f"ANN cache rebuild: {path} (no _SUCCESS)" in caplog.messages
+    assert (
+        f"staging rebuild: {path} (no _staged_fingerprint marker)"
+        in caplog.messages
+    )
     caplog.clear()
     load("fp1")
-    assert caplog.messages == [f"ANN cache hit: {path}"]
+    assert caplog.messages == [f"staging hit: {path}"]
     caplog.clear()
     load("fp2")
     assert caplog.messages == [
-        f"ANN cache rebuild: {path} (fingerprint changed)"
+        f"staging rebuild: {path} (fingerprint changed)"
     ]
-    with open(os.path.join(path, "_fp")) as fh:
+    with open(os.path.join(path, "_staged_fingerprint")) as fh:
         assert fh.read() == "fp2"
 
 
 def test_ann_cache_without_success_marker_is_rebuilt(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """A cache directory whose write never committed (no _SUCCESS) is
-    rebuilt, not read."""
+    """A build that raises halfway leaves its partial output and no
+    marker: the next call rebuilds from an empty directory instead of
+    reading the partial output."""
     import finporter_spark.operators.similarity as sim
     from finporter_spark.queries.catalog import _t
 
     emb = _t(spark, sf_dir, "embeddings")
     path = str(tmp_path / "codes")
+    marker = os.path.join(path, "_staged_fingerprint")
     cents = sim.kmeans_fit(emb, "vec_id", "embedding", k=4, iters=1)
     books = sim.pq_fit(emb, "vec_id", "embedding", m=4, k=4, iters=1)
+    build = sim.build_ivfadc_codes
+    want = sorted(
+        map(tuple, build(emb, "vec_id", "embedding", cents, books).collect())
+    )
 
     def load():
         return sim.load_or_build_ivfadc_codes(
@@ -297,22 +306,29 @@ def test_ann_cache_without_success_marker_is_rebuilt(
             cache_path=path, fingerprint="fp1",
         )
 
-    want = sorted(map(tuple, load().collect()))
-    os.remove(os.path.join(path, "_SUCCESS"))
+    def torn(*a, **kw):
+        os.makedirs(path, exist_ok=True)
+        with open(os.path.join(path, "part-00000.parquet"), "wb") as fh:
+            fh.write(b"half a parquet file")
+        raise RuntimeError("writer died halfway")
+
+    monkeypatch.setattr(sim, "build_ivfadc_codes", torn)
+    with pytest.raises(RuntimeError):
+        load()
+    assert not os.path.exists(marker)
     calls = []
-    build = sim.build_ivfadc_codes
     monkeypatch.setattr(
         sim, "build_ivfadc_codes",
         lambda *a, **kw: calls.append(1) or build(*a, **kw),
     )
     assert sorted(map(tuple, load().collect())) == want
     assert calls == [1]
-    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    assert open(marker).read() == "fp1"
 
 
 def test_ann_cache_unreadable_part_file_raises(spark, sf_dir, tmp_path, monkeypatch):
-    """A committed cache (``_SUCCESS`` and a matching fingerprint) whose
-    part file Spark cannot read raises instead of silently retraining."""
+    """A committed cache (its marker matches the fingerprint) whose part
+    file Spark cannot read raises instead of silently retraining."""
     import glob
 
     import finporter_spark.operators.similarity as sim

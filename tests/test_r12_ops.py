@@ -252,7 +252,10 @@ def test_x20_streaming_codes_equal_batch_build(spark, sf_dir):
         load_or_train_centroids_det,
     )
     from finporter_spark.queries.catalog import _t
-    from finporter_spark.queries.staging import io_dir as _io_dir
+    from finporter_spark.queries.staging import (
+        io_dir as _io_dir,
+        src_fp as _src_fp,
+    )
     from finporter_spark.queries.ann import _PQ_M, _pq_books
 
     streamed = sorted(
@@ -266,6 +269,7 @@ def test_x20_streaming_codes_equal_batch_build(spark, sf_dir):
     cents = load_or_train_centroids_det(
         emb, "vec_id", "embedding", dim=64, n_centroids=16, iters=3,
         cache_path=_io_dir(sf_dir, "l3_ivf_centroids_det_k16_d64_i3"),
+        fingerprint=_src_fp(sf_dir, "embeddings"),
     )
     batch = sorted(
         tuple(r)
@@ -455,7 +459,10 @@ def test_codes_cache_fingerprint_invalidates(spark, sf_dir):
         load_or_train_centroids_det,
     )
     from finporter_spark.queries.catalog import _t
-    from finporter_spark.queries.staging import io_dir as _io_dir
+    from finporter_spark.queries.staging import (
+        io_dir as _io_dir,
+        src_fp as _src_fp,
+    )
     from finporter_spark.queries.ann import _pq_books
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -463,6 +470,7 @@ def test_codes_cache_fingerprint_invalidates(spark, sf_dir):
     cents = load_or_train_centroids_det(
         emb, "vec_id", "embedding", dim=64, n_centroids=16, iters=3,
         cache_path=_io_dir(sf_dir, "l3_ivf_centroids_det_k16_d64_i3"),
+        fingerprint=_src_fp(sf_dir, "embeddings"),
     )
     import tempfile
 
@@ -472,7 +480,7 @@ def test_codes_cache_fingerprint_invalidates(spark, sf_dir):
         cache_path=cache, fingerprint="fpA",
     )
     n1 = c1.count()
-    marker = os.path.join(cache, "_codes_fingerprint")
+    marker = os.path.join(cache, "_staged_fingerprint")
     assert open(marker).read() == "fpA"
     mtime = os.path.getmtime(marker)
     # same fingerprint: served from cache (marker untouched)

@@ -1,10 +1,15 @@
-"""Staged input fixtures report whether they were reused or rebuilt."""
+"""Staged input fixtures and dataset-state caches follow one reuse rule
+(``caching.load_or_build``) and report whether they were reused or
+rebuilt."""
 
 from __future__ import annotations
 
 import logging
 import os
 
+import pytest
+
+import finporter_spark
 from finporter_spark.queries import staging
 
 
@@ -38,6 +43,68 @@ def test_stage_once_logs_hit_and_rebuild_reason(tmp_path, monkeypatch, caplog):
         )
         assert stage() == (path, [f"staging hit: {path}"])
     assert writes == [path, path]
+
+
+def test_a_torn_rebuild_is_never_served(tmp_path, monkeypatch, caplog):
+    """A writer that raises halfway through a restage leaves no marker,
+    so the next call rebuilds even when the source is back at the
+    version the old marker names."""
+    monkeypatch.setattr(staging, "IO_ROOT", str(tmp_path / "io"))
+    sf_dir = tmp_path / "sf0.01"
+    src = sf_dir / "events.parquet"
+    src.parent.mkdir()
+    src.write_bytes(b"v1")
+    v1 = os.stat(src)
+
+    def write(version, fail=False):
+        def write_fn(path):
+            os.makedirs(path, exist_ok=True)
+            with open(os.path.join(path, "data"), "w") as fh:
+                fh.write(version)
+            if fail:
+                raise RuntimeError("writer died halfway")
+
+        return write_fn
+
+    def served(path):
+        with open(os.path.join(path, "data")) as fh:
+            return fh.read()
+
+    path = staging.stage_once(str(sf_dir), "t", write("v1"), "events")
+    assert served(path) == "v1"
+    src.write_bytes(b"v2-longer")
+    with pytest.raises(RuntimeError):
+        staging.stage_once(
+            str(sf_dir), "t", write("HALF-WRITTEN-v2", fail=True), "events"
+        )
+    src.write_bytes(b"v1")
+    os.utime(src, ns=(v1.st_atime_ns, v1.st_mtime_ns))
+    with caplog.at_level(logging.INFO, logger="finporter_spark"):
+        staging.stage_once(str(sf_dir), "t", write("v1"), "events")
+    assert caplog.messages == [
+        f"staging rebuild: {path} (no _staged_fingerprint marker)"
+    ]
+    assert served(path) == "v1"
+
+
+def test_only_the_cache_module_knows_the_marker_names():
+    """Reuse markers are named in ``caching.py`` alone; every other
+    module reuses dataset state through ``caching.load_or_build``."""
+    root = os.path.dirname(finporter_spark.__file__)
+    named = []
+    for dirpath, _dirs, files in os.walk(root):
+        for f in files:
+            p = os.path.join(dirpath, f)
+            if not f.endswith(".py") or p == os.path.join(root, "caching.py"):
+                continue
+            with open(p) as fh:
+                text = fh.read()
+            named += [
+                f"{os.path.relpath(p, root)}: {m}"
+                for m in ("_staged_fingerprint", "_SUCCESS")
+                if m in text
+            ]
+    assert named == []
 
 
 def test_io_dir_is_keyed_on_the_dataset_not_its_basename(

@@ -37,7 +37,7 @@ sys.path.insert(0, REPO)
 
 import numpy as np
 
-from tools.measure import measure_query, session
+from tools.measure import RebuildCounter, measure_query, session
 
 SFS = [
     ("0.1", "/root/testdata/sf0.1", 16),
@@ -202,22 +202,16 @@ def main() -> None:
                 ),
                 fingerprint=fp,
             )
-        # ingest-time index build: timed ONLY when the cache is cold —
-        # cold includes a fingerprint-stale cache (the loader rebuilds
-        # on marker mismatch, so the time is a real build)
-        codes_path = _io_dir(d, f"{tag}_codes")
-        mk = os.path.join(codes_path, "_codes_fingerprint")
-        try:
-            with open(mk) as fh:
-                cold = fh.read() != fp
-        except OSError:
-            cold = True
+        # ingest-time index build: timed ONLY when the loader rebuilt the
+        # codes (cold or fingerprint-stale cache: the time is a real build)
         t0 = time.time()
-        codes = load_or_build_ivfadc_codes(
-            emb, "vec_id", "embedding", cents, books,
-            cache_path=codes_path, residual=resid, fingerprint=fp,
-        )
-        codes_build = round(time.time() - t0, 3) if cold else None
+        with RebuildCounter() as rebuilt:
+            codes = load_or_build_ivfadc_codes(
+                emb, "vec_id", "embedding", cents, books,
+                cache_path=_io_dir(d, f"{tag}_codes"), residual=resid,
+                fingerprint=fp,
+            )
+        codes_build = round(time.time() - t0, 3) if rebuilt.count else None
         queries = emb.where(
             (F.col("vec_id") % QMOD == 0) & (F.col("vec_id") < QMAX)
         )

@@ -16,6 +16,8 @@ completed tasks, which is the work that actually ran. A streaming
 entry's micro-batch jobs carry the tag too, so they are counted.
 ``compiles`` counts the generated classes a rep compiled; a timed rep
 that still compiles generates source that differs from run to run.
+``rebuilds`` counts the staged drops and dataset-state caches a rep
+rebuilt; after the warm run it should read 0.
 """
 
 from __future__ import annotations
@@ -57,6 +59,7 @@ def main() -> None:
             + f" stages_per_rep={[r.stages for r in reps]}"
             + f" executed_per_rep={[r.executed for r in reps]}"
             + f" compiles_per_rep={[r.compiles for r in reps]}"
+            + f" rebuilds_per_rep={[r.rebuilds for r in reps]}"
         )
 
 

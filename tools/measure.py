@@ -3,12 +3,14 @@
 ``session`` starts the measuring session and warms it up;
 ``measure_query`` times one query into the ``noop`` sink (the full plan
 runs, nothing is collected to the driver) and counts the Spark jobs and
-stages each run launched and the generated classes it compiled.
+stages each run launched, the generated classes it compiled and the
+dataset state it rebuilt.
 """
 
 from __future__ import annotations
 
 import gc
+import logging
 import time
 from typing import Callable, NamedTuple
 
@@ -31,15 +33,45 @@ WARMUP = "q1_pricing_summary"
 
 class Rep(NamedTuple):
     """One timed run: wall seconds, jobs under the query's job tag, the
-    stage ids those jobs list, the distinct stages that ran tasks, and
-    the generated classes Janino compiled (Spark's codegen class cache
-    missed)."""
+    stage ids those jobs list, the distinct stages that ran tasks, the
+    generated classes Janino compiled (Spark's codegen class cache
+    missed), and the staged drops and dataset-state caches rebuilt."""
 
     wall: float
     jobs: int
     stages: int
     executed: int
     compiles: int
+    rebuilds: int
+
+
+class RebuildCounter(logging.Handler):
+    """Counts the ``staging rebuild`` records that
+    ``caching.load_or_build`` logs while the ``with`` block runs
+    (``count``). The ``finporter_spark`` logger is set to INFO for the
+    block, so the records are emitted even where logging is not
+    configured; its level is restored on exit."""
+
+    _log = logging.getLogger("finporter_spark")
+
+    def __init__(self) -> None:
+        super().__init__(logging.INFO)
+        self.count = 0
+
+    def emit(self, record: logging.LogRecord) -> None:
+        if record.getMessage().startswith("staging rebuild"):
+            self.count += 1
+
+    def __enter__(self) -> "RebuildCounter":
+        self._level = self._log.level
+        if not self._log.isEnabledFor(logging.INFO):
+            self._log.setLevel(logging.INFO)
+        self._log.addHandler(self)
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self._log.removeHandler(self)
+        self._log.setLevel(self._level)
 
 
 def compile_count(spark: SparkSession) -> int:
@@ -95,6 +127,8 @@ def measure_query(
     completed tasks, which is the work that actually ran. ``compiles``
     is the :func:`compile_count` delta over the run, read outside the
     timed span; a steady-state plan whose classes stay cached reads 0.
+    ``rebuilds`` counts the dataset state the run rebuilt
+    (:class:`RebuildCounter`); a steady-state run reads 0.
     """
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -106,9 +140,10 @@ def measure_query(
         sc.setJobGroup(name, name)
         sc.addJobTag(name)
         try:
-            t0 = time.time()
-            build().write.format("noop").mode("overwrite").save()
-            wall = time.time() - t0
+            with RebuildCounter() as rebuilt:
+                t0 = time.time()
+                build().write.format("noop").mode("overwrite").save()
+                wall = time.time() - t0
         finally:
             sc.removeJobTag(name)
             sc.setLocalProperty("spark.jobGroup.id", None)
@@ -124,5 +159,10 @@ def measure_query(
         executed = sum(
             1 for si in stage_infos if si and si.numCompletedTasks > 0
         )
-        out.append(Rep(wall, len(ids), len(stage_ids), executed, compiles))
+        out.append(
+            Rep(
+                wall, len(ids), len(stage_ids), executed, compiles,
+                rebuilt.count,
+            )
+        )
     return out
