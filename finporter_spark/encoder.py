@@ -212,24 +212,15 @@ def write_delimited(
     path: str,
     delimiter: str = ",",
     columns: Sequence[str] | None = None,
-    single_file: bool = False,
 ) -> None:
-    """Distributed golden-quoting export via the text sink.
-
-    Header handling: Spark's text writer has no header option, so the header
-    is unioned in as a rank-0 line only when ``single_file`` (CLI parity);
-    the distributed path writes data-only part files (downstream Spark reads
-    re-apply the declared schema).
+    """Distributed golden-quoting export via the text sink: data-only
+    part files, no header line (downstream Spark reads re-apply the
+    declared schema). The byte-golden single file with its header is
+    :func:`write_delimited_single_file`.
     """
-    lines = to_delimited_lines(df, delimiter, columns)
-    if single_file:
-        names = list(columns) if columns is not None else df.columns
-        header_df = lines.sparkSession.createDataFrame(
-            [(encode_header(names, delimiter),)], "line string"
-        )
-        header_df.unionAll(lines).coalesce(1).write.mode("overwrite").text(path)
-    else:
-        lines.write.mode("overwrite").text(path)
+    to_delimited_lines(df, delimiter, columns).write.mode("overwrite").text(
+        path
+    )
 
 
 def write_delimited_single_file(

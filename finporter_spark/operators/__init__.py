@@ -1,4 +1,4 @@
-from finporter_spark.operators.joins import asof_join, range_join
+from finporter_spark.operators.joins import asof_join
 from finporter_spark.operators.dedup import (
     exact_dedup,
     keep_latest,
@@ -26,20 +26,17 @@ from finporter_spark.operators.scale import (
 )
 from finporter_spark.operators.similarity import (
     brute_force_knn,
-    cosine_expr,
     ivf_knn_det,
     lsh_bucket_knn_exact_probe,
 )
 from finporter_spark.operators.text import (
     language_id,
-    quality_score,
     token_count,
     fingerprint,
 )
 
 __all__ = [
     "asof_join",
-    "range_join",
     "exact_dedup",
     "keep_latest",
     "minhash_near_duplicates",
@@ -65,11 +62,9 @@ __all__ = [
     "source_fingerprint",
     "write_bucketed",
     "brute_force_knn",
-    "cosine_expr",
     "ivf_knn_det",
     "lsh_bucket_knn_exact_probe",
     "language_id",
-    "quality_score",
     "token_count",
     "fingerprint",
 ]

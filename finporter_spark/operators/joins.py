@@ -11,24 +11,6 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    condition: Column,
-    how: str = "inner",
-) -> DataFrame:
-    """Theta/range join (J5): join on an arbitrary boolean expression.
-
-    Scale note: a pure inequality join is a broadcast-nested-loop when one
-    side is small (Catalyst picks this automatically under the broadcast
-    threshold). For two LARGE sides, pre-bucket the range key into coarse
-    bins on both sides and add an equi-condition on the bin to convert the
-    BNLJ into a hash join with a residual filter — the standard interval
-    banding trick.
-    """
-    return left.join(right, on=condition, how=how)
-
-
 def count_exceeding(
     left: DataFrame,
     left_keys: Sequence[str],

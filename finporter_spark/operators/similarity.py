@@ -46,14 +46,6 @@ def _norm(a: Column) -> Column:
     return F.sqrt(_dot(a, a))
 
 
-def cosine_expr(a: Column, b: Column) -> Column:
-    """Cosine similarity of two array<numeric> columns (computed in
-    double)."""
-    ad = F.transform(a, lambda x: x.cast("double"))
-    bd = F.transform(b, lambda x: x.cast("double"))
-    return _dot(ad, bd) / (_norm(ad) * _norm(bd))
-
-
 def brute_force_knn(
     queries: DataFrame,
     candidates: DataFrame,

@@ -1,5 +1,5 @@
 """Text-analysis operators for training-data pipelines (SURVEY §2B L4):
-language ID, quality scoring, token counting, document fingerprinting.
+language ID, token counting, document fingerprinting, BM25.
 
 Everything is built-in SQL functions over the ``documents`` table — fully
 JVM-side, oracle-checkable in DuckDB, and map-only (no shuffle): these run
@@ -22,6 +22,7 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "de": ("der", "die", "das", "und", "ein", "nicht"),
 }
 
+# the English stopwords l4's stopword ratio counts
 STOPWORDS_EN = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
 # BPE-ish token pattern: word pieces OR single non-space symbols.
@@ -61,43 +62,6 @@ def language_id(
             (hit_cols[lang] > 0) & (hit_cols[lang] == best), F.lit(lang)
         ).otherwise(pred)
     return df.withColumn(out_col, pred)
-
-
-def quality_score(
-    df: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Heuristic quality features + composite score:
-
-    - n_chars / n_tokens / mean token length
-    - stopword_ratio (English stopword hits / tokens)
-    - punct_ratio (non-alphanumeric, non-space chars / chars)
-    - score: bounded combination used for threshold filtering
-    """
-    t = F.col(text_col)
-    toks = tokens(t)
-    n_tok = F.size(toks)
-    n_chars = F.length(t)
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS_EN])
-    n_stop = F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x)))
-    n_punct = F.length(F.regexp_replace(t, r"[A-Za-z0-9\s]", ""))
-    mean_tok_len = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-    ) / F.nullif(n_tok.cast("double"), F.lit(0.0))
-    stop_ratio = n_stop / F.nullif(n_tok.cast("double"), F.lit(0.0))
-    punct_ratio = n_punct / F.nullif(n_chars.cast("double"), F.lit(0.0))
-    score = (
-        F.least(n_tok / F.lit(100.0), F.lit(1.0)) * 0.4
-        + F.least(stop_ratio * 5.0, F.lit(1.0)) * 0.4
-        + (1.0 - F.least(punct_ratio * 10.0, F.lit(1.0))) * 0.2
-    )
-    return df.select(
-        *df.columns,
-        n_tok.alias("n_tokens"),
-        F.round(mean_tok_len, 6).alias("mean_token_len"),
-        F.round(stop_ratio, 6).alias("stopword_ratio"),
-        F.round(punct_ratio, 6).alias("punct_ratio"),
-        F.round(score, 6).alias("quality"),
-    )
 
 
 def fingerprint(col: Column) -> Column:

@@ -172,6 +172,49 @@ def m2_image_resize(spark, sf_dir):
     return _resized_png_stats(spark, sf_dir, "m2_media", _make)
 
 
+def _frame_means(
+    spark, sf_dir, name, level, n_frames, mux, every_n_frames=1
+):
+    """The m3/m6/m8/m9/m10 pipeline: stage one container per doc
+    holding ``n_frames(doc_id)`` block-constant 16x16 JPEG frames,
+    frame ``f`` at gray ``level(doc_id, f)``, packed by ``mux(frames)``;
+    demux it with ``sample_frames`` (keeping every ``every_n_frames``-th
+    frame) and decode each kept frame's mean. Levels are even, so they
+    survive the DCT quantizer round-trip exactly."""
+
+    def _make(batches):
+        for pdf in batches:
+            content = [
+                mux(
+                    [
+                        jpeg_encode(
+                            np.full((16, 16, 1), level(i, f), np.uint8)
+                        )
+                        for f in range(n_frames(i))
+                    ]
+                )
+                for i in map(int, pdf["doc_id"])
+            ]
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": content})
+
+    def _mean(batches):
+        for pdf in batches:
+            means = [int(jpeg_decode(bytes(b)).mean()) for b in pdf["frame"]]
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "frame_idx": pdf["frame_idx"],
+                    "frame_mean": pd.array(means, dtype="int64"),
+                }
+            )
+
+    media = _stage_media(spark, sf_dir, name, _make)
+    frames = sample_frames(media, "content", every_n_frames=every_n_frames)
+    return frames.mapInPandas(
+        _mean, "doc_id bigint, frame_idx int, frame_mean bigint"
+    )
+
+
 @query(
     "m3_frame_sample",
     """
@@ -195,41 +238,12 @@ def m3_frame_sample(spark, sf_dir):
     kept frame Huffman-decodes to a block-constant image whose mean the
     oracle predicts exactly (even values survive the DCT quantizer
     round-trip, as in m8)."""
-    def _make(batches):
-        for pdf in batches:
-            content = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                content.append(
-                    b"".join(
-                        jpeg_encode(
-                            np.full(
-                                (16, 16, 1),
-                                ((i * 5 + f * 7) % 128) * 2,
-                                np.uint8,
-                            )
-                        )
-                        for f in range(i % 6 + 3)
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": content})
-
-    media = _stage_media(spark, sf_dir, "m3_media", _make)
-    frames = sample_frames(media, "content", every_n_frames=2)  # REAL demux
-
-    def _mean(batches):
-        for pdf in batches:
-            means = [int(jpeg_decode(bytes(b)).mean()) for b in pdf["frame"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "frame_idx": pdf["frame_idx"],
-                    "frame_mean": pd.array(means, dtype="int64"),
-                }
-            )
-
-    return frames.mapInPandas(
-        _mean, "doc_id bigint, frame_idx int, frame_mean bigint"
+    return _frame_means(
+        spark, sf_dir, "m3_media",
+        level=lambda i, f: ((i * 5 + f * 7) % 128) * 2,
+        n_frames=lambda i: i % 6 + 3,
+        mux=b"".join,
+        every_n_frames=2,
     )
 
 
@@ -345,38 +359,11 @@ def m6_mjpeg_frames(spark, sf_dir):
     Huffman-decoded and averaged. Frames are block-constant at even
     value ((doc_id + f) * 2) % 256, so decode is exact and the oracle
     predicts every frame mean."""
-    def _make(batches):
-        for pdf in batches:
-            content = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                stream = b"".join(
-                    jpeg_encode(
-                        np.full((16, 16, 1), ((i + f) * 2) % 256, np.uint8)
-                    )
-                    for f in range(i % 3 + 1)
-                )
-                content.append(stream)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": content})
-
-    media = _stage_media(spark, sf_dir, "m6_media", _make)
-    frames = sample_frames(media, "content")  # REAL MJPEG demux
-
-    def _mean(batches):
-        for pdf in batches:
-            means = [
-                int(jpeg_decode(bytes(b)).mean()) for b in pdf["frame"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "frame_idx": pdf["frame_idx"],
-                    "frame_mean": pd.array(means, dtype="int64"),
-                }
-            )
-
-    return frames.mapInPandas(
-        _mean, "doc_id bigint, frame_idx int, frame_mean bigint"
+    return _frame_means(
+        spark, sf_dir, "m6_media",
+        level=lambda i, f: ((i + f) * 2) % 256,
+        n_frames=lambda i: i % 3 + 1,
+        mux=b"".join,
     )
 
 
@@ -446,40 +433,11 @@ def m8_mp4_frames(spark, sf_dir):
     DCT quantizer round-trip)."""
     from finporter_spark.operators.mp4 import mp4_mux
 
-    def _make(batches):
-        for pdf in batches:
-            content = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                frames = [
-                    jpeg_encode(
-                        np.full(
-                            (16, 16, 1),
-                            ((i * 3 + f * 5) % 128) * 2,
-                            np.uint8,
-                        )
-                    )
-                    for f in range(i % 4 + 2)
-                ]
-                content.append(mp4_mux(frames, samples_per_chunk=2))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": content})
-
-    media = _stage_media(spark, sf_dir, "m8_media", _make)
-    frames = sample_frames(media, "content")  # REAL ISO BMFF demux
-
-    def _mean(batches):
-        for pdf in batches:
-            means = [int(jpeg_decode(bytes(b)).mean()) for b in pdf["frame"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "frame_idx": pdf["frame_idx"],
-                    "frame_mean": pd.array(means, dtype="int64"),
-                }
-            )
-
-    return frames.mapInPandas(
-        _mean, "doc_id bigint, frame_idx int, frame_mean bigint"
+    return _frame_means(
+        spark, sf_dir, "m8_media",
+        level=lambda i, f: ((i * 3 + f * 5) % 128) * 2,
+        n_frames=lambda i: i % 4 + 2,
+        mux=lambda frames: mp4_mux(frames, samples_per_chunk=2),
     )
 
 
@@ -509,40 +467,11 @@ def m9_mkv_frames(spark, sf_dir):
     round-trip)."""
     from finporter_spark.operators.mkv import mkv_mux
 
-    def _make(batches):
-        for pdf in batches:
-            content = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                frames = [
-                    jpeg_encode(
-                        np.full(
-                            (16, 16, 1),
-                            ((i * 7 + f * 11) % 128) * 2,
-                            np.uint8,
-                        )
-                    )
-                    for f in range(i % 5 + 2)
-                ]
-                content.append(mkv_mux(frames, frames_per_block=2))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": content})
-
-    media = _stage_media(spark, sf_dir, "m9_media", _make)
-    frames = sample_frames(media, "content")  # REAL EBML demux
-
-    def _mean(batches):
-        for pdf in batches:
-            means = [int(jpeg_decode(bytes(b)).mean()) for b in pdf["frame"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "frame_idx": pdf["frame_idx"],
-                    "frame_mean": pd.array(means, dtype="int64"),
-                }
-            )
-
-    return frames.mapInPandas(
-        _mean, "doc_id bigint, frame_idx int, frame_mean bigint"
+    return _frame_means(
+        spark, sf_dir, "m9_media",
+        level=lambda i, f: ((i * 7 + f * 11) % 128) * 2,
+        n_frames=lambda i: i % 5 + 2,
+        mux=lambda frames: mkv_mux(frames, frames_per_block=2),
     )
 
 
@@ -629,40 +558,11 @@ def m10_avi_frames(spark, sf_dir):
     oracle predicts exactly."""
     from finporter_spark.operators.avi import avi_mux
 
-    def _make(batches):
-        for pdf in batches:
-            content = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                frames = [
-                    jpeg_encode(
-                        np.full(
-                            (16, 16, 1),
-                            ((i * 5 + f * 3) % 128) * 2,
-                            np.uint8,
-                        )
-                    )
-                    for f in range(i % 3 + 2)
-                ]
-                content.append(avi_mux(frames))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": content})
-
-    media = _stage_media(spark, sf_dir, "m10_media", _make)
-    frames = sample_frames(media, "content")  # REAL RIFF demux
-
-    def _mean(batches):
-        for pdf in batches:
-            means = [int(jpeg_decode(bytes(b)).mean()) for b in pdf["frame"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "frame_idx": pdf["frame_idx"],
-                    "frame_mean": pd.array(means, dtype="int64"),
-                }
-            )
-
-    return frames.mapInPandas(
-        _mean, "doc_id bigint, frame_idx int, frame_mean bigint"
+    return _frame_means(
+        spark, sf_dir, "m10_media",
+        level=lambda i, f: ((i * 5 + f * 3) % 128) * 2,
+        n_frames=lambda i: i % 3 + 2,
+        mux=avi_mux,
     )
 
 

@@ -837,9 +837,9 @@ def x11_stream_budget_gate(spark, sf_dir):
 def x12_datasource_stream(spark, sf_dir):
     """X12: the finport connector's STREAMING read path
     (`spark.readStream.format("finport")`, a Spark 4
-    SimpleDataSourceStreamReader): a directory tail with file-granular
-    offsets — the consumed-file set IS the offset, so checkpoint replay
-    re-decodes exactly the files between two offsets (exactly-once;
+    SimpleDataSourceStreamReader): a directory tail with byte-granular
+    offsets cut at record boundaries, so checkpoint replay re-decodes
+    exactly the byte ranges between two offsets (exactly-once;
     incremental offset semantics unit-tested directly in
     tests/test_datasource.py). Drains the s12 fixture and aggregates in
     complete mode, so the drained answer equals the batch relational

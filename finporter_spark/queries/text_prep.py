@@ -37,6 +37,7 @@ from finporter_spark.operators.prep import (
 from finporter_spark.operators.scale import global_rank, source_fingerprint
 from finporter_spark.operators.text import (
     LANG_MARKERS,
+    STOPWORDS_EN,
     TOKEN_RE,
     bm25_scores,
     fingerprint,
@@ -269,9 +270,7 @@ def l4_quality_score(spark, sf_dir):
     t = F.col("text")
     toks = tokens(t)
     n_tok = F.size(toks)
-    stop = F.array(
-        *[F.lit(s) for s in ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")]
-    )
+    stop = F.array(*[F.lit(s) for s in STOPWORDS_EN])
     return d.select(
         "doc_id",
         n_tok.alias("n_tokens"),

@@ -157,19 +157,6 @@ def read_csv(spark: SparkSession, path: str, **kw) -> DataFrame:
     return read_delimited(spark, path, ",", **kw)
 
 
-def read_tsv(spark: SparkSession, path: str, **kw) -> DataFrame:
-    return read_delimited(spark, path, "\t", **kw)
-
-
-def read_json(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
-    reader = spark.read.option("mode", "PERMISSIVE").option(
-        "columnNameOfCorruptRecord", CORRUPT_COL
-    )
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 

@@ -1,47 +1,65 @@
-"""`format("finport")` — a real Spark 4 Python DataSource for the
+"""`format("finport")` — a Spark 4 Python DataSource for the
 standardized AllocData HOLDING export (the "Detect-as-DataSource"
-candidate from SURVEY §4, now implemented).
+candidate from SURVEY §4).
 
 A user points `spark.read.format("finport").load(dir)` at a directory of
 AllocData holding CSVs (header = the declared attribute order,
-`FINporter.swift:62,66`; typed-decode rules per field mirroring
-`importers/allocdata.typed_projection`) and gets the typed DataFrame with
-no driver-side handler involved:
+`FINporter.swift:62,66`) and gets the typed DataFrame with no
+driver-side handler involved:
 
 - **one InputPartition per file** — files decode in parallel on
-  executors, scaling with the file count exactly like Spark's native
-  CSV source (partition-local pure-Python parse: executors have no
-  SparkSession, so the importer's DataFrame decode cannot run there —
-  a connector re-expresses decode row-locally by design);
-- **filter pushdown** (`pushFilters`): EqualTo / IsNotNull /
-  In on any column are absorbed and applied during the partition read,
-  so filtered rows never cross the Python→JVM Arrow boundary; every
-  other predicate is returned to Spark to evaluate;
+  executors. Executors have no SparkSession, so the importer's
+  DataFrame decode cannot run there; the connector applies the same
+  rules to pandas columns instead (below);
+- **filter pushdown** (`pushFilters`): EqualTo / IsNotNull / In on any
+  column are absorbed and applied to the decoded batch, so filtered
+  rows never cross the Python→JVM Arrow boundary; every other predicate
+  is returned to Spark to evaluate;
 - header verification per file: a file whose first line is not the
   declared HOLDING header raises (the detect contract — wrong-entity
   files must fail loudly, not decode garbage).
 
-The decode parser is the EXACT inverse of the golden encoding
-(``_golden_field`` / ``encoder.format_field``, DelimitedEncoder.swift
-semantics): every ``"`` is written as ``\\"``; a field is wrapped in
-quotes only when it contains the delimiter (or a newline — see below).
-A generic ``csv.reader`` cannot parse this dialect: a field containing
-BOTH a quote and the delimiter (``a"b,c`` → ``"a\\"b,c"``) confuses
-RFC-4180 doubling rules and silently shifts every later column. The
-hand-rolled state machine here round-trips it exactly, supports raw
-newlines inside quoted fields, and RAISES on a row with more fields
-than the header (malformed input must fail loudly, never shift).
+Text becomes string columns in one of two ways, picked from the bytes.
+Text with no ``"``, ``\\`` or bare CR is plain comma-split, which
+pandas' C reader does. Anything else goes through ``_parse_golden``, the
+exact inverse of the golden encoding (``_golden_field`` /
+``encoder.format_field``, DelimitedEncoder.swift semantics): every
+``"`` is written as ``\\"``, and a field is wrapped in quotes only when
+it contains the delimiter or a newline. A generic ``csv.reader``
+cannot parse this dialect: a field holding BOTH a quote and the
+delimiter (``a"b,c`` → ``"a\\"b,c"``) confuses RFC-4180 doubling rules
+and shifts every later column. Either way a row with more fields than
+the header raises, and a short row pads with empty fields.
 
-Decode rules (same semantics as the Spark-side importer):
-required string keys decode empty fields to "" (never null); doubles
-via try-float (invalid → null); timestamps accept ISO
-`yyyy-MM-dd'T'HH:mm:ss[Z]` and bare `yyyy-MM-dd` (midnight).
+``_typed_frame`` then applies the decode rules of
+``importers/allocdata.typed_projection``. Every reader, batch and
+stream, goes through it:
+
+- required string keys: an empty or missing field is "" (never null);
+- doubles: the field, trimmed of spaces and ASCII control characters,
+  must be what Spark's ``try_cast(... AS DOUBLE)`` reads — Java's
+  ``Double.parseDouble`` grammar: optional sign, digits with an
+  optional fraction and exponent, an optional ``d``/``f`` suffix
+  (``1d`` is 1.0), hex ``0x1.8p1``, ``NaN`` and ``Infinity``, plus
+  Spark's case-insensitive ``inf``, ``infinity`` and ``nan``. Anything
+  else (``1_000``, ``1,000``) is null. ``NaN`` stays NaN, not null;
+- timestamps: the field, trimmed of spaces, is
+  ``yyyy-MM-dd'T'HH:mm:ss`` with an optional 1-3 digit fraction and an
+  optional zone (``Z`` or ``±HH:MM`` up to ±18:00, converted to UTC),
+  or a bare ``yyyy-MM-dd`` at midnight UTC — the importer's
+  ``_TS_FORMATS`` plus its bare-date fallback. Anything else is null.
+
+Spark reads one shape this decoder does not: instants outside the
+years 0001-9999, which Python's ``datetime`` cannot hold
+(``0000-01-01``, ``-0001-01-01``, or ``9999-12-31T23:00:00-05:00``,
+whose UTC instant is in the year 10000). They decode to null.
 """
 
 from __future__ import annotations
 
 import io
 import os
+import re
 from datetime import datetime
 
 from dataclasses import dataclass
@@ -75,34 +93,118 @@ HOLDING_FIELDS = [
     ("acquiredAt", TimestampType(), True),
 ]
 _HEADER = [n for n, _, _ in HOLDING_FIELDS]
-_REQUIRED_STR = {n for n, t, nullable in HOLDING_FIELDS if not nullable}
 _DOUBLE = {n for n, t, _ in HOLDING_FIELDS if isinstance(t, DoubleType)}
 _TS = {n for n, t, _ in HOLDING_FIELDS if isinstance(t, TimestampType)}
 
+# what Spark's string -> double cast accepts (see the module docstring)
+_DOUBLE_SHAPE = re.compile(
+    r"[+-]?(?:(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?[dDfF]?"
+    r"|0[xX](?:[0-9a-fA-F]+\.?[0-9a-fA-F]*|\.[0-9a-fA-F]+)"
+    r"[pP][+-]?[0-9]+[dDfF]?"
+    r"|NaN|Infinity)"
+    r"|(?i:nan|[+-]?inf(?:inity)?)"
+)
+_DOUBLE_BLANKS = "".join(map(chr, range(33)))
+# the importer's timestamp shapes: ISO with an optional fraction and
+# zone, or a bare date
+_TS_SHAPE = (
+    r"^(?P<day>[0-9]{4}-[0-9]{2}-[0-9]{2})"
+    r"(?:T(?P<time>[0-9]{2}:[0-9]{2}:[0-9]{2})(?:\.(?P<frac>[0-9]{1,3}))?"
+    r"(?:[Zz]|(?P<sign>[+-])(?P<hh>[0-9]{2}):(?P<mm>[0-9]{2}))?)?$"
+)
+_WALL_FORMAT = "%Y-%m-%dT%H:%M:%S.%f"
 
-def _parse_ts(s: str):
-    s = s.strip()
-    if not s:
-        return None
-    # ISO-Z first (what the golden encoder and the finport writer emit),
-    # then zoneless ISO, then bare date at midnight — the same
-    # precedence as importers/allocdata.typed_projection
-    for fmt in ("%Y-%m-%dT%H:%M:%SZ", "%Y-%m-%dT%H:%M:%S", "%Y-%m-%d"):
-        try:
-            return datetime.strptime(s, fmt)
-        except ValueError:
-            continue
-    return None
 
-
-def _parse_double(s: str):
-    s = s.strip()
-    if not s:
-        return None
+def _parse_ts(wall):
+    """A wall clock in ``_WALL_FORMAT`` that pandas' ns range cannot
+    hold (years before 1677 or after 2262), as a ``datetime``; None for
+    an impossible date or a year before 0001."""
     try:
-        return float(s)
+        return datetime.strptime(wall, _WALL_FORMAT)
     except ValueError:
         return None
+
+
+def _typed_double(col):
+    """String column -> float64 column with a null mask, so a parsed
+    NaN stays NaN while an unparseable field is null."""
+    import numpy as np
+    import pandas as pd
+
+    s = col.str.strip(_DOUBLE_BLANKS)
+    ok = s.str.fullmatch(_DOUBLE_SHAPE).to_numpy(dtype=bool)
+    vals = np.full(len(s), np.nan)
+    if ok.any():
+        num = s[ok].to_numpy(dtype=object)
+        try:
+            vals[ok] = num.astype("float64")
+        except ValueError:  # a d/f suffix or a hex literal: row-wise
+            vals[ok] = [_java_double(v) for v in num]
+    return pd.Series(pd.arrays.FloatingArray(vals, ~ok), index=col.index)
+
+
+def _java_double(v: str) -> float:
+    """One ``_DOUBLE_SHAPE`` match as a float."""
+    if v[-1] in "dDfF" and v[-2] in "0123456789.":
+        v = v[:-1]
+    return float.fromhex(v) if "x" in v.lower() else float(v)
+
+
+def _typed_ts(col):
+    """String column -> naive UTC ``datetime64[us]`` column."""
+    import numpy as np
+    import pandas as pd
+
+    s = col.str.strip(" ")
+    p = s.str.extract(_TS_SHAPE)
+    wall = (
+        p["day"] + "T" + p["time"].fillna("00:00:00") + "."
+        + p["frac"].fillna("0")
+    )
+    t = pd.to_datetime(wall, format=_WALL_FORMAT, errors="coerce")
+    t = t.astype("datetime64[us]")
+    # the ns parse NaTs valid dates outside 1677..2262; the us column
+    # holds them, so only those rows take the row-wise parse
+    left = wall.notna() & t.isna()
+    if left.any():
+        t.loc[left] = wall[left].map(_parse_ts).astype("datetime64[us]")
+    hh = p["hh"].astype("float64").fillna(0)
+    mm = p["mm"].astype("float64").fillna(0)
+    off = (hh * 60 + mm).where(p["sign"] != "-", -(hh * 60 + mm))
+    t = t - (off.to_numpy() * 60_000_000).astype("int64").astype(
+        "timedelta64[us]"
+    )
+    # zone offsets stop at ±18:00 (java.time.ZoneOffset), and rows must
+    # stay inside the years a Python datetime holds (0001-9999)
+    return t.where(
+        (mm < 60)
+        & (off.abs() <= 18 * 60)
+        & t.between(np.datetime64(datetime.min), np.datetime64(datetime.max))
+    )
+
+
+def _typed_frame(raw):
+    """The one decode: a frame of HOLDING string columns ("" for blank
+    or missing fields) -> the typed frame."""
+    import pandas as pd
+
+    def typed(name):
+        col = raw[name]
+        decode = (
+            _typed_double
+            if name in _DOUBLE
+            else _typed_ts
+            if name in _TS
+            else None
+        )
+        if decode is None:
+            return col
+        # each distinct field is typed once: dates and prices repeat
+        codes, uniq = pd.factorize(col)
+        out = decode(pd.Series(uniq, dtype=object)).array.take(codes)
+        return pd.Series(out, index=col.index)
+
+    return pd.DataFrame({n: typed(n) for n in _HEADER})
 
 
 # ---------------------------------------------------------------------
@@ -115,20 +217,16 @@ def _parse_golden(text: str, delimiter: str = ","):
 
     Returns ``(records, tail, open_quote)`` where ``records`` is a list
     of ``(fields, end_char_index)`` for every NEWLINE-TERMINATED record
-    (``end_char_index`` points just past the terminating newline — a
-    record boundary, which the streaming reader uses as a resumable
-    byte-stable cut), ``tail`` is the field list of a final record with
-    no trailing newline (or None), and ``open_quote`` is True when EOF
-    hit inside an unterminated quoted field (the tail is then
-    un-resumable garbage for a batch reader and merely "not yet
-    complete" for a tailing stream reader).
+    (``end_char_index`` points just past the terminating newline),
+    ``tail`` is the field list of a final record with no trailing
+    newline (or None), and ``open_quote`` is True when EOF hit inside an
+    unterminated quoted field.
 
     Dialect (DelimitedEncoder.swift:130-140): ``\\"`` is a literal
     quote ANYWHERE (quoted or not — the encoder escapes first, wraps
     second); an initial ``"`` opens a quoted span in which the
     delimiter and raw newlines are literal; the closing quote ends the
-    span. Blank lines are skipped (matching csv.reader's behavior in
-    the previous implementation).
+    span. Blank lines are skipped.
     """
     records: list = []
     fields: list = []
@@ -191,29 +289,6 @@ def _parse_golden(text: str, delimiter: str = ","):
     return records, tail, in_q
 
 
-def _typed_tuple(fields: list, where: str):
-    """Apply the importer's typed-decode rules to one parsed record;
-    raises on a row wider than the declared header (a correctly parsed
-    over-wide row means malformed input — fail loudly, never shift)."""
-    if len(fields) > len(_HEADER):
-        raise ValueError(
-            f"finport: {where}: row has {len(fields)} fields but the "
-            f"HOLDING header declares {len(_HEADER)} — malformed input"
-        )
-    row = {}
-    for name, raw in zip(_HEADER, fields):
-        if name in _DOUBLE:
-            row[name] = _parse_double(raw)
-        elif name in _TS:
-            row[name] = _parse_ts(raw)
-        else:
-            # parser already unescaped \" -> "; required keys are ""
-            row[name] = raw
-    for name in _HEADER[len(fields):]:  # short row: trailing nulls
-        row[name] = "" if name in _REQUIRED_STR else None
-    return row
-
-
 def _check_header(fields: list, where: str) -> None:
     if fields != _HEADER:
         raise ValueError(
@@ -222,105 +297,89 @@ def _check_header(fields: list, where: str) -> None:
         )
 
 
+def _overwide(where: str) -> ValueError:
+    return ValueError(
+        f"finport: {where}: row wider than the declared "
+        f"{len(_HEADER)}-column HOLDING header — malformed input"
+    )
+
+
+def _string_frame(text: str, where: str, header: bool = True):
+    """Golden-dialect text -> one string column per HOLDING field, ""
+    for blank or missing fields. ``header`` says whether the text starts
+    with the header line (checked, then dropped)."""
+    import pandas as pd
+
+    # pandas also ends a line at a bare CR, which the dialect reads as
+    # field content
+    bare_cr = text.count("\r") != text.count("\r\n")
+    if '"' in text or "\\" in text or bare_cr:
+        records, tail, open_q = _parse_golden(text)
+        if open_q:
+            raise ValueError(
+                f"finport: {where} ends inside an unterminated "
+                "quoted field — truncated or malformed input"
+            )
+        recs = [f for f, _ in records] + ([tail] if tail else [])
+        if header:
+            if not recs:
+                raise ValueError(
+                    f"finport: {where} is empty (missing the "
+                    "declared HOLDING header)"
+                )
+            _check_header(recs[0], where)
+            recs = recs[1:]
+        if any(len(r) > len(_HEADER) for r in recs):
+            raise _overwide(where)
+        return pd.DataFrame(
+            [r + [""] * (len(_HEADER) - len(r)) for r in recs],
+            columns=_HEADER,
+            dtype=object,
+        )
+    if header:
+        _check_header(text.split("\n", 1)[0].rstrip("\r").split(","), where)
+    # with no quotes, a line's field count is its comma count + 1: this
+    # catches a 7th field even when it is empty (a trailing comma)
+    if pd.Series(text.split("\n")).str.count(",").max() >= len(_HEADER):
+        raise _overwide(where)
+    return pd.read_csv(
+        io.StringIO(text),
+        dtype=str,
+        names=_HEADER,
+        header=None,
+        skiprows=int(header),
+        index_col=False,
+        keep_default_na=False,
+        skip_blank_lines=True,
+    )
+
+
+def _pdf_to_arrow(pdf):
+    """Typed frame -> one Arrow RecordBatch in the declared HOLDING
+    schema."""
+    import pyarrow as pa
+
+    schema = pa.schema(
+        [
+            pa.field(
+                n,
+                pa.float64()
+                if n in _DOUBLE
+                else pa.timestamp("us")
+                if n in _TS
+                else pa.string(),
+            )
+            for n in _HEADER
+        ]
+    )
+    return pa.RecordBatch.from_pandas(
+        pdf, schema=schema, preserve_index=False
+    )
+
+
 class _FilePartition(InputPartition):
     def __init__(self, path: str):
         self.path = path
-
-
-def _vectorized_frame(text: str, where: str):
-    """Arrow fast path for files with NO quote/escape bytes anywhere
-    (the overwhelmingly common case for machine-written holdings): the
-    golden dialect degenerates to plain comma-split, so pandas' C
-    reader parses it and the typed-decode rules apply as vectorized
-    column ops — same semantics as ``_typed_tuple`` (try-float → null,
-    the exact 3 accepted timestamp shapes via regex prefilter, required
-    strings never null, short rows pad, over-wide rows raise). Returns
-    a pandas DataFrame or None when the file needs the state machine."""
-    import pandas as pd
-
-    if '"' in text or "\\" in text:
-        return None
-    first = text.split("\n", 1)[0].rstrip("\r")
-    _check_header(first.split(","), where)
-    # over-wide precheck: with no quotes anywhere, field count is
-    # comma count + 1 per line — one vectorized pass catches a 7th
-    # field EVEN WHEN EMPTY (a trailing comma), which the sentinel
-    # column below cannot distinguish from a short row's padding
-    if (
-        pd.Series(text.split("\n")).str.count(",").max()
-        >= len(_HEADER)
-    ):
-        raise ValueError(
-            f"finport: {where}: row wider than the declared "
-            f"{len(_HEADER)}-column HOLDING header — malformed input"
-        )
-    try:
-        # parse with one extra sentinel column: a 7-field row lands in
-        # it (raise), an 8+-field row trips the tokenizer (raise) — an
-        # over-wide row must never be silently dropped or index-inferred
-        pdf = pd.read_csv(
-            io.StringIO(text),
-            dtype=str,
-            names=_HEADER + ["_overwide"],
-            header=None,
-            skiprows=1,
-            index_col=False,
-            keep_default_na=False,
-            skip_blank_lines=True,
-        )
-        # backup to the comma precheck (short rows pad with '' here)
-        bad = pdf["_overwide"].notna() & (pdf["_overwide"] != "")
-        if bad.any():
-            raise ValueError(
-                f"finport: {where}: row wider than the declared "
-                f"{len(_HEADER)}-column HOLDING header — malformed input"
-            )
-        pdf = pdf.drop(columns="_overwide")
-    except pd.errors.ParserError as exc:
-        # the C tokenizer reports over-wide rows ("saw N fields") —
-        # surface it under the same loud contract as the state machine
-        raise ValueError(
-            f"finport: {where}: row wider than the declared "
-            f"{len(_HEADER)}-column HOLDING header — malformed input "
-            f"({exc})"
-        ) from None
-    out = {}
-    for name in _HEADER:
-        # keep_default_na=False keeps empty fields as ''; only rows
-        # SHORTER than the header yield real NaN (pad like _typed_tuple)
-        col = pdf[name]
-        filled = col.where(col.notna(), "")
-        if name in _DOUBLE:
-            out[name] = pd.to_numeric(
-                filled.str.strip().replace("", None), errors="coerce"
-            ).astype("float64")
-        elif name in _TS:
-            # the exact _parse_ts precedence, each format vectorized
-            s = filled.str.strip()
-            r = pd.to_datetime(
-                s, format="%Y-%m-%dT%H:%M:%SZ", errors="coerce"
-            )
-            for fmt in ("%Y-%m-%dT%H:%M:%S", "%Y-%m-%d"):
-                r = r.fillna(
-                    pd.to_datetime(s, format=fmt, errors="coerce")
-                )
-            # pd.to_datetime targets ns, whose range is 1677..2262 —
-            # valid-but-ancient dates coerce to NaT there even though
-            # the pa.timestamp('us') output type represents them; widen
-            # to us and row-decode only the values ns could not hold
-            # (same semantics as _parse_ts, exercised rarely)
-            r = r.astype("datetime64[us]")
-            left = s.ne("") & r.isna()
-            if left.any():
-                r.loc[left] = (
-                    s[left].map(_parse_ts).astype("datetime64[us]")
-                )
-            out[name] = r
-        elif name in _REQUIRED_STR:
-            out[name] = filled
-        else:
-            out[name] = col.where(col.notna(), None)
-    return pd.DataFrame(out)
 
 
 class FinportReader(DataSourceReader):
@@ -351,27 +410,14 @@ class FinportReader(DataSourceReader):
             )
         return [_FilePartition(p) for p in files]
 
-    def _keep(self, row: dict) -> bool:
-        for f in self._pushed:
-            v = row[f.attribute[0]]
-            if isinstance(f, EqualTo):
-                if v != f.value:
-                    return False
-            elif isinstance(f, In):
-                if v not in f.value:
-                    return False
-            elif isinstance(f, IsNotNull):
-                if v is None:
-                    return False
-        return True
-
     def _mask(self, pdf):
-        """Vectorized form of ``_keep`` over the fast-path frame."""
+        """The pushed filters over the typed frame (a null never
+        matches EqualTo or In)."""
         mask = None
         for f in self._pushed:
             col = pdf[f.attribute[0]]
             if isinstance(f, EqualTo):
-                m = col == f.value
+                m = (col == f.value).fillna(False).astype(bool)
             elif isinstance(f, In):
                 m = col.isin(list(f.value))
             else:  # IsNotNull
@@ -379,59 +425,14 @@ class FinportReader(DataSourceReader):
             mask = m if mask is None else (mask & m)
         return mask
 
-    def _slow_frame(self, text: str, where: str):
-        """State-machine path (quotes/escapes present): parse records,
-        typed-decode row-wise, return a pandas frame of kept rows."""
-        import pandas as pd
-
-        records, tail, open_q = _parse_golden(text)
-        if open_q:
-            raise ValueError(
-                f"finport: {where} ends inside an unterminated "
-                "quoted field — truncated or malformed input"
-            )
-        all_recs = [f for f, _ in records] + ([tail] if tail else [])
-        if not all_recs:
-            raise ValueError(
-                f"finport: {where} is empty (missing the "
-                "declared HOLDING header)"
-            )
-        _check_header(all_recs[0], where)
-        rows = [
-            row
-            for row in (
-                _typed_tuple(rec, where) for rec in all_recs[1:]
-            )
-            if self._keep(row)
-        ]
-        pdf = pd.DataFrame(
-            {n: [r[n] for r in rows] for n in _HEADER}
-            if rows
-            else {n: [] for n in _HEADER}
-        )
-        for n in _TS:
-            # straight object(datetime|None) -> us, NOT pd.to_datetime:
-            # the ns intermediate silently NaT-s years outside
-            # 1677..2262 that _parse_ts decoded correctly
-            pdf[n] = pdf[n].astype("datetime64[us]")
-        for n in _DOUBLE:
-            pdf[n] = pdf[n].astype("float64")
-        return pdf
-
     def read(self, partition):
-        """Yields one Arrow RecordBatch per file — columnar transfer
-        across the Python→JVM boundary instead of per-row pickling;
-        quote-free files additionally decode via vectorized pandas ops
-        (``_vectorized_frame``) rather than the per-char state machine."""
+        """Yields one Arrow RecordBatch per file."""
         with io.open(partition.path, encoding="utf-8", newline="") as fh:
             text = fh.read()
-        pdf = _vectorized_frame(text, partition.path)
-        if pdf is not None:
-            mask = self._mask(pdf)
-            if mask is not None:
-                pdf = pdf[mask]
-        else:
-            pdf = self._slow_frame(text, partition.path)
+        pdf = _typed_frame(_string_frame(text, partition.path))
+        mask = self._mask(pdf)
+        if mask is not None:
+            pdf = pdf[mask]
         yield _pdf_to_arrow(pdf)
 
 
@@ -644,76 +645,54 @@ def _utf8_prefix(data: bytes) -> str:
     )
 
 
-def _parse_complete_slice(text: str, start: int, end: int, where: str):
-    """Parse a recorded [start, end) slice that MUST consist of whole
-    records (both ends are boundaries a previous listing recorded):
-    raises the append-only violation otherwise, strips the header when
-    the slice starts at byte 0, returns the raw field lists. Shared by
-    the simple reader's replay path and the parallel reader's executor
-    decode so the replay contract has exactly one implementation."""
-    records, tail, open_q = _parse_golden(text)
-    if tail is not None or open_q:
+def _slice_frame(data: bytes, where: str, lo: int):
+    """Typed frame of a recorded byte range that starts at byte ``lo``
+    of a file: both ends are record boundaries a previous listing
+    recorded, so the range is whole records (the one at byte 0 starts
+    with the header). A range that no longer ends at a record boundary
+    raises."""
+    text = data.decode("utf-8")
+    if not text.endswith("\n"):
         raise ValueError(
-            f"finport: {where}: recorded offset range [{start},{end}) "
-            "no longer ends at a record boundary — consumed bytes "
-            "were rewritten in place (append-only contract)"
+            f"finport: {where}: recorded offset range [{lo},"
+            f"{lo + len(data)}) no longer ends at a record boundary — "
+            "consumed bytes were rewritten in place (append-only contract)"
         )
-    recs = [f for f, _ in records]
-    if start == 0 and recs:
-        _check_header(recs[0], where)
-        recs = recs[1:]
-    return recs
+    return _typed_frame(_string_frame(text, where, header=lo == 0))
 
 
-def _pdf_to_arrow(pdf):
-    """Typed pandas frame -> one Arrow RecordBatch in the declared
-    HOLDING schema (the single place the dtype mapping lives)."""
-    import pyarrow as pa
+def _read_range(path: str, lo: int, hi: int):
+    with open(path, "rb") as fh:
+        fh.seek(lo)
+        return _slice_frame(fh.read(hi - lo), path, lo)
 
-    schema = pa.schema(
-        [
-            pa.field(
-                n,
-                pa.float64()
-                if n in _DOUBLE
-                else pa.timestamp("us")
-                if n in _TS
-                else pa.string(),
-            )
-            for n in _HEADER
-        ]
-    )
-    for n in _TS:
-        pdf[n] = pdf[n].astype("datetime64[us]")
-    for n in _DOUBLE:
-        pdf[n] = pdf[n].astype("float64")
-    return pa.RecordBatch.from_pandas(
-        pdf, schema=schema, preserve_index=False
-    )
+
+def _rows(pdf) -> list:
+    """Typed frame -> row tuples (nulls as None, timestamps as
+    ``datetime``) for the simple stream reader."""
+    batch = _pdf_to_arrow(pdf)
+    return list(zip(*(c.to_pylist() for c in batch.columns)))
 
 
 class FinportStreamReader(SimpleDataSourceStreamReader):
     """Micro-batch source over a growing directory of holding CSVs.
 
     Offset = ``{"seen": {filename: consumed_bytes}}`` — byte-granular,
-    cut at COMPLETE-RECORD boundaries only (the parser reports where
-    each newline-terminated record ends, so a file an external producer
-    is still appending to is consumed up to its last complete record
-    and the remainder picked up by a later batch; a half-written final
-    line is never consumed, and therefore never replayed differently
-    once the file completes). ``readBetweenOffsets`` re-decodes exactly
-    the recorded byte ranges, so checkpoint replay after restart is
-    deterministic even for files that have since grown (exactly-once on
-    top of the checkpoint log). Files must be append-only while under
-    the watched directory (rewriting consumed bytes in place breaks any
-    file-tailing source's replay contract, including Spark's own).
+    cut at COMPLETE-RECORD boundaries only (``_scan_boundary`` finds
+    where the last newline-terminated record ends, so a file an
+    external producer is still appending to is consumed up to its last
+    complete record and the remainder picked up by a later batch; a
+    half-written final line is never consumed, and therefore never
+    replayed differently once the file completes). ``readBetweenOffsets``
+    re-decodes exactly the recorded byte ranges, so checkpoint replay
+    after restart is deterministic even for files that have since grown
+    (exactly-once on top of the checkpoint log). Files must be
+    append-only while under the watched directory (rewriting consumed
+    bytes in place breaks any file-tailing source's replay contract,
+    including Spark's own).
 
-    Legacy file-granular offsets (``{"seen": [names]}``) migrate on
-    first contact: each listed file's current last-complete-record
-    boundary is pinned into the new offset, so later appends flow and
-    replay ranges are deterministic from that batch on. A tail stuck
-    inside an unterminated quoted field fails loudly once it can no
-    longer be a legitimate in-progress multi-line field (see
+    A tail stuck inside an unterminated quoted field fails loudly once
+    it can no longer be a legitimate in-progress multi-line field (see
     ``_check_open_quote``) instead of silently stalling the file."""
 
     # a file whose tail sits inside an open quoted field is normally a
@@ -751,45 +730,46 @@ class FinportStreamReader(SimpleDataSourceStreamReader):
     @staticmethod
     def _seen(offset: dict) -> dict:
         seen = offset.get("seen", {})
-        if isinstance(seen, list):  # legacy file-granular offset
-            return {name: -1 for name in seen}
+        if not isinstance(seen, dict):
+            raise ValueError(
+                "finport: legacy file-granular offsets "
+                '({"seen": [names]}) are not supported — restart from a '
+                "fresh checkpoint"
+            )
         return {str(k): int(v) for k, v in seen.items()}
 
-    def _decode_range(self, name: str, start: int, end: int):
-        """Decode the byte range [start, end) of one file — both ends
-        are record boundaries recorded by a previous listing, so the
-        slice is valid UTF-8 and parses to whole records. A range
-        starting at 0 must begin with the declared header."""
-        full = os.path.join(self.path, name)
-        with open(full, "rb") as fh:
-            fh.seek(start)
-            data = fh.read(end - start)
-        recs = _parse_complete_slice(data.decode("utf-8"), start, end, full)
-        return [
-            tuple(row[n] for n in _HEADER)
-            for row in (_typed_tuple(r, full) for r in recs)
-        ]
+    def _ranges(self, start: dict, end: dict):
+        """(path, lo, hi) of every file range between two offsets."""
+        s_seen, e_seen = self._seen(start), self._seen(end)
+        for name in sorted(e_seen):
+            lo, hi = s_seen.get(name, 0), e_seen[name]
+            if hi > lo:
+                yield os.path.join(self.path, name), lo, hi
 
-    def _migrated_boundary(self, name: str) -> int:
-        """First contact with a legacy whole-file offset: pin the file's
-        CURRENT last-complete-record byte boundary into the migrated
-        offset (one O(file) parse, once per legacy file). Pinning makes
-        every later replay range deterministic and lets subsequent
-        read() calls consume appends the legacy format would have
-        skipped forever. Bytes appended between the legacy offset's
-        commit and this migration are treated as consumed — the legacy
-        format recorded no boundary to distinguish them, and it would
-        never have emitted them either."""
+    def _advance(self, name: str, prev: int):
+        """``(boundary, data)``: the last complete-record boundary of
+        file ``name`` at or past ``prev``, and the bytes [prev,
+        boundary). Per-trigger cost is O(new bytes): an unchanged file
+        is skipped on its size, and only the suffix past ``prev`` is
+        read and scanned."""
         full = os.path.join(self.path, name)
+        size = os.path.getsize(full)
+        if size <= prev:
+            self._open_quote.pop(name, None)
+            return prev, b""
         with open(full, "rb") as fh:
+            fh.seek(prev)
             data = fh.read()
-        # validate encoding first (fail-loud contract: interior garbage
-        # raises here, a mid-multibyte truncated tail is tolerated),
-        # then take the boundary from the vectorized scan — decode is
-        # C-speed; only the record PARSE was the cost being avoided
+        # validate the encoding first (interior garbage raises; a
+        # truncated multibyte tail is an append in progress), then find
+        # the boundary with the byte scan — no record parse
         _utf8_prefix(data)
-        boundary, _open_q = _scan_boundary(data)
-        return boundary
+        rel, open_q = _scan_boundary(data)
+        if open_q:
+            self._check_open_quote(name, prev + rel, size)
+        else:
+            self._open_quote.pop(name, None)
+        return prev + rel, data[:rel]
 
     def _check_open_quote(self, name: str, boundary: int, size: int):
         """Track a file whose unconsumed tail is inside an open quoted
@@ -825,72 +805,17 @@ class FinportStreamReader(SimpleDataSourceStreamReader):
         rows: list = []
         for name in self._files():
             prev = seen.get(name, 0)
-            if prev < 0:  # legacy whole-file offset: migrate by pinning
-                end[name] = self._migrated_boundary(name)
-                continue  # consumed-whole under the old format: no rows
-            full = os.path.join(self.path, name)
-            # per-trigger cost must be O(new bytes), not O(file): stat
-            # first (skip unchanged files without opening), then seek to
-            # the recorded boundary and read/parse ONLY the suffix —
-            # prev is always a record boundary, so the suffix parses
-            # standalone (header expected only when prev == 0)
-            size = os.path.getsize(full)
-            if size <= prev:
-                self._open_quote.pop(name, None)
-                continue
-            with open(full, "rb") as fh:
-                fh.seek(prev)
-                data = fh.read()
-            text = _utf8_prefix(data)
-            records, _tail, open_q = _parse_golden(text)
-            recs = [f for f, _ in records]
-            boundary = prev + (
-                len(text[: records[-1][1]].encode("utf-8"))
-                if records
-                else 0
-            )
-            if open_q:
-                self._check_open_quote(name, boundary, size)
-            else:
-                self._open_quote.pop(name, None)
-            if not recs:
-                continue  # no complete record yet
-            if prev == 0:
-                _check_header(recs[0], full)
-                recs = recs[1:]
-            rows.extend(
-                tuple(row[n] for n in _HEADER)
-                for row in (_typed_tuple(r, full) for r in recs)
-            )
-            end[name] = boundary
+            boundary, data = self._advance(name, prev)
+            if boundary > prev:
+                full = os.path.join(self.path, name)
+                rows.extend(_rows(_slice_frame(data, full, prev)))
+                end[name] = boundary
         return iter(rows), {"seen": end}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        s_seen, e_seen = self._seen(start), self._seen(end)
         rows: list = []
-        for name in sorted(e_seen):
-            lo, hi = s_seen.get(name, 0), e_seen[name]
-            if hi < 0:
-                if lo < 0:
-                    # legacy offset in BOTH: the file was consumed in an
-                    # earlier batch — this batch replays none of it
-                    continue
-                # legacy end only: a batch recorded by the OLD
-                # file-granular format consumed the file whole. No byte
-                # boundary was recorded, so replay to the last
-                # complete-record boundary as of NOW — the one replay
-                # range that cannot be pinned (documented migration
-                # cost; every offset written since pins byte ranges).
-                # lo is kept when non-negative: a byte-boundary start
-                # paired with a legacy end (version downgrade/upgrade)
-                # must not replay rows before lo a second time
-                hi = self._migrated_boundary(name)
-            elif lo < 0:
-                # the MIGRATION batch: it pinned the boundary and
-                # emitted no rows for this file — replay none
-                continue
-            if hi > max(lo, 0):
-                rows.extend(self._decode_range(name, max(lo, 0), hi))
+        for path, lo, hi in self._ranges(start, end):
+            rows.extend(_rows(_read_range(path, lo, hi)))
         return iter(rows)
 
     def commit(self, end: dict) -> None:
@@ -921,12 +846,11 @@ class FinportParallelStreamReader(DataSourceStreamReader):
     The Simple* API (x12) routes every decoded ROW through the driver
     between offset commits — by design, and the right tier for
     drop-folder tailing. This reader splits the work the way the batch
-    reader does: the DRIVER only advances offsets (parse O(new bytes)
-    per trigger to find each file's last complete-record boundary —
-    record TYPING is not done here), and each micro-batch plans one
-    `_FinportStreamSlice` partition per grown file, decoded ON THE
-    EXECUTORS into one Arrow RecordBatch per slice (columnar transfer,
-    no per-row pickling, 32-way parallel at local[32]).
+    reader does: the DRIVER only advances offsets (the same
+    ``_advance`` byte scan per trigger — record TYPING is not done
+    here), and each micro-batch plans one `_FinportStreamSlice`
+    partition per grown file, decoded ON THE EXECUTORS into one Arrow
+    RecordBatch per slice (columnar transfer, no per-row pickling).
 
     Offsets are byte-granular `{"seen": {file: boundary}}`, identical
     semantics to the simple reader: cut at complete-record boundaries,
@@ -937,15 +861,11 @@ class FinportParallelStreamReader(DataSourceStreamReader):
     after a driver restart the first trigger re-scans each file once
     from byte 0 (O(file), once) and continues O(new bytes) after.
     Unterminated-quote stalls fail loudly via the same tick/byte
-    bounds as the simple reader (composition, not copy). Legacy
-    file-granular offsets are rejected with a clear error — this
-    reader shipped after the byte-offset format, so no legacy
-    checkpoints for it can exist.
+    bounds as the simple reader (composition, not copy).
     """
 
     def __init__(self, options):
         self._tail = FinportStreamReader(options)  # reuse guards/layout
-        self.path = self._tail.path
         self._known: dict = {}
 
     def initialOffset(self) -> dict:
@@ -954,83 +874,21 @@ class FinportParallelStreamReader(DataSourceStreamReader):
     def latestOffset(self) -> dict:
         for name in self._tail._files():
             prev = self._known.get(name, 0)
-            full = os.path.join(self.path, name)
-            size = os.path.getsize(full)
-            if size <= prev:
-                self._tail._open_quote.pop(name, None)
-                continue
-            with open(full, "rb") as fh:
-                fh.seek(prev)
-                data = fh.read()
-            # byte-level vectorized boundary scan (NOT the record
-            # parser): offset discovery needs only the last complete
-            # boundary, and _scan_boundary finds it at numpy speed —
-            # property-tested against _parse_golden. Encoding is still
-            # validated first (fail-loud on interior garbage; a
-            # truncated multibyte tail is an in-progress append)
-            _utf8_prefix(data)
-            rel, open_q = _scan_boundary(data)
-            boundary = prev + rel
-            if open_q:
-                self._tail._check_open_quote(name, boundary, size)
-            else:
-                self._tail._open_quote.pop(name, None)
-            self._known[name] = boundary
+            boundary, _ = self._tail._advance(name, prev)
+            if boundary > prev:
+                self._known[name] = boundary
         return {"seen": dict(self._known)}
 
     def partitions(self, start: dict, end: dict):
-        s_seen = self._tail._seen(start)
-        e_seen = self._tail._seen(end)
-        parts = []
-        for name in sorted(e_seen):
-            lo, hi = s_seen.get(name, 0), e_seen[name]
-            if lo < 0 or hi < 0:
-                raise ValueError(
-                    "finportp: legacy file-granular offsets are not "
-                    "supported by the parallel reader — restart from a "
-                    "fresh checkpoint or drain with format('finport')"
-                )
-            if hi > lo:
-                parts.append(
-                    _FinportStreamSlice(
-                        os.path.join(self.path, name), lo, hi
-                    )
-                )
-        return parts
+        return [
+            _FinportStreamSlice(path, lo, hi)
+            for path, lo, hi in self._tail._ranges(start, end)
+        ]
 
     def read(self, partition):  # runs on an EXECUTOR
-        import pandas as pd
-
-        with open(partition.path, "rb") as fh:
-            fh.seek(partition.lo)
-            data = fh.read(partition.hi - partition.lo)
-        text = data.decode("utf-8")
-        # quote-free slices take the batch reader's vectorized pandas
-        # path (_vectorized_frame) — the overwhelmingly common shape
-        # for machine-written drops; a header line is synthesized for
-        # mid-file slices since the dialect check needs one. The torn-
-        # tail guard stays: a slice not ending at a newline must go
-        # through the state machine, which raises the append-only
-        # violation (recorded slices always end at a boundary).
-        pdf = None
-        if text.endswith("\n"):
-            vtext = (
-                text
-                if partition.lo == 0
-                else ",".join(_HEADER) + "\n" + text
-            )
-            pdf = _vectorized_frame(vtext, partition.path)
-        if pdf is None:
-            recs = _parse_complete_slice(
-                text, partition.lo, partition.hi, partition.path
-            )
-            rows = [_typed_tuple(r, partition.path) for r in recs]
-            pdf = pd.DataFrame(
-                {n: [r[n] for r in rows] for n in _HEADER}
-                if rows
-                else {n: [] for n in _HEADER}
-            )
-        yield _pdf_to_arrow(pdf)
+        yield _pdf_to_arrow(
+            _read_range(partition.path, partition.lo, partition.hi)
+        )
 
     def commit(self, end: dict) -> None:
         pass  # source files are append-only inputs; nothing to clean
@@ -1057,13 +915,12 @@ def _scan_boundary(data: bytes, delimiter: bytes = b",") -> tuple:
     newline (0 if none) and ``open_q`` is True when EOF sits inside an
     unterminated quoted span.
 
-    This is the driver's per-trigger offset-discovery cost for the
-    parallel stream reader: the simple reader must parse every record
-    anyway (it returns the rows), but the parallel tier only needs the
-    BOUNDARY — running the char-level automaton (`_parse_golden`) just
-    to throw the fields away made the driver scan the bottleneck at
-    sf10 (measured: 39 s, ~60% in boundary discovery). The dialect
-    makes a numpy byte scan exact:
+    This is the per-trigger offset-discovery cost of both stream
+    readers (``FinportStreamReader._advance``): offset discovery needs
+    only the BOUNDARY, and running the char-level automaton
+    (`_parse_golden`) just to throw the fields away made the driver scan
+    the bottleneck at sf10 (measured: 39 s, ~60% in boundary
+    discovery). The dialect makes a numpy byte scan exact:
 
     - quotes/newlines/backslashes are ASCII, and UTF-8 continuation
       bytes never collide with ASCII — byte-level positions are safe
@@ -1081,9 +938,9 @@ def _scan_boundary(data: bytes, delimiter: bytes = b",") -> tuple:
       QUOTES ONLY — O(#quotes) python on data that is usually
       quote-free, never O(bytes) python.
 
-    Wrong-boundary inputs cannot corrupt silently: executors re-parse
-    each recorded slice and raise if it does not end on a record
-    boundary, and the property test drives this scanner against
+    Wrong-boundary inputs cannot corrupt silently: ``_slice_frame``
+    re-parses each recorded slice and raises if it does not end on a
+    record boundary, and the property test drives this scanner against
     `_parse_golden` on adversarial quote/escape/newline soups.
     """
     import numpy as np

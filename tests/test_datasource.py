@@ -321,6 +321,31 @@ def test_finport_reader_quote_plus_delimiter_roundtrip(tmp_path):
     assert rows[0][3] == 1.5 and rows[1][4] == 3.0
 
 
+def test_finport_reader_bare_cr_is_field_content(tmp_path):
+    """The golden parser ends a record at LF or CRLF only, so a bare CR
+    in an unquoted field is content. The comma-split path must agree:
+    a file's rows cannot depend on whether it holds a quote elsewhere."""
+    from finporter_spark.sources.finport_datasource import (
+        FinportReader,
+        _FilePartition,
+    )
+
+    hdr = "accountID,securityID,lotID,shareCount,shareBasis,acquiredAt\n"
+    rows = {
+        "cr.csv": hdr + "a1,S\r1,L1,1.0,,\n",
+        "crlf.csv": hdr.replace("\n", "\r\n") + "a2,S2,L2,2.0,,\r\n",
+    }
+    for name, text in rows.items():
+        (tmp_path / name).write_bytes(text.encode())
+    rdr = FinportReader({"path": str(tmp_path)})
+    assert _drain(rdr, _FilePartition(str(tmp_path / "cr.csv"))) == [
+        ("a1", "S\r1", "L1", 1.0, None, None)
+    ]
+    assert _drain(rdr, _FilePartition(str(tmp_path / "crlf.csv"))) == [
+        ("a2", "S2", "L2", 2.0, None, None)
+    ]
+
+
 def test_finport_reader_raises_on_overwide_row(tmp_path):
     """ADVICE (medium): a row with MORE fields than the header is
     malformed input — raise loudly instead of silently dropping or
@@ -447,36 +472,6 @@ def test_golden_parser_inverts_encoder_property():
     check()
 
 
-def test_finport_stream_legacy_offset_compat(tmp_path):
-    """A checkpoint written by the old file-granular offset format
-    ({"seen": [names]}) must keep working: read() treats listed files
-    as fully consumed; readBetweenOffsets replays them whole."""
-    from finporter_spark.sources.finport_datasource import (
-        FinportStreamReader,
-    )
-
-    d = tmp_path / "stream"
-    d.mkdir()
-    hdr = "accountID,securityID,lotID,shareCount,shareBasis,acquiredAt\n"
-    (d / "a.csv").write_text(hdr + "a1,S1,L1,1.0,,\n")
-    rdr = FinportStreamReader({"path": str(d)})
-
-    legacy = {"seen": ["a.csv"]}
-    rows, end = rdr.read(legacy)
-    assert list(rows) == []  # already consumed under the old format
-    # replay from genesis to the legacy offset: whole file
-    replay = list(rdr.readBetweenOffsets({"seen": {}}, legacy))
-    assert [r[1] for r in replay] == ["S1"]
-    # a file legacy-listed in BOTH offsets was consumed in an EARLIER
-    # batch: replaying this batch must NOT duplicate its rows
-    assert list(rdr.readBetweenOffsets(legacy, legacy)) == []
-    (d / "b.csv").write_text(hdr + "a2,S2,L2,2.0,,\n")
-    it2, o2 = rdr.read(legacy)
-    rows2 = list(it2)
-    assert [r[1] for r in rows2] == ["S2"]
-    assert list(rdr.readBetweenOffsets(legacy, o2)) == rows2
-
-
 def test_finport_stream_open_quote_fails_loudly(tmp_path):
     """ADVICE (medium): an unterminated quoted field must not stall a
     file silently forever. A legitimate multi-line quoted field
@@ -524,40 +519,6 @@ def test_finport_stream_open_quote_fails_loudly(tmp_path):
     rdr3 = FinportStreamReader({"path": str(d3)})
     with pytest.raises(ValueError, match="unterminated quoted field"):
         rdr3.read(rdr3.initialOffset())
-
-
-def test_finport_stream_legacy_offset_migration_pins(tmp_path):
-    """ADVICE (low): first contact with a legacy whole-file offset pins
-    the file's current record boundary into the migrated offset, so (a)
-    later appends ARE consumed (the old code skipped them forever) and
-    (b) replaying the migration batch after the file grows emits
-    nothing (the old code replayed whatever getsize said NOW)."""
-    from finporter_spark.sources.finport_datasource import (
-        FinportStreamReader,
-    )
-
-    d = tmp_path / "stream"
-    d.mkdir()
-    hdr = "accountID,securityID,lotID,shareCount,shareBasis,acquiredAt\n"
-    f = d / "a.csv"
-    f.write_text(hdr + "a1,S1,L1,1.0,,\n")
-    rdr = FinportStreamReader({"path": str(d)})
-
-    legacy = {"seen": ["a.csv"]}
-    rows, mig = rdr.read(legacy)
-    assert list(rows) == []
-    assert mig["seen"]["a.csv"] == f.stat().st_size  # pinned boundary
-
-    # the file grows: the delta (and ONLY the delta) is consumed
-    with open(f, "a") as fh:
-        fh.write("a2,S2,L2,2.0,,\n")
-    rows2, o2 = rdr.read(mig)
-    assert [r[1] for r in rows2] == ["S2"]
-
-    # replaying the migration batch after growth: still empty
-    assert list(rdr.readBetweenOffsets(legacy, mig)) == []
-    # replaying the delta batch: exactly the delta
-    assert [r[1] for r in rdr.readBetweenOffsets(mig, o2)] == ["S2"]
 
 
 def test_finport_reader_ancient_timestamps(tmp_path):
@@ -649,31 +610,126 @@ def test_finport_stream_open_quote_stall_without_growth(tmp_path):
             _, off = rdr.read(off)  # file never grows
 
 
-def test_finport_replay_byte_start_with_legacy_end(tmp_path):
-    """ADVICE r7: readBetweenOffsets with a byte-boundary START and a
-    legacy whole-file END (version downgrade after an upgrade) must
-    replay only [lo, migrated_boundary) — never the rows before lo a
-    second time."""
+def test_both_stream_readers_reject_a_file_granular_offset(tmp_path):
+    """The old offset format ({"seen": [names]}) recorded no byte
+    boundary, so neither stream reader can replay it exactly: both
+    raise instead of guessing one."""
     from finporter_spark.sources.finport_datasource import (
+        FinportParallelStreamReader,
         FinportStreamReader,
     )
 
-    hdr = "accountID,securityID,lotID,shareCount,shareBasis,acquiredAt\n"
-    d = tmp_path / "downgrade"
+    d = tmp_path / "stream"
     d.mkdir()
-    f = d / "a.csv"
-    f.write_text(hdr)
-    rdr = FinportStreamReader({"path": str(d)})
-    o0 = rdr.initialOffset()
-    with open(f, "a") as fh:
-        fh.write("a1,S1,L1,1.0,,\n")
-    rows1, o1 = rdr.read(o0)  # consumes row S1; o1 pins a byte boundary
-    assert [r[1] for r in list(rows1)] == ["S1"]
-    with open(f, "a") as fh:
-        fh.write("a1,S2,L2,2.0,,\n")
-    legacy_end = {"seen": ["a.csv"]}  # downgraded writer: whole-file
-    replayed = [r[1] for r in rdr.readBetweenOffsets(o1, legacy_end)]
-    assert replayed == ["S2"]  # S1 must NOT replay
+    (d / "a.csv").write_text(
+        "accountID,securityID,lotID,shareCount,shareBasis,acquiredAt\n"
+        "a1,S1,L1,1.0,,\n"
+    )
+    legacy = {"seen": ["a.csv"]}
+    simple = FinportStreamReader({"path": str(d)})
+    parallel = FinportParallelStreamReader({"path": str(d)})
+    now = parallel.latestOffset()
+    for call in (
+        lambda: simple.read(legacy),
+        lambda: simple.readBetweenOffsets(legacy, now),
+        lambda: simple.readBetweenOffsets(simple.initialOffset(), legacy),
+        lambda: parallel.partitions(legacy, now),
+    ):
+        with pytest.raises(ValueError, match="legacy file-granular"):
+            call()
+
+
+_HOLDING_HDR = "accountID,securityID,lotID,shareCount,shareBasis,acquiredAt\n"
+# full-width HOLDING rows over the field shapes the decoders disagreed
+# on; each is written once quote-free and once with a quoted field
+_DECODE_ROWS = [
+    "a1,{S1},L1,1_000,10,2021-03-01T00:00:00.000Z\n",
+    "a2,S2,L2,1000,1d,2021-03-01T01:00:00+01:00\n",
+    "a3,S3,, 2.5 ,,2021-03-01T00:00:00.123\n",
+    "a4,S4,L4,,0x1p3,1500-01-01\n",
+    "a5,S5,L5,-3e2,Infinity,\n",
+    "a6,S6,L6,12x,1.5f,notadate\n",
+]
+
+
+def _decode_expected():
+    from datetime import datetime
+
+    inf = float("inf")
+    return [
+        ("a1", "S1", "L1", None, 10.0, datetime(2021, 3, 1)),
+        ("a2", "S2", "L2", 1000.0, 1.0, datetime(2021, 3, 1)),
+        ("a3", "S3", "", 2.5, None, datetime(2021, 3, 1, 0, 0, 0, 123000)),
+        ("a4", "S4", "L4", None, 8.0, datetime(1500, 1, 1)),
+        ("a5", "S5", "L5", -300.0, inf, None),
+        ("a6", "S6", "L6", None, 1.5, None),
+    ]
+
+
+def _write_decode_files(tmp_path):
+    """One directory per layout: quote-free, and with one quoted
+    field (which sends the file through the golden state machine)."""
+    dirs = {}
+    for layout, sec in (("plain", "S1"), ("quoted", '"S1"')):
+        d = tmp_path / layout
+        d.mkdir()
+        (d / "h.csv").write_text(
+            _HOLDING_HDR
+            + _DECODE_ROWS[0].format(S1=sec)
+            + "".join(_DECODE_ROWS[1:])
+        )
+        dirs[layout] = d
+    return dirs
+
+
+def test_every_finport_reader_decodes_like_the_importer(spark, tmp_path):
+    """One decode for every reader: the batch reader and both stream
+    readers type the same rows the same way whether or not the file
+    holds a quote, and format("finport") equals the importer's good
+    rows on the same file (Spark's try_cast / try_to_timestamp)."""
+    from finporter_spark.caching import release_caches
+    from finporter_spark.importers.allocdata import AllocDataImporter
+    from finporter_spark.model import AllocSchema
+    from finporter_spark.sources.finport_datasource import (
+        FinportDataSource,
+        FinportParallelStreamReader,
+        FinportReader,
+        FinportStreamReader,
+    )
+
+    want = _decode_expected()
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    spark.dataSource.register(FinportDataSource)
+    for layout, d in _write_decode_files(tmp_path).items():
+        opts = {"path": str(d)}
+        batch = FinportReader(opts)
+        [part] = batch.partitions()
+        assert _drain(batch, part) == want, layout
+
+        simple = FinportStreamReader(opts)
+        rows, end = simple.read(simple.initialOffset())
+        assert list(rows) == want, layout
+        replay = simple.readBetweenOffsets(simple.initialOffset(), end)
+        assert list(replay) == want, layout
+
+        parallel = FinportParallelStreamReader(opts)
+        [sl] = parallel.partitions(
+            parallel.initialOffset(), parallel.latestOffset()
+        )
+        [rb] = list(parallel.read(sl))
+        assert [tuple(r.values()) for r in rb.to_pylist()] == want, layout
+
+        connector = spark.read.format("finport").option("path", str(d))
+        good, bad = AllocDataImporter().decode(
+            spark, str(d / "h.csv"), output_schema=AllocSchema.HOLDING
+        )
+        try:
+            assert bad.count() == 0, layout
+            assert sorted(map(tuple, connector.load().collect())) == sorted(
+                map(tuple, good.collect())
+            ), layout
+        finally:
+            release_caches(good, bad)
 
 
 def test_finportp_parallel_stream_offsets_and_slices(tmp_path):
@@ -681,9 +737,7 @@ def test_finportp_parallel_stream_offsets_and_slices(tmp_path):
     complete-record boundaries only (torn tails excluded), partitions()
     plans exactly the grown byte ranges (the replay contract), read()
     decodes a slice to a typed Arrow batch on what would be an
-    executor, and legacy file-granular offsets are rejected loudly."""
-    import pytest
-
+    executor."""
     from finporter_spark.sources.finport_datasource import (
         FinportParallelStreamReader,
     )
@@ -725,9 +779,6 @@ def test_finportp_parallel_stream_offsets_and_slices(tmp_path):
     assert [(p.path, p.lo, p.hi) for p in rdr.partitions(o1, o2)] == [
         (p.path, p.lo, p.hi) for p in rdr.partitions(o1, o2)
     ]
-
-    with pytest.raises(ValueError, match="legacy file-granular"):
-        rdr.partitions({"seen": ["a.csv"]}, o2)
 
 
 def test_finportp_drain_equals_batch(spark, tmp_path):

@@ -5,7 +5,11 @@ a noisy host move 2-3x, job counts do not.
 
 Usage:
   python tools/job_stats.py l30_chain_components l18_pagerank \
-      [--sf /root/testdata/sf0.1] [--reps 2]
+      [--sf SF_DIR] [--reps 2] [--plans-dir plans/after]
+
+``--plans-dir DIR`` also writes each query's ``explain("formatted")``
+plan to ``DIR/<query>.txt``; name the directory for the side of a
+comparison (``plans/before``, ``plans/after``).
 
 Runs go through ``tools.measure.measure_query``: one untimed warm run,
 then ``--reps`` timed runs under the query's job tag. Two stage counts
@@ -23,6 +27,8 @@ rebuilt; after the warm run it should read 0.
 from __future__ import annotations
 
 import argparse
+import contextlib
+import io
 import os
 import sys
 
@@ -38,6 +44,7 @@ def main() -> None:
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--reps", type=int, default=2)
+    ap.add_argument("--plans-dir", default=None)
     args = ap.parse_args()
 
     spark = session("job-stats", args.sf)
@@ -46,6 +53,15 @@ def main() -> None:
         if name not in qs:
             print(f"!! unknown query {name}")
             continue
+        if args.plans_dir:
+            os.makedirs(args.plans_dir, exist_ok=True)
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                qs[name](spark, args.sf).explain("formatted")
+            p = os.path.join(args.plans_dir, f"{name}.txt")
+            with open(p, "w") as fh:
+                fh.write(buf.getvalue())
+            print(f"plan -> {p}")
         reps = measure_query(
             spark, name, lambda: qs[name](spark, args.sf), args.reps
         )
