@@ -110,7 +110,7 @@ _DOUBLE_BLANKS = "".join(map(chr, range(33)))
 _TS_SHAPE = (
     r"^(?P<day>[0-9]{4}-[0-9]{2}-[0-9]{2})"
     r"(?:T(?P<time>[0-9]{2}:[0-9]{2}:[0-9]{2})(?:\.(?P<frac>[0-9]{1,3}))?"
-    r"(?:[Zz]|(?P<sign>[+-])(?P<hh>[0-9]{2}):(?P<mm>[0-9]{2}))?)?$"
+    r"(?:[Zz]|(?P<sign>[+-])(?P<hh>[0-9]{2}):(?P<mm>[0-9]{2}))?)?\Z"
 )
 _WALL_FORMAT = "%Y-%m-%dT%H:%M:%S.%f"
 
@@ -134,12 +134,7 @@ def _typed_double(col):
     s = col.str.strip(_DOUBLE_BLANKS)
     ok = s.str.fullmatch(_DOUBLE_SHAPE).to_numpy(dtype=bool)
     vals = np.full(len(s), np.nan)
-    if ok.any():
-        num = s[ok].to_numpy(dtype=object)
-        try:
-            vals[ok] = num.astype("float64")
-        except ValueError:  # a d/f suffix or a hex literal: row-wise
-            vals[ok] = [_java_double(v) for v in num]
+    vals[ok] = [_java_double(v) for v in s[ok]]
     return pd.Series(pd.arrays.FloatingArray(vals, ~ok), index=col.index)
 
 
@@ -189,20 +184,11 @@ def _typed_frame(raw):
     import pandas as pd
 
     def typed(name):
-        col = raw[name]
-        decode = (
-            _typed_double
-            if name in _DOUBLE
-            else _typed_ts
-            if name in _TS
-            else None
-        )
-        if decode is None:
-            return col
-        # each distinct field is typed once: dates and prices repeat
-        codes, uniq = pd.factorize(col)
-        out = decode(pd.Series(uniq, dtype=object)).array.take(codes)
-        return pd.Series(out, index=col.index)
+        if name in _DOUBLE:
+            return _typed_double(raw[name])
+        if name in _TS:
+            return _typed_ts(raw[name])
+        return raw[name]
 
     return pd.DataFrame({n: typed(n) for n in _HEADER})
 

@@ -732,6 +732,42 @@ def test_every_finport_reader_decodes_like_the_importer(spark, tmp_path):
             release_caches(good, bad)
 
 
+def test_typed_frame_matches_typed_projection_field_by_field(spark):
+    """Fields no file layout can hand the importer (Spark's CSV reader
+    splits a quoted newline): a trailing newline is trimmed from a
+    double but makes a timestamp null, in both decoders."""
+    import pandas as pd
+
+    from finporter_spark.importers.allocdata import typed_projection
+    from finporter_spark.model import ENTITY_SCHEMAS, AllocSchema
+    from finporter_spark.sources import CORRUPT_COL
+    from finporter_spark.sources.finport_datasource import (
+        _HEADER,
+        _pdf_to_arrow,
+        _typed_frame,
+    )
+
+    rows = [
+        ("a", "s", "l", "1\n", " 2.5 ", "2021-03-01\n"),
+        ("a", "s", "l", "\t3\r", "", "2021-03-01T00:00:00Z\n"),
+        ("a", "s", "l", "", "", " 2021-03-01T00:00:00Z "),
+    ]
+    raw = spark.createDataFrame(
+        [r + (None,) for r in rows],
+        ", ".join(f"{n} string" for n in _HEADER + [CORRUPT_COL]),
+    )
+    struct = ENTITY_SCHEMAS[AllocSchema.HOLDING]
+    want = [
+        tuple(r)
+        for r in raw.selectExpr(*typed_projection(struct))
+        .drop(CORRUPT_COL)
+        .collect()
+    ]
+    got = _pdf_to_arrow(_typed_frame(pd.DataFrame(rows, columns=_HEADER)))
+    assert [tuple(r.values()) for r in got.to_pylist()] == want
+    assert [r[5] for r in want][:2] == [None, None]
+
+
 def test_finportp_parallel_stream_offsets_and_slices(tmp_path):
     """The partition-parallel stream reader: latestOffset advances by
     complete-record boundaries only (torn tails excluded), partitions()
