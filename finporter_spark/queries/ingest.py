@@ -222,13 +222,15 @@ def s12_python_datasource(spark, sf_dir):
     SURVEY §4's Detect-as-DataSource candidate, implemented in
     `sources/finport_datasource.py`) reading a directory of AllocData
     HOLDING CSVs: one InputPartition per file (parallel executor-side
-    pure-Python decode, same typed rules as the importer), per-file
-    header verification (the detect contract), and `pushFilters`
-    absorbing the accountID equality so filtered rows never cross the
-    Arrow boundary. Staged fixture derives deterministically from
-    `part`, so the oracle recomputes the expected rows relationally."""
+    split into string columns), per-file header verification (the
+    detect contract), and `typed` — the importer's `typed_projection`
+    over the scan, the one typing rule. Spark evaluates the accountID
+    equality after the scan, in the same stage. Staged fixture derives
+    deterministically from `part`, so the oracle recomputes the
+    expected rows relationally."""
     from finporter_spark.sources.finport_datasource import (
         FinportDataSource,
+        typed,
     )
 
     def _write(p):
@@ -263,16 +265,10 @@ def s12_python_datasource(spark, sf_dir):
         part.repartition(8).write.mode("overwrite").csv(p, header=True)
 
     path = _stage_once(sf_dir, "s12", _write, "part")
-    # runtime-settable feature flag (off by default in Spark 4); a
-    # driver-supplied session won't have it in its builder config
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(FinportDataSource)
-    return (
-        spark.read.format("finport")
-        .option("path", path)
-        .load()
-        .filter(F.col("accountID") == "acct-3")
-    )
+    return typed(
+        spark.read.format("finport").option("path", path).load()
+    ).filter(F.col("accountID") == "acct-3")
 
 
 @query(
@@ -281,15 +277,16 @@ def s12_python_datasource(spark, sf_dir):
 )
 def s13_datasource_roundtrip(spark, sf_dir):
     """S13: full connector roundtrip — read the staged holdings through
-    `format("finport")`, WRITE them back through the same format (the
-    distributed golden-encoder sink: per-task temp files, two-phase
-    driver commit renaming to part-NNNNN.csv, so torn output is never
-    visible), then read the written directory again. Hash-matching the
-    relational oracle proves write∘read is lossless under the golden
-    encoding rules (escape/quote, ISO-Z timestamps, shortest-roundtrip
-    doubles, nil↔empty)."""
+    `format("finport")` and `typed`, WRITE them back through the same
+    format (the distributed golden-encoder sink: per-task temp files,
+    two-phase driver commit renaming to part-NNNNN.csv, so torn output
+    is never visible), then read and type the written directory again.
+    Hash-matching the relational oracle proves write∘read is lossless
+    under the golden encoding rules (escape/quote, ISO-Z timestamps,
+    shortest-roundtrip doubles, nil↔empty)."""
     from finporter_spark.sources.finport_datasource import (
         FinportDataSource,
+        typed,
     )
 
     # reuse s12's staged input fixture (idempotent, fingerprint-guarded:
@@ -297,9 +294,8 @@ def s13_datasource_roundtrip(spark, sf_dir):
 
     CATALOG["s12_python_datasource"][0](spark, sf_dir).limit(1).collect()
     in_path = _io_dir(sf_dir, "s12")
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(FinportDataSource)
-    full = (
+    full = typed(
         spark.read.format("finport").option("path", in_path).load()
     )
     out_path = _io_dir(sf_dir, "s13_out")
@@ -309,7 +305,9 @@ def s13_datasource_roundtrip(spark, sf_dir):
         .option("path", out_path)
         .save()
     )
-    return spark.read.format("finport").option("path", out_path).load()
+    return typed(
+        spark.read.format("finport").option("path", out_path).load()
+    )
 
 
 @query(

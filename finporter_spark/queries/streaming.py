@@ -843,22 +843,25 @@ def x12_datasource_stream(spark, sf_dir):
     incremental offset semantics unit-tested directly in
     tests/test_datasource.py). Drains the s12 fixture and aggregates in
     complete mode, so the drained answer equals the batch relational
-    oracle under any micro-batch split. Scale note: the Simple*
-    stream-reader API is BY DESIGN driver-prefetched (Spark routes
-    simple sources' rows through the driver between offset commits) —
-    the right tier for drop-folder tailing; bulk backfills go through
-    the partition-parallel batch reader (s12/s13, Arrow-batched), which
-    is the 100 TB path."""
+    oracle under any micro-batch split. The stream carries strings;
+    `typed` applies the importer's rules to it, as to the batch read.
+    Scale note: the Simple* stream-reader API is BY DESIGN
+    driver-prefetched (Spark routes simple sources' rows through the
+    driver between offset commits) — the right tier for drop-folder
+    tailing; bulk backfills go through the partition-parallel batch
+    reader (s12/s13, Arrow-batched), which is the 100 TB path."""
     from finporter_spark.sources.finport_datasource import (
         FinportDataSource,
+        typed,
     )
 
     # ensure the s12 fixture is staged (idempotent)
     CATALOG["s12_python_datasource"][0](spark, sf_dir).limit(1).collect()
     in_path = _io_dir(sf_dir, "s12")
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(FinportDataSource)
-    sdf = spark.readStream.format("finport").option("path", in_path).load()
+    sdf = typed(
+        spark.readStream.format("finport").option("path", in_path).load()
+    )
     agg = sdf.groupBy("accountID").agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("shareCount").cast("double").alias("total_shares"),
@@ -973,9 +976,10 @@ def x14_datasource_stream_parallel(spark, sf_dir):
     """X14: the finport connector's PARTITION-PARALLEL streaming tier
     (`spark.readStream.format("finportp")`, a Spark 4
     DataSourceStreamReader): the driver only advances byte-granular
-    offsets (O(new bytes) boundary scan per trigger, no row typing);
+    offsets (O(new bytes) boundary scan per trigger, no record split);
     each micro-batch plans one (file, byte-range) slice per grown file
-    and the EXECUTORS decode slices into Arrow RecordBatches — the
+    and the EXECUTORS split slices into Arrow RecordBatches of strings,
+    which `typed` types with the importer's rules — the
     scale tier x12's docstring promises (the Simple* API routes every
     decoded row through the driver BY DESIGN; right for drop-folder
     tailing, wrong for bulk backfill). Same offsets, same exactly-once
@@ -987,12 +991,15 @@ def x14_datasource_stream_parallel(spark, sf_dir):
     x12-vs-x14 throughput comparison."""
     from finporter_spark.sources.finport_datasource import (
         FinportParallelDataSource,
+        typed,
     )
 
     CATALOG["s12_python_datasource"][0](spark, sf_dir).limit(1).collect()
     in_path = _io_dir(sf_dir, "s12")
     spark.dataSource.register(FinportParallelDataSource)
-    sdf = spark.readStream.format("finportp").option("path", in_path).load()
+    sdf = typed(
+        spark.readStream.format("finportp").option("path", in_path).load()
+    )
     agg = sdf.groupBy("accountID").agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("shareCount").cast("double").alias("total_shares"),

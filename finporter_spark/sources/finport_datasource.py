@@ -4,17 +4,17 @@ candidate from SURVEY §4).
 
 A user points `spark.read.format("finport").load(dir)` at a directory of
 AllocData holding CSVs (header = the declared attribute order,
-`FINporter.swift:62,66`) and gets the typed DataFrame with no
-driver-side handler involved:
+`FINporter.swift:62,66`) and types it with :func:`typed`::
 
-- **one InputPartition per file** — files decode in parallel on
-  executors. Executors have no SparkSession, so the importer's
-  DataFrame decode cannot run there; the connector applies the same
-  rules to pandas columns instead (below);
-- **filter pushdown** (`pushFilters`): EqualTo / IsNotNull / In on any
-  column are absorbed and applied to the decoded batch, so filtered
-  rows never cross the Python→JVM Arrow boundary; every other predicate
-  is returned to Spark to evaluate;
+    holdings = typed(spark.read.format("finport").option("path", dir).load())
+
+- **one InputPartition per file** — files split into string columns in
+  parallel on executors;
+- **strings out, one typing rule** — the connector yields the six
+  HOLDING fields as strings ("" for a blank or missing field), and
+  :func:`typed` applies the importer's ``typed_projection`` on top,
+  batch or stream. Spark evaluates every filter after the scan, in the
+  same stage;
 - header verification per file: a file whose first line is not the
   declared HOLDING header raises (the detect contract — wrong-entity
   files must fail loudly, not decode garbage).
@@ -31,35 +31,21 @@ delimiter (``a"b,c`` → ``"a\\"b,c"``) confuses RFC-4180 doubling rules
 and shifts every later column. Either way a row with more fields than
 the header raises, and a short row pads with empty fields.
 
-``_typed_frame`` then applies the decode rules of
-``importers/allocdata.typed_projection``. Every reader, batch and
-stream, goes through it:
-
-- required string keys: an empty or missing field is "" (never null);
-- doubles: the field, trimmed of spaces and ASCII control characters,
-  must be what Spark's ``try_cast(... AS DOUBLE)`` reads — Java's
-  ``Double.parseDouble`` grammar: optional sign, digits with an
-  optional fraction and exponent, an optional ``d``/``f`` suffix
-  (``1d`` is 1.0), hex ``0x1.8p1``, ``NaN`` and ``Infinity``, plus
-  Spark's case-insensitive ``inf``, ``infinity`` and ``nan``. Anything
-  else (``1_000``, ``1,000``) is null. ``NaN`` stays NaN, not null;
-- timestamps: the field, trimmed of spaces, is
-  ``yyyy-MM-dd'T'HH:mm:ss`` with an optional 1-3 digit fraction and an
-  optional zone (``Z`` or ``±HH:MM`` up to ±18:00, converted to UTC),
-  or a bare ``yyyy-MM-dd`` at midnight UTC — the importer's
-  ``_TS_FORMATS`` plus its bare-date fallback. Anything else is null.
-
-Spark reads one shape this decoder does not: instants outside the
-years 0001-9999, which Python's ``datetime`` cannot hold
-(``0000-01-01``, ``-0001-01-01``, or ``9999-12-31T23:00:00-05:00``,
-whose UTC instant is in the year 10000). They decode to null.
+One declared difference from the importer: a bare CR. The connector
+ends a record at LF or CRLF only, so a bare CR inside an unquoted field
+is field content. The importer reads through Spark's CSV line reader,
+which also ends a record at a bare CR. The golden encoder quotes any
+field holding a CR, so its own output reads the same either way. Following
+Spark here would change the parser, the over-wide check, the boundary
+scan and the slice end check; setting ``lineSep`` in the importer would
+break CRLF files. Both cost code for input no encoder writes, so the
+difference stays, pinned by test.
 """
 
 from __future__ import annotations
 
 import io
 import os
-import re
 from datetime import datetime
 
 from dataclasses import dataclass
@@ -69,128 +55,29 @@ from pyspark.sql.datasource import (
     DataSourceArrowWriter,
     DataSourceReader,
     DataSourceStreamReader,
-    EqualTo,
-    In,
     InputPartition,
-    IsNotNull,
     SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
-from pyspark.sql.types import (
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import StringType, StructField, StructType
 
-HOLDING_FIELDS = [
-    ("accountID", StringType(), False),
-    ("securityID", StringType(), False),
-    ("lotID", StringType(), False),
-    ("shareCount", DoubleType(), True),
-    ("shareBasis", DoubleType(), True),
-    ("acquiredAt", TimestampType(), True),
-]
-_HEADER = [n for n, _, _ in HOLDING_FIELDS]
-_DOUBLE = {n for n, t, _ in HOLDING_FIELDS if isinstance(t, DoubleType)}
-_TS = {n for n, t, _ in HOLDING_FIELDS if isinstance(t, TimestampType)}
+from finporter_spark.model import ENTITY_SCHEMAS, AllocSchema
 
-# what Spark's string -> double cast accepts (see the module docstring)
-_DOUBLE_SHAPE = re.compile(
-    r"[+-]?(?:(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?[dDfF]?"
-    r"|0[xX](?:[0-9a-fA-F]+\.?[0-9a-fA-F]*|\.[0-9a-fA-F]+)"
-    r"[pP][+-]?[0-9]+[dDfF]?"
-    r"|NaN|Infinity)"
-    r"|(?i:nan|[+-]?inf(?:inity)?)"
-)
-_DOUBLE_BLANKS = "".join(map(chr, range(33)))
-# the importer's timestamp shapes: ISO with an optional fraction and
-# zone, or a bare date
-_TS_SHAPE = (
-    r"^(?P<day>[0-9]{4}-[0-9]{2}-[0-9]{2})"
-    r"(?:T(?P<time>[0-9]{2}:[0-9]{2}:[0-9]{2})(?:\.(?P<frac>[0-9]{1,3}))?"
-    r"(?:[Zz]|(?P<sign>[+-])(?P<hh>[0-9]{2}):(?P<mm>[0-9]{2}))?)?\Z"
-)
-_WALL_FORMAT = "%Y-%m-%dT%H:%M:%S.%f"
+_HOLDING = ENTITY_SCHEMAS[AllocSchema.HOLDING]
+_HEADER = list(_HOLDING.names)
 
 
-def _parse_ts(wall):
-    """A wall clock in ``_WALL_FORMAT`` that pandas' ns range cannot
-    hold (years before 1677 or after 2262), as a ``datetime``; None for
-    an impossible date or a year before 0001."""
-    try:
-        return datetime.strptime(wall, _WALL_FORMAT)
-    except ValueError:
-        return None
+def typed(df):
+    """A finport DataFrame — batch or stream, ``finport`` or
+    ``finportp`` — typed by the importer's rules: ``typed_projection``
+    over the HOLDING schema, without the corrupt-record column the
+    connector does not have."""
+    from finporter_spark.importers.allocdata import typed_projection
+    from finporter_spark.sources import CORRUPT_COL
 
-
-def _typed_double(col):
-    """String column -> float64 column with a null mask, so a parsed
-    NaN stays NaN while an unparseable field is null."""
-    import numpy as np
-    import pandas as pd
-
-    s = col.str.strip(_DOUBLE_BLANKS)
-    ok = s.str.fullmatch(_DOUBLE_SHAPE).to_numpy(dtype=bool)
-    vals = np.full(len(s), np.nan)
-    vals[ok] = [_java_double(v) for v in s[ok]]
-    return pd.Series(pd.arrays.FloatingArray(vals, ~ok), index=col.index)
-
-
-def _java_double(v: str) -> float:
-    """One ``_DOUBLE_SHAPE`` match as a float."""
-    if v[-1] in "dDfF" and v[-2] in "0123456789.":
-        v = v[:-1]
-    return float.fromhex(v) if "x" in v.lower() else float(v)
-
-
-def _typed_ts(col):
-    """String column -> naive UTC ``datetime64[us]`` column."""
-    import numpy as np
-    import pandas as pd
-
-    s = col.str.strip(" ")
-    p = s.str.extract(_TS_SHAPE)
-    wall = (
-        p["day"] + "T" + p["time"].fillna("00:00:00") + "."
-        + p["frac"].fillna("0")
+    return df.selectExpr(
+        *(e for e in typed_projection(_HOLDING) if e != CORRUPT_COL)
     )
-    t = pd.to_datetime(wall, format=_WALL_FORMAT, errors="coerce")
-    t = t.astype("datetime64[us]")
-    # the ns parse NaTs valid dates outside 1677..2262; the us column
-    # holds them, so only those rows take the row-wise parse
-    left = wall.notna() & t.isna()
-    if left.any():
-        t.loc[left] = wall[left].map(_parse_ts).astype("datetime64[us]")
-    hh = p["hh"].astype("float64").fillna(0)
-    mm = p["mm"].astype("float64").fillna(0)
-    off = (hh * 60 + mm).where(p["sign"] != "-", -(hh * 60 + mm))
-    t = t - (off.to_numpy() * 60_000_000).astype("int64").astype(
-        "timedelta64[us]"
-    )
-    # zone offsets stop at ±18:00 (java.time.ZoneOffset), and rows must
-    # stay inside the years a Python datetime holds (0001-9999)
-    return t.where(
-        (mm < 60)
-        & (off.abs() <= 18 * 60)
-        & t.between(np.datetime64(datetime.min), np.datetime64(datetime.max))
-    )
-
-
-def _typed_frame(raw):
-    """The one decode: a frame of HOLDING string columns ("" for blank
-    or missing fields) -> the typed frame."""
-    import pandas as pd
-
-    def typed(name):
-        if name in _DOUBLE:
-            return _typed_double(raw[name])
-        if name in _TS:
-            return _typed_ts(raw[name])
-        return raw[name]
-
-    return pd.DataFrame({n: typed(n) for n in _HEADER})
 
 
 # ---------------------------------------------------------------------
@@ -341,23 +228,11 @@ def _string_frame(text: str, where: str, header: bool = True):
 
 
 def _pdf_to_arrow(pdf):
-    """Typed frame -> one Arrow RecordBatch in the declared HOLDING
-    schema."""
+    """String frame -> one Arrow RecordBatch of the HOLDING string
+    columns."""
     import pyarrow as pa
 
-    schema = pa.schema(
-        [
-            pa.field(
-                n,
-                pa.float64()
-                if n in _DOUBLE
-                else pa.timestamp("us")
-                if n in _TS
-                else pa.string(),
-            )
-            for n in _HEADER
-        ]
-    )
+    schema = pa.schema([(n, pa.string()) for n in _HEADER])
     return pa.RecordBatch.from_pandas(
         pdf, schema=schema, preserve_index=False
     )
@@ -373,16 +248,6 @@ class FinportReader(DataSourceReader):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("finport: .load(path) directory is required")
-        self._pushed: list = []
-
-    def pushFilters(self, filters):
-        for f in filters:
-            if isinstance(f, (EqualTo, In, IsNotNull)) and len(
-                f.attribute
-            ) == 1 and f.attribute[0] in _HEADER:
-                self._pushed.append(f)
-            else:
-                yield f  # unsupported: Spark evaluates it post-scan
 
     def partitions(self):
         files = sorted(
@@ -396,30 +261,11 @@ class FinportReader(DataSourceReader):
             )
         return [_FilePartition(p) for p in files]
 
-    def _mask(self, pdf):
-        """The pushed filters over the typed frame (a null never
-        matches EqualTo or In)."""
-        mask = None
-        for f in self._pushed:
-            col = pdf[f.attribute[0]]
-            if isinstance(f, EqualTo):
-                m = (col == f.value).fillna(False).astype(bool)
-            elif isinstance(f, In):
-                m = col.isin(list(f.value))
-            else:  # IsNotNull
-                m = col.notna()
-            mask = m if mask is None else (mask & m)
-        return mask
-
     def read(self, partition):
         """Yields one Arrow RecordBatch per file."""
         with io.open(partition.path, encoding="utf-8", newline="") as fh:
             text = fh.read()
-        pdf = _typed_frame(_string_frame(text, partition.path))
-        mask = self._mask(pdf)
-        if mask is not None:
-            pdf = pdf[mask]
-        yield _pdf_to_arrow(pdf)
+        yield _pdf_to_arrow(_string_frame(text, partition.path))
 
 
 class FinportDataSource(DataSource):
@@ -430,11 +276,11 @@ class FinportDataSource(DataSource):
         return "finport"
 
     def schema(self) -> StructType:
-        # all fields declared nullable at the Spark boundary (required
-        # string keys are still never null — the reader fills ""), the
-        # same convention as Spark's own file sources
+        # every field a string, declared nullable at the Spark boundary
+        # (the reader still fills "" for blank or missing fields), the
+        # same convention as Spark's own file sources; typed() types them
         return StructType(
-            [StructField(n, t, True) for n, t, _ in HOLDING_FIELDS]
+            [StructField(n, StringType(), True) for n in _HEADER]
         )
 
     def reader(self, schema):
@@ -632,7 +478,7 @@ def _utf8_prefix(data: bytes) -> str:
 
 
 def _slice_frame(data: bytes, where: str, lo: int):
-    """Typed frame of a recorded byte range that starts at byte ``lo``
+    """String frame of a recorded byte range that starts at byte ``lo``
     of a file: both ends are record boundaries a previous listing
     recorded, so the range is whole records (the one at byte 0 starts
     with the header). A range that no longer ends at a record boundary
@@ -644,7 +490,7 @@ def _slice_frame(data: bytes, where: str, lo: int):
             f"{lo + len(data)}) no longer ends at a record boundary — "
             "consumed bytes were rewritten in place (append-only contract)"
         )
-    return _typed_frame(_string_frame(text, where, header=lo == 0))
+    return _string_frame(text, where, header=lo == 0)
 
 
 def _read_range(path: str, lo: int, hi: int):
@@ -654,10 +500,8 @@ def _read_range(path: str, lo: int, hi: int):
 
 
 def _rows(pdf) -> list:
-    """Typed frame -> row tuples (nulls as None, timestamps as
-    ``datetime``) for the simple stream reader."""
-    batch = _pdf_to_arrow(pdf)
-    return list(zip(*(c.to_pylist() for c in batch.columns)))
+    """String frame -> row tuples for the simple stream reader."""
+    return list(pdf.itertuples(index=False, name=None))
 
 
 class FinportStreamReader(SimpleDataSourceStreamReader):
@@ -833,10 +677,10 @@ class FinportParallelStreamReader(DataSourceStreamReader):
     between offset commits — by design, and the right tier for
     drop-folder tailing. This reader splits the work the way the batch
     reader does: the DRIVER only advances offsets (the same
-    ``_advance`` byte scan per trigger — record TYPING is not done
-    here), and each micro-batch plans one `_FinportStreamSlice`
-    partition per grown file, decoded ON THE EXECUTORS into one Arrow
-    RecordBatch per slice (columnar transfer, no per-row pickling).
+    ``_advance`` byte scan per trigger — records are not split here),
+    and each micro-batch plans one `_FinportStreamSlice` partition per
+    grown file, split ON THE EXECUTORS into one Arrow RecordBatch of
+    string columns per slice (columnar transfer, no per-row pickling).
 
     Offsets are byte-granular `{"seen": {file: boundary}}`, identical
     semantics to the simple reader: cut at complete-record boundaries,

@@ -7,6 +7,9 @@ import pytest
 from pyspark.sql import functions as F
 
 
+_HOLDING_HDR = "accountID,securityID,lotID,shareCount,shareBasis,acquiredAt\n"
+
+
 def _drain(rdr, part):
     """Consume FinportReader.read (Arrow RecordBatches) into row tuples."""
     rows = []
@@ -66,61 +69,106 @@ def test_release_caches_warns_when_unpersist_fails(spark, caplog):
     assert "executor lost" in record.getMessage()
 
 
-def test_finport_reader_pushdown_and_contract(tmp_path):
-    """Reader-level contract: supported filters (EqualTo/In/IsNotNull on
-    real columns) are absorbed and applied during read; unsupported
-    ones are yielded back for Spark to evaluate; a wrong header fails
-    loudly (detect contract); short rows pad with ''/null."""
-    from pyspark.sql.datasource import (
-        EqualTo,
-        GreaterThan,
-        In,
-        IsNotNull,
+def test_finport_reader_contract(tmp_path):
+    """Reader-level contract: the source declares the six HOLDING
+    columns as strings, every field comes out exactly as written, a
+    short row pads with "", and a wrong header fails loudly (the detect
+    contract)."""
+    from pyspark.sql.types import StringType
+
+    from finporter_spark.model import ENTITY_SCHEMAS, AllocSchema
+    from finporter_spark.sources.finport_datasource import (
+        FinportDataSource,
+        FinportReader,
     )
 
-    from finporter_spark.sources.finport_datasource import (
-        FinportReader,
-        _FilePartition,
-    )
+    schema = FinportDataSource({}).schema()
+    assert schema.names == ENTITY_SCHEMAS[AllocSchema.HOLDING].names
+    assert {f.dataType for f in schema.fields} == {StringType()}
 
     d = tmp_path / "holdings"
     d.mkdir()
     (d / "a.csv").write_text(
-        "accountID,securityID,lotID,shareCount,shareBasis,acquiredAt\n"
-        "acct-1,S1,L1,10.0,100.5,2021-03-01\n"
-        "acct-2,S2,,5.0,,2021-03-01T12:30:00\n"
-        "acct-1,S3\n"  # short row: trailing fields pad
+        _HOLDING_HDR
+        + "acct-1,S1,L1,10.0,100.5,2021-03-01\n"
+        + "acct-2,S2,,5.0,,2021-03-01T12:30:00\n"
+        + "acct-1,S3\n"  # short row: trailing fields pad
     )
     rdr = FinportReader({"path": str(d)})
-    unsupported = list(
-        rdr.pushFilters(
-            [
-                EqualTo(("accountID",), "acct-1"),
-                GreaterThan(("shareCount",), 1.0),  # not absorbed
-                In(("securityID",), ("S1", "S3")),
-                IsNotNull(("lotID",)),
-            ]
-        )
-    )
-    assert [type(f).__name__ for f in unsupported] == ["GreaterThan"]
-    parts = rdr.partitions()
-    assert len(parts) == 1
-    rows = _drain(rdr, parts[0])
-    # acct-1 ∩ {S1,S3} ∩ lotID not null -> S1 (full) and S3 (padded '')
-    assert [r[1] for r in rows] == ["S1", "S3"]
-    s3 = rows[1]
-    assert s3[2] == "" and s3[3] is None and s3[5] is None
-    import datetime
-
-    assert rows[0][5] == datetime.datetime(2021, 3, 1, 0, 0)
+    [part] = rdr.partitions()
+    assert _drain(rdr, part) == [
+        ("acct-1", "S1", "L1", "10.0", "100.5", "2021-03-01"),
+        ("acct-2", "S2", "", "5.0", "", "2021-03-01T12:30:00"),
+        ("acct-1", "S3", "", "", "", ""),
+    ]
 
     (d / "b.csv").write_text("wrong,header\nx,y\n")
-    rdr2 = FinportReader({"path": str(d)})
-    bad = [p for p in rdr2.partitions() if p.path.endswith("b.csv")]
-    import pytest as _pytest
+    [bad] = [p for p in rdr.partitions() if p.path.endswith("b.csv")]
+    with pytest.raises(ValueError, match="declared HOLDING header"):
+        list(rdr.read(bad))
 
-    with _pytest.raises(ValueError, match="declared HOLDING header"):
-        list(rdr2.read(bad[0]))
+
+def test_finport_filters_do_not_leak_between_queries(spark, tmp_path):
+    """Each query over one format("finport") DataFrame returns its own
+    rows: a filter from an earlier query never narrows a later scan of
+    the same relation."""
+    from finporter_spark.sources.finport_datasource import (
+        FinportDataSource,
+    )
+
+    d = tmp_path / "two"
+    d.mkdir()
+    (d / "h.csv").write_text(
+        _HOLDING_HDR + "a1,S1,L1,1.0,,\na2,S2,L2,2.0,,\n"
+    )
+    spark.dataSource.register(FinportDataSource)
+    df = spark.read.format("finport").option("path", str(d)).load()
+
+    def accounts(frame):
+        return sorted(r.accountID for r in frame.collect())
+
+    assert accounts(df.filter(F.col("accountID") == "a2")) == ["a2"]
+    assert accounts(df) == ["a1", "a2"]
+    assert accounts(df.filter(F.col("accountID") == "a1")) == ["a1"]
+    counts = df.groupBy("accountID").count().collect()
+    assert {r.accountID: r["count"] for r in counts} == {"a1": 1, "a2": 1}
+
+
+def test_readme_quick_start_reads_finport_on_a_plain_session(tmp_path):
+    """README's quick start: a folder of holding exports read and typed
+    on a session exactly as get_session() builds it, with no conf set
+    first."""
+    from datetime import datetime
+
+    from finporter_spark.model import ENTITY_SCHEMAS, AllocSchema
+    from finporter_spark.session import get_session
+    from finporter_spark.sources.finport_datasource import (
+        FinportDataSource,
+        typed,
+    )
+
+    exports = tmp_path / "exports"
+    exports.mkdir()
+    (exports / "h.csv").write_text(
+        _HOLDING_HDR + "a1,S1,L1,10,2.5,2021-03-01T00:00:00Z\na2,S2,,,,\n"
+    )
+
+    spark = get_session()
+    # Spark's default: a reader that implemented pushFilters would raise
+    # DATA_SOURCE_PUSHDOWN_DISABLED here
+    assert spark.conf.get("spark.sql.python.filterPushdown.enabled") == "false"
+    spark.dataSource.register(FinportDataSource)
+    holdings = typed(
+        spark.read.format("finport").option("path", str(exports)).load()
+    )
+    want = ENTITY_SCHEMAS[AllocSchema.HOLDING]
+    assert [(f.name, f.dataType) for f in holdings.schema] == [
+        (f.name, f.dataType) for f in want
+    ]
+    assert sorted(map(tuple, holdings.collect())) == [
+        ("a1", "S1", "L1", 10.0, 2.5, datetime(2021, 3, 1)),
+        ("a2", "S2", "", None, None, None),
+    ]
 
 
 def test_finport_writer_bytes_match_golden_encoder(spark, tmp_path):
@@ -135,6 +183,7 @@ def test_finport_writer_bytes_match_golden_encoder(spark, tmp_path):
     from finporter_spark.encoder import encode_to_string
     from finporter_spark.sources.finport_datasource import (
         FinportDataSource,
+        typed,
     )
 
     rows = [
@@ -161,7 +210,6 @@ def test_finport_writer_bytes_match_golden_encoder(spark, tmp_path):
     except Exception:
         pass
     out = str(tmp_path / "out")
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     df.write.format("finport").mode("overwrite").option(
         "path", out
     ).save()
@@ -171,10 +219,10 @@ def test_finport_writer_bytes_match_golden_encoder(spark, tmp_path):
     assert len(parts) == 1
     written = open(os.path.join(out, parts[0]), encoding="utf-8").read()
     assert written == encode_to_string(df)
-    # and the reader round-trips it exactly
-    back = (
-        spark.read.format("finport").option("path", out).load().collect()
-    )
+    # and the typed read round-trips it exactly
+    back = typed(
+        spark.read.format("finport").option("path", out).load()
+    ).collect()
     assert sorted(map(tuple, back)) == sorted(map(tuple, df.collect()))
 
 
@@ -284,7 +332,7 @@ def test_finport_stream_tails_growing_file(tmp_path):
     with open(d / "a.csv", "a") as fh:
         fh.write("5,,\na3,S3,L3,3.0,,\n")
     rows2, o2 = rdr.read(o1)
-    assert [(r[1], r[3]) for r in rows2] == [("S2", 2.5), ("S3", 3.0)]
+    assert [(r[1], r[3]) for r in rows2] == [("S2", "2.5"), ("S3", "3.0")]
 
     # replay of batch 1 after the file grew: still exactly batch 1
     assert [r[1] for r in rdr.readBetweenOffsets(rdr.initialOffset(), o1)] \
@@ -318,13 +366,14 @@ def test_finport_reader_quote_plus_delimiter_roundtrip(tmp_path):
     rdr = FinportReader({"path": str(tmp_path)})
     rows = _drain(rdr, _FilePartition(str(tmp_path / "f.csv")))
     assert [tuple(r[:3]) for r in rows] == [tuple(v[:3]) for v in values]
-    assert rows[0][3] == 1.5 and rows[1][4] == 3.0
+    assert rows[0][3] == "1.5" and rows[1][4] == "3.0"
 
 
 def test_finport_reader_bare_cr_is_field_content(tmp_path):
     """The golden parser ends a record at LF or CRLF only, so a bare CR
     in an unquoted field is content. The comma-split path must agree:
-    a file's rows cannot depend on whether it holds a quote elsewhere."""
+    a file's rows cannot depend on whether it holds a quote elsewhere.
+    (The importer differs here; the agreement test pins both rules.)"""
     from finporter_spark.sources.finport_datasource import (
         FinportReader,
         _FilePartition,
@@ -339,10 +388,10 @@ def test_finport_reader_bare_cr_is_field_content(tmp_path):
         (tmp_path / name).write_bytes(text.encode())
     rdr = FinportReader({"path": str(tmp_path)})
     assert _drain(rdr, _FilePartition(str(tmp_path / "cr.csv"))) == [
-        ("a1", "S\r1", "L1", 1.0, None, None)
+        ("a1", "S\r1", "L1", "1.0", "", "")
     ]
     assert _drain(rdr, _FilePartition(str(tmp_path / "crlf.csv"))) == [
-        ("a2", "S2", "L2", 2.0, None, None)
+        ("a2", "S2", "L2", "2.0", "", "")
     ]
 
 
@@ -521,43 +570,6 @@ def test_finport_stream_open_quote_fails_loudly(tmp_path):
         rdr3.read(rdr3.initialOffset())
 
 
-def test_finport_reader_ancient_timestamps(tmp_path):
-    """ADVICE (low): timestamps outside pandas' ns range (years <1677 or
-    >2262) must decode on BOTH Arrow paths — the vectorized quote-free
-    fast path and the state-machine slow path — not silently null."""
-    from datetime import datetime
-
-    from finporter_spark.sources.finport_datasource import FinportReader
-
-    hdr = "accountID,securityID,lotID,shareCount,shareBasis,acquiredAt\n"
-    d = tmp_path / "data"
-    d.mkdir()
-    # fast path: no quotes anywhere
-    (d / "fast.csv").write_text(
-        hdr
-        + "a1,S1,L1,1.0,,1500-01-01\n"
-        + "a2,S2,L2,2.0,,2500-06-01T12:00:00Z\n"
-        + "a3,S3,L3,3.0,,2021-03-01T00:00:00Z\n"
-        + "a4,S4,L4,4.0,,notadate\n"
-    )
-    # slow path: a quoted field forces the state machine
-    (d / "slow.csv").write_text(
-        hdr + 'a5,"S,5",L5,5.0,,1500-01-01\n'
-    )
-    rdr = FinportReader({"path": str(d)})
-    parts = rdr.partitions()
-    got = {}
-    for p in parts:
-        for batch in rdr.read(p):
-            for row in batch.to_pylist():
-                got[row["accountID"]] = row["acquiredAt"]
-    assert got["a1"] == datetime(1500, 1, 1)
-    assert got["a2"] == datetime(2500, 6, 1, 12, 0, 0)
-    assert got["a3"] == datetime(2021, 3, 1)
-    assert got["a4"] is None  # invalid stays null, as before
-    assert got["a5"] == datetime(1500, 1, 1)  # slow path too
-
-
 def test_finport_writer_rejects_undecodable_corner(spark, tmp_path):
     """ADVICE (low): the writer must not emit bytes its own reader
     rejects — a quoted field whose escaped form ends in a backslash
@@ -639,9 +651,8 @@ def test_both_stream_readers_reject_a_file_granular_offset(tmp_path):
             call()
 
 
-_HOLDING_HDR = "accountID,securityID,lotID,shareCount,shareBasis,acquiredAt\n"
-# full-width HOLDING rows over the field shapes the decoders disagreed
-# on; each is written once quote-free and once with a quoted field
+# full-width HOLDING rows over the field shapes that need Spark's cast
+# rules; each is written once quote-free and once with a quoted field
 _DECODE_ROWS = [
     "a1,{S1},L1,1_000,10,2021-03-01T00:00:00.000Z\n",
     "a2,S2,L2,1000,1d,2021-03-01T01:00:00+01:00\n",
@@ -649,21 +660,21 @@ _DECODE_ROWS = [
     "a4,S4,L4,,0x1p3,1500-01-01\n",
     "a5,S5,L5,-3e2,Infinity,\n",
     "a6,S6,L6,12x,1.5f,notadate\n",
+    "a7,S7,L7,1,1,0000-01-01\n",
+    "a8,S8,L8,1,1,9999-12-31T23:00:00-05:00\n",
 ]
-
-
-def _decode_expected():
-    from datetime import datetime
-
-    inf = float("inf")
-    return [
-        ("a1", "S1", "L1", None, 10.0, datetime(2021, 3, 1)),
-        ("a2", "S2", "L2", 1000.0, 1.0, datetime(2021, 3, 1)),
-        ("a3", "S3", "", 2.5, None, datetime(2021, 3, 1, 0, 0, 0, 123000)),
-        ("a4", "S4", "L4", None, 8.0, datetime(1500, 1, 1)),
-        ("a5", "S5", "L5", -300.0, inf, None),
-        ("a6", "S6", "L6", None, 1.5, None),
-    ]
+# the typed rows, acquiredAt as CAST(... AS STRING): Python's datetime
+# holds neither a7's year 0 nor a8's UTC instant in the year 10000
+_DECODE_TYPED = [
+    ("a1", "S1", "L1", None, 10.0, "2021-03-01 00:00:00"),
+    ("a2", "S2", "L2", 1000.0, 1.0, "2021-03-01 00:00:00"),
+    ("a3", "S3", "", 2.5, None, "2021-03-01 00:00:00.123"),
+    ("a4", "S4", "L4", None, 8.0, "1500-01-01 00:00:00"),
+    ("a5", "S5", "L5", -300.0, float("inf"), None),
+    ("a6", "S6", "L6", None, 1.5, None),
+    ("a7", "S7", "L7", 1.0, 1.0, "0000-01-01 00:00:00"),
+    ("a8", "S8", "L8", 1.0, 1.0, "+10000-01-01 04:00:00"),
+]
 
 
 def _write_decode_files(tmp_path):
@@ -683,10 +694,13 @@ def _write_decode_files(tmp_path):
 
 
 def test_every_finport_reader_decodes_like_the_importer(spark, tmp_path):
-    """One decode for every reader: the batch reader and both stream
-    readers type the same rows the same way whether or not the file
-    holds a quote, and format("finport") equals the importer's good
-    rows on the same file (Spark's try_cast / try_to_timestamp)."""
+    """One decode for every reader. The batch reader, both stream
+    readers and the replay yield the same string rows whether or not
+    the file holds a quote, and typed(format("finport")) equals the
+    importer's good rows on the same file, out-of-range years included
+    (compared inside Spark). A bare CR is the one declared difference:
+    field content for the connector, a record end for the importer
+    (Spark's line reader)."""
     from finporter_spark.caching import release_caches
     from finporter_spark.importers.allocdata import AllocDataImporter
     from finporter_spark.model import AllocSchema
@@ -695,10 +709,20 @@ def test_every_finport_reader_decodes_like_the_importer(spark, tmp_path):
         FinportParallelStreamReader,
         FinportReader,
         FinportStreamReader,
+        typed,
     )
 
-    want = _decode_expected()
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    def decode(d):
+        connector = spark.read.format("finport").option("path", str(d))
+        good, bad = AllocDataImporter().decode(
+            spark, str(d / "h.csv"), output_schema=AllocSchema.HOLDING
+        )
+        return typed(connector.load()), good, bad
+
+    want = [
+        tuple(r.format(S1="S1").rstrip("\n").split(","))
+        for r in _DECODE_ROWS
+    ]
     spark.dataSource.register(FinportDataSource)
     for layout, d in _write_decode_files(tmp_path).items():
         opts = {"path": str(d)}
@@ -719,60 +743,36 @@ def test_every_finport_reader_decodes_like_the_importer(spark, tmp_path):
         [rb] = list(parallel.read(sl))
         assert [tuple(r.values()) for r in rb.to_pylist()] == want, layout
 
-        connector = spark.read.format("finport").option("path", str(d))
-        good, bad = AllocDataImporter().decode(
-            spark, str(d / "h.csv"), output_schema=AllocSchema.HOLDING
-        )
+        got, good, bad = decode(d)
         try:
-            assert bad.count() == 0, layout
-            assert sorted(map(tuple, connector.load().collect())) == sorted(
-                map(tuple, good.collect())
-            ), layout
+            assert bad.isEmpty(), layout
+            assert got.exceptAll(good).isEmpty(), layout
+            assert good.exceptAll(got).isEmpty(), layout
+            shown = got.withColumn("acquiredAt", F.expr("string(acquiredAt)"))
+            assert sorted(map(tuple, shown.collect())) == _DECODE_TYPED
         finally:
             release_caches(good, bad)
 
-
-def test_typed_frame_matches_typed_projection_field_by_field(spark):
-    """Fields no file layout can hand the importer (Spark's CSV reader
-    splits a quoted newline): a trailing newline is trimmed from a
-    double but makes a timestamp null, in both decoders."""
-    import pandas as pd
-
-    from finporter_spark.importers.allocdata import typed_projection
-    from finporter_spark.model import ENTITY_SCHEMAS, AllocSchema
-    from finporter_spark.sources import CORRUPT_COL
-    from finporter_spark.sources.finport_datasource import (
-        _HEADER,
-        _pdf_to_arrow,
-        _typed_frame,
-    )
-
-    rows = [
-        ("a", "s", "l", "1\n", " 2.5 ", "2021-03-01\n"),
-        ("a", "s", "l", "\t3\r", "", "2021-03-01T00:00:00Z\n"),
-        ("a", "s", "l", "", "", " 2021-03-01T00:00:00Z "),
-    ]
-    raw = spark.createDataFrame(
-        [r + (None,) for r in rows],
-        ", ".join(f"{n} string" for n in _HEADER + [CORRUPT_COL]),
-    )
-    struct = ENTITY_SCHEMAS[AllocSchema.HOLDING]
-    want = [
-        tuple(r)
-        for r in raw.selectExpr(*typed_projection(struct))
-        .drop(CORRUPT_COL)
-        .collect()
-    ]
-    got = _pdf_to_arrow(_typed_frame(pd.DataFrame(rows, columns=_HEADER)))
-    assert [tuple(r.values()) for r in got.to_pylist()] == want
-    assert [r[5] for r in want][:2] == [None, None]
+    d = tmp_path / "bare_cr"
+    d.mkdir()
+    (d / "h.csv").write_bytes((_HOLDING_HDR + "a9,S\r9,L9,1,1,\n").encode())
+    got, good, bad = decode(d)
+    try:
+        assert list(map(tuple, got.collect())) == [
+            ("a9", "S\r9", "L9", 1.0, 1.0, None)
+        ]
+        # the importer splits the row in two, each too short to keep
+        assert good.isEmpty()
+        assert sorted(r.accountID for r in bad.collect()) == ["9", "a9"]
+    finally:
+        release_caches(good, bad)
 
 
 def test_finportp_parallel_stream_offsets_and_slices(tmp_path):
     """The partition-parallel stream reader: latestOffset advances by
     complete-record boundaries only (torn tails excluded), partitions()
     plans exactly the grown byte ranges (the replay contract), read()
-    decodes a slice to a typed Arrow batch on what would be an
+    splits a slice into an Arrow batch of strings on what would be an
     executor."""
     from finporter_spark.sources.finport_datasource import (
         FinportParallelStreamReader,
@@ -794,7 +794,7 @@ def test_finportp_parallel_stream_offsets_and_slices(tmp_path):
     [batch] = list(rdr.read(parts[0]))
     pdf = batch.to_pandas()
     assert list(pdf["securityID"]) == ["S1", "S2"]
-    assert list(pdf["shareCount"]) == [1.0, 2.0]
+    assert list(pdf["shareCount"]) == ["1.0", "2.0"]
 
     # the tail completes + a second file arrives: only deltas are planned
     (d / "a.csv").write_text(
@@ -819,13 +819,14 @@ def test_finportp_parallel_stream_offsets_and_slices(tmp_path):
 
 def test_finportp_drain_equals_batch(spark, tmp_path):
     """End-to-end through Spark: format('finportp') drained with
-    availableNow equals the batch reader's aggregate over the same
-    directory."""
+    availableNow and typed equals the typed batch read's aggregate over
+    the same directory."""
     from pyspark.sql import functions as F
 
     from finporter_spark.sources.finport_datasource import (
         FinportDataSource,
         FinportParallelDataSource,
+        typed,
     )
     from finporter_spark.streaming.pipeline import run_stream_to_memory
 
@@ -839,13 +840,12 @@ def test_finportp_drain_equals_batch(spark, tmp_path):
                 f"acct-{j % 3},S{j},L{j},{float(j)},,\n" for j in range(25)
             )
         )
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     for src in (FinportDataSource, FinportParallelDataSource):
         try:
             spark.dataSource.register(src)
         except Exception:
             pass
-    sdf = (
+    sdf = typed(
         spark.readStream.format("finportp").option("path", str(d)).load()
     )
     agg = sdf.groupBy("accountID").agg(
@@ -855,9 +855,9 @@ def test_finportp_drain_equals_batch(spark, tmp_path):
     got = {(r.accountID): (r.n, r.s) for r in out.collect()}
     want = {
         (r.accountID): (r.n, r.s)
-        for r in spark.read.format("finport")
-        .option("path", str(d))
-        .load()
+        for r in typed(
+            spark.read.format("finport").option("path", str(d)).load()
+        )
         .groupBy("accountID")
         .agg(F.count("*").alias("n"), F.sum("shareCount").alias("s"))
         .collect()
