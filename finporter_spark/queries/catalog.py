@@ -169,6 +169,13 @@ alias(
     "in the JVM state store; x17/x19 cover Python stream state",
 )
 alias(
+    "x14_datasource_stream_parallel",
+    "x12_datasource_stream",
+    "the s12 drain through a second format name whose stream reader "
+    "split byte-range slices on the executors; format('finport') "
+    "streams that way itself",
+)
+alias(
     "w14_holt_trend",
     "w14b_holt_exact",
     "matrix-scan Holt for a single series longer than a task; no "

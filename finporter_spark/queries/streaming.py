@@ -837,19 +837,22 @@ def x11_stream_budget_gate(spark, sf_dir):
 def x12_datasource_stream(spark, sf_dir):
     """X12: the finport connector's STREAMING read path
     (`spark.readStream.format("finport")`, a Spark 4
-    SimpleDataSourceStreamReader): a directory tail with byte-granular
-    offsets cut at record boundaries, so checkpoint replay re-decodes
-    exactly the byte ranges between two offsets (exactly-once;
-    incremental offset semantics unit-tested directly in
+    DataSourceStreamReader; also registered as the alias
+    x14_datasource_stream_parallel): a directory tail whose offsets are
+    byte-granular and cut at record boundaries. The driver only
+    advances offsets; each micro-batch plans one (file, byte-range)
+    slice per grown file, split into string columns on the executors,
+    and `typed` applies the importer's rules, as to the batch read.
+    Checkpoint replay re-decodes exactly the byte ranges between two
+    offsets (exactly-once; offset semantics unit-tested in
     tests/test_datasource.py). Drains the s12 fixture and aggregates in
     complete mode, so the drained answer equals the batch relational
-    oracle under any micro-batch split. The stream carries strings;
-    `typed` applies the importer's rules to it, as to the batch read.
-    Scale note: the Simple* stream-reader API is BY DESIGN
-    driver-prefetched (Spark routes simple sources' rows through the
-    driver between offset commits) — the right tier for drop-folder
-    tailing; bulk backfills go through the partition-parallel batch
-    reader (s12/s13, Arrow-batched), which is the 100 TB path."""
+    oracle under any micro-batch split. This drain runs as ONE
+    micro-batch: Spark's Python stream sources do not support
+    Trigger.AvailableNow and fall back to a single batch.
+    tests/test_datasource.py::test_finport_stream_crosses_a_batch_boundary
+    covers the split: two files, two batches, same aggregate as the
+    batch read."""
     from finporter_spark.sources.finport_datasource import (
         FinportDataSource,
         typed,
@@ -955,56 +958,6 @@ def x6b_builtin_running_totals(spark, sf_dir):
         agg, "x6b_mem", output_mode="update", state_partitions=32
     )
     return out.select("user_id", "n")
-
-
-# =====================================================================
-# X14 — executor-parallel Python DataSource stream (finportp)
-# =====================================================================
-
-
-@query(
-    "x14_datasource_stream_parallel",
-    """
-    SELECT 'acct-' || CAST(p_partkey % 7 AS VARCHAR) AS accountID,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(p_size AS DOUBLE)) AS DOUBLE) AS total_shares
-    FROM part
-    GROUP BY 1
-    """,
-)
-def x14_datasource_stream_parallel(spark, sf_dir):
-    """X14: the finport connector's PARTITION-PARALLEL streaming tier
-    (`spark.readStream.format("finportp")`, a Spark 4
-    DataSourceStreamReader): the driver only advances byte-granular
-    offsets (O(new bytes) boundary scan per trigger, no record split);
-    each micro-batch plans one (file, byte-range) slice per grown file
-    and the EXECUTORS split slices into Arrow RecordBatches of strings,
-    which `typed` types with the importer's rules — the
-    scale tier x12's docstring promises (the Simple* API routes every
-    decoded row through the driver BY DESIGN; right for drop-folder
-    tailing, wrong for bulk backfill). Same offsets, same exactly-once
-    replay contract (partitions(start, end) IS the replay range), same
-    fail-loud unterminated-quote bounds — by composition with the
-    simple reader, not by copy. Drains the same staged s12 fixture in
-    complete mode, so the drained answer equals the batch relational
-    oracle under any micro-batch split; DECADE_BENCH carries the
-    x12-vs-x14 throughput comparison."""
-    from finporter_spark.sources.finport_datasource import (
-        FinportParallelDataSource,
-        typed,
-    )
-
-    CATALOG["s12_python_datasource"][0](spark, sf_dir).limit(1).collect()
-    in_path = _io_dir(sf_dir, "s12")
-    spark.dataSource.register(FinportParallelDataSource)
-    sdf = typed(
-        spark.readStream.format("finportp").option("path", in_path).load()
-    )
-    agg = sdf.groupBy("accountID").agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("shareCount").cast("double").alias("total_shares"),
-    )
-    return run_stream_to_memory(agg, "x14_mem", output_mode="complete")
 
 
 @query(

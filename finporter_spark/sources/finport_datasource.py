@@ -8,8 +8,14 @@ AllocData holding CSVs (header = the declared attribute order,
 
     holdings = typed(spark.read.format("finport").option("path", dir).load())
 
-- **one InputPartition per file** — files split into string columns in
-  parallel on executors;
+- **one slice per file** — a batch read plans one whole-file
+  ``_FileSlice`` per file, split into string columns in parallel on
+  executors;
+- **one stream reader** — ``spark.readStream.format("finport")`` tails
+  the directory with byte-granular offsets (``FinportStreamReader``):
+  the driver only records complete-record boundaries, and each
+  micro-batch plans one ``_FileSlice`` per grown file, split on the
+  executors the same way as a batch read;
 - **strings out, one typing rule** — the connector yields the six
   HOLDING fields as strings ("" for a blank or missing field), and
   :func:`typed` applies the importer's ``typed_projection`` on top,
@@ -56,7 +62,6 @@ from pyspark.sql.datasource import (
     DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StringType, StructField, StructType
@@ -68,10 +73,9 @@ _HEADER = list(_HOLDING.names)
 
 
 def typed(df):
-    """A finport DataFrame — batch or stream, ``finport`` or
-    ``finportp`` — typed by the importer's rules: ``typed_projection``
-    over the HOLDING schema, without the corrupt-record column the
-    connector does not have."""
+    """A finport DataFrame — batch or stream — typed by the importer's
+    rules: ``typed_projection`` over the HOLDING schema, without the
+    corrupt-record column the connector does not have."""
     from finporter_spark.importers.allocdata import typed_projection
     from finporter_spark.sources import CORRUPT_COL
 
@@ -238,9 +242,45 @@ def _pdf_to_arrow(pdf):
     )
 
 
-class _FilePartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
+def _csv_files(path: str) -> list:
+    """Names of the finport inputs in directory ``path``: the ``.csv``
+    files, less ``_``/``.``-prefixed ones (markers, temps, the writer's
+    uncommitted parts)."""
+    return sorted(
+        f
+        for f in os.listdir(path)
+        if f.endswith(".csv") and not f.startswith(("_", "."))
+    )
+
+
+@dataclass
+class _FileSlice(InputPartition):
+    """Bytes [lo, hi) of one file; ``hi=None`` reads to EOF. A batch
+    read is one whole-file slice per file; a stream batch is one slice
+    per grown file, both ends record boundaries the offset scan
+    recorded."""
+
+    path: str
+    lo: int = 0
+    hi: int | None = None
+
+
+def _read_slice(part: _FileSlice):
+    """One Arrow RecordBatch of the slice's HOLDING string columns (the
+    slice at byte 0 starts with the header). A whole file may end
+    without a newline; a recorded stream range that no longer ends at a
+    record boundary raises."""
+    with open(part.path, "rb") as fh:
+        fh.seek(part.lo)
+        data = fh.read() if part.hi is None else fh.read(part.hi - part.lo)
+    text = data.decode("utf-8")
+    if part.hi is not None and not text.endswith("\n"):
+        raise ValueError(
+            f"finport: {part.path}: recorded offset range [{part.lo},"
+            f"{part.hi}) no longer ends at a record boundary — "
+            "consumed bytes were rewritten in place (append-only contract)"
+        )
+    return _pdf_to_arrow(_string_frame(text, part.path, header=part.lo == 0))
 
 
 class FinportReader(DataSourceReader):
@@ -250,22 +290,16 @@ class FinportReader(DataSourceReader):
             raise ValueError("finport: .load(path) directory is required")
 
     def partitions(self):
-        files = sorted(
-            os.path.join(self.path, f)
-            for f in os.listdir(self.path)
-            if f.endswith(".csv") and not f.startswith(("_", "."))
-        )
+        files = _csv_files(self.path)
         if not files:
             raise FileNotFoundError(
                 f"finport: no .csv files under {self.path}"
             )
-        return [_FilePartition(p) for p in files]
+        return [_FileSlice(os.path.join(self.path, f)) for f in files]
 
     def read(self, partition):
         """Yields one Arrow RecordBatch per file."""
-        with io.open(partition.path, encoding="utf-8", newline="") as fh:
-            text = fh.read()
-        yield _pdf_to_arrow(_string_frame(text, partition.path))
+        yield _read_slice(partition)
 
 
 class FinportDataSource(DataSource):
@@ -289,7 +323,7 @@ class FinportDataSource(DataSource):
     def writer(self, schema, overwrite: bool):
         return FinportWriter(self.options, overwrite)
 
-    def simpleStreamReader(self, schema):
+    def streamReader(self, schema):
         return FinportStreamReader(self.options)
 
 
@@ -477,49 +511,30 @@ def _utf8_prefix(data: bytes) -> str:
     )
 
 
-def _slice_frame(data: bytes, where: str, lo: int):
-    """String frame of a recorded byte range that starts at byte ``lo``
-    of a file: both ends are record boundaries a previous listing
-    recorded, so the range is whole records (the one at byte 0 starts
-    with the header). A range that no longer ends at a record boundary
-    raises."""
-    text = data.decode("utf-8")
-    if not text.endswith("\n"):
-        raise ValueError(
-            f"finport: {where}: recorded offset range [{lo},"
-            f"{lo + len(data)}) no longer ends at a record boundary — "
-            "consumed bytes were rewritten in place (append-only contract)"
-        )
-    return _string_frame(text, where, header=lo == 0)
-
-
-def _read_range(path: str, lo: int, hi: int):
-    with open(path, "rb") as fh:
-        fh.seek(lo)
-        return _slice_frame(fh.read(hi - lo), path, lo)
-
-
-def _rows(pdf) -> list:
-    """String frame -> row tuples for the simple stream reader."""
-    return list(pdf.itertuples(index=False, name=None))
-
-
-class FinportStreamReader(SimpleDataSourceStreamReader):
+class FinportStreamReader(DataSourceStreamReader):
     """Micro-batch source over a growing directory of holding CSVs.
 
+    The driver only advances offsets; the executors split the records.
     Offset = ``{"seen": {filename: consumed_bytes}}`` — byte-granular,
     cut at COMPLETE-RECORD boundaries only (``_scan_boundary`` finds
     where the last newline-terminated record ends, so a file an
     external producer is still appending to is consumed up to its last
     complete record and the remainder picked up by a later batch; a
     half-written final line is never consumed, and therefore never
-    replayed differently once the file completes). ``readBetweenOffsets``
-    re-decodes exactly the recorded byte ranges, so checkpoint replay
-    after restart is deterministic even for files that have since grown
-    (exactly-once on top of the checkpoint log). Files must be
-    append-only while under the watched directory (rewriting consumed
-    bytes in place breaks any file-tailing source's replay contract,
-    including Spark's own).
+    replayed differently once the file completes). Each micro-batch
+    plans one ``_FileSlice`` per grown file, and ``read`` splits it on
+    an executor into one Arrow RecordBatch of string columns.
+    ``partitions(start, end)`` IS the replay range: checkpoint recovery
+    re-decodes exactly the recorded byte spans, even for files that
+    have since grown (exactly-once on top of the checkpoint log). Files
+    must be append-only while under the watched directory (rewriting
+    consumed bytes in place breaks any file-tailing source's replay
+    contract, including Spark's own).
+
+    ``latestOffset`` gets no start offset, so the driver keeps the
+    boundaries it found in ``_known``; after a driver restart the first
+    trigger re-scans each file once from byte 0 (O(file), once) and
+    continues O(new bytes) after.
 
     A tail stuck inside an unterminated quoted field fails loudly once
     it can no longer be a legitimate in-progress multi-line field (see
@@ -544,18 +559,35 @@ class FinportStreamReader(SimpleDataSourceStreamReader):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("finport: .load(path) directory is required")
-        # name -> (stuck record boundary, file size last tick, growth ticks)
+        self._known: dict = {}  # name -> last record boundary found
+        # name -> (stuck record boundary, triggers stuck at it)
         self._open_quote: dict = {}
-
-    def _files(self):
-        return sorted(
-            f
-            for f in os.listdir(self.path)
-            if f.endswith(".csv") and not f.startswith(("_", "."))
-        )
 
     def initialOffset(self) -> dict:
         return {"seen": {}}
+
+    def latestOffset(self) -> dict:
+        for name in _csv_files(self.path):
+            prev = self._known.get(name, 0)
+            boundary = self._advance(name, prev)
+            if boundary > prev:
+                self._known[name] = boundary
+        return {"seen": dict(self._known)}
+
+    def partitions(self, start: dict, end: dict):
+        """One slice per file that grew between the two offsets."""
+        lo, hi = self._seen(start), self._seen(end)
+        return [
+            _FileSlice(os.path.join(self.path, name), lo.get(name, 0), b)
+            for name, b in sorted(hi.items())
+            if b > lo.get(name, 0)
+        ]
+
+    def read(self, partition):  # runs on an EXECUTOR
+        yield _read_slice(partition)
+
+    def commit(self, end: dict) -> None:
+        pass  # source files are append-only inputs; nothing to clean
 
     @staticmethod
     def _seen(offset: dict) -> dict:
@@ -568,25 +600,16 @@ class FinportStreamReader(SimpleDataSourceStreamReader):
             )
         return {str(k): int(v) for k, v in seen.items()}
 
-    def _ranges(self, start: dict, end: dict):
-        """(path, lo, hi) of every file range between two offsets."""
-        s_seen, e_seen = self._seen(start), self._seen(end)
-        for name in sorted(e_seen):
-            lo, hi = s_seen.get(name, 0), e_seen[name]
-            if hi > lo:
-                yield os.path.join(self.path, name), lo, hi
-
-    def _advance(self, name: str, prev: int):
-        """``(boundary, data)``: the last complete-record boundary of
-        file ``name`` at or past ``prev``, and the bytes [prev,
-        boundary). Per-trigger cost is O(new bytes): an unchanged file
-        is skipped on its size, and only the suffix past ``prev`` is
-        read and scanned."""
+    def _advance(self, name: str, prev: int) -> int:
+        """The last complete-record boundary of file ``name`` at or
+        past ``prev``. Per-trigger cost is O(new bytes): an unchanged
+        file is skipped on its size, and only the suffix past ``prev``
+        is read and scanned."""
         full = os.path.join(self.path, name)
         size = os.path.getsize(full)
         if size <= prev:
             self._open_quote.pop(name, None)
-            return prev, b""
+            return prev
         with open(full, "rb") as fh:
             fh.seek(prev)
             data = fh.read()
@@ -599,21 +622,19 @@ class FinportStreamReader(SimpleDataSourceStreamReader):
             self._check_open_quote(name, prev + rel, size)
         else:
             self._open_quote.pop(name, None)
-        return prev + rel, data[:rel]
+        return prev + rel
 
     def _check_open_quote(self, name: str, boundary: int, size: int):
         """Track a file whose unconsumed tail is inside an open quoted
         field; raise once the tail can no longer be a legitimate
         in-progress multi-line field (see class constants)."""
-        prev_b, _prev_size, ticks = self._open_quote.get(
-            name, (boundary, size, 0)
-        )
+        prev_b, ticks = self._open_quote.get(name, (boundary, 0))
         if prev_b != boundary:  # progress was made: restart tracking
             ticks = 0
         # every trigger without boundary progress counts — growing or
         # not: a producer that stopped mid-quote must also fail loudly
         ticks += 1
-        self._open_quote[name] = (boundary, size, ticks)
+        self._open_quote[name] = (boundary, ticks)
         if (
             size - boundary > self._OPEN_QUOTE_MAX_BYTES
             or ticks >= self._OPEN_QUOTE_MAX_TICKS
@@ -626,117 +647,6 @@ class FinportStreamReader(SimpleDataSourceStreamReader):
                 "input (the file would otherwise stall silently forever)"
             )
 
-    def read(self, start: dict):
-        seen = self._seen(start)
-        end = dict(seen)
-        # a LIST, not a generator: Spark's prefetching cache copies the
-        # returned iterator for checkpoint replay (generators can't be
-        # copied); batch sizes are bounded by what arrived since last tick
-        rows: list = []
-        for name in self._files():
-            prev = seen.get(name, 0)
-            boundary, data = self._advance(name, prev)
-            if boundary > prev:
-                full = os.path.join(self.path, name)
-                rows.extend(_rows(_slice_frame(data, full, prev)))
-                end[name] = boundary
-        return iter(rows), {"seen": end}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        rows: list = []
-        for path, lo, hi in self._ranges(start, end):
-            rows.extend(_rows(_read_range(path, lo, hi)))
-        return iter(rows)
-
-    def commit(self, end: dict) -> None:
-        pass  # nothing to clean: source files are immutable inputs
-
-
-# ---------------------------------------------------------------------
-# Executor-parallel streaming read: df = spark.readStream
-#   .format("finportp").option("path", dir).load()
-# ---------------------------------------------------------------------
-
-
-@dataclass
-class _FinportStreamSlice(InputPartition):
-    """One (file, byte-range) slice of a micro-batch — both ends are
-    complete-record boundaries recorded by the driver's offset scan."""
-
-    path: str
-    lo: int
-    hi: int
-
-
-class FinportParallelStreamReader(DataSourceStreamReader):
-    """Partition-parallel micro-batch source over the same golden-CSV
-    drop directory as `FinportStreamReader` — the scale tier of the
-    streaming read path.
-
-    The Simple* API (x12) routes every decoded ROW through the driver
-    between offset commits — by design, and the right tier for
-    drop-folder tailing. This reader splits the work the way the batch
-    reader does: the DRIVER only advances offsets (the same
-    ``_advance`` byte scan per trigger — records are not split here),
-    and each micro-batch plans one `_FinportStreamSlice` partition per
-    grown file, split ON THE EXECUTORS into one Arrow RecordBatch of
-    string columns per slice (columnar transfer, no per-row pickling).
-
-    Offsets are byte-granular `{"seen": {file: boundary}}`, identical
-    semantics to the simple reader: cut at complete-record boundaries,
-    append-only contract, deterministic replay — `partitions(start,
-    end)` IS the replay range, so checkpoint recovery re-decodes
-    exactly the recorded byte spans (exactly-once on top of the
-    checkpoint log). The driver keeps `_known` boundaries in memory;
-    after a driver restart the first trigger re-scans each file once
-    from byte 0 (O(file), once) and continues O(new bytes) after.
-    Unterminated-quote stalls fail loudly via the same tick/byte
-    bounds as the simple reader (composition, not copy).
-    """
-
-    def __init__(self, options):
-        self._tail = FinportStreamReader(options)  # reuse guards/layout
-        self._known: dict = {}
-
-    def initialOffset(self) -> dict:
-        return {"seen": {}}
-
-    def latestOffset(self) -> dict:
-        for name in self._tail._files():
-            prev = self._known.get(name, 0)
-            boundary, _ = self._tail._advance(name, prev)
-            if boundary > prev:
-                self._known[name] = boundary
-        return {"seen": dict(self._known)}
-
-    def partitions(self, start: dict, end: dict):
-        return [
-            _FinportStreamSlice(path, lo, hi)
-            for path, lo, hi in self._tail._ranges(start, end)
-        ]
-
-    def read(self, partition):  # runs on an EXECUTOR
-        yield _pdf_to_arrow(
-            _read_range(partition.path, partition.lo, partition.hi)
-        )
-
-    def commit(self, end: dict) -> None:
-        pass  # source files are append-only inputs; nothing to clean
-
-
-class FinportParallelDataSource(FinportDataSource):
-    """`format("finportp")` — same batch reader/writer as "finport",
-    executor-parallel partitioned streaming instead of the simple
-    driver-prefetched tier (pyspark prefers ``streamReader`` over the
-    inherited ``simpleStreamReader`` when both exist)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "finportp"
-
-    def streamReader(self, schema):
-        return FinportParallelStreamReader(self.options)
-
 
 def _scan_boundary(data: bytes, delimiter: bytes = b",") -> tuple:
     """Vectorized last-complete-record boundary scan over a suffix that
@@ -745,8 +655,8 @@ def _scan_boundary(data: bytes, delimiter: bytes = b",") -> tuple:
     newline (0 if none) and ``open_q`` is True when EOF sits inside an
     unterminated quoted span.
 
-    This is the per-trigger offset-discovery cost of both stream
-    readers (``FinportStreamReader._advance``): offset discovery needs
+    This is the stream reader's per-trigger offset-discovery cost
+    (``FinportStreamReader._advance``): offset discovery needs
     only the BOUNDARY, and running the char-level automaton
     (`_parse_golden`) just to throw the fields away made the driver scan
     the bottleneck at sf10 (measured: 39 s, ~60% in boundary
@@ -768,7 +678,7 @@ def _scan_boundary(data: bytes, delimiter: bytes = b",") -> tuple:
       QUOTES ONLY — O(#quotes) python on data that is usually
       quote-free, never O(bytes) python.
 
-    Wrong-boundary inputs cannot corrupt silently: ``_slice_frame``
+    Wrong-boundary inputs cannot corrupt silently: ``_read_slice``
     re-parses each recorded slice and raises if it does not end on a
     record boundary, and the property test drives this scanner against
     `_parse_golden` on adversarial quote/escape/newline soups.

@@ -11,10 +11,20 @@ _HOLDING_HDR = "accountID,securityID,lotID,shareCount,shareBasis,acquiredAt\n"
 
 
 def _drain(rdr, part):
-    """Consume FinportReader.read (Arrow RecordBatches) into row tuples."""
+    """Consume a finport reader's read(part) (Arrow RecordBatches) into
+    row tuples."""
     rows = []
     for batch in rdr.read(part):
         rows += [tuple(d.values()) for d in batch.to_pylist()]
+    return rows
+
+
+def _stream_rows(rdr, start, end):
+    """Rows of every slice the stream reader plans between two offsets,
+    each read as an executor reads it."""
+    rows = []
+    for part in rdr.partitions(start, end):
+        rows += _drain(rdr, part)
     return rows
 
 
@@ -205,10 +215,7 @@ def test_finport_writer_bytes_match_golden_encoder(spark, tmp_path):
         ),
     ]
     df = spark.createDataFrame(rows).coalesce(1)
-    try:
-        spark.dataSource.register(FinportDataSource)
-    except Exception:
-        pass
+    spark.dataSource.register(FinportDataSource)
     out = str(tmp_path / "out")
     df.write.format("finport").mode("overwrite").option(
         "path", out
@@ -238,10 +245,7 @@ def test_finport_writer_abort_leaves_no_partial_output(spark, tmp_path):
         FinportDataSource,
     )
 
-    try:
-        spark.dataSource.register(FinportDataSource)
-    except Exception:
-        pass
+    spark.dataSource.register(FinportDataSource)
     out = str(tmp_path / "out")
 
     @F.udf("double")
@@ -269,40 +273,89 @@ def test_finport_writer_abort_leaves_no_partial_output(spark, tmp_path):
 
 
 def test_finport_stream_reader_incremental_offsets(tmp_path):
-    """Offset semantics without a Spark session: read() consumes only
-    bytes not covered by the start offset, offsets are cumulative,
-    readBetweenOffsets replays exactly the recorded byte ranges (the
-    checkpoint-recovery contract), and an empty tick yields no rows."""
+    """Offset semantics without a Spark session: offsets are cumulative
+    per file, an empty tick leaves the offset unchanged and plans
+    nothing, a new file's arrival plans only that file, and replaying
+    between two recorded offsets yields exactly the rows between them
+    (the checkpoint-recovery contract)."""
     from finporter_spark.sources.finport_datasource import (
         FinportStreamReader,
     )
 
     d = tmp_path / "stream"
     d.mkdir()
-    hdr = "accountID,securityID,lotID,shareCount,shareBasis,acquiredAt\n"
-    (d / "a.csv").write_text(hdr + "a1,S1,L1,1.0,,\n")
+    (d / "a.csv").write_text(_HOLDING_HDR + "a1,S1,L1,1.0,,\n")
     rdr = FinportStreamReader({"path": str(d)})
 
     o0 = rdr.initialOffset()
-    rows1, o1 = rdr.read(o0)
-    assert [r[1] for r in rows1] == ["S1"]
-    assert set(o1["seen"]) == {"a.csv"}
-    assert o1["seen"]["a.csv"] == (d / "a.csv").stat().st_size
+    o1 = rdr.latestOffset()
+    assert o1 == {"seen": {"a.csv": (d / "a.csv").stat().st_size}}
+    assert [r[1] for r in _stream_rows(rdr, o0, o1)] == ["S1"]
 
-    # nothing new: empty batch, offset unchanged
-    rows2, o2 = rdr.read(o1)
-    assert list(rows2) == [] and o2 == o1
+    # nothing new: the offset is unchanged and nothing is planned
+    assert rdr.latestOffset() == o1
+    assert rdr.partitions(o1, o1) == []
 
-    # a new file arrives: only it is read
-    (d / "b.csv").write_text(hdr + "a2,S2,L2,2.0,,\na3,S3,L3,3.0,,\n")
-    rows3, o3 = rdr.read(o1)
-    assert [r[1] for r in rows3] == ["S2", "S3"]
-    assert set(o3["seen"]) == {"a.csv", "b.csv"}
+    # a new file arrives: only it is planned
+    (d / "b.csv").write_text(
+        _HOLDING_HDR + "a2,S2,L2,2.0,,\na3,S3,L3,3.0,,\n"
+    )
+    o2 = rdr.latestOffset()
+    assert set(o2["seen"]) == {"a.csv", "b.csv"}
+    assert o2["seen"]["a.csv"] == o1["seen"]["a.csv"]
+    [part] = rdr.partitions(o1, o2)
+    assert part.lo == 0
+    assert [r[1] for r in _drain(rdr, part)] == ["S2", "S3"]
 
-    # checkpoint replay: exactly the delta between two offsets
-    replay = list(rdr.readBetweenOffsets(o1, o3))
-    assert [r[1] for r in replay] == ["S2", "S3"]
-    assert [r[1] for r in rdr.readBetweenOffsets(o0, o1)] == ["S1"]
+    # replay: exactly the rows between two recorded offsets
+    assert [r[1] for r in _stream_rows(rdr, o1, o2)] == ["S2", "S3"]
+    assert [r[1] for r in _stream_rows(rdr, o0, o1)] == ["S1"]
+    assert [r[1] for r in _stream_rows(rdr, o0, o2)] == ["S1", "S2", "S3"]
+
+
+def test_finport_stream_plans_grown_slices(tmp_path):
+    """latestOffset advances by complete-record boundaries only (a torn
+    tail is excluded), partitions() plans only the grown byte ranges,
+    read() splits a slice into an Arrow batch of strings as an executor
+    would, and the same two offsets plan the same slices again."""
+    from finporter_spark.sources.finport_datasource import (
+        FinportStreamReader,
+    )
+
+    d = tmp_path / "stream"
+    d.mkdir()
+    first = _HOLDING_HDR + "a1,S1,L1,1.0,,\na2,S2,L2,2.0,,\n"
+    (d / "a.csv").write_text(first + "TORN")
+    rdr = FinportStreamReader({"path": str(d)})
+
+    o0 = rdr.initialOffset()
+    o1 = rdr.latestOffset()
+    assert o1 == {"seen": {"a.csv": len(first.encode())}}  # torn excluded
+    [part] = rdr.partitions(o0, o1)
+    assert (part.lo, part.hi) == (0, len(first.encode()))
+    [batch] = list(rdr.read(part))
+    pdf = batch.to_pandas()
+    assert list(pdf["securityID"]) == ["S1", "S2"]
+    assert list(pdf["shareCount"]) == ["1.0", "2.0"]
+
+    # the tail completes and a second file arrives: only deltas planned
+    with open(d / "a.csv", "a") as fh:
+        fh.write(",S3,L3,3.0,,\n")
+    (d / "b.csv").write_text(_HOLDING_HDR + "b1,S4,L4,4.0,,\n")
+    o2 = rdr.latestOffset()
+    assert set(o2["seen"]) == {"a.csv", "b.csv"}
+    assert o2["seen"]["a.csv"] == (d / "a.csv").stat().st_size
+    sa, sb = rdr.partitions(o1, o2)
+    assert (sa.lo, sb.lo) == (o1["seen"]["a.csv"], 0)
+    assert _drain(rdr, sa) == [("TORN", "S3", "L3", "3.0", "", "")]
+    assert _drain(rdr, sb) == [("b1", "S4", "L4", "4.0", "", "")]
+
+    # replay: the same two offsets plan the same slices and rows
+    assert rdr.partitions(o1, o2) == [sa, sb]
+    assert [r[1] for r in _stream_rows(rdr, o0, o1)] == ["S1", "S2"]
+    assert [r[1] for r in _stream_rows(rdr, o0, o2)] == [
+        "S1", "S2", "S3", "S4"
+    ]
 
 
 def test_finport_stream_tails_growing_file(tmp_path):
@@ -310,34 +363,34 @@ def test_finport_stream_tails_growing_file(tmp_path):
     must not be half-consumed-then-replayed-differently. The offset is
     byte-granular and cut at complete-record boundaries: a torn final
     line is NOT consumed, the bytes that complete it arrive as a later
-    batch, and readBetweenOffsets replays the recorded ranges
-    deterministically even after the file has since grown."""
+    batch, and the recorded ranges replay deterministically even after
+    the file has since grown."""
     from finporter_spark.sources.finport_datasource import (
         FinportStreamReader,
     )
 
     d = tmp_path / "stream"
     d.mkdir()
-    hdr = "accountID,securityID,lotID,shareCount,shareBasis,acquiredAt\n"
     # producer cut mid-row: the second record has no trailing newline
-    (d / "a.csv").write_text(hdr + "a1,S1,L1,1.0,,\na2,S2,L2,2.")
+    (d / "a.csv").write_text(_HOLDING_HDR + "a1,S1,L1,1.0,,\na2,S2,L2,2.")
     rdr = FinportStreamReader({"path": str(d)})
 
-    rows1, o1 = rdr.read(rdr.initialOffset())
-    assert [r[1] for r in rows1] == ["S1"]  # torn row NOT consumed
-    stable1 = o1["seen"]["a.csv"]
-    assert stable1 == len(hdr + "a1,S1,L1,1.0,,\n")
+    o0 = rdr.initialOffset()
+    o1 = rdr.latestOffset()
+    assert [r[1] for r in _stream_rows(rdr, o0, o1)] == ["S1"]  # torn row
+    assert o1["seen"]["a.csv"] == len(_HOLDING_HDR + "a1,S1,L1,1.0,,\n")
 
     # the producer finishes the row and appends another
     with open(d / "a.csv", "a") as fh:
         fh.write("5,,\na3,S3,L3,3.0,,\n")
-    rows2, o2 = rdr.read(o1)
-    assert [(r[1], r[3]) for r in rows2] == [("S2", "2.5"), ("S3", "3.0")]
+    o2 = rdr.latestOffset()
+    assert [(r[1], r[3]) for r in _stream_rows(rdr, o1, o2)] == [
+        ("S2", "2.5"),
+        ("S3", "3.0"),
+    ]
 
     # replay of batch 1 after the file grew: still exactly batch 1
-    assert [r[1] for r in rdr.readBetweenOffsets(rdr.initialOffset(), o1)] \
-        == ["S1"]
-    assert [r[1] for r in rdr.readBetweenOffsets(o1, o2)] == ["S2", "S3"]
+    assert [r[1] for r in _stream_rows(rdr, o0, o1)] == ["S1"]
 
 
 def test_finport_reader_quote_plus_delimiter_roundtrip(tmp_path):
@@ -349,7 +402,7 @@ def test_finport_reader_quote_plus_delimiter_roundtrip(tmp_path):
     fields."""
     from finporter_spark.sources.finport_datasource import (
         FinportReader,
-        _FilePartition,
+        _FileSlice,
         _golden_field,
     )
 
@@ -364,7 +417,7 @@ def test_finport_reader_quote_plus_delimiter_roundtrip(tmp_path):
     ]
     (tmp_path / "f.csv").write_text(hdr + "".join(lines))
     rdr = FinportReader({"path": str(tmp_path)})
-    rows = _drain(rdr, _FilePartition(str(tmp_path / "f.csv")))
+    rows = _drain(rdr, _FileSlice(str(tmp_path / "f.csv")))
     assert [tuple(r[:3]) for r in rows] == [tuple(v[:3]) for v in values]
     assert rows[0][3] == "1.5" and rows[1][4] == "3.0"
 
@@ -376,7 +429,7 @@ def test_finport_reader_bare_cr_is_field_content(tmp_path):
     (The importer differs here; the agreement test pins both rules.)"""
     from finporter_spark.sources.finport_datasource import (
         FinportReader,
-        _FilePartition,
+        _FileSlice,
     )
 
     hdr = "accountID,securityID,lotID,shareCount,shareBasis,acquiredAt\n"
@@ -387,10 +440,10 @@ def test_finport_reader_bare_cr_is_field_content(tmp_path):
     for name, text in rows.items():
         (tmp_path / name).write_bytes(text.encode())
     rdr = FinportReader({"path": str(tmp_path)})
-    assert _drain(rdr, _FilePartition(str(tmp_path / "cr.csv"))) == [
+    assert _drain(rdr, _FileSlice(str(tmp_path / "cr.csv"))) == [
         ("a1", "S\r1", "L1", "1.0", "", "")
     ]
-    assert _drain(rdr, _FilePartition(str(tmp_path / "crlf.csv"))) == [
+    assert _drain(rdr, _FileSlice(str(tmp_path / "crlf.csv"))) == [
         ("a2", "S2", "L2", "2.0", "", "")
     ]
 
@@ -403,22 +456,22 @@ def test_finport_reader_raises_on_overwide_row(tmp_path):
 
     from finporter_spark.sources.finport_datasource import (
         FinportReader,
-        _FilePartition,
+        _FileSlice,
     )
 
     hdr = "accountID,securityID,lotID,shareCount,shareBasis,acquiredAt\n"
     (tmp_path / "f.csv").write_text(hdr + "a,b,c,1.0,2.0,,EXTRA\n")
     rdr = FinportReader({"path": str(tmp_path)})
     with _pytest.raises(ValueError, match="malformed"):
-        _drain(rdr, _FilePartition(str(tmp_path / "f.csv")))
+        _drain(rdr, _FileSlice(str(tmp_path / "f.csv")))
     # an EMPTY 7th field (trailing comma) is over-wide too — the fast
     # path must reject it exactly like the state machine does
     (tmp_path / "g.csv").write_text(hdr + "a,b,c,1.0,2.0,,\n")
     with _pytest.raises(ValueError, match="malformed|wider"):
-        _drain(rdr, _FilePartition(str(tmp_path / "g.csv")))
+        _drain(rdr, _FileSlice(str(tmp_path / "g.csv")))
     (tmp_path / "h.csv").write_text(hdr + 'a,"b",c,1.0,2.0,,\n')
     with _pytest.raises(ValueError, match="malformed|fields"):
-        _drain(rdr, _FilePartition(str(tmp_path / "h.csv")))
+        _drain(rdr, _FileSlice(str(tmp_path / "h.csv")))
 
 
 def test_finport_writer_append_preserves_previous_parts(spark, tmp_path):
@@ -434,10 +487,7 @@ def test_finport_writer_append_preserves_previous_parts(spark, tmp_path):
         FinportDataSource,
     )
 
-    try:
-        spark.dataSource.register(FinportDataSource)
-    except Exception:
-        pass
+    spark.dataSource.register(FinportDataSource)
     out = str(tmp_path / "out")
 
     schema = (
@@ -473,16 +523,20 @@ def test_finport_writer_append_preserves_previous_parts(spark, tmp_path):
 
 def test_golden_parser_inverts_encoder_property():
     """Property: for any list of rows of arbitrary strings (quotes,
-    delimiters, newlines, backslashes), _parse_golden(_golden_field
-    encoding) recovers the rows exactly — OR _golden_field RAISES on
+    delimiters, newlines, backslashes), the writer's column encoder
+    (_golden_encode_column) yields the scalar _golden_field's bytes,
+    _parse_golden(_golden_field encoding) recovers the rows exactly —
+    OR both encoders RAISE on
     the one value shape the dialect cannot represent (a quoted field
     whose escaped form ends in a backslash: its tail '...\\"' is
     indistinguishable from an escaped quote, so the writer refuses to
     emit bytes its own reader would reject)."""
+    import pyarrow as pa
     import pytest
     from hypothesis import given, settings, strategies as st
 
     from finporter_spark.sources.finport_datasource import (
+        _golden_encode_column,
         _golden_field,
         _parse_golden,
     )
@@ -498,9 +552,25 @@ def test_golden_parser_inverts_encoder_property():
         # quoted (contains delimiter/newline) AND ends with backslash
         return v.endswith("\\") and any(c in v for c in ",\n\r")
 
+    def columns(rs):
+        # ragged rows: a missing trailing field is a null
+        width = max(map(len, rs))
+        return [
+            [r[i] if i < len(r) else None for r in rs] for i in range(width)
+        ]
+
     @settings(max_examples=300, deadline=None)
     @given(rows)
     def check(rs):
+        # the writer's vectorized encoder is the scalar one, column-wise
+        for col in columns(rs):
+            arr = pa.array(col, pa.string())
+            if any(v is not None and ambiguous(v) for v in col):
+                with pytest.raises(ValueError, match="not representable"):
+                    _golden_encode_column(arr)
+            else:
+                want = [_golden_field(v) for v in col]
+                assert list(_golden_encode_column(arr)) == want
         if any(ambiguous(v) for r in rs for v in r):
             bad = next(v for r in rs for v in r if ambiguous(v))
             with pytest.raises(ValueError, match="not representable"):
@@ -540,12 +610,15 @@ def test_finport_stream_open_quote_fails_loudly(tmp_path):
     f1 = d1 / "a.csv"
     f1.write_text(hdr + 'a1,"multi\nline')
     rdr = FinportStreamReader({"path": str(d1)})
-    rows, o1 = rdr.read(rdr.initialOffset())
-    assert list(rows) == []  # open quote: nothing complete yet
+    o0 = rdr.initialOffset()
+    o1 = rdr.latestOffset()
+    assert _stream_rows(rdr, o0, o1) == []  # open quote: nothing complete
     with open(f1, "a") as fh:
         fh.write('\nstill",L1,1.0,,\n')
-    rows2, o2 = rdr.read(o1)
-    assert [r[1] for r in rows2] == ["multi\nline\nstill"]
+    o2 = rdr.latestOffset()
+    assert [r[1] for r in _stream_rows(rdr, o1, o2)] == [
+        "multi\nline\nstill"
+    ]
 
     # 2) malformed: quote never closes while complete lines accumulate
     d2 = tmp_path / "stuck"
@@ -553,10 +626,9 @@ def test_finport_stream_open_quote_fails_loudly(tmp_path):
     f2 = d2 / "b.csv"
     f2.write_text(hdr + 'a1,"never closed\n')
     rdr2 = FinportStreamReader({"path": str(d2)})
-    off = rdr2.initialOffset()
     with pytest.raises(ValueError, match="unterminated quoted field"):
         for _ in range(12):
-            _, off = rdr2.read(off)
+            rdr2.latestOffset()
             with open(f2, "a") as fh:
                 fh.write("x,y,z\n")
 
@@ -567,13 +639,16 @@ def test_finport_stream_open_quote_fails_loudly(tmp_path):
     f3.write_text(hdr + 'a1,"' + "x" * (2 << 20))
     rdr3 = FinportStreamReader({"path": str(d3)})
     with pytest.raises(ValueError, match="unterminated quoted field"):
-        rdr3.read(rdr3.initialOffset())
+        rdr3.latestOffset()
 
 
 def test_finport_writer_rejects_undecodable_corner(spark, tmp_path):
     """ADVICE (low): the writer must not emit bytes its own reader
     rejects — a quoted field whose escaped form ends in a backslash
-    raises at encode time (scalar and vectorized paths)."""
+    raises at encode time (scalar and vectorized paths), and the two
+    paths write the same bytes for every column type."""
+    from datetime import datetime
+
     import pyarrow as pa
 
     from finporter_spark.sources.finport_datasource import (
@@ -589,6 +664,17 @@ def test_finport_writer_rejects_undecodable_corner(spark, tmp_path):
     # fine without the delimiter (not quoted) or without the backslash
     assert _golden_field("ab\\") == "ab\\"
     assert _golden_field("a,b") == '"a,b"'
+
+    # the column encoder is the scalar one on every non-string type, nulls
+    # included: one fixed row, then a row of nulls
+    row = (0.1, -7, True, datetime(2021, 3, 1, 12, 30, 5), None)
+    types = (pa.float64(), pa.int64(), pa.bool_(), pa.timestamp("us"),
+             pa.string())
+    for v, t in zip(row, types):
+        col = [v, None]
+        assert list(_golden_encode_column(pa.array(col, t))) == [
+            _golden_field(x) for x in col
+        ], t
 
     spark.dataSource.register(FinportDataSource)
     df = spark.createDataFrame(
@@ -616,39 +702,28 @@ def test_finport_stream_open_quote_stall_without_growth(tmp_path):
     d.mkdir()
     (d / "a.csv").write_text(hdr + 'a1,"never closed\n')
     rdr = FinportStreamReader({"path": str(d)})
-    off = rdr.initialOffset()
     with pytest.raises(ValueError, match="unterminated quoted field"):
         for _ in range(FinportStreamReader._OPEN_QUOTE_MAX_TICKS + 2):
-            _, off = rdr.read(off)  # file never grows
+            rdr.latestOffset()  # file never grows
 
 
-def test_both_stream_readers_reject_a_file_granular_offset(tmp_path):
+def test_finport_stream_rejects_a_file_granular_offset(tmp_path):
     """The old offset format ({"seen": [names]}) recorded no byte
-    boundary, so neither stream reader can replay it exactly: both
-    raise instead of guessing one."""
+    boundary, so the stream reader cannot replay it exactly: planning a
+    batch with it as either end raises instead of guessing one."""
     from finporter_spark.sources.finport_datasource import (
-        FinportParallelStreamReader,
         FinportStreamReader,
     )
 
     d = tmp_path / "stream"
     d.mkdir()
-    (d / "a.csv").write_text(
-        "accountID,securityID,lotID,shareCount,shareBasis,acquiredAt\n"
-        "a1,S1,L1,1.0,,\n"
-    )
+    (d / "a.csv").write_text(_HOLDING_HDR + "a1,S1,L1,1.0,,\n")
     legacy = {"seen": ["a.csv"]}
-    simple = FinportStreamReader({"path": str(d)})
-    parallel = FinportParallelStreamReader({"path": str(d)})
-    now = parallel.latestOffset()
-    for call in (
-        lambda: simple.read(legacy),
-        lambda: simple.readBetweenOffsets(legacy, now),
-        lambda: simple.readBetweenOffsets(simple.initialOffset(), legacy),
-        lambda: parallel.partitions(legacy, now),
-    ):
+    rdr = FinportStreamReader({"path": str(d)})
+    now = rdr.latestOffset()
+    for start, end in ((legacy, now), (rdr.initialOffset(), legacy)):
         with pytest.raises(ValueError, match="legacy file-granular"):
-            call()
+            rdr.partitions(start, end)
 
 
 # full-width HOLDING rows over the field shapes that need Spark's cast
@@ -694,8 +769,8 @@ def _write_decode_files(tmp_path):
 
 
 def test_every_finport_reader_decodes_like_the_importer(spark, tmp_path):
-    """One decode for every reader. The batch reader, both stream
-    readers and the replay yield the same string rows whether or not
+    """One decode for every reader. The batch reader and the stream
+    reader yield the same string rows whether or not
     the file holds a quote, and typed(format("finport")) equals the
     importer's good rows on the same file, out-of-range years included
     (compared inside Spark). A bare CR is the one declared difference:
@@ -706,7 +781,6 @@ def test_every_finport_reader_decodes_like_the_importer(spark, tmp_path):
     from finporter_spark.model import AllocSchema
     from finporter_spark.sources.finport_datasource import (
         FinportDataSource,
-        FinportParallelStreamReader,
         FinportReader,
         FinportStreamReader,
         typed,
@@ -730,17 +804,9 @@ def test_every_finport_reader_decodes_like_the_importer(spark, tmp_path):
         [part] = batch.partitions()
         assert _drain(batch, part) == want, layout
 
-        simple = FinportStreamReader(opts)
-        rows, end = simple.read(simple.initialOffset())
-        assert list(rows) == want, layout
-        replay = simple.readBetweenOffsets(simple.initialOffset(), end)
-        assert list(replay) == want, layout
-
-        parallel = FinportParallelStreamReader(opts)
-        [sl] = parallel.partitions(
-            parallel.initialOffset(), parallel.latestOffset()
-        )
-        [rb] = list(parallel.read(sl))
+        stream = FinportStreamReader(opts)
+        [sl] = stream.partitions(stream.initialOffset(), stream.latestOffset())
+        [rb] = list(stream.read(sl))
         assert [tuple(r.values()) for r in rb.to_pylist()] == want, layout
 
         got, good, bad = decode(d)
@@ -768,105 +834,61 @@ def test_every_finport_reader_decodes_like_the_importer(spark, tmp_path):
         release_caches(good, bad)
 
 
-def test_finportp_parallel_stream_offsets_and_slices(tmp_path):
-    """The partition-parallel stream reader: latestOffset advances by
-    complete-record boundaries only (torn tails excluded), partitions()
-    plans exactly the grown byte ranges (the replay contract), read()
-    splits a slice into an Arrow batch of strings on what would be an
-    executor."""
-    from finporter_spark.sources.finport_datasource import (
-        FinportParallelStreamReader,
-    )
-
-    d = tmp_path / "pstream"
-    d.mkdir()
-    hdr = "accountID,securityID,lotID,shareCount,shareBasis,acquiredAt\n"
-    (d / "a.csv").write_text(hdr + "a1,S1,L1,1.0,,\na2,S2,L2,2.0,,\nTORN")
-    rdr = FinportParallelStreamReader({"path": str(d)})
-
-    o0 = rdr.initialOffset()
-    o1 = rdr.latestOffset()
-    full = hdr + "a1,S1,L1,1.0,,\na2,S2,L2,2.0,,\n"
-    assert o1["seen"]["a.csv"] == len(full.encode())  # torn tail excluded
-
-    parts = rdr.partitions(o0, o1)
-    assert [(p.lo, p.hi) for p in parts] == [(0, len(full.encode()))]
-    [batch] = list(rdr.read(parts[0]))
-    pdf = batch.to_pandas()
-    assert list(pdf["securityID"]) == ["S1", "S2"]
-    assert list(pdf["shareCount"]) == ["1.0", "2.0"]
-
-    # the tail completes + a second file arrives: only deltas are planned
-    (d / "a.csv").write_text(
-        hdr + "a1,S1,L1,1.0,,\na2,S2,L2,2.0,,\nTORN,S3,L3,3.0,,\n"
-    )
-    (d / "b.csv").write_text(hdr + "b1,S4,L4,4.0,,\n")
-    o2 = rdr.latestOffset()
-    parts2 = sorted(
-        rdr.partitions(o1, o2), key=lambda p: p.path
-    )
-    assert len(parts2) == 2
-    [ba] = list(rdr.read(parts2[0]))  # a.csv delta: the completed line
-    assert list(ba.to_pandas()["securityID"]) == ["S3"]
-    [bb] = list(rdr.read(parts2[1]))  # b.csv from 0: header stripped
-    assert list(bb.to_pandas()["securityID"]) == ["S4"]
-
-    # replay determinism: same (start, end) -> same slices
-    assert [(p.path, p.lo, p.hi) for p in rdr.partitions(o1, o2)] == [
-        (p.path, p.lo, p.hi) for p in rdr.partitions(o1, o2)
-    ]
-
-
-def test_finportp_drain_equals_batch(spark, tmp_path):
-    """End-to-end through Spark: format('finportp') drained with
-    availableNow and typed equals the typed batch read's aggregate over
-    the same directory."""
-    from pyspark.sql import functions as F
-
+def test_finport_stream_crosses_a_batch_boundary(spark, tmp_path):
+    """End-to-end through Spark: a format("finport") stream into a
+    memory sink reads one file, then a second file in a later
+    micro-batch, and its typed aggregate equals the typed batch read
+    over the same directory. (Catalog drains use availableNow, which
+    Python stream sources run as a single batch.)"""
     from finporter_spark.sources.finport_datasource import (
         FinportDataSource,
-        FinportParallelDataSource,
         typed,
     )
-    from finporter_spark.streaming.pipeline import run_stream_to_memory
 
-    d = tmp_path / "pdrop"
+    d = tmp_path / "drop"
     d.mkdir()
-    hdr = "accountID,securityID,lotID,shareCount,shareBasis,acquiredAt\n"
-    for i in range(4):
+
+    def drop(i):
         (d / f"f{i}.csv").write_text(
-            hdr
+            _HOLDING_HDR
             + "".join(
-                f"acct-{j % 3},S{j},L{j},{float(j)},,\n" for j in range(25)
+                f"acct-{j % 3},S{j},L{j},{float(j + i)},,\n" for j in range(25)
             )
         )
-    for src in (FinportDataSource, FinportParallelDataSource):
-        try:
-            spark.dataSource.register(src)
-        except Exception:
-            pass
-    sdf = typed(
-        spark.readStream.format("finportp").option("path", str(d)).load()
-    )
-    agg = sdf.groupBy("accountID").agg(
-        F.count("*").alias("n"), F.sum("shareCount").alias("s")
-    )
-    out = run_stream_to_memory(agg, "fpp_parity_mem", output_mode="complete")
-    got = {(r.accountID): (r.n, r.s) for r in out.collect()}
-    want = {
-        (r.accountID): (r.n, r.s)
-        for r in typed(
-            spark.read.format("finport").option("path", str(d)).load()
+
+    def aggregate(df):
+        return df.groupBy("accountID").agg(
+            F.count("*").alias("n"), F.sum("shareCount").alias("s")
         )
-        .groupBy("accountID")
-        .agg(F.count("*").alias("n"), F.sum("shareCount").alias("s"))
-        .collect()
-    }
-    assert got == want
+
+    spark.dataSource.register(FinportDataSource)
+    drop(0)
+    stream = spark.readStream.format("finport").option("path", str(d))
+    q = (
+        aggregate(typed(stream.load()))
+        .writeStream.format("memory")
+        .queryName("finport_two_batches")
+        .outputMode("complete")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        drop(1)
+        q.processAllAvailable()
+        fed = [p["numInputRows"] for p in q.recentProgress]
+    finally:
+        q.stop()
+    assert sum(n > 0 for n in fed) >= 2, fed
+    assert sum(fed) == 50
+    got = spark.table("finport_two_batches").collect()
+    want = aggregate(
+        typed(spark.read.format("finport").option("path", str(d)).load())
+    ).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
 def test_scan_boundary_matches_parser_on_adversarial_soup():
-    """_scan_boundary (the parallel reader's vectorized offset scan)
+    """_scan_boundary (the stream reader's vectorized offset scan)
     agrees with _parse_golden's boundary + open-quote verdict on
     hypothesis-generated quote/escape/delimiter/newline soups — the
     exactness proof for replacing the record parser in latestOffset."""

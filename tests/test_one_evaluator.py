@@ -24,10 +24,6 @@ KEPT_PAIRS = {
         "a batch weekly PSI and its Structured Streaming twin",
     frozenset({"o10_cdc_apply", "x22_stream_cdc_upsert"}):
         "a batch CDC apply and its Structured Streaming upsert twin",
-    frozenset({"x12_datasource_stream", "x14_datasource_stream_parallel"}):
-        "two Python stream-reader APIs: x12's SimpleDataSourceStreamReader "
-        "decodes rows on the driver, x14's DataSourceStreamReader decodes "
-        "byte-range slices on the executors",
 }
 
 

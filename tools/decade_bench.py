@@ -122,7 +122,6 @@ QUERIES = [
     "l36_bfs_reachability",
     "w17_mad_anomaly",
     "a25_conversion_latency",
-    "x14_datasource_stream_parallel",
     # round-8 batch 4: measured at both decades from birth
     "l37_edit_distance_join",
     "a26_retention_cohorts",
